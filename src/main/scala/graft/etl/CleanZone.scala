@@ -10,16 +10,40 @@ import org.apache.spark.sql.functions._
   * Differences from the reference are mechanism-only (SURVEY §4.3): the two
   * Python UDFs are native Column expressions ([[Functions]]), no interleaved
   * show()/count() actions re-running the lineage, and each output is
-  * computed once.
+  * computed once — one projection pass over one typed landing scan.
+  *
+  * Two outputs differ from the reference's regex-over-JSON artist bag
+  * (playback_pipeline.py:161-193), and both are fixes: `artist_names` and
+  * `artist_ids` are projected from each play's own artist array, so a play
+  * listed twice in the landing document no longer gets every artist twice,
+  * and a name containing `"` or `\` comes through whole instead of being
+  * cut at its escaped quote.
   */
 object CleanZone {
 
+  /** The landing-document fields the three parsers read, typed as JSON
+    * schema inference types them (`played_at` stays a string; the integral
+    * fields are BIGINT), so the clean CSVs and everything downstream keep
+    * their types. */
+  private val LandingSchema: String =
+    """items ARRAY<STRUCT<
+      |  played_at: STRING,
+      |  track: STRUCT<
+      |    album: STRUCT<album_type: STRING, href: STRING, id: STRING,
+      |      name: STRING, release_date: STRING,
+      |      release_date_precision: STRING, total_tracks: BIGINT,
+      |      type: STRING, uri: STRING>,
+      |    artists: ARRAY<STRUCT<external_urls: STRUCT<spotify: STRING>,
+      |      href: STRING, id: STRING, name: STRING, uri: STRING>>,
+      |    duration_ms: BIGINT, href: STRING, id: STRING, name: STRING,
+      |    popularity: BIGINT, type: STRING, uri: STRING>>>""".stripMargin
+
   /** S1 — multiline nested JSON scan (reference:
-    * spark_jobs/playback_pipeline.py:264). Schema inference preserved as the
-    * reference behavior; pass an explicit schema for production hardening.
-    */
+    * spark_jobs/playback_pipeline.py:264) with `LandingSchema`: no
+    * inference pass over the document, and a quiet day's
+    * `{"items": []}` scans as zero plays instead of an untyped column. */
   def readLanding(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("multiLine", "true").json(path)
+    spark.read.schema(LandingSchema).option("multiLine", "true").json(path)
 
   private def items(df: DataFrame): DataFrame =
     df.select(explode(col("items")).as("items")).select("items.*")
@@ -55,34 +79,19 @@ object CleanZone {
         col("artists_exploded.uri").as("artist_uri"))
       .dropDuplicates()
 
-  /** bagged artists — re-nest the exploded artists into a JSON-string array
-    * per play, then regex the names/ids back out ", "-joined
-    * (reference: playback_pipeline.py:161-193; the regex-over-JSON quirk is
-    * preserved, natively — SURVEY §2.9 F9).
-    */
-  def bagArtists(df: DataFrame): DataFrame =
-    items(df)
-      .select(col("played_at"), col("track.id").as("id"),
-        explode(col("track.artists")).as("artists_exploded"))
-      .select(
-        col("played_at"), col("id"),
-        col("artists_exploded.name").as("artist_name"),
-        col("artists_exploded.id").as("artist_id"),
-        col("artists_exploded.uri").as("artist_uri"))
-      .groupBy(col("played_at"), col("id"))
-      .agg(to_json(collect_list(struct(
-        col("artist_name"), col("artist_id"), col("artist_uri")))).as("bagged_artists"))
-      .withColumn("artist_names", Functions.valuesFromKey(col("bagged_artists"), "artist_name"))
-      .withColumn("artist_ids", Functions.valuesFromKey(col("bagged_artists"), "artist_id"))
-
-  /** tracks — flatten track + album fields, derive durations, complete bare
-    * years (reference: playback_pipeline.py:196-225). */
+  /** tracks — flatten track + album fields, ", "-join each play's artist
+    * names and ids in array order (the reference's F9 bag, SURVEY §2.9),
+    * derive durations, complete bare years
+    * (reference: playback_pipeline.py:161-225). Duplicate plays are
+    * dropped once, by [[playbackHistory]]. */
   def parseTracks(df: DataFrame): DataFrame =
     items(df)
       .select(
         col("played_at"),
         col("track.album").as("album"),
-        col("track.artists").as("artists"),
+        array_join(transform(col("track.artists"), a => a("name")), ", ")
+          .as("artist_names"),
+        array_join(col("track.artists.id"), ", ").as("artist_ids"),
         col("track.duration_ms").as("duration_ms"),
         col("track.href").as("track_href"),
         col("track.id").as("track_id"),
@@ -99,7 +108,6 @@ object CleanZone {
       .withColumn("duration_s", Functions.durationSeconds(col("duration_ms")))
       .withColumn("duration_min", Functions.durationMinutes(col("duration_ms")))
       .withColumn("album_release_date", Functions.completeYear(col("album_release_date")))
-      .dropDuplicates()
 
   /** The 15-column playback_hist output contract, exact order
     * (reference: playback_pipeline.py:289-307; SURVEY §1.5). */
@@ -109,18 +117,10 @@ object CleanZone {
     "artist_names", "artist_ids", "popularity",
     "album_id", "album_name", "album_release_date", "album_uri")
 
-  /** J1 — tracks LEFT JOIN bagged on the composite (played_at, track_id=id)
-    * key, duplicate-name resolution via dataframe-qualified columns
-    * (reference: playback_pipeline.py:278-307; trap SURVEY §7.4#3), then the
-    * 15-column projection, dedup, global played_at sort.
-    */
-  def playbackHistory(tracks: DataFrame, bagged: DataFrame): DataFrame =
-    tracks.join(bagged,
-        tracks("played_at") === bagged("played_at") &&
-          tracks("track_id") === bagged("id"), "left")
-      .select(tracks("*") +: Seq(
-        bagged("artist_names"), bagged("artist_ids"), bagged("bagged_artists")): _*)
-      .select(outputCols.map(col): _*)
+  /** The 15-column projection, dedup, global played_at sort
+    * (reference: playback_pipeline.py:278-307). */
+  def playbackHistory(tracks: DataFrame): DataFrame =
+    tracks.select(outputCols.map(col): _*)
       .dropDuplicates()
       .orderBy("played_at")
 
@@ -129,7 +129,6 @@ object CleanZone {
   def run(spark: SparkSession, landingJsonPath: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val df = readLanding(spark, landingJsonPath)
-    val playback = playbackHistory(parseTracks(df), bagArtists(df))
-    (playback, parseAlbums(df), parseArtists(df))
+    (playbackHistory(parseTracks(df)), parseAlbums(df), parseArtists(df))
   }
 }

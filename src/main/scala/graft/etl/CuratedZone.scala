@@ -79,7 +79,11 @@ object CuratedZone {
     // run — a reference quirk preserved deliberately (…curated.py:95,122-123:
     // only playback gets delta protection).
     val delta = deltaLoad(df, existing)
-    val n = delta.count() // K5 row-count write guard (…curated.py:207-208)
+    // K5 row-count write guard (…curated.py:207-208). It costs a second
+    // anti-join, but counting through an Observation on the append cannot
+    // replace it: Spark 4.1 appends a schema-only part file for an empty
+    // frame, which is what the guard keeps out of the warehouse.
+    val n = delta.count()
     if (n > 0) delta.write.mode("append").parquet(warehousePath)
     n
   }

@@ -28,8 +28,11 @@ object Functions {
     * playback_pipeline.py:142-143.
     *
     * The reference deliberately regexes over the JSON text rather than
-    * parsing it; we preserve that observable behavior with
-    * `regexp_extract_all` (codegen'd) instead of a Python closure.
+    * parsing it; this keeps that observable behavior with
+    * `regexp_extract_all` (codegen'd) instead of a Python closure. Only
+    * `q_values_from_key` uses it: the clean zone projects artist names and
+    * ids from the typed artist array, which a duplicated landing item cannot
+    * double and an escaped quote cannot cut.
     */
   def valuesFromKey(c: Column, key: String): Column =
     array_join(

@@ -4,9 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 import graft.ingest.Fixture
 
-/** End-to-end pipeline orchestration over a local zone root — the three
-  * reference entry points chained (SURVEY §3): ingestion (fixture) →
-  * clean-zone job → curated-zone job → warehouse delta append.
+/** End-to-end pipeline orchestration over a local zone root — the
+  * reference's clean-zone job → curated-zone job → warehouse delta append
+  * (SURVEY §3), run over days already landed by ingestion
+  * ([[graft.ingest.Fixture.land]] stands in for main.py).
   *
   * Returns per-table delta row counts appended to the warehouse.
   */
@@ -14,17 +15,17 @@ object Pipeline {
 
   val tables: Seq[String] = Seq("playback_hist", "albums", "artists")
 
+  /** Process the day landed at `{landing(y, m, d)}/playback_hist.json`. */
   def run(spark: SparkSession, zones: Zones, y: Int, m: Int, d: Int): Map[String, Long] = {
-    // 1. ingestion stand-in (main.py) — land the fixture document
-    val landed = Fixture.land(zones.landing(y, m, d))
+    val landed = s"${zones.landing(y, m, d)}/playback_hist.json"
 
-    // 2. clean-zone job (playback_pipeline.py) — flatten to 3 tables, CSV
+    // 1. clean-zone job (playback_pipeline.py) — flatten to 3 tables, CSV
     val (playback, albums, artists) = CleanZone.run(spark, landed)
     Zones.writeCsv(playback, zones.clean(y, m, d, "playback_hist"))
     Zones.writeCsv(albums, zones.clean(y, m, d, "albums"))
     Zones.writeCsv(artists, zones.clean(y, m, d, "artists"))
 
-    // 3. curated-zone job (playback_pipeline_curated.py) — CSV→parquet with
+    // 2. curated-zone job (playback_pipeline_curated.py) — CSV→parquet with
     //    audit stamp, then warehouse delta append per table
     tables.map { t =>
       CuratedZone.curateTable(spark, zones.clean(y, m, d, t), zones.curated(y, m, d, t))
@@ -32,9 +33,10 @@ object Pipeline {
     }.toMap
   }
 
-  /** Backfill variant (the ad-hoc jobs, SURVEY §3.4): process every date
-    * found under the landing zone instead of one day. Dates are discovered
-    * from the directory layout, mirroring the blob-path walk at
+  /** Backfill variant (the ad-hoc jobs, SURVEY §3.4): process every day
+    * already landed under the landing zone instead of one day, publishing
+    * each day's own document. Dates are discovered from the directory
+    * layout, mirroring the blob-path walk at
     * spark_jobs/adhoc/playback_pipeline_adhoc.py:265-274.
     */
   def runBackfill(spark: SparkSession, zones: Zones): Map[(Int, Int, Int), Map[String, Long]] = {
@@ -54,9 +56,9 @@ object Pipeline {
     }
   }
 
-  /** Demo main: run the full pipeline twice into a temp root and print the
-    * delta counts — the second run must append zero rows (idempotence via
-    * the anti-join delta load). */
+  /** Demo main: land the fixture, run the full pipeline twice into a temp
+    * root and print the delta counts — the second run must append zero
+    * rows (idempotence via the anti-join delta load). */
   def main(args: Array[String]): Unit = {
     val root = if (args.nonEmpty) args(0)
       else java.nio.file.Files.createTempDirectory("graft_zones").toString
@@ -68,6 +70,7 @@ object Pipeline {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val zones = Zones(root)
+    Fixture.land(zones.landing(2024, 1, 5))
     val first = run(spark, zones, 2024, 1, 5)
     val second = run(spark, zones, 2024, 1, 5)
     println(s"first run deltas:  $first")

@@ -1,6 +1,5 @@
 package graft.etl
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Medallion-zone path conventions + IO, implemented ONCE (the reference
@@ -48,44 +47,4 @@ object Zones {
     * (reference: spark_jobs/playback_pipeline_curated.py:190). */
   def readParquet(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
-
-  /** K4+K5 — warehouse append with the empty-delta guard
-    * (reference: spark_jobs/playback_pipeline_curated.py:207-215). Uses
-    * `isEmpty` instead of the reference's full `count()` action — at scale
-    * that is one task over one partition, not a whole-table scan.
-    * Returns true iff rows were appended.
-    */
-  def appendWarehouse(df: DataFrame, path: String): Boolean =
-    if (df.isEmpty) false
-    else { df.write.mode("append").parquet(path); true }
-
-  /** K3 — the reference's single-file naming convention: the job writes one
-    * `part-*` file and renames it `{y}_{m}_{d}_{table}.{ext}`
-    * (reference: move_blob, spark_jobs/playback_pipeline.py:13-63,73-86).
-    * Convention, not semantics: only meaningful for small outputs (caller
-    * must have coalesced); distributed outputs keep their part files.
-    */
-  def renameSinglePartFile(spark: SparkSession, dir: String,
-      targetName: String): Option[String] = {
-    val fs = FileSystem.get(new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    val parts = fs.globStatus(new Path(dir, "part-*"))
-    if (parts == null || parts.length != 1) None
-    else {
-      val dst = new Path(dir, targetName)
-      fs.rename(parts.head.getPath, dst)
-      Some(dst.toString)
-    }
-  }
-
-  /** S6 stand-in — object-store listing as discovery scan
-    * (reference: bucket.list_blobs + name filter,
-    * spark_jobs/playback_pipeline_curated.py:163-166): enumerate table dirs
-    * under a zone date prefix on the driver.
-    */
-  def listTables(spark: SparkSession, datePrefix: String): Seq[String] = {
-    val fs = FileSystem.get(new java.net.URI(datePrefix), spark.sparkContext.hadoopConfiguration)
-    val p = new Path(datePrefix)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName).toSeq.sorted
-  }
 }

@@ -516,18 +516,6 @@ object EventStream {
       |GROUP BY user_id, event_type
       |ORDER BY user_id, event_type""".stripMargin
 
-  /** Drive a stream synchronously into an in-memory table (test/demo
-    * harness): returns the query name to SELECT from.
-    *
-    * Shuffle width is narrowed for the duration of the stream: stateful
-    * operators open one state store PER shuffle partition PER micro-batch,
-    * so a width sized for big batch scans (32 here) pays pure state-store
-    * overhead on these rollup-sized streams. On a real cluster this is the
-    * same dial — size it to state volume, not to scan parallelism. */
-  /** Probe-only override of the per-drive stateful width (ProbeStreamWidth
-    * sweeps it within one JVM); < 0 means "use the drive's own `parts`". */
-  private[graft] var streamPartsOverride: Int = -1
-
   /** Stateful width for drives whose per-batch state is commit-bound, not
     * compute-bound: every stateful operator opens one state store PER
     * shuffle partition PER micro-batch and pays a commit (delta file +
@@ -545,13 +533,20 @@ object EventStream {
     * to state volume, never to scan parallelism. */
   private val NarrowParts = 2
 
+  /** Drive a stream synchronously into an in-memory table (test/demo
+    * harness) named `name`, to SELECT from.
+    *
+    * Shuffle width is set to `parts` for the duration of the stream:
+    * stateful operators open one state store PER shuffle partition PER
+    * micro-batch, so a width sized for batch scans pays pure state-store
+    * overhead on these rollup-sized streams (`NarrowParts` covers which
+    * drives take the narrow width). */
   def runToMemory(df: DataFrame, name: String, mode: OutputMode,
       parts: Int = 8): Unit = {
     val spark = df.sparkSession
     spark.catalog.dropTempView(name) // idempotent re-runs
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val width = if (streamPartsOverride > 0) streamPartsOverride else parts
-    spark.conf.set("spark.sql.shuffle.partitions", width.toString)
+    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
     try {
       val q = df.writeStream.outputMode(mode)
         .format("memory").queryName(name).start()
