@@ -285,14 +285,8 @@ object Bench {
     } catch { case _: Throwable => () } // advisory artifact only
     // the scan-calibration parquet is per-run scratch — delete it or
     // repeated bench loops accumulate ~100 MB per run in the temp fs
-    try {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      val walk = Files.walk(Path.of(calibDir))
-      try walk.sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally walk.close()
-    } catch { case _: Throwable => () }
+    try graft.sources.deleteTree(java.nio.file.Path.of(calibDir))
+    catch { case _: Throwable => () }
     spark.stop()
   }
 }

@@ -88,10 +88,7 @@ object ScaleSmoke {
       val target = java.nio.file.Paths.get(dst, s"$t.parquet")
       if (java.nio.file.Files.isDirectory(target)) {
         // stale dir from a previous run's layout: clear it
-        val walk = java.nio.file.Files.walk(target)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => java.nio.file.Files.deleteIfExists(f))
-        finally walk.close()
+        graft.sources.deleteTree(target)
       } else java.nio.file.Files.deleteIfExists(target)
       java.nio.file.Files.move(part.get(), target)
       println(s"[scale] wrote $t: ${spark.read.parquet(target.toString).count()} rows")

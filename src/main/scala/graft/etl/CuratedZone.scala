@@ -55,7 +55,7 @@ object CuratedZone {
       df.join(dup, Seq(key), "left_anti")
     }
 
-  /** Curate one clean-zone table: CSV scan (header + inferSchema) →
+  /** Curate one clean-zone table: CSV scan (header, declared schema) →
     * upload_timestamp first → dedup → parquet overwrite
     * (reference: …curated.py:168-179). */
   def curateTable(spark: SparkSession, cleanPath: String, curatedPath: String): DataFrame = {
@@ -82,7 +82,11 @@ object CuratedZone {
     // K5 row-count write guard (…curated.py:207-208). It costs a second
     // anti-join, but counting through an Observation on the append cannot
     // replace it: Spark 4.1 appends a schema-only part file for an empty
-    // frame, which is what the guard keeps out of the warehouse.
+    // frame, which is what the guard keeps out of the warehouse. Persisting
+    // the delta costs more on daily-sized deltas: a cached plan keeps its
+    // shuffle width, so the append writes a file per partition unless it
+    // rebalances, and reading the cached blocks back reads more bytes than
+    // re-running the anti-join over the parquet files.
     val n = delta.count()
     if (n > 0) delta.write.mode("append").parquet(warehousePath)
     n

@@ -15,6 +15,31 @@ object Pipeline {
 
   val tables: Seq[String] = Seq("playback_hist", "albums", "artists")
 
+  /** Each clean-zone table's CSV schema (DDL), keyed by table name and
+    * typed as CSV schema inference types what the clean zone writes: ISO
+    * `played_at` as TIMESTAMP, integral columns as INT, the durations as
+    * DOUBLE and release dates as DATE. [[Zones.readCsv]] reads with it, so
+    * curating a table scans its CSV once, with no inference pass. One
+    * difference: inference typed a day holding a month-precision release
+    * date (`2001-03`) as TIMESTAMP; it is DATE (`2001-03-01`) on every day
+    * now. The warehouse's `to_date` already gave both the same value. */
+  val cleanSchemas: Map[String, String] = Map(
+    "playback_hist" ->
+      """played_at TIMESTAMP, duration_ms INT, duration_s DOUBLE,
+        |duration_min DOUBLE, track_href STRING, track_id STRING,
+        |track_name STRING, track_uri STRING, artist_names STRING,
+        |artist_ids STRING, popularity INT, album_id STRING,
+        |album_name STRING, album_release_date DATE,
+        |album_uri STRING""".stripMargin,
+    "albums" ->
+      """album_type STRING, album_href STRING, album_id STRING,
+        |album_name STRING, album_release_date DATE,
+        |album_release_date_precision STRING, total_tracks INT, type STRING,
+        |album_uri STRING""".stripMargin,
+    "artists" ->
+      """artist_spotify_url STRING, artist_href STRING, artist_id STRING,
+        |artist_name STRING, artist_uri STRING""".stripMargin)
+
   /** Process the day landed at `{landing(y, m, d)}/playback_hist.json`. */
   def run(spark: SparkSession, zones: Zones, y: Int, m: Int, d: Int): Map[String, Long] = {
     val landed = s"${zones.landing(y, m, d)}/playback_hist.json"

@@ -33,10 +33,19 @@ object Zones {
   def writeCsv(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").option("header", "true").csv(path)
 
-  /** S2 — clean-zone CSV scan with header + schema inference
-    * (reference: spark_jobs/playback_pipeline_curated.py:173). */
-  def readCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "true").csv(path)
+  /** S2 — clean-zone CSV scan with header
+    * (reference: spark_jobs/playback_pipeline_curated.py:173), typed by
+    * the declared [[Pipeline.cleanSchemas]] entry of the table that
+    * [[Zones.clean]] puts last in the path instead of by an inference scan.
+    * A path naming no known table fails loudly. */
+  def readCsv(spark: SparkSession, path: String): DataFrame = {
+    val table = path.stripSuffix("/").split('/').last
+    val schema = Pipeline.cleanSchemas.getOrElse(table,
+      throw new IllegalArgumentException(s"clean zone: no declared schema " +
+        s"for table '$table' (from $path); known tables: " +
+        Pipeline.tables.mkString(", ")))
+    spark.read.schema(schema).option("header", "true").csv(path)
+  }
 
   /** K2 — curated-zone Parquet sink, idempotent overwrite
     * (reference: spark_jobs/playback_pipeline_curated.py:64-86). */

@@ -513,12 +513,25 @@ private[sources] object AuditBase {
     finally listing.close()
   }
 
-  /** Rewrite `_MANIFEST` preserving entry order AND the current txn
-    * floor; the header counts LIVE entries only (it is what the metadata
-    * COUNT path and the write guard sum). Atomic (tmp + move): readers
-    * racing the write see old-or-new, never a torn file. */
-  def writeManifest(path: String, entries: Seq[ManifestEntry]): Unit =
-    writeManifestWithFloor(path, entries, readTxnFloor(path))
+  /** Rewrite `_MANIFEST` preserving entry order; the header counts LIVE
+    * entries only (it is what the metadata COUNT path and the write guard
+    * sum). Atomic (tmp + move): readers racing the write see old-or-new,
+    * never a torn file. The txn floor is kept, and advanced over the
+    * leading live txns whose every entry `entries` already carries: a
+    * read-modify-write caller reads through [[readManifest]], which lists
+    * live txns too, so an append that committed after the caller's
+    * [[consolidate]] and is written back into the body would otherwise
+    * be listed twice (in the body and as a live txn). A txn committed
+    * after the caller's read is not in `entries` and stays live. As in
+    * [[consolidate]], absorbed stats lines go to `_STATS` first. */
+  def writeManifest(path: String, entries: Seq[ManifestEntry]): Unit = {
+    val floor = readTxnFloor(path)
+    val written = entries.map(_.file).toSet
+    val absorbed = rawTxns(path).filter(_.v > floor)
+      .takeWhile(_.entries.forall(e => written(e.file)))
+    AuditStats.appendRaw(path, absorbed.flatMap(_.statsLines))
+    writeManifestWithFloor(path, entries, absorbed.lastOption.fold(floor)(_.v))
+  }
 
   /** On-disk size of a committed data file; None when it isn't present
     * (legacy/staged states keep their legacy no-bytes lines). */
@@ -547,15 +560,6 @@ private[sources] object AuditBase {
               ts.map(t => s""","ts":$t""").getOrElse("") + "}"
         }).mkString("\n").getBytes("UTF-8"))
   }
-
-  private val PartNumRe = """part-(\d+)\.jsonl""".r
-
-  /** Next batch part index: one PAST the highest ever committed (folded
-    * entries included — a reused name would collide with the origin row
-    * ids delete vectors are keyed by). */
-  def nextPartIndex(entries: Seq[ManifestEntry]): Int =
-    entries.map(_.file).collect { case PartNumRe(n) => n.toInt + 1 }
-      .foldLeft(0)(math.max)
 }
 
 /** Commit half of OPTIMIZE: publish staged rewrite files as the table's
@@ -635,12 +639,7 @@ final class AuditBaseBatchWrite(path: String, schema: StructType,
     AuditStats.retain(path, f => java.nio.file.Files.exists(dir.resolve(f)))
     AuditStats.append(path,
       entries.zip(files).map { case (m, (name, _)) => (name, m.stats) })
-    if (java.nio.file.Files.exists(stage)) {
-      val walk = java.nio.file.Files.walk(stage)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-    }
+    deleteTree(stage)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -730,11 +729,13 @@ private[sources] object AuditMaintenance {
     * change a query answer — the curve key still orders every row), so
     * they are estimated from a 5% Bernoulli sample with a relaxed sketch
     * error (0.005 vs 0.001), cutting the quantile pass ~3× warm
-    * (ProbeAudit: 0.65 → 0.21 s at sf0.1). The count rides the same
-    * aggregate; a sample under ~20 rows/bucket falls back to the exact
-    * full-frame pass — small tables keep bit-identical bounds (and the
-    * fallback's extra pass is cheap precisely because the table is small).
-    * Fixed seed: bounds are deterministic for a given table state. */
+    * (ProbeAudit: 0.65 → 0.21 s at sf0.1). Each column's NON-NULL count
+    * rides the same aggregate (the quantiles skip nulls, so a mostly-null
+    * column's effective sample is its non-null rows); when the sparsest
+    * column has under ~20 sampled rows per bucket, every column falls back
+    * to the exact full-frame pass — small tables keep bit-identical bounds
+    * (and the fallback's extra pass is cheap precisely because the table is
+    * small). Fixed seed: bounds are deterministic for a given table state. */
   private[sources] def zQuantileBounds(df: org.apache.spark.sql.DataFrame,
       zorderBy: Seq[String], bits: Int): Array[Array[Long]] = {
     import org.apache.spark.sql.functions.{count => fcount, _}
@@ -742,13 +743,14 @@ private[sources] object AuditMaintenance {
     val asDouble = df.select(zorderBy.map(c => col(c).cast("double")): _*)
     val minRows = (1L << bits) * 20
     val sampled = asDouble.sample(withReplacement = false, 0.05, seed = 42L)
-    val aggs = fcount(lit(1L)).as("__n") +: asDouble.columns.toSeq.map(c =>
+    val cols = asDouble.columns.toSeq
+    val aggs = cols.map(c => fcount(col(c))) ++ cols.map(c =>
       percentile_approx(col(c), typedlit(probs.toSeq), lit(200)).as(c))
     val row = sampled.agg(aggs.head, aggs.tail: _*).head()
-    if (row.getLong(0) >= minRows && !row.anyNull)
-      asDouble.columns.indices.map(i =>
-        row.getSeq[Double](i + 1).toArray.map(_.toLong).distinct.sorted)
-        .toArray
+    if (cols.indices.map(row.getLong).min >= minRows && !row.anyNull)
+      cols.indices.map(i =>
+        row.getSeq[Double](cols.length + i).toArray.map(_.toLong)
+          .distinct.sorted).toArray
     else
       asDouble.stat.approxQuantile(asDouble.columns, probs, 0.001)
         .map(_.map(_.toLong).distinct.sorted)
@@ -1289,10 +1291,7 @@ private[sources] object AuditMaintenance {
     if (now != before) {
       val changed = (now.keySet ++ before.keySet).filter(rel =>
         now.getOrElse(rel, Set.empty) != before.getOrElse(rel, Set.empty))
-      val walk = java.nio.file.Files.walk(stage)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
+      deleteTree(stage)
       throw new IllegalStateException(
         s"audit $op: concurrent append(s) committed into " +
           s"${changed.toSeq.sorted.take(3).map(r => if (r.isEmpty) "<root>"
@@ -1342,10 +1341,7 @@ private[sources] object AuditMaintenance {
       .option("path", newRoot).option("rawcolumns", "true")
     (if (newSpecSerialized.nonEmpty) w.option("partitionby", newSpecSerialized)
     else w).mode("append").save()
-    val walk = java.nio.file.Files.walk(tmp)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => java.nio.file.Files.deleteIfExists(f))
-    finally walk.close()
+    deleteTree(tmp)
     raced.map(_._3).sum
   }
 
@@ -1473,10 +1469,7 @@ private[sources] object AuditMaintenance {
     // delete (still under the lease)
     reappendRaced(spark, path, displaced, oldCols, preStage, df.schema,
       AuditPartition.serializeSpecs(specs))
-    val walk = java.nio.file.Files.walk(displaced)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => java.nio.file.Files.deleteIfExists(f))
-    finally walk.close()
+    deleteTree(displaced)
     spark.catalog.refreshTable(fullName)
     val perDir = AuditPartition.listDirs(path,
       AuditPartition.levelsOf(specs, df.schema))
@@ -2275,16 +2268,8 @@ private[sources] object AuditMaintenance {
           }
         finally listing.close()
       }
-      val stage = dir.resolve("_staging")
-      if (java.nio.file.Files.isDirectory(stage)) {
-        val walk = java.nio.file.Files.walk(stage)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach { p => // writers recreate the dir on demand
-            val isFile = java.nio.file.Files.isRegularFile(p)
-            if (java.nio.file.Files.deleteIfExists(p) && isFile) removed += 1
-          }
-        finally walk.close()
-      }
+      // writers recreate the staging dir on demand
+      removed += deleteTree(dir.resolve("_staging"))
       AuditStats.retain(path, f => java.nio.file.Files.exists(dir.resolve(f)))
       // OCC commit attempts that never won their put-if-absent link
       AuditBase.cleanTxnDebris(path)
@@ -2329,14 +2314,7 @@ private[sources] object AuditMaintenance {
           val f = p.getFileName.toString
           f.startsWith(s".$nm.optstage.") ||
             (f.startsWith(s".$nm.old.") && java.nio.file.Files.isDirectory(dir))
-        }.toSeq.foreach { p =>
-          val walk = java.nio.file.Files.walk(p)
-          try walk.sorted(java.util.Comparator.reverseOrder()).forEach { q =>
-            val isFile = java.nio.file.Files.isRegularFile(q)
-            if (java.nio.file.Files.deleteIfExists(q) && isFile) removed += 1
-          }
-          finally walk.close()
-        }
+        }.toSeq.foreach(p => removed += deleteTree(p))
         finally siblings.close()
       }
     }

@@ -361,12 +361,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     java.nio.file.Files.move(stageDir, data,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     writeMeta(ident, "audit", schema, properties, partCol)
-    if (hadOld) {
-      val walk = java.nio.file.Files.walk(displaced)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-    }
+    if (hadOld) deleteTree(displaced)
   }
 
   /** Schema evolution without data rewrite. ADD COLUMN (top-level,
@@ -639,12 +634,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (existed) {
       java.nio.file.Files.delete(metaFile(ident))
       val data = dataDir(ident)
-      if (java.nio.file.Files.exists(data)) {
-        val walk = java.nio.file.Files.walk(data)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally walk.close()
-      }
+      deleteTree(data)
     }
     existed
   }
@@ -1311,7 +1301,8 @@ object CatalogApi {
 
   /** Delta-granular MERGE, oracle-checked: the table takes an aggregate of
     * lineitem, then MERGE updates every matched group and inserts a
-    * sentinel group — through the [[AuditDeltaOperation]] path, so the
+    * sentinel group — through the [[AuditDeltaOperation]] path (one path
+    * for both layouts; this table is the zero-level one), so the
     * original files stay in place and only delete vectors + the changed
     * rows are written (the spec proves the mechanics; this hash-checks
     * the values), then a modulo DELETE routes through delta too. */
@@ -1418,8 +1409,8 @@ object CatalogApi {
         |ORDER BY l_returnflag, l_linestatus""".stripMargin)
   }
 
-  // the state algebra is identical to the unpartitioned delta MERGE —
-  // same oracle restatement
+  // the same MERGE through the same delta path as catalogMergeDelta, on a
+  // partitioned table — same oracle restatement
   val catalogMergePartSql: String = catalogMergeDeltaSql
 
   /** Change feed, oracle-checked: four streamed epochs + a delta MERGE +
@@ -4233,12 +4224,5 @@ final class StagedAuditTable(catalog: GraftCatalog, ident: Identifier,
     catalog.publishStaged(ident, stagedSchema, properties, stageDir, replace,
       partCol)
 
-  override def abortStagedChanges(): Unit = {
-    if (java.nio.file.Files.exists(stageDir)) {
-      val walk = java.nio.file.Files.walk(stageDir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
-    }
-  }
+  override def abortStagedChanges(): Unit = deleteTree(stageDir)
 }

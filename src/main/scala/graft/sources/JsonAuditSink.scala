@@ -310,10 +310,7 @@ final class AuditTable(path: String, writeSchema: StructType,
   override def dropPartition(ident: InternalRow): Boolean = {
     val d = java.nio.file.Paths.get(path).resolve(identRelDir(ident))
     if (!java.nio.file.Files.isDirectory(d)) return false
-    val walk = java.nio.file.Files.walk(d)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => java.nio.file.Files.deleteIfExists(f))
-    finally walk.close()
+    deleteTree(d)
     // drop empty intermediate level dirs left behind (multi-level): a
     // parent with no remaining children is layout debris, not a partition
     var parent = d.getParent
@@ -527,14 +524,14 @@ final class AuditTable(path: String, writeSchema: StructType,
       filters.map(AuditNameMap.mapFilter(_, colMap)), partLevels)
 
   /** SQL UPDATE / MERGE INTO (and DELETE with predicates the metadata path
-    * can't translate): DELTA-granular on BOTH layouts. Unpartitioned
-    * tables append replacement rows + table-level delete vectors;
-    * partitioned tables route replacement rows into their partition
-    * directories (an UPDATE may MOVE a row across partitions) and append
-    * PER-DIRECTORY delete vectors keyed by the dir-qualified
-    * `(_file, _pos)` row id — no committed file is ever rewritten, so
-    * epoch lineage and `VERSION AS OF` survive DML on either layout, and
-    * the partitioned change feed emits true update/delete events. */
+    * can't translate): DELTA-granular through one [[AuditDeltaOperation]]
+    * on BOTH layouts. Replacement rows route into their partition
+    * directories (an UPDATE may MOVE a row across partitions; an
+    * unpartitioned table's one directory is the root) and delete vectors
+    * append per directory, keyed by the `(_file, _pos)` row id — no
+    * committed file is ever rewritten, so epoch lineage and `VERSION AS
+    * OF` survive DML on either layout, and the change feed emits true
+    * update/delete events. */
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
@@ -557,13 +554,8 @@ final class AuditTable(path: String, writeSchema: StructType,
       org.apache.spark.sql.catalyst.util.IdentityColumn.getIdentityInfo(f)
         .filter(!_.isAllowExplicitInsert).map(_ => f.name)
     }
-    () =>
-      if (partLevels.isEmpty)
-        new AuditDeltaOperation(path, storageSchema, info.command(), colMap,
-          genSpecs, lockedIdCols)
-      else
-        new AuditPartDeltaOperation(path, storageSchema, info.command(),
-          partLevels, colMap, genSpecs, lockedIdCols)
+    () => new AuditDeltaOperation(path, storageSchema, info.command(),
+      partLevels, colMap, genSpecs, lockedIdCols)
   }
 
   /** Read-back (and TIME TRAVEL) over the sink's own commit metadata: the
@@ -3562,21 +3554,22 @@ final class AuditReaderFactory(writeSchema: StructType, required: StructType,
   }
 }
 
-/** PARTITIONED delta row-level operation ([[org.apache.spark.sql
-  * .connector.write.SupportsDelta]]): UPDATE / MERGE / fallback-DELETE on
-  * a partitioned audit table write ONLY the changed rows. The scan's row
-  * id is the dir-qualified `(_file, _pos)` (`col=token/part-….jsonl`),
-  * unique table-wide; commit publishes replacement/new rows as ordinary
-  * per-directory OCC txn appends (a row routes by its — possibly NEW —
-  * partition value, so an UPDATE can move a row across partitions) and
-  * one PER-DIRECTORY delete-vector entry per removed row id. No committed
-  * file is rewritten: partitioned `VERSION AS OF` keeps resolving pre-DML
-  * epochs, and the partitioned change feed (whose offset tracks the
-  * per-directory vector log) emits true update/delete events. This
-  * replaced the round-11 group copy-on-write path, which truncated the
-  * whole table per UPDATE — the partitioned layout's one remaining
-  * scale-killer. */
-final class AuditPartDeltaOperation(path: String, schema: StructType,
+/** DELTA-granular row-level operations ([[org.apache.spark.sql.connector
+  * .write.SupportsDelta]]) on BOTH layouts: UPDATE / MERGE /
+  * fallback-DELETE write ONLY the changed rows. An unpartitioned table is
+  * the zero-level layout — its one directory is the table root (relDir
+  * `""`). The scan's row id is `(_file, _pos)`, unique table-wide: `_file`
+  * is dir-qualified (`col=token/part-….jsonl`) on a partitioned table and
+  * a plain name on a zero-level one. Spark's WriteDelta plan calls
+  * `delete`/`update`/`insert` per matched row, and commit publishes the
+  * replacement/new rows as ordinary per-directory OCC txn appends (a row
+  * routes by its — possibly NEW — partition value, so an UPDATE can move
+  * a row across partitions) plus one per-directory delete-vector entry per
+  * removed row id. No committed file is ever rewritten, so an UPDATE of
+  * 10 rows costs ~10 rows at any table size, `VERSION AS OF` keeps
+  * resolving pre-DML epochs, and the change feed emits true update/delete
+  * events. */
+final class AuditDeltaOperation(path: String, schema: StructType,
     cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command,
     partLevels: Seq[AuditPartition.Level],
     nameMap: Map[String, String] = Map.empty,
@@ -3594,9 +3587,12 @@ final class AuditPartDeltaOperation(path: String, schema: StructType,
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     Array(org.apache.spark.sql.connector.expressions.Expressions.column("_file"),
       org.apache.spark.sql.connector.expressions.Expressions.column("_pos"))
-  // each GENERATED ALWAYS identity column's ORIGINAL stored value rides
-  // the metadata projection (`_orig_<col>`, preserved-on-update) so the
-  // delta writer can reject UPDATE assignments — see AuditDeltaOperation
+  // GENERATED ALWAYS identity columns cannot ride rowId (row-id attrs
+  // must be non-nullable) — instead each one's ORIGINAL stored value
+  // rides the metadata projection as `_orig_<col>` (metadata columns are
+  // preserved-on-update by default, so the `meta` row the delta writer
+  // receives carries pre-assignment values even when the UPDATE assigns
+  // the column). FillingDeltaWriterFactory compares and rejects.
   override def requiredMetadataAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     lockedIdCols.toArray.map(c =>
@@ -3607,23 +3603,23 @@ final class AuditPartDeltaOperation(path: String, schema: StructType,
     new org.apache.spark.sql.connector.write.DeltaWriteBuilder {
       override def build(): org.apache.spark.sql.connector.write.DeltaWrite = {
         val storage = AuditNameMap.toStorage(info.schema(), nameMap)
-        // a pure DELETE writes no rows: its write schema is EMPTY, so
-        // there are no partition columns to route by (and no insert)
+        // a pure DELETE writes no rows: its write schema is EMPTY, so a
+        // partitioned table has no partition columns to route by (and no
+        // insert); a zero-level table routes everything to the root
         val routable = partLevels.forall(l =>
           storage.fieldNames.contains(l.col))
-        new AuditPartDeltaWrite(path, storage,
-          if (routable) partLevels else Nil,
+        new AuditDeltaWrite(path, storage, partLevels, routable,
           genSpecs.filter(_.fieldTypes.length == storage.length))
       }
     }
 }
 
-final class AuditPartDeltaWrite(path: String, schema: StructType,
-    partLevels: Seq[AuditPartition.Level],
+final class AuditDeltaWrite(path: String, schema: StructType,
+    partLevels: Seq[AuditPartition.Level], routable: Boolean,
     genSpecs: Option[GeneratedWrite.Specs] = None)
     extends org.apache.spark.sql.connector.write.DeltaWrite {
   override def toBatch: org.apache.spark.sql.connector.write.DeltaBatchWrite = {
-    val inner = new AuditPartDeltaBatchWrite(path, schema, partLevels)
+    val inner = new AuditDeltaBatchWrite(path, schema, partLevels, routable)
     genSpecs.fold(inner: org.apache.spark.sql.connector.write.DeltaBatchWrite) {
       s =>
         // MERGE-inserted rows need identity values: reserve one commit
@@ -3636,34 +3632,37 @@ final class AuditPartDeltaWrite(path: String, schema: StructType,
   }
 }
 
-final case class AuditPartDeltaCommitMessage(
+final case class AuditDeltaCommitMessage(
     // inserted rows: (partition relDir, staged name, rows, column stats)
     entries: Seq[(String, String, Long, AuditStats.FileStats)],
-    // deleted row ids: (dir-qualified file, pos)
+    // deleted row ids: (file, pos) — dir-qualified on a partitioned table
     deletes: Seq[(String, Long)])
   extends WriterCommitMessage
 
-final class AuditPartDeltaWriterFactory(path: String, schema: StructType,
-    partLevels: Seq[AuditPartition.Level], stageSub: String)
+final class AuditDeltaWriterFactory(path: String, schema: StructType,
+    partLevels: Seq[AuditPartition.Level], routable: Boolean,
+    stageSub: String)
     extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
-    new AuditPartDeltaWriter(path, schema, partLevels,
+    new AuditDeltaWriter(path, schema, partLevels, routable,
       partitionId, taskId, stageSub)
 }
 
-/** Per-task partitioned delta writer: inserts route into one staged file
-  * per partition relDir (the [[AuditPartitionedDataWriter]] discipline);
-  * deleted row ids buffer in the commit message. */
-final class AuditPartDeltaWriter(path: String, schema: StructType,
-    partLevels: Seq[AuditPartition.Level], partitionId: Int, taskId: Long,
-    stageSub: String)
+/** Per-task delta writer: inserts route into one staged file per
+  * partition relDir (the [[AuditPartitionedDataWriter]] discipline; a
+  * zero-level table has the one relDir `""`); deleted row ids buffer as
+  * (file, pos) pairs in the commit message (metadata-sized: one pair per
+  * changed row, not per table row). */
+final class AuditDeltaWriter(path: String, schema: StructType,
+    partLevels: Seq[AuditPartition.Level], routable: Boolean,
+    partitionId: Int, taskId: Long, stageSub: String)
     extends org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
   private val stageDir =
     java.nio.file.Paths.get(path).resolve("_staging").resolve(stageSub)
   private val outs = scala.collection.mutable.LinkedHashMap
     .empty[String, (java.io.BufferedWriter, String, Array[Long], AuditStats.Acc)]
-  // empty for a pure DELETE (empty write schema, no inserts)
+  // resolved on the first insert: a pure DELETE's write schema is empty
   private lazy val partIdxs: Array[Int] =
     partLevels.map(l => schema.fieldIndex(l.col)).toArray
   private lazy val enc = new AuditRowJson.Enc(schema)
@@ -3688,7 +3687,7 @@ final class AuditPartDeltaWriter(path: String, schema: StructType,
   }
 
   override def insert(row: InternalRow): Unit = {
-    require(partLevels.nonEmpty,
+    require(routable,
       "audit partitioned delta: insert without the partition columns in " +
         "the write schema")
     val relDir = AuditPartition.relDirOf(partLevels,
@@ -3704,7 +3703,7 @@ final class AuditPartDeltaWriter(path: String, schema: StructType,
 
   override def commit(): WriterCommitMessage = {
     outs.values.foreach(_._1.close())
-    AuditPartDeltaCommitMessage(
+    AuditDeltaCommitMessage(
       outs.collect { case (relDir, (_, staged, n, acc)) if n(0) > 0 =>
         (relDir, staged, n(0), acc.result) }.toSeq,
       deletes.toSeq)
@@ -3720,38 +3719,45 @@ final class AuditPartDeltaWriter(path: String, schema: StructType,
   override def close(): Unit = ()
 }
 
-/** Partitioned delta commit: per touched directory, publish the inserted
-  * rows as an ordinary OCC txn append (`_TXN` put-if-absent — DML may
-  * race concurrent partitioned appends) and append the directory's
-  * delete-vector entries. Two metadata appends per directory, zero data
-  * file rewrites. Inserts publish BEFORE deletes (the unpartitioned delta
-  * order): a crash in between duplicates the updated rows rather than
-  * losing them. */
-final class AuditPartDeltaBatchWrite(path: String, schema: StructType,
-    partLevels: Seq[AuditPartition.Level])
+/** Delta commit: per touched directory (the root alone on a zero-level
+  * table), publish the inserted rows as an ordinary OCC txn append
+  * (`_TXN` put-if-absent — DML may race concurrent appends) and append
+  * the directory's delete-vector entries. Two metadata appends per
+  * directory, zero data file rewrites. Inserts publish BEFORE deletes: a
+  * crash in between duplicates the updated rows rather than losing them. */
+final class AuditDeltaBatchWrite(path: String, schema: StructType,
+    partLevels: Seq[AuditPartition.Level], routable: Boolean)
     extends org.apache.spark.sql.connector.write.DeltaBatchWrite {
-  private val stageSub = "pd-" + java.util.UUID.randomUUID.toString.take(12)
+  // commit-unique staging subdir: DML is single-writer vs other DML but
+  // is ALLOWED to race OCC appends, so its end-of-commit cleanup must
+  // only touch its own staged files
+  private val stageSub = "d-" + java.util.UUID.randomUUID.toString.take(12)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DeltaWriterFactory =
-    new AuditPartDeltaWriterFactory(path, schema, partLevels, stageSub)
+    new AuditDeltaWriterFactory(path, schema, partLevels, routable, stageSub)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
-    // single-maintenance-writer lease, as on the unpartitioned delta path
+    // DML is single-writer vs other maintenance: the `_MAINT_LOCK` lease
+    // ENFORCES it — a racing OPTIMIZE/VACUUM/DML is rejected loudly
     AuditMaintLock.withLease(path, "delta-dml") { commitLocked(messages) }
 
   private def commitLocked(messages: Array[WriterCommitMessage]): Unit = {
-    AuditMaintLock.verifyCurrent(path, "partitioned delta DML publish")
+    AuditMaintLock.verifyCurrent(path, "delta DML publish")
     val dir = java.nio.file.Paths.get(path)
     val stage = dir.resolve("_staging").resolve(stageSub)
-    val msgs = messages.toSeq.map(_.asInstanceOf[AuditPartDeltaCommitMessage])
+    val msgs = messages.toSeq.map(_.asInstanceOf[AuditDeltaCommitMessage])
     val insertGroups = msgs.flatMap(_.entries).groupBy(_._1).toSeq.sortBy(_._1)
-    // deletes: split the dir-qualified row id back into (dir, plain file)
+    // deletes: split a dir-qualified row id back into (dir, plain file);
+    // a zero-level table's ids are plain names in the root
     val deleteGroups = msgs.flatMap(_.deletes).map { case (rel, pos) =>
-      val cut = rel.lastIndexOf('/')
-      require(cut > 0, s"audit partitioned delta: row id file $rel is not " +
-        "dir-qualified — scan/write contract violation")
-      (rel.substring(0, cut), (rel.substring(cut + 1), pos))
+      if (partLevels.isEmpty) ("", (rel, pos))
+      else {
+        val cut = rel.lastIndexOf('/')
+        require(cut > 0, s"audit partitioned delta: row id file $rel is " +
+          "not dir-qualified — scan/write contract violation")
+        (rel.substring(0, cut), (rel.substring(cut + 1), pos))
+      }
     }.groupBy(_._1).toSeq.sortBy(_._1)
     // ONE commit timestamp for the whole DML statement (all directories,
     // inserts AND delete vectors): a travel instant sees the statement's
@@ -3793,18 +3799,13 @@ final class AuditPartDeltaBatchWrite(path: String, schema: StructType,
       AuditDeletes.append(dir.resolve(dirName).toString, pairs.map(_._2),
         ts = Some(dirTs.getOrElse(dirName, commitMs)))
     }
-    if (java.nio.file.Files.exists(stage)) {
-      val walk = java.nio.file.Files.walk(stage)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-    }
+    deleteTree(stage)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val stage = java.nio.file.Paths.get(path).resolve("_staging").resolve(stageSub)
     messages.foreach {
-      case AuditPartDeltaCommitMessage(entries, _) =>
+      case AuditDeltaCommitMessage(entries, _) =>
         entries.foreach { case (_, staged, _, _) =>
           java.nio.file.Files.deleteIfExists(stage.resolve(staged))
         }
@@ -3813,204 +3814,6 @@ final class AuditPartDeltaBatchWrite(path: String, schema: StructType,
   }
 }
 
-/** DELTA-granular row-level operations ([[org.apache.spark.sql.connector
-  * .write.SupportsDelta]]): UPDATE / MERGE / fallback-DELETE write ONLY
-  * the changed rows. The scan exposes `(_file, _pos)` as the stable row
-  * id; Spark's WriteDelta plan calls `delete`/`update`/`insert` per
-  * matched row, and commit publishes (a) the replacement/new rows as an
-  * ordinary appended batch file and (b) one delete-vector entry per
-  * removed row id — no committed file is ever rewritten, so an UPDATE of
-  * 10 rows costs ~10 rows at any table size (the table-granular
-  * copy-on-write this replaces was the format's one true scale-killer)
-  * and `VERSION AS OF` keeps resolving pre-DML epochs afterwards. */
-final class AuditDeltaOperation(path: String, schema: StructType,
-    cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command,
-    nameMap: Map[String, String] = Map.empty,
-    genSpecs: Option[GeneratedWrite.Specs] = None,
-    lockedIdCols: Seq[String] = Nil)
-    extends org.apache.spark.sql.connector.write.RowLevelOperation
-    with org.apache.spark.sql.connector.write.SupportsDelta {
-  override def command()
-      : org.apache.spark.sql.connector.write.RowLevelOperation.Command = cmd
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : org.apache.spark.sql.connector.read.ScanBuilder =
-    new AuditScanBuilder(path, schema, None, nameMap = nameMap)
-  override def rowId()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(org.apache.spark.sql.connector.expressions.Expressions.column("_file"),
-      org.apache.spark.sql.connector.expressions.Expressions.column("_pos"))
-  // GENERATED ALWAYS identity columns cannot ride rowId (row-id attrs
-  // must be non-nullable) — instead each one's ORIGINAL stored value
-  // rides the metadata projection as `_orig_<col>` (metadata columns are
-  // preserved-on-update by default, so the `meta` row the delta writer
-  // receives carries pre-assignment values even when the UPDATE assigns
-  // the column). FillingDeltaWriterFactory compares and rejects.
-  override def requiredMetadataAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    lockedIdCols.toArray.map(c =>
-      org.apache.spark.sql.connector.expressions.Expressions
-        .column("_orig_" + c))
-  override def newWriteBuilder(info: LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.DeltaWriteBuilder =
-    new org.apache.spark.sql.connector.write.DeltaWriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.DeltaWrite = {
-        val storage = AuditNameMap.toStorage(info.schema(), nameMap)
-        new AuditDeltaWrite(path, storage,
-          genSpecs.filter(_.fieldTypes.length == storage.length))
-      }
-    }
-}
-
-final class AuditDeltaWrite(path: String, schema: StructType,
-    genSpecs: Option[GeneratedWrite.Specs] = None)
-    extends org.apache.spark.sql.connector.write.DeltaWrite {
-  override def toBatch: org.apache.spark.sql.connector.write.DeltaBatchWrite = {
-    val inner = new AuditDeltaBatchWrite(path, schema)
-    genSpecs.fold(inner: org.apache.spark.sql.connector.write.DeltaBatchWrite) {
-      s =>
-        val idBase =
-          if (s.ids.nonEmpty) GeneratedWrite.reserveBlock(path) else 0L
-        new GeneratedWrite.FillingDeltaBatchWrite(inner, s, idBase,
-          GeneratedWrite.Reserver(path))
-    }
-  }
-}
-
-final case class AuditDeltaCommitMessage(staged: Option[String], rows: Long,
-    deletes: Seq[(String, Long)],
-    stats: AuditStats.FileStats = AuditStats.FileStats.empty)
-  extends WriterCommitMessage
-
-final class AuditDeltaWriterFactory(path: String, schema: StructType,
-    stageSub: String = "")
-    extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
-    new AuditDeltaWriter(path, schema, partitionId, taskId, stageSub)
-}
-
-/** Per-task delta writer: inserts/updated rows stream into ONE staged
-  * file; deleted row ids buffer as (file, pos) pairs in the commit
-  * message (metadata-sized: one pair per changed row, not per table row). */
-final class AuditDeltaWriter(path: String, schema: StructType,
-    partitionId: Int, taskId: Long, stageSub: String = "")
-    extends org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
-  private val stagedName = f"stage-delta-$partitionId%05d-$taskId.jsonl"
-  // per-commit staging subdir — see AuditDataWriter.stageDir
-  private val stageDir = {
-    val base = java.nio.file.Paths.get(path).resolve("_staging")
-    if (stageSub.isEmpty) base else base.resolve(stageSub)
-  }
-  private var out: java.io.BufferedWriter = _
-  private var rows = 0L
-  private val acc = new AuditStats.Acc(schema)
-  private lazy val enc = new AuditRowJson.Enc(schema)
-  private val deletes = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-
-  override def delete(meta: InternalRow, id: InternalRow): Unit =
-    deletes += ((id.getUTF8String(0).toString, id.getLong(1)))
-
-  override def update(meta: InternalRow, id: InternalRow, row: InternalRow): Unit = {
-    delete(meta, id)
-    insert(row)
-  }
-
-  override def insert(row: InternalRow): Unit = {
-    if (out == null) {
-      java.nio.file.Files.createDirectories(stageDir)
-      out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-        java.nio.file.Files.newOutputStream(stageDir.resolve(stagedName)), "UTF-8"))
-    }
-    enc.writeTo(row, out)
-    acc.update(row)
-    rows += 1
-  }
-
-  override def commit(): WriterCommitMessage = {
-    if (out != null) out.close()
-    AuditDeltaCommitMessage(if (rows > 0) Some(stagedName) else None, rows,
-      deletes.toSeq, acc.result)
-  }
-
-  override def abort(): Unit = {
-    if (out != null) out.close()
-    java.nio.file.Files.deleteIfExists(stageDir.resolve(stagedName))
-  }
-
-  override def close(): Unit = ()
-}
-
-/** Delta commit: append the replacement rows as ordinary batch files
-  * (extending `_MANIFEST` numbering) and merge the delete vectors — two
-  * metadata appends, zero data-file rewrites. */
-final class AuditDeltaBatchWrite(path: String, schema: StructType)
-    extends org.apache.spark.sql.connector.write.DeltaBatchWrite {
-  // commit-unique staging subdir: DML is single-writer vs other DML but
-  // is ALLOWED to race OCC appends, so its end-of-commit cleanup must
-  // only touch its own staged files
-  private val stageSub = "d-" + java.util.UUID.randomUUID.toString.take(12)
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.DeltaWriterFactory =
-    new AuditDeltaWriterFactory(path, schema, stageSub)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    // DML is single-writer vs other maintenance: the `_MAINT_LOCK` lease
-    // ENFORCES it — a racing OPTIMIZE/VACUUM/DML is rejected loudly
-    AuditMaintLock.withLease(path, "delta-dml") { commitLocked(messages) }
-
-  private def commitLocked(messages: Array[WriterCommitMessage]): Unit = {
-    AuditMaintLock.verifyCurrent(path, "delta DML publish")
-    val dir = java.nio.file.Paths.get(path)
-    val stage = dir.resolve("_staging").resolve(stageSub)
-    val msgs = messages.toSeq.map(_.asInstanceOf[AuditDeltaCommitMessage])
-    val manifestFile = dir.resolve("_MANIFEST")
-    // fold any OCC txn appends into the manifest before this
-    // read-modify-write (appends may race DML freely)
-    AuditBase.consolidate(path)
-    val prior: Seq[AuditBase.ManifestEntry] = AuditBase.readManifest(path)
-    val start = AuditBase.nextPartIndex(prior)
-    // ONE commit timestamp for the statement's inserts and delete
-    // vectors — the TIMESTAMP AS OF axis sees them together — claimed
-    // through the root sequencer: strictly above everything visible AND
-    // unique table-wide (no same-ms tie with a racing OCC append or an
-    // epoch publish), which keeps the CDC max+1 checkpoint exactly-once.
-    val commitMs = AuditSeq.next(path, math.max(System.currentTimeMillis(),
-      AuditBase.maxVisibleTs(path) + 1L))
-    val placed = msgs.flatMap(m => m.staged.map((_, m.rows, m.stats)))
-      .sortBy(_._1).zipWithIndex.map { case ((staged, rows, stats), i) =>
-        val name = f"part-${start + i}%05d.jsonl"
-        CommitPrimitives.io.publishData(stage.resolve(staged),
-          dir.resolve(name))
-        (AuditBase.ManifestEntry(name, rows, folded = false,
-          ts = Some(commitMs)), stats)
-      }
-    val added = placed.map(_._1)
-    if (added.nonEmpty || !java.nio.file.Files.exists(manifestFile))
-      AuditBase.writeManifest(path, prior ++ added)
-    AuditStats.append(path, placed.map { case (e, s) => (e.file, s) })
-    AuditDeletes.append(path, msgs.flatMap(_.deletes), ts = Some(commitMs))
-    if (java.nio.file.Files.exists(stage)) {
-      val walk = java.nio.file.Files.walk(stage)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val stage = java.nio.file.Paths.get(path).resolve("_staging").resolve(stageSub)
-    messages.foreach {
-      case AuditDeltaCommitMessage(Some(staged), _, _, _) =>
-        java.nio.file.Files.deleteIfExists(stage.resolve(staged))
-      case _ => ()
-    }
-  }
-}
-
-/** Copy-on-write DELETE over the committed file set. Filter evaluation is
-  * exact 3-valued logic on the writer's restricted types; the top-level
-  * filter array is a conjunction (the V2 contract). */
 /** COLUMN NAME MAPPING (RENAME/DROP without data rewrite). The jsonl
   * payload is keyed by each column's STORAGE name — the name it had when
   * first added — which never changes; the catalog schema carries the
@@ -5816,7 +5619,7 @@ final class AuditBatchWrite(path: String, schema: StructType, truncateFirst: Boo
       java.nio.file.Files.deleteIfExists(dir.resolve("_BASE"))
       AuditDeletes.clear(path)
       AuditStats.clear(path)
-      deleteRecursively(dir.resolve("_TXN"))
+      deleteTree(dir.resolve("_TXN"))
     }
     val entries = messages.toSeq.map(_.asInstanceOf[AuditCommitMessage])
       .sortBy(_.stagedName)
@@ -5856,20 +5659,12 @@ final class AuditBatchWrite(path: String, schema: StructType, truncateFirst: Boo
           AuditBase.ManifestEntry(n, m.rows, folded = false) },
         named.map { case (n, m) => AuditStats.line(n, m.stats) })
     }
-    deleteRecursively(stage)
+    deleteTree(stage)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    deleteRecursively(
+    deleteTree(
       java.nio.file.Paths.get(path).resolve("_staging").resolve(stageSub))
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-    }
 }
 
 final class AuditWriterFactory(path: String, schema: StructType,
@@ -6185,12 +5980,7 @@ final class AuditPartitionedBaseWrite(path: String, schema: StructType,
           .collect { case e if !e.folded => e.file }.toSet)
       }.toMap.filter(_._2.nonEmpty)
     if (nowSets != pinned) {
-      if (java.nio.file.Files.exists(stage)) {
-        val walk = java.nio.file.Files.walk(stage)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => java.nio.file.Files.deleteIfExists(f))
-        finally walk.close()
-      }
+      deleteTree(stage)
       throw new IllegalStateException(
         s"audit partitioned OPTIMIZE: concurrent append(s) committed " +
           s"while the compaction ran at $path — the rewrite no longer " +
@@ -6249,22 +6039,12 @@ final class AuditPartitionedBaseWrite(path: String, schema: StructType,
           (name, st)
         })
     }
-    if (java.nio.file.Files.exists(stage)) {
-      val walk = java.nio.file.Files.walk(stage)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-    }
+    deleteTree(stage)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val stage = java.nio.file.Paths.get(path).resolve("_staging").resolve(stageSub)
-    if (java.nio.file.Files.exists(stage)) {
-      val walk = java.nio.file.Files.walk(stage)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-    }
+    deleteTree(stage)
   }
 }
 
@@ -6288,12 +6068,8 @@ final class AuditPartitionedBatchWrite(path: String, schema: StructType,
     val stage = dir.resolve("_staging").resolve(stageSub)
     if (truncateFirst) {
       // remove level-0 dirs whole: nested level dirs die with their parent
-      AuditPartition.listDirs(path, partLevels.take(1)).foreach { case (_, d) =>
-        val walk = java.nio.file.Files.walk(d)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => java.nio.file.Files.deleteIfExists(f))
-        finally walk.close()
-      }
+      AuditPartition.listDirs(path, partLevels.take(1))
+        .foreach { case (_, d) => deleteTree(d) }
       // the table-level epoch log dies with the data it described
       java.nio.file.Files.deleteIfExists(dir.resolve("_EPOCHS"))
     }
@@ -6329,21 +6105,11 @@ final class AuditPartitionedBatchWrite(path: String, schema: StructType,
         added.map { case (n, _, st) => AuditStats.line(n, st) },
         ts = stmtTs, seqRoot = path)
     }
-    if (java.nio.file.Files.exists(stage)) {
-      val walk = java.nio.file.Files.walk(stage)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-    }
+    deleteTree(stage)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val stage = java.nio.file.Paths.get(path).resolve("_staging").resolve(stageSub)
-    if (java.nio.file.Files.exists(stage)) {
-      val walk = java.nio.file.Files.walk(stage)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-    }
+    deleteTree(stage)
   }
 }

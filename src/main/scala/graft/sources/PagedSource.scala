@@ -775,10 +775,7 @@ object PagedApi {
       .agg(count(lit(1)).as("n_plays"), sum(col("duration_ms")).as("total_ms"))
       .orderBy(col("track_id"))
       .localCheckpoint() // pin: the temp table dir is deleted below
-    val walk = java.nio.file.Files.walk(root)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => java.nio.file.Files.deleteIfExists(f))
-    finally walk.close()
+    deleteTree(root)
     pinned
   }
 
@@ -833,10 +830,7 @@ object PagedApi {
         min(col("id")).as("lo_id"), max(col("id")).as("hi_id"))
       .orderBy(col("_epoch"))
       .localCheckpoint() // pin: the temp table dir is deleted below
-    val walk = java.nio.file.Files.walk(root)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => java.nio.file.Files.deleteIfExists(f))
-    finally walk.close()
+    deleteTree(root)
     pinned
   }
 
@@ -893,10 +887,7 @@ object PagedApi {
         min(col("track_id")).as("lo_track"))
       .orderBy(col("bucket"))
       .localCheckpoint() // pin: the temp table dir is deleted below
-    val walk = java.nio.file.Files.walk(root)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => java.nio.file.Files.deleteIfExists(f))
-    finally walk.close()
+    deleteTree(root)
     pinned
   }
 
@@ -953,10 +944,7 @@ object PagedApi {
         min(col("okey")).as("lo_okey"), max(col("k")).as("hi_k"))
       .orderBy(col("grp"))
       .localCheckpoint() // pin: the temp table dir is deleted below
-    val walk = java.nio.file.Files.walk(root)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => java.nio.file.Files.deleteIfExists(f))
-    finally walk.close()
+    deleteTree(root)
     pinned
   }
 
@@ -1010,10 +998,7 @@ object PagedApi {
         min(col("pkey")).as("lo_pkey"))
       .orderBy(col("okey"))
       .localCheckpoint() // pin: the temp table dir is deleted below
-    val walk = java.nio.file.Files.walk(root)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => java.nio.file.Files.deleteIfExists(f))
-    finally walk.close()
+    deleteTree(root)
     pinned
   }
 
@@ -1058,10 +1043,7 @@ object PagedApi {
         min(col("duration_ms")).as("min_dur"),
         max(col("duration_ms")).as("max_dur"))
       .localCheckpoint() // pin: the temp table dir is deleted below
-    val walk = java.nio.file.Files.walk(root)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => java.nio.file.Files.deleteIfExists(f))
-    finally walk.close()
+    deleteTree(root)
     pinned
   }
 

@@ -1,0 +1,19 @@
+package graft
+
+package object sources {
+
+  /** Delete `p` and everything beneath it, deepest entries first; a
+    * missing `p` is a no-op. Returns the number of regular files removed
+    * (VACUUM's orphan sweeps report it). */
+  def deleteTree(p: java.nio.file.Path): Int = {
+    if (!java.nio.file.Files.exists(p)) return 0
+    var files = 0
+    val walk = java.nio.file.Files.walk(p)
+    try walk.sorted(java.util.Comparator.reverseOrder()).forEach { q =>
+      val isFile = java.nio.file.Files.isRegularFile(q)
+      if (java.nio.file.Files.deleteIfExists(q) && isFile) files += 1
+    }
+    finally walk.close()
+    files
+  }
+}

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.sources.deleteTree
+
 /** Structured Streaming over the events table shape.
   *
   * The reference has NO streaming (README.md:25 lists it as future work) —
@@ -270,7 +272,7 @@ object EventStream {
         case Some(v) => spark.conf.set(providerKey, v)
         case None    => spark.conf.unset(providerKey)
       }
-      deleteRecursively(root)
+      deleteTree(root)
     }
     spark.table("graft_stream_tws")
       .groupBy(col("user_id"))
@@ -367,7 +369,7 @@ object EventStream {
         case Some(v) => spark.conf.set(providerKey, v)
         case None    => spark.conf.unset(providerKey)
       }
-      deleteRecursively(root)
+      deleteTree(root)
     }
     // silent seed-only users re-enter from the seed itself; streamed users'
     // last Update row (per-user max: counts strictly increase) wins the union
@@ -499,7 +501,7 @@ object EventStream {
         case Some(v) => spark.conf.set(providerKey, v)
         case None    => spark.conf.unset(providerKey)
       }
-      deleteRecursively(root)
+      deleteTree(root)
     }
     spark.table("graft_stream_tws_timer")
       .where(col("user_id") =!= -1L)
@@ -642,7 +644,7 @@ object EventStream {
       .agg(count(lit(1)).as("n_events"),
         graft.functions.Money.moneySum(col("value")).as("sum_value"))
     try runToMemory(agg, "graft_stream_update", OutputMode.Update, NarrowParts)
-    finally deleteRecursively(root)
+    finally deleteTree(root)
     spark.table("graft_stream_update")
       .groupBy(col("window.start").cast("timestamp_ntz").as("day"),
         col("event_type"))
@@ -740,20 +742,12 @@ object EventStream {
       .agg(count(lit(1)).as("n_events"),
         graft.functions.Money.moneySum(col("value")).as("sum_value"))
     try runToMemory(agg, "graft_stream_late", OutputMode.Append, NarrowParts)
-    finally deleteRecursively(root) // the sink table holds the result; staging is disposable
+    finally deleteTree(root) // the sink table holds the result; staging is disposable
     spark.table("graft_stream_late")
       .where(col("event_type") =!= "__flush__")
       .select(col("window.start").cast("timestamp_ntz").as("day"),
         col("event_type"), col("n_events"), col("sum_value"))
       .orderBy("day", "event_type")
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
   }
 
   val streamingLateDataSql: String =
@@ -820,7 +814,7 @@ object EventStream {
       .agg(count(lit(1)).as("n_events"),
         graft.functions.Money.moneySum(col("value")).as("sum_value"))
     try runToMemory(agg, "graft_stream_session_window", OutputMode.Append)
-    finally deleteRecursively(root)
+    finally deleteTree(root)
     spark.table("graft_stream_session_window")
       .where(col("user_id") >= 0)
       .select(col("user_id"),
@@ -888,7 +882,7 @@ object EventStream {
       .agg(sum(col("n_events")).as("n_events"),
         graft.functions.Money.centsToDollars(sum(col("cents"))).as("sum_value"))
     try runToMemory(daily, "graft_stream_rewindow", OutputMode.Append, NarrowParts)
-    finally deleteRecursively(root)
+    finally deleteTree(root)
     spark.table("graft_stream_rewindow")
       .where(col("event_type") =!= "__flush__")
       .select(col("day_w.start").cast("timestamp_ntz").as("day"),
@@ -1053,7 +1047,7 @@ object EventStream {
         col("p_ts") > col("view_ts") &&
         col("p_ts") <= col("view_ts") + expr("interval 1 hour"))
     try runToMemory(joined, "graft_stream_join_late", OutputMode.Append, NarrowParts)
-    finally deleteRecursively(root)
+    finally deleteTree(root)
     spark.table("graft_stream_join_late")
       .groupBy(to_date(col("p_ts")).as("day"))
       .agg(count(lit(1)).as("n_attributed"),
@@ -1208,7 +1202,7 @@ object EventStream {
       .agg(count(lit(1)).as("n_attributed"),
         graft.functions.Money.moneySum(col("value")).as("sum_value"))
     try runToMemory(agg, "graft_stream_join_agg", OutputMode.Append, NarrowParts)
-    finally deleteRecursively(root)
+    finally deleteTree(root)
     spark.table("graft_stream_join_agg")
       .select(col("window.start").cast("timestamp_ntz").as("day"),
         col("n_attributed"), col("sum_value"))
@@ -1257,7 +1251,7 @@ object EventStream {
       .withWatermark("ts", "1 day")
       .dropDuplicates("event_id", "ts")
     try runToMemory(stream, "graft_stream_dedup", OutputMode.Append)
-    finally deleteRecursively(root)
+    finally deleteTree(root)
     spark.table("graft_stream_dedup")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
@@ -1320,7 +1314,7 @@ object EventStream {
           graft.functions.Money.moneySum(col("value")).as("sum_value"))
         .orderBy("event_type")
         .localCheckpoint() // pin: the temp output dir is deleted below
-    } finally deleteRecursively(root)
+    } finally deleteTree(root)
   }
 
   val streamingRestartSql: String =
@@ -1402,7 +1396,7 @@ object EventStream {
           }
       }
     try runToMemory(out.toDF(), "graft_stream_timeout", OutputMode.Append)
-    finally deleteRecursively(root)
+    finally deleteTree(root)
     spark.table("graft_stream_timeout")
       .where(col("user_id") =!= -1L)
       .select(col("user_id"), col("n_events"), col("total_value"))
@@ -1474,7 +1468,7 @@ object EventStream {
         graft.functions.Money.moneySum(col("value")).as("sum_value"))
       .orderBy("event_type")
       .localCheckpoint() // pin: the temp warehouse dirs are deleted below
-    finally deleteRecursively(root)
+    finally deleteTree(root)
   }
 
   /** STREAMING AS-OF ENRICHMENT: incoming events enriched per micro-batch
@@ -1536,7 +1530,7 @@ object EventStream {
         col("signup_id"), col("micros_since_signup"))
       .orderBy("event_id")
       .localCheckpoint() // pin: the temp dirs are deleted below
-    finally deleteRecursively(root)
+    finally deleteTree(root)
   }
 
   /** Oracle: every event exactly once — the merge collapsed the overlap. */
@@ -1632,7 +1626,7 @@ object EventStream {
         col("p_ts") <= col("view_ts") + expr("interval 1 hour"),
       "left_outer")
     try runToMemory(joined, "graft_stream_outer", OutputMode.Append, NarrowParts)
-    finally deleteRecursively(root)
+    finally deleteTree(root)
     spark.table("graft_stream_outer")
       .where(col("v_user") >= 0)
       .groupBy(to_date(col("view_ts")).as("day"))
@@ -1719,7 +1713,7 @@ object EventStream {
         col("p_ts") <= col("view_ts") + expr("interval 1 hour"),
       "full_outer")
     try runToMemory(joined, "graft_stream_fouter", OutputMode.Append, NarrowParts)
-    finally deleteRecursively(root)
+    finally deleteTree(root)
     spark.table("graft_stream_fouter")
       .where(coalesce(col("v_user"), lit(0L)) >= 0 &&
         coalesce(col("p_user"), lit(0L)) >= 0)
@@ -1817,7 +1811,7 @@ object EventStream {
       .withWatermark("ts", "3 days")
       .dropDuplicatesWithinWatermark("event_id")
     try runToMemory(deduped, "graft_stream_dedup_wm", OutputMode.Append)
-    finally deleteRecursively(root)
+    finally deleteTree(root)
     spark.table("graft_stream_dedup_wm")
       .where(col("user_id") >= 0)
       .groupBy(to_date(col("ts")).as("day"))

@@ -99,8 +99,8 @@ class AuditMaintenanceSpec extends SparkSpec {
 
     assert(jsonlFiles("opt1", "base-").size === 2)
     assert(jsonlFiles("opt1", "part-e").size === 4) // epoch files wait for VACUUM
-    assert(jsonlFiles("opt1", "part-0").isEmpty &&
-      jsonlFiles("opt1", "part-1").isEmpty) // folded batch files reclaimed
+    // folded batch files (the MERGE's inserts) reclaimed; epoch files stay
+    assert(jsonlFiles("opt1", "part-").forall(_.startsWith("part-e")))
 
     // within-file sort honored (ids ascending inside each base file)
     val ids = java.nio.file.Files
@@ -128,9 +128,15 @@ class AuditMaintenanceSpec extends SparkSpec {
     // pinned history still shows the pre-UPDATE values
     val pin = snap("SELECT id, v FROM graft_m.db.opt2 VERSION AS OF 2 ORDER BY id")
     assert(pin.size === 300 && pin.count(_._2 == 1L) === 0)
-    // append lands as a fresh live batch file numbered PAST the folded set
+    // the UPDATE and the append land as fresh live batch files whose
+    // names never reuse a folded entry's (delete vectors key on them)
     spark.sql("INSERT INTO graft_m.db.opt2 VALUES (2000, 9)")
-    assert(jsonlFiles("opt2", "part-0").nonEmpty) // part-00002+ (post-fold)
+    val manifest = AuditBase.readManifest(dataDir("opt2").toString)
+    val folded = manifest.filter(_.folded).map(_.file).toSet
+    val live = manifest.filterNot(_.folded)
+    // 2 updated rows + 1 appended row, all in fresh live files
+    assert(folded.nonEmpty && live.map(_.rows).sum === 3L, manifest)
+    assert(live.forall(e => !folded(e.file)), manifest)
     assert(spark.sql("SELECT count(*) FROM graft_m.db.opt2").head.getLong(0) === 398L)
     val cur = snap("SELECT id, v FROM graft_m.db.opt2 ORDER BY id")
     // re-OPTIMIZE folds everything again; answers stable
@@ -258,6 +264,22 @@ class AuditMaintenanceSpec extends SparkSpec {
       "CALL graft_m.system.optimize(table => 'db.zo1', " +
         "zorder_by => 'nope')").collect())
     assert(ex2.getMessage.contains("not in table schema"), ex2.getMessage)
+  }
+
+  test("z-order bounds: a mostly-null column takes the exact quantile pass") {
+    // 40k rows: the 5% sample holds ~2000 rows, far above 20 per bucket,
+    // but the 1%-dense column has only ~20 non-null sampled values — too
+    // few to cut 8 buckets, so both columns take the exact pass
+    val df = spark.range(0, 40000).toDF("id").select(col("id").as("dense"),
+      when(col("id") % 100 === 0, col("id") / 100).cast("long").as("sparse"))
+    val probs = (1 until 8).map(_.toDouble / 8).toArray
+    val exact = df.select(col("dense").cast("double"),
+        col("sparse").cast("double"))
+      .stat.approxQuantile(Array("dense", "sparse"), probs, 0.001)
+      .map(_.map(_.toLong).distinct.sorted)
+    val bounds = AuditMaintenance.zQuantileBounds(df, Seq("dense", "sparse"), 3)
+    assert(bounds.map(_.toSeq).toSeq === exact.map(_.toSeq).toSeq)
+    assert(bounds(1).length === 7 && bounds(1).last < 400L, bounds(1).toSeq)
   }
 
   test("OPTIMIZE pins its snapshot: commits landing mid-compaction survive live") {

@@ -166,4 +166,60 @@ class AuditOccSpec extends AnyFunSuite {
     assert(live.isEmpty, live)
   }
 
+  test("an append racing OPTIMIZE's fold after its consolidation counts once") {
+    val dir = tempDir()
+    append(dir, 0L, 100L)
+    // a racing appender's whole commit: a data file, then its OCC txn
+    def rawAppend(from: Long): Unit = {
+      val name = s"part-xraced-$from.jsonl"
+      java.nio.file.Files.write(dir.resolve(name),
+        (from until from + 10).map(i => s"""{"id":$i}""")
+          .mkString("", "\n", "\n").getBytes("UTF-8"))
+      AuditBase.commitTxn(dir.toString,
+        Seq(AuditBase.ManifestEntry(name, 10L, folded = false)), Nil)
+    }
+    val p = PosixCommitPrimitives
+    // OPTIMIZE's commit publishes its base files, consolidates (a
+    // _MANIFEST replace), then rewrites the manifest with the fold. One
+    // append lands before the consolidation and one right after it.
+    final class Racing extends CommitPrimitives {
+      @volatile var armed, fired = false
+      def createMarker(t: java.nio.file.Path): Unit = p.createMarker(t)
+      def linkIfAbsent(t: java.nio.file.Path, s: java.nio.file.Path): Unit =
+        p.linkIfAbsent(t, s)
+      def renameClaim(s: java.nio.file.Path, t: java.nio.file.Path): Unit =
+        p.renameClaim(s, t)
+      def appendBounded(t: java.nio.file.Path, c: Array[Byte]): Unit =
+        p.appendBounded(t, c)
+      def publishData(s: java.nio.file.Path, t: java.nio.file.Path,
+          r: Boolean): Unit = {
+        p.publishData(s, t, r)
+        if (!armed && t.getFileName.toString.startsWith("base-")) {
+          armed = true
+          rawAppend(1000L)
+        }
+      }
+      def replace(t: java.nio.file.Path, c: Array[Byte]): Unit = {
+        p.replace(t, c)
+        if (armed && !fired && t.getFileName.toString == "_MANIFEST") {
+          fired = true
+          rawAppend(2000L)
+        }
+      }
+    }
+    val racing = new Racing
+    CommitPrimitives.withImpl(racing) {
+      AuditMaintenance.optimize(spark, dir.toString, schema, 1, None)
+    }
+    assert(racing.fired)
+    val ids = read(dir).collect().map(_.getLong(0)).toSeq
+    assert(ids.sorted === ((0L until 100L) ++ (1000L until 1010L) ++
+      (2000L until 2010L)))
+    assert(read(dir).agg(count(lit(1))).head.getLong(0) === 120L)
+    // both racers stay live batch entries, listed once each
+    val live = AuditBase.readManifest(dir.toString).filterNot(_.folded)
+      .map(_.file)
+    assert(live.sorted === Seq("part-xraced-1000.jsonl",
+      "part-xraced-2000.jsonl"), live)
+  }
 }

@@ -311,4 +311,95 @@ class AuditTravelMixedSpec extends AnyFunSuite {
       .head.getLong(0) === 100L) // epochs 0-1 only, no batch append
     val _ = wh
   }
+
+  /** Stream `pages` epochs of 40 rows (id, flag = id % 3, v = id) into a
+    * fresh catalog table; returns (catalog, table path). */
+  private def streamedTable(tag: String, partitioned: Boolean, pages: Int)
+      : (String, String) = {
+    val (cat, wh) = freshCat(tag)
+    spark.sql(s"CREATE TABLE $cat.db.t (id BIGINT, flag BIGINT, v BIGINT) " +
+      "USING audit" + (if (partitioned) " PARTITIONED BY (flag)" else ""))
+    val ckpt = java.nio.file.Files.createTempDirectory(s"graft_tmix_${tag}_ckpt")
+    val w = spark.readStream.format(classOf[PagedSource].getName)
+      .option("pages", pages.toString).option("pageSize", "40")
+      .option("pagesPerTrigger", "1")
+      .load().selectExpr("id", "id % 3 AS flag", "id AS v")
+      .writeStream.option("checkpointLocation", ckpt.toString)
+      .outputMode("append").toTable(s"$cat.db.t")
+    try w.processAllAvailable() finally w.stop()
+    (cat, wh.resolve("db/t").toString)
+  }
+
+  private def rows(sqlText: String): Seq[(Long, Long, Long)] =
+    spark.sql(sqlText).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+
+  /** The change feed as a sorted multiset of (_change_type, id, flag, v). */
+  private def changes(path: String, partitioned: Boolean)
+      : Seq[(String, Long, Long, Long)] = {
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "id BIGINT, flag BIGINT, v BIGINT, _change_type STRING")
+    val r = spark.read.schema(schema).format(classOf[JsonAuditSink].getName)
+      .option("path", path).option("changeFeed", "true")
+    (if (partitioned) r.option("partitionby", "flag") else r).load()
+      .collect().map(x => (x.getString(3), x.getLong(0), x.getLong(1),
+        x.getLong(2))).toSeq.sorted
+  }
+
+  test("one DML script gives the same rows, travel and change feed on " +
+    "both layouts") {
+    def script(tag: String, partitioned: Boolean) = {
+      val (cat, path) = streamedTable(tag, partitioned, pages = 3)
+      val t = s"$cat.db.t"
+      Thread.sleep(5)
+      val tPre = System.currentTimeMillis()
+      Thread.sleep(5)
+      spark.sql(s"INSERT INTO $t SELECT id + 1000, id % 3, id FROM range(30)")
+      spark.sql(s"UPDATE $t SET v = 999 WHERE id % 10 = 3")
+      // the matched update moves rows across partitions (flag changes)
+      spark.sql(
+        s"""MERGE INTO $t t
+           |USING (SELECT * FROM VALUES (5L, 2L, 111L), (17L, 0L, 111L),
+           |       (5000L, 1L, 222L) AS s(id, flag, v)) s
+           |ON t.id = s.id
+           |WHEN MATCHED THEN UPDATE SET t.v = s.v, t.flag = s.flag
+           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      // a modulo predicate cannot take the metadata path: delta DELETE
+      spark.sql(s"DELETE FROM $t WHERE id % 7 = 2")
+      (rows(s"SELECT id, flag, v FROM $t"),
+        rows(s"SELECT id, flag, v FROM $t VERSION AS OF 1"),
+        rows(s"SELECT id, flag, v FROM $t TIMESTAMP AS OF " +
+          s"timestamp_millis($tPre)"),
+        changes(path, partitioned))
+    }
+    val (flatNow, flatV1, flatPre, flatCdf) = script("lay0", partitioned = false)
+    val (partNow, partV1, partPre, partCdf) = script("lay1", partitioned = true)
+    // 120 streamed + 30 inserted + 1 merged in, minus the id % 7 = 2 rows
+    val deleted = ((0L until 120L) ++ (1000L until 1030L) :+ 5000L)
+      .count(_ % 7 == 2)
+    assert(flatNow.size === 151 - deleted)
+    assert(flatNow.contains((5L, 2L, 111L)) && flatNow.contains((13L, 1L, 999L)))
+    assert(flatV1.size === 80 && flatPre.size === 120)
+    assert(partNow === flatNow)
+    assert(partV1 === flatV1)
+    assert(partPre === flatPre)
+    assert(partCdf === flatCdf)
+    assert(flatCdf.count(_._1 == "delete") === 15 + 2 + deleted)
+  }
+
+  test("a DELETE-only statement on a streamed-only table reads exactly") {
+    val (cat, path) = streamedTable("delonly", partitioned = false, pages = 2)
+    val before = changes(path, partitioned = false)
+    spark.sql(s"DELETE FROM $cat.db.t WHERE id % 10 = 4")
+    val kept = (0L until 80L).filterNot(_ % 10 == 4)
+    assert(rows(s"SELECT id, flag, v FROM $cat.db.t") ===
+      kept.map(i => (i, i % 3, i)))
+    assert(spark.sql(s"SELECT count(*) FROM $cat.db.t").head.getLong(0) === 72L)
+    // version pins keep the pure epoch history: vectors stay out
+    assert(rows(s"SELECT id, flag, v FROM $cat.db.t VERSION AS OF 0") ===
+      (0L until 40L).map(i => (i, i % 3, i)))
+    val removed = (0L until 80L).filter(_ % 10 == 4)
+      .map(i => ("delete", i, i % 3, i))
+    assert(changes(path, partitioned = false) === (before ++ removed).sorted)
+  }
 }
