@@ -119,8 +119,13 @@ private[sources] object AuditSeq {
   // INIT marks "a pointer exists": a directory listing racing a rename
   // can transiently miss the pointer file, and creating a fresh pointer
   // then could re-issue an old value — with INIT present, an empty
-  // numeric listing means "retry", never "initialize". Created AFTER the
-  // first pointer so a birth crash can never strand claimants spinning.
+  // numeric listing means "retry", never "initialize". The birth claimant
+  // creates it AFTER the first pointer (a birth crash never strands
+  // claimants spinning), and a renamer creates it BEFORE consuming any
+  // pointer. A birth claim is won only by creating INIT exclusively: a
+  // claimant whose listing predates the first pointer can re-create that
+  // pointer after a renamer consumed it, and returning it would hand the
+  // value out twice.
   private val InitMarker = "INIT"
 
   /** Highest stamp ever issued through this sequencer (-1 when none).
@@ -146,19 +151,21 @@ private[sources] object AuditSeq {
       val cur = maxIssued(root)
       if (cur < 0L) {
         if (!java.nio.file.Files.exists(d.resolve(InitMarker))) {
-          // genuine birth: exclusive-create the first pointer (= first
-          // issued stamp); losers fall through to the rename path
+          // genuine birth: exclusive-create the first pointer (= the first
+          // stamp) and then INIT; a loser of either create retries
           val target = math.max(floor, 0L)
           try {
             CommitPrimitives.io.createMarker(d.resolve(target.toString))
-            try CommitPrimitives.io.createMarker(d.resolve(InitMarker))
-            catch { case _: java.nio.file.FileAlreadyExistsException => () }
+            CommitPrimitives.io.createMarker(d.resolve(InitMarker))
             return target
           } catch {
             case _: java.nio.file.FileAlreadyExistsException => ()
           }
         } // else: transient empty listing during a rename — retry
       } else {
+        if (!java.nio.file.Files.exists(d.resolve(InitMarker)))
+          try CommitPrimitives.io.createMarker(d.resolve(InitMarker))
+          catch { case _: java.nio.file.FileAlreadyExistsException => () }
         val target = math.max(floor, cur + 1L)
         try {
           CommitPrimitives.io.renameClaim(d.resolve(cur.toString),
@@ -502,6 +509,29 @@ private[sources] object AuditBase {
       txnDir(path).resolve(s"${t.v}.json")))
   }
 
+  /** Clear a leaf directory's table state — TRUNCATE of a compacted
+    * table, and INSERT OVERWRITE of a zero-level one: every `.jsonl` data
+    * file goes, and with it every log that names those files (the epoch
+    * log, the base checkpoint, delete vectors, zone maps and txn commits —
+    * a stale one would point readers at deleted files); `_MANIFEST` is
+    * left empty, its txn floor kept. `_IDENTITY`, `_COLMAP`, `_SEQ` and
+    * the leases stay. */
+  def clearLeaf(path: String): Unit = {
+    val dir = java.nio.file.Paths.get(path)
+    if (!java.nio.file.Files.isDirectory(dir)) return
+    val listing = java.nio.file.Files.list(dir)
+    try listing.iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".jsonl"))
+      .foreach(java.nio.file.Files.delete)
+    finally listing.close()
+    java.nio.file.Files.deleteIfExists(dir.resolve("_EPOCHS"))
+    java.nio.file.Files.deleteIfExists(baseFile(path))
+    AuditDeletes.clear(path)
+    AuditStats.clear(path)
+    deleteTree(txnDir(path))
+    writeManifest(path, Seq.empty)
+  }
+
   /** Remove crash debris: commit attempts that never won their link. */
   def cleanTxnDebris(path: String): Unit = {
     val d = txnDir(path)
@@ -563,11 +593,12 @@ private[sources] object AuditBase {
 }
 
 /** Commit half of OPTIMIZE: publish staged rewrite files as the table's
-  * base checkpoint. The staged files arrive through the ordinary
-  * [[AuditDataWriter]] discipline; commit renames them to `base-*`, folds
-  * the live batch-manifest entries (their rows are now in the base),
-  * publishes `_BASE`, and deletes the data files the base supersedes
-  * (previous base files + folded batch files). Original EPOCH files are
+  * base checkpoint. The staged files arrive through the ordinary routing
+  * [[AuditDataWriter]] (zero-level: the root's relDir `""`); commit
+  * renames them to `base-*`, folds the live batch-manifest entries
+  * (their rows are now in the base), publishes `_BASE`, and deletes the
+  * data files the base supersedes (previous base files + folded batch
+  * files). Original EPOCH files are
   * left for VACUUM: they keep serving running epoch tails until the
   * operator decides to reclaim them. */
 final class AuditBaseBatchWrite(path: String, schema: StructType,
@@ -585,20 +616,19 @@ final class AuditBaseBatchWrite(path: String, schema: StructType,
   private val stageSub = "b-" + java.util.UUID.randomUUID.toString.take(12)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new AuditWriterFactory(path, schema, bloomCols, stageSub)
+    new AuditWriterFactory(path, schema, Nil, bloomCols, stageSub)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     AuditMaintLock.verifyCurrent(path, "OPTIMIZE base publish")
     val dir = java.nio.file.Paths.get(path)
     val stage = dir.resolve("_staging").resolve(stageSub)
-    val entries = messages.toSeq.map(_.asInstanceOf[AuditCommitMessage])
-      .filter(_.rows > 0).sortBy(_.stagedName) // empty tasks publish nothing
+    val entries = AuditCommitMessage.entries(messages).sortBy(_._2)
     val gen = java.util.UUID.randomUUID().toString.take(8)
-    val files = entries.zipWithIndex.map { case (m, i) =>
+    val files = entries.zipWithIndex.map { case ((_, staged, rows, _), i) =>
       val name = f"base-$gen-$i%05d.jsonl"
-      CommitPrimitives.io.publishData(stage.resolve(m.stagedName),
+      CommitPrimitives.io.publishData(stage.resolve(staged),
         dir.resolve(name))
-      (name, m.rows)
+      (name, rows)
     }
     val prev = AuditBase.read(path)
     // maintenance is single-writer: consolidate OCC txn appends into the
@@ -638,18 +668,13 @@ final class AuditBaseBatchWrite(path: String, schema: StructType,
     // the base superseded (stale lines are superset-safe, just unbounded)
     AuditStats.retain(path, f => java.nio.file.Files.exists(dir.resolve(f)))
     AuditStats.append(path,
-      entries.zip(files).map { case (m, (name, _)) => (name, m.stats) })
+      entries.zip(files).map { case ((_, _, _, st), (name, _)) => (name, st) })
     deleteTree(stage)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val stage = java.nio.file.Paths.get(path).resolve("_staging").resolve(stageSub)
-    messages.foreach {
-      case m: AuditCommitMessage =>
-        java.nio.file.Files.deleteIfExists(stage.resolve(m.stagedName))
-      case _ => ()
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    deleteTree(
+      java.nio.file.Paths.get(path).resolve("_staging").resolve(stageSub))
 }
 
 private[sources] object AuditMaintenance {

@@ -2449,7 +2449,7 @@ final class AuditMicroBatchStream(path: String, writeSchema: StructType,
   * partition directories its rows routed to, so each micro-batch slice is
   * resolved MANIFEST-DRIVEN across every partition — epoch files carry
   * their epoch in the name (`part-e<epoch>-NNNNN.jsonl`, disjoint from
-  * the batch writer's `part-NNNNN.jsonl` namespace), and replay
+  * the batch writer's `part-x<gen>-NNNNN.jsonl` namespace), and replay
   * retraction rewrites an epoch's full file set before its `_EPOCHS` line
   * lands, keeping the name→epoch mapping stable. A subscriber therefore
   * receives each committed epoch exactly once regardless of how its rows
@@ -3649,8 +3649,8 @@ final class AuditDeltaWriterFactory(path: String, schema: StructType,
       partitionId, taskId, stageSub)
 }
 
-/** Per-task delta writer: inserts route into one staged file per
-  * partition relDir (the [[AuditPartitionedDataWriter]] discipline; a
+/** Per-task delta writer: inserts stage through the one routing
+  * [[AuditDataWriter]] (one staged file per partition relDir; a
   * zero-level table has the one relDir `""`); deleted row ids buffer as
   * (file, pos) pairs in the commit message (metadata-sized: one pair per
   * changed row, not per table row). */
@@ -3658,25 +3658,9 @@ final class AuditDeltaWriter(path: String, schema: StructType,
     partLevels: Seq[AuditPartition.Level], routable: Boolean,
     partitionId: Int, taskId: Long, stageSub: String)
     extends org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
-  private val stageDir =
-    java.nio.file.Paths.get(path).resolve("_staging").resolve(stageSub)
-  private val outs = scala.collection.mutable.LinkedHashMap
-    .empty[String, (java.io.BufferedWriter, String, Array[Long], AuditStats.Acc)]
-  // resolved on the first insert: a pure DELETE's write schema is empty
-  private lazy val partIdxs: Array[Int] =
-    partLevels.map(l => schema.fieldIndex(l.col)).toArray
-  private lazy val enc = new AuditRowJson.Enc(schema)
+  private val inserts = new AuditDataWriter(path, schema, partLevels,
+    partitionId, taskId, stageSub = stageSub)
   private val deletes = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-
-  private def writerFor(relDir: String) = outs.getOrElseUpdate(relDir, {
-    java.nio.file.Files.createDirectories(stageDir)
-    // staged names must be flat files: relDirs contain '/', so key the
-    // name on the writer's running file count instead
-    val staged = f"stage-delta-$partitionId%05d-$taskId-${outs.size}%04d.jsonl"
-    val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-      java.nio.file.Files.newOutputStream(stageDir.resolve(staged)), "UTF-8"))
-    (w, staged, Array(0L), new AuditStats.Acc(schema))
-  })
 
   override def delete(meta: InternalRow, id: InternalRow): Unit =
     deletes += ((id.getUTF8String(0).toString, id.getLong(1)))
@@ -3690,31 +3674,13 @@ final class AuditDeltaWriter(path: String, schema: StructType,
     require(routable,
       "audit partitioned delta: insert without the partition columns in " +
         "the write schema")
-    val relDir = AuditPartition.relDirOf(partLevels,
-      partLevels.zip(partIdxs).map { case (l, i) =>
-        AuditPartition.tokenFor(
-          if (row.isNullAt(i)) null else row.get(i, l.dt), l.bucket)
-      })
-    val (w, _, n, acc) = writerFor(relDir)
-    enc.writeTo(row, w)
-    acc.update(row)
-    n(0) += 1
+    inserts.write(row)
   }
 
-  override def commit(): WriterCommitMessage = {
-    outs.values.foreach(_._1.close())
-    AuditDeltaCommitMessage(
-      outs.collect { case (relDir, (_, staged, n, acc)) if n(0) > 0 =>
-        (relDir, staged, n(0), acc.result) }.toSeq,
-      deletes.toSeq)
-  }
+  override def commit(): WriterCommitMessage =
+    AuditDeltaCommitMessage(inserts.commit().entries, deletes.toSeq)
 
-  override def abort(): Unit = {
-    outs.values.foreach { case (w, staged, _, _) =>
-      w.close()
-      java.nio.file.Files.deleteIfExists(stageDir.resolve(staged))
-    }
-  }
+  override def abort(): Unit = inserts.abort()
 
   override def close(): Unit = ()
 }
@@ -3776,25 +3742,10 @@ final class AuditDeltaBatchWrite(path: String, schema: StructType,
     // commitTxn may bump a dir PAST commitMs if an append raced in —
     // that dir's vectors take the bumped stamp so the dir stays
     // internally consistent
-    val dirTs = scala.collection.mutable.Map.empty[String, Long]
-    insertGroups.foreach { case (relDir, entries) =>
-        val pdir = dir.resolve(relDir)
-        java.nio.file.Files.createDirectories(pdir)
-        val gen = java.util.UUID.randomUUID.toString.take(8)
-        val added = entries.sortBy(_._2).zipWithIndex.map {
-          case ((_, staged, rows, st), i) =>
-            val name = f"part-x$gen-$i%05d.jsonl"
-            CommitPrimitives.io.publishData(stage.resolve(staged),
-              pdir.resolve(name))
-            (name, rows, st)
-        }
-        val (_, tsEff) = AuditBase.commitTxn(pdir.toString,
-          added.map { case (n, r, _) =>
-            AuditBase.ManifestEntry(n, r, folded = false) },
-          added.map { case (n, _, st) => AuditStats.line(n, st) },
-          ts = commitMs, seqRoot = path)
-        dirTs(relDir) = tsEff
-      }
+    val dirTs = insertGroups.map { case (relDir, entries) =>
+      relDir -> AuditBatchWrite.publishTxn(path, stage, relDir, entries,
+        commitMs)
+    }.toMap
     deleteGroups.foreach { case (dirName, pairs) =>
       AuditDeletes.append(dir.resolve(dirName).toString, pairs.map(_._2),
         ts = Some(dirTs.getOrElse(dirName, commitMs)))
@@ -3802,16 +3753,9 @@ final class AuditDeltaBatchWrite(path: String, schema: StructType,
     deleteTree(stage)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val stage = java.nio.file.Paths.get(path).resolve("_staging").resolve(stageSub)
-    messages.foreach {
-      case AuditDeltaCommitMessage(entries, _) =>
-        entries.foreach { case (_, staged, _, _) =>
-          java.nio.file.Files.deleteIfExists(stage.resolve(staged))
-        }
-      case _ => ()
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    deleteTree(
+      java.nio.file.Paths.get(path).resolve("_staging").resolve(stageSub))
 }
 
 /** COLUMN NAME MAPPING (RENAME/DROP without data rewrite). The jsonl
@@ -4063,16 +4007,7 @@ private[sources] object AuditDelete {
       require(filters.forall(_.isInstanceOf[AlwaysTrue]),
         "audit: retroactive metadata DELETE on a compacted (OPTIMIZEd) " +
           "table is unsupported — predicate deletes take the delta path")
-      val listing = java.nio.file.Files.list(dir)
-      try listing.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".jsonl"))
-        .foreach(java.nio.file.Files.delete)
-      finally listing.close()
-      java.nio.file.Files.deleteIfExists(dir.resolve("_EPOCHS"))
-      java.nio.file.Files.deleteIfExists(dir.resolve("_BASE"))
-      AuditDeletes.clear(path)
-      AuditStats.clear(path)
-      AuditBase.writeManifest(path, Seq.empty)
+      AuditBase.clearLeaf(path)
       return
     }
     // TRUNCATE reaches this path DIRECTLY (TruncatableTable.truncateTable
@@ -4437,11 +4372,8 @@ final class AuditWriteBuilder(path: String, schema: StructType,
           bloomCols,
           snapTs = options.get("basesnapts").map(_.toLong).filter(_ > 0L))
       } else {
-        val inner: BatchWrite =
-          if (partLevels.nonEmpty)
-            new AuditPartitionedBatchWrite(path, schema, truncateFirst,
-              partLevels, bloomCols)
-          else new AuditBatchWrite(path, schema, truncateFirst, bloomCols)
+        val inner = new AuditBatchWrite(path, schema, truncateFirst,
+          partLevels, bloomCols)
         genSpecs match {
           case Some(s) =>
             // identity commits reserve their k-block HERE (driver, once)
@@ -4646,7 +4578,7 @@ private[sources] object AuditMaintLock {
   private def hbTs(path: String, opId: String): Long = {
     val f = hbFile(path, opId)
     try new String(java.nio.file.Files.readAllBytes(f), "UTF-8").trim.toLong
-    catch { case _: Throwable => -1L }
+    catch { case scala.util.control.NonFatal(_) => -1L }
   }
 
   /** Claim freshness: the newest of the claim line's ts and the holder's
@@ -4872,7 +4804,7 @@ final class AuditStreamingWrite(path: String, schema: StructType,
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    new AuditStreamingWriterFactory(path, schema, bloomCols, stageSub)
+    new AuditWriterFactory(path, schema, Nil, bloomCols, stageSub)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     // one live streaming writer per table: acquire/renew the lease (test
@@ -4887,13 +4819,12 @@ final class AuditStreamingWrite(path: String, schema: StructType,
     // tail resolves them) and RE-STAMP the epoch, silently moving the
     // folded base origins on the travel axis. The base is this epoch's
     // publication; just drop the staged files.
+    val entries = AuditCommitMessage.entries(messages).sortBy(_._2)
     val baseThrough = AuditBase.read(path)
       .map(_.throughEpoch).getOrElse(Long.MinValue)
     if (epochId <= baseThrough) {
-      messages.toSeq.foreach {
-        case m: AuditCommitMessage =>
-          java.nio.file.Files.deleteIfExists(stage.resolve(m.stagedName))
-        case _ => ()
+      entries.foreach { case (_, staged, _, _) =>
+        java.nio.file.Files.deleteIfExists(stage.resolve(staged))
       }
       return
     }
@@ -4909,17 +4840,15 @@ final class AuditStreamingWrite(path: String, schema: StructType,
         .foreach(java.nio.file.Files.delete)
       finally listing.close()
     }
-    val entries = messages.toSeq.map(_.asInstanceOf[AuditCommitMessage])
-      .sortBy(_.stagedName)
-    entries.zipWithIndex.foreach { case (m, i) =>
-      CommitPrimitives.io.publishData(stage.resolve(m.stagedName),
+    entries.zipWithIndex.foreach { case ((_, staged, _, _), i) =>
+      CommitPrimitives.io.publishData(stage.resolve(staged),
         dir.resolve(f"part-e$epochId%d-$i%05d.jsonl"),
         replaceExisting = true)
     }
     // zone maps: a replayed epoch first drops its own prior stats lines
     AuditStats.retain(path, !_.startsWith(epochPrefix))
-    AuditStats.append(path, entries.zipWithIndex.map { case (m, i) =>
-      (f"part-e$epochId%d-$i%05d.jsonl", m.stats)
+    AuditStats.append(path, entries.zipWithIndex.map {
+      case ((_, _, _, st), i) => (f"part-e$epochId%d-$i%05d.jsonl", st)
     })
     // _EPOCHS keeps exactly one line per epoch: drop any line a previous
     // attempt of this epoch wrote, then append the authoritative one.
@@ -4931,7 +4860,7 @@ final class AuditStreamingWrite(path: String, schema: StructType,
     val epochTs = AuditSeq.next(path, math.max(System.currentTimeMillis(),
       AuditBase.maxVisibleTs(path) + 1L))
     val thisLine = s"""{"epoch":$epochId,"files":${entries.size},""" +
-      s""""rows":${entries.map(_.rows).sum},"ts":$epochTs}"""
+      s""""rows":${entries.map(_._3).sum},"ts":$epochTs}"""
     val kept =
       if (java.nio.file.Files.exists(epochsFile))
         java.nio.file.Files.readAllLines(epochsFile).asScala.toSeq
@@ -4941,24 +4870,21 @@ final class AuditStreamingWrite(path: String, schema: StructType,
       (kept :+ thisLine).map(_ + "\n").mkString.getBytes("UTF-8"))
   }
 
-  /** A failed epoch attempt removes the staged files its tasks reported —
-    * a later successful attempt re-stages under fresh attempt ids. */
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val stage = java.nio.file.Paths.get(path).resolve("_staging").resolve(stageSub)
-    messages.foreach {
-      case m: AuditCommitMessage =>
-        java.nio.file.Files.deleteIfExists(stage.resolve(m.stagedName))
-      case _ => () // tasks that never committed have no message
-    }
-  }
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    AuditStreamingWrite.dropStaged(path, stageSub, messages)
 }
 
-final class AuditStreamingWriterFactory(path: String, schema: StructType,
-    bloomCols: Set[String] = Set.empty, stageSub: String = "")
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : DataWriter[InternalRow] =
-    new AuditDataWriter(path, schema, partitionId, taskId, bloomCols, stageSub)
+private[sources] object AuditStreamingWrite {
+  /** A failed epoch attempt removes the staged files its tasks reported
+    * — a later successful attempt re-stages under fresh attempt ids.
+    * Only the reported files: the writer's staging subdir spans epochs. */
+  def dropStaged(path: String, stageSub: String,
+      messages: Array[WriterCommitMessage]): Unit = {
+    val stage = java.nio.file.Paths.get(path).resolve("_staging").resolve(stageSub)
+    AuditCommitMessage.entries(messages).foreach { case (_, staged, _, _) =>
+      java.nio.file.Files.deleteIfExists(stage.resolve(staged))
+    }
+  }
 }
 
 /** Streaming ingestion into a PARTITIONED audit table: tasks route rows
@@ -4983,8 +4909,7 @@ final class AuditPartitionedStreamingWrite(path: String, schema: StructType,
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    new AuditPartitionedStreamingWriterFactory(path, schema, partLevels,
-      stageSub, bloomCols)
+    new AuditWriterFactory(path, schema, partLevels, bloomCols, stageSub)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     queryId.foreach(AuditStreamLock.acquire(path, _)) // one live writer
@@ -5012,9 +4937,7 @@ final class AuditPartitionedStreamingWrite(path: String, schema: StructType,
         AuditStats.retain(pdir.toString, !_.startsWith(epochPrefix))
       }
     }
-    val byToken = messages.toSeq
-      .flatMap(_.asInstanceOf[AuditPartCommitMessage].entries)
-      .groupBy(_._1)
+    val byToken = AuditCommitMessage.entries(messages).groupBy(_._1)
     var files = 0
     var rows = 0L
     var foldedReplay = false
@@ -5088,31 +5011,27 @@ final class AuditPartitionedStreamingWrite(path: String, schema: StructType,
       (kept :+ thisLine).map(_ + "\n").mkString.getBytes("UTF-8"))
   }
 
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val stage = java.nio.file.Paths.get(path).resolve("_staging").resolve(stageSub)
-    messages.foreach {
-      case m: AuditPartCommitMessage =>
-        m.entries.foreach { case (_, staged, _, _) =>
-          java.nio.file.Files.deleteIfExists(stage.resolve(staged))
-        }
-      case _ => ()
-    }
-  }
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    AuditStreamingWrite.dropStaged(path, stageSub, messages)
 }
 
-final class AuditPartitionedStreamingWriterFactory(path: String,
-    schema: StructType, partLevels: Seq[AuditPartition.Level],
-    stageSub: String = "", bloomCols: Set[String] = Set.empty)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : DataWriter[InternalRow] =
-    new AuditPartitionedDataWriter(path, schema, partLevels, partitionId,
-      taskId, stageSub, bloomCols)
-}
-
-final case class AuditCommitMessage(stagedName: String, rows: Long,
-    stats: AuditStats.FileStats = AuditStats.FileStats.empty)
+/** What one write task reports: one `(relDir, staged name, rows, column
+  * stats)` entry per directory its rows routed to — the root `""` alone
+  * on a zero-level table, no entry for a task that saw no row. */
+final case class AuditCommitMessage(
+    entries: Seq[(String, String, Long, AuditStats.FileStats)])
   extends WriterCommitMessage
+
+private[sources] object AuditCommitMessage {
+  /** Every entry of a commit's messages (tasks that never committed send
+    * none). */
+  def entries(messages: Array[WriterCommitMessage])
+      : Seq[(String, String, Long, AuditStats.FileStats)] =
+    messages.toSeq.flatMap {
+      case m: AuditCommitMessage => m.entries
+      case _                     => Seq.empty
+    }
+}
 
 /** Per-file column statistics (`_STATS`): one json line per committed
   * file with min/max for every integral/timestamp column AND truncated
@@ -5588,9 +5507,16 @@ private[sources] object AuditStats {
   }
 }
 
-final class AuditBatchWrite(path: String, schema: StructType, truncateFirst: Boolean,
-    bloomCols: Set[String] = Set.empty)
-    extends BatchWrite {
+/** INSERT and INSERT OVERWRITE, for both layouts. Tasks route rows into
+  * one staged file per directory ([[AuditDataWriter]]; a zero-level table
+  * has the one relDir `""`, the root), and commit publishes each touched
+  * directory as an OCC `_TXN` append under one statement stamp. An
+  * overwrite first clears the table: a zero-level table's root leaf state
+  * ([[AuditBase.clearLeaf]]), or a partitioned table's level-0
+  * directories and the root epoch log. */
+final class AuditBatchWrite(path: String, schema: StructType,
+    truncateFirst: Boolean, partLevels: Seq[AuditPartition.Level],
+    bloomCols: Set[String] = Set.empty) extends BatchWrite {
   // Commit-unique staging subdirectory: concurrent OCC appenders (and a
   // live streaming writer) each stage under `_staging/<sub>/`, so this
   // commit's final cleanup can never delete another in-flight commit's
@@ -5599,65 +5525,32 @@ final class AuditBatchWrite(path: String, schema: StructType, truncateFirst: Boo
   private val stageSub = "c-" + java.util.UUID.randomUUID.toString.take(12)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new AuditWriterFactory(path, schema, bloomCols, stageSub)
+    new AuditWriterFactory(path, schema, partLevels, bloomCols, stageSub)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = java.nio.file.Paths.get(path)
-    val stage = dir.resolve("_staging").resolve(stageSub)
-    val manifestFile = dir.resolve("_MANIFEST")
-    if (truncateFirst && java.nio.file.Files.isDirectory(dir)) {
-      val listing = java.nio.file.Files.list(dir)
-      try listing.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".jsonl"))
-        .foreach(java.nio.file.Files.delete)
-      finally listing.close()
-      // epoch part files die with the truncate — a stale epoch log would
-      // point versioned readers at deleted files; same for delete vectors
-      // and the base checkpoint (its .jsonl files died in the loop above),
-      // and for unconsolidated txn commits (their part files died too)
-      java.nio.file.Files.deleteIfExists(dir.resolve("_EPOCHS"))
-      java.nio.file.Files.deleteIfExists(dir.resolve("_BASE"))
-      AuditDeletes.clear(path)
-      AuditStats.clear(path)
-      deleteTree(dir.resolve("_TXN"))
-    }
-    val entries = messages.toSeq.map(_.asInstanceOf[AuditCommitMessage])
-      .sortBy(_.stagedName)
+    val stage = java.nio.file.Paths.get(path).resolve("_staging").resolve(stageSub)
     if (truncateFirst) {
-      // overwrite is exclusive by nature (it just deleted the table) —
-      // numbered names + direct manifest, as before
-      val start = 0
-      entries.zipWithIndex.foreach { case (m, i) =>
-        CommitPrimitives.io.publishData(stage.resolve(m.stagedName),
-          dir.resolve(f"part-${start + i}%05d.jsonl"))
+      if (partLevels.isEmpty) AuditBase.clearLeaf(path)
+      else {
+        // remove level-0 dirs whole: nested level dirs die with their parent
+        AuditPartition.listDirs(path, partLevels.take(1))
+          .foreach { case (_, d) => deleteTree(d) }
+        // the table-level epoch log dies with the data it described
+        java.nio.file.Files.deleteIfExists(
+          java.nio.file.Paths.get(path).resolve("_EPOCHS"))
       }
-      AuditBase.writeManifest(path, entries.zipWithIndex.map {
-        case (m, i) =>
-          AuditBase.ManifestEntry(f"part-${start + i}%05d.jsonl", m.rows,
-            folded = false)
-      })
-      AuditStats.append(path, entries.zipWithIndex.map { case (m, i) =>
-        (f"part-${start + i}%05d.jsonl", m.stats)
-      })
-    } else if (entries.nonEmpty) {
-      // OCC APPEND: move files under commit-unique names (no index to
-      // contend for), then publish the commit as an immutable _TXN file
-      // via put-if-absent — concurrent appenders NEVER read-modify-write
-      // the manifest, so no commit can clobber another. A crash between
-      // move and publish leaves unreferenced .jsonl files that VACUUM
-      // clean_orphans reclaims. Stats lines travel INSIDE the txn file,
-      // so zone maps/blooms publish atomically with the entries.
-      val gen = java.util.UUID.randomUUID.toString.take(8)
-      val named = entries.zipWithIndex.map { case (m, i) =>
-        val name = f"part-x$gen-$i%05d.jsonl"
-        CommitPrimitives.io.publishData(stage.resolve(m.stagedName),
-          dir.resolve(name))
-        (name, m)
+    }
+    val byDir = AuditCommitMessage.entries(messages).groupBy(_._1)
+    if (byDir.nonEmpty) {
+      // ONE statement stamp for all directories this INSERT routes to,
+      // claimed through the root sequencer: a travel instant sees the
+      // whole statement or none of it, and no same-ms commit anywhere in
+      // the table can tie it (a racing append that bumps a directory past
+      // the stamp forces that dir onto a fresh claim — see commitTxn)
+      val stmtTs = AuditSeq.next(path, System.currentTimeMillis())
+      byDir.toSeq.sortBy(_._1).foreach { case (relDir, entries) =>
+        AuditBatchWrite.publishTxn(path, stage, relDir, entries, stmtTs)
       }
-      AuditBase.commitTxn(path,
-        named.map { case (n, m) =>
-          AuditBase.ManifestEntry(n, m.rows, folded = false) },
-        named.map { case (n, m) => AuditStats.line(n, m.stats) })
     }
     deleteTree(stage)
   }
@@ -5667,12 +5560,50 @@ final class AuditBatchWrite(path: String, schema: StructType, truncateFirst: Boo
       java.nio.file.Paths.get(path).resolve("_staging").resolve(stageSub))
 }
 
+private[sources] object AuditBatchWrite {
+  /** OCC APPEND of one directory's staged files: move them under
+    * commit-unique names (no index to contend for), then publish the
+    * commit as an immutable put-if-absent `_TXN` file, so concurrent
+    * appenders never read-modify-write a `_MANIFEST` and no commit can
+    * clobber another. Stats lines travel inside the txn file, atomic with
+    * the entries. A crash between move and publish leaves unreferenced
+    * .jsonl files that VACUUM clean_orphans reclaims. Returns the
+    * effective commit stamp (`ts` unless a racing append bumped the dir
+    * past it). */
+  def publishTxn(root: String, stage: java.nio.file.Path, relDir: String,
+      entries: Seq[(String, String, Long, AuditStats.FileStats)],
+      ts: Long): Long = {
+    val pdir = java.nio.file.Paths.get(root).resolve(relDir)
+    java.nio.file.Files.createDirectories(pdir)
+    val gen = java.util.UUID.randomUUID.toString.take(8)
+    val added = entries.sortBy(_._2).zipWithIndex.map {
+      case ((_, staged, rows, st), i) =>
+        val name = f"part-x$gen-$i%05d.jsonl"
+        CommitPrimitives.io.publishData(stage.resolve(staged),
+          pdir.resolve(name))
+        (name, rows, st)
+    }
+    AuditBase.commitTxn(pdir.toString,
+      added.map { case (n, r, _) =>
+        AuditBase.ManifestEntry(n, r, folded = false) },
+      added.map { case (n, _, st) => AuditStats.line(n, st) },
+      ts = ts, seqRoot = root)._2
+  }
+}
+
+/** The one task-writer factory: batch INSERTs, streaming epochs and
+  * OPTIMIZE's base rewrites all stage through [[AuditDataWriter]]. */
 final class AuditWriterFactory(path: String, schema: StructType,
-    bloomCols: Set[String] = Set.empty,
-    stageSub: String = "")
-    extends DataWriterFactory {
+    partLevels: Seq[AuditPartition.Level] = Nil,
+    bloomCols: Set[String] = Set.empty, stageSub: String = "")
+    extends DataWriterFactory
+    with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new AuditDataWriter(path, schema, partitionId, taskId, bloomCols, stageSub)
+    new AuditDataWriter(path, schema, partLevels, partitionId, taskId,
+      bloomCols, stageSub)
+  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
+      : DataWriter[InternalRow] =
+    createWriter(partitionId, taskId)
 }
 
 /** Shared row→jsonl serialization (batch, streaming, and partitioned
@@ -5786,12 +5717,18 @@ private[sources] object AuditRowJson {
     new Enc(schema).line(record)
 }
 
+/** The one task writer (batch, streaming, OPTIMIZE, and delta-DML
+  * inserts): it routes each row to its partition directory — Hive-style
+  * dynamic partitioning; a zero-level table routes every row to the
+  * root, relDir `""` — and stages one file per directory, opened on that
+  * directory's first row, so a task that sees no row stages and reports
+  * nothing. The task does no shuffle of its own: callers that want one
+  * file per partition ask Spark for a clusterBy distribution via the
+  * write options. */
 final class AuditDataWriter(path: String, schema: StructType,
-    partitionId: Int, taskId: Long,
-    bloomCols: Set[String] = Set.empty,
-    stageSub: String = "") extends DataWriter[InternalRow] {
-  // attempt-unique staged name: retries/speculation can never collide
-  private val stagedName = f"stage-$partitionId%05d-$taskId.jsonl"
+    partLevels: Seq[AuditPartition.Level], partitionId: Int, taskId: Long,
+    bloomCols: Set[String] = Set.empty, stageSub: String = "")
+    extends DataWriter[InternalRow] {
   // stageSub scopes staging PER COMMIT (OCC batch appends): concurrent
   // jobs must not share a staging dir, or one commit's final cleanup
   // deletes another in-flight commit's staged files
@@ -5799,101 +5736,57 @@ final class AuditDataWriter(path: String, schema: StructType,
     val base = java.nio.file.Paths.get(path).resolve("_staging")
     if (stageSub.isEmpty) base else base.resolve(stageSub)
   }
-  java.nio.file.Files.createDirectories(stageDir)
-  private val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-    java.nio.file.Files.newOutputStream(stageDir.resolve(stagedName)), "UTF-8"))
-  private var rows = 0L
-  private val acc = new AuditStats.Acc(schema, bloomCols)
-  private val enc = new AuditRowJson.Enc(schema)
-
-  override def write(record: InternalRow): Unit = {
-    enc.writeTo(record, out)
-    acc.update(record)
-    rows += 1
+  private final class Out(val staged: String) {
+    val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
+      java.nio.file.Files.newOutputStream(stageDir.resolve(staged)), "UTF-8"))
+    val acc = new AuditStats.Acc(schema, bloomCols)
+    var rows = 0L
   }
-
-  override def commit(): WriterCommitMessage = {
-    out.close()
-    AuditCommitMessage(stagedName, rows, acc.result)
-  }
-
-  override def abort(): Unit = {
-    out.close()
-    java.nio.file.Files.deleteIfExists(stageDir.resolve(stagedName))
-  }
-
-  override def close(): Unit = ()
-}
-
-final class AuditPartitionedWriterFactory(path: String, schema: StructType,
-    partLevels: Seq[AuditPartition.Level], stageSub: String = "",
-    bloomCols: Set[String] = Set.empty)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new AuditPartitionedDataWriter(path, schema, partLevels, partitionId,
-      taskId, stageSub, bloomCols)
-}
-
-final case class AuditPartCommitMessage(
-    // (relDir, stagedName, rows, per-file column stats)
-    entries: Seq[(String, String, Long, AuditStats.FileStats)])
-  extends WriterCommitMessage
-
-/** Partition-routing DataWriter: one staged file per partition COMBO per
-  * task (Hive-style dynamic partitioning). The task does no shuffle of its
-  * own — callers that want one file per partition ask Spark for a
-  * clusterBy distribution via the existing write options; this writer
-  * just routes whatever rows reach it. */
-final class AuditPartitionedDataWriter(path: String, schema: StructType,
-    partLevels: Seq[AuditPartition.Level], partitionId: Int, taskId: Long,
-    stageSub: String = "",
-    bloomCols: Set[String] = Set.empty)
-    extends DataWriter[InternalRow] {
-  // per-commit staging subdir — see AuditDataWriter.stageDir
-  private val stageDir = {
-    val base = java.nio.file.Paths.get(path).resolve("_staging")
-    if (stageSub.isEmpty) base else base.resolve(stageSub)
-  }
-  java.nio.file.Files.createDirectories(stageDir)
-  private val outs = scala.collection.mutable.LinkedHashMap
-    .empty[String, (java.io.BufferedWriter, String, Array[Long], AuditStats.Acc)]
-  private val partIdxs: Array[Int] =
+  private val outs = scala.collection.mutable.LinkedHashMap.empty[String, Out]
+  // the root's file on a zero-level table: no relDir built per row
+  private var root: Out = _
+  // resolved on the first row: a pure DELETE's write schema is empty
+  private lazy val partIdxs: Array[Int] =
     partLevels.map(l => schema.fieldIndex(l.col)).toArray
   private val enc = new AuditRowJson.Enc(schema)
 
-  private def writerFor(relDir: String) = outs.getOrElseUpdate(relDir, {
+  private def open(relDir: String): Out = {
+    java.nio.file.Files.createDirectories(stageDir)
     // staged names must be flat files: relDirs contain '/', so key the
     // name on the writer's running file count instead
-    val staged = f"stage-$partitionId%05d-$taskId-${outs.size}%04d.jsonl"
-    val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-      java.nio.file.Files.newOutputStream(stageDir.resolve(staged)), "UTF-8"))
-    (w, staged, Array(0L), new AuditStats.Acc(schema, bloomCols))
-  })
-
-  override def write(record: InternalRow): Unit = {
-    val relDir = AuditPartition.relDirOf(partLevels,
-      partLevels.zip(partIdxs).map { case (l, i) =>
-        AuditPartition.tokenFor(
-          if (record.isNullAt(i)) null else record.get(i, l.dt), l.bucket)
-      })
-    val (w, _, n, acc) = writerFor(relDir)
-    enc.writeTo(record, w)
-    acc.update(record)
-    n(0) += 1
+    val o = new Out(f"stage-$partitionId%05d-$taskId-${outs.size}%04d.jsonl")
+    outs(relDir) = o
+    o
   }
 
-  override def commit(): WriterCommitMessage = {
-    outs.values.foreach(_._1.close())
-    AuditPartCommitMessage(outs.map { case (relDir, (_, staged, n, acc)) =>
-      (relDir, staged, n(0), acc.result)
+  override def write(record: InternalRow): Unit = {
+    val out =
+      if (partLevels.isEmpty) {
+        if (root == null) root = open("")
+        root
+      } else {
+        val relDir = AuditPartition.relDirOf(partLevels,
+          partLevels.zip(partIdxs).map { case (l, i) =>
+            AuditPartition.tokenFor(
+              if (record.isNullAt(i)) null else record.get(i, l.dt), l.bucket)
+          })
+        outs.getOrElse(relDir, open(relDir))
+      }
+    enc.writeTo(record, out.w)
+    out.acc.update(record)
+    out.rows += 1
+  }
+
+  override def commit(): AuditCommitMessage = {
+    outs.values.foreach(_.w.close())
+    AuditCommitMessage(outs.map { case (relDir, o) =>
+      (relDir, o.staged, o.rows, o.acc.result)
     }.toSeq)
   }
 
-  override def abort(): Unit = {
-    outs.values.foreach { case (w, staged, _, _) =>
-      w.close()
-      java.nio.file.Files.deleteIfExists(stageDir.resolve(staged))
-    }
+  override def abort(): Unit = outs.values.foreach { o =>
+    o.w.close()
+    java.nio.file.Files.deleteIfExists(stageDir.resolve(o.staged))
   }
 
   override def close(): Unit = ()
@@ -5954,8 +5847,7 @@ final class AuditPartitionedBaseWrite(path: String, schema: StructType,
   private val stageSub = "pb-" + java.util.UUID.randomUUID.toString.take(12)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new AuditPartitionedWriterFactory(path, schema, partLevels, stageSub,
-      bloomCols)
+    new AuditWriterFactory(path, schema, partLevels, bloomCols, stageSub)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     AuditMaintLock.verifyCurrent(path, "partitioned OPTIMIZE base publish")
@@ -5989,9 +5881,7 @@ final class AuditPartitionedBaseWrite(path: String, schema: StructType,
     // test hook: an append landing AFTER the check stays live alongside
     // the base (folding touches only pinned files) — never destroyed
     AuditMaintenance.afterCheckHook.foreach(_())
-    val byDir = messages.toSeq
-      .flatMap(_.asInstanceOf[AuditPartCommitMessage].entries)
-      .groupBy(_._1)
+    val byDir = AuditCommitMessage.entries(messages).groupBy(_._1)
     (pinned.keySet ++ byDir.keySet).toSeq.sorted.foreach { relDir =>
       val pdir = dir.resolve(relDir)
       java.nio.file.Files.createDirectories(pdir)
@@ -6038,72 +5928,6 @@ final class AuditPartitionedBaseWrite(path: String, schema: StructType,
         entries.zip(files).map { case ((_, _, _, st), (name, _)) =>
           (name, st)
         })
-    }
-    deleteTree(stage)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val stage = java.nio.file.Paths.get(path).resolve("_staging").resolve(stageSub)
-    deleteTree(stage)
-  }
-}
-
-/** Commit for partitioned tables: group staged files by partition relDir,
-  * publish into `<c1>=<t1>/…/<cK>=<tK>/` dirs, refresh each dir's
-  * `_MANIFEST` — per-partition metadata, so readers and counts touch only
-  * matching directories. Same all-tasks-succeeded-then-rename discipline
-  * as the unpartitioned write. */
-final class AuditPartitionedBatchWrite(path: String, schema: StructType,
-    truncateFirst: Boolean, partLevels: Seq[AuditPartition.Level],
-    bloomCols: Set[String] = Set.empty) extends BatchWrite {
-  // commit-unique staging subdir — see AuditBatchWrite.stageSub
-  private val stageSub = "p-" + java.util.UUID.randomUUID.toString.take(12)
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new AuditPartitionedWriterFactory(path, schema, partLevels, stageSub,
-      bloomCols)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = java.nio.file.Paths.get(path)
-    val stage = dir.resolve("_staging").resolve(stageSub)
-    if (truncateFirst) {
-      // remove level-0 dirs whole: nested level dirs die with their parent
-      AuditPartition.listDirs(path, partLevels.take(1))
-        .foreach { case (_, d) => deleteTree(d) }
-      // the table-level epoch log dies with the data it described
-      java.nio.file.Files.deleteIfExists(dir.resolve("_EPOCHS"))
-    }
-    val byToken = messages.toSeq
-      .flatMap(_.asInstanceOf[AuditPartCommitMessage].entries)
-      .groupBy(_._1)
-    // ONE statement stamp for all directories this INSERT routes to,
-    // claimed through the root sequencer: a travel instant sees the
-    // whole statement or none of it, and no same-ms commit anywhere in
-    // the table can tie it (a racing append that bumps a directory past
-    // the stamp forces that dir onto a fresh claim — see commitTxn)
-    val stmtTs = AuditSeq.next(path, System.currentTimeMillis())
-    byToken.toSeq.sortBy(_._1).foreach { case (relDir, entries) =>
-      val pdir = dir.resolve(relDir)
-      java.nio.file.Files.createDirectories(pdir)
-      // OCC APPEND per directory: files land under commit-unique names
-      // (no index to contend for) and publish as an immutable put-if-
-      // absent `_TXN` commit — the same discipline as the unpartitioned
-      // append, so concurrent partitioned INSERTs never read-modify-write
-      // a partition `_MANIFEST` and can never clobber each other. Stats
-      // travel inside the txn file (atomic with the entries).
-      val gen = java.util.UUID.randomUUID.toString.take(8)
-      val added = entries.sortBy(_._2).zipWithIndex.map {
-        case ((_, staged, rows, st), i) =>
-          val name = f"part-x$gen-$i%05d.jsonl"
-          CommitPrimitives.io.publishData(stage.resolve(staged),
-            pdir.resolve(name))
-          (name, rows, st)
-      }
-      AuditBase.commitTxn(pdir.toString,
-        added.map { case (n, r, _) =>
-          AuditBase.ManifestEntry(n, r, folded = false) },
-        added.map { case (n, _, st) => AuditStats.line(n, st) },
-        ts = stmtTs, seqRoot = path)
     }
     deleteTree(stage)
   }

@@ -307,9 +307,9 @@ class AuditMaintenanceSpec extends SparkSpec {
       (5000L until 5005L).map(i => s"""{"id":$i,"v":9}""" + "\n")
         .mkString.getBytes("UTF-8"))
     sw.commit(0L,
-      Array(AuditCommitMessage("stage-00000-1.jsonl", 5L,
+      Array(AuditCommitMessage(Seq(("", "stage-00000-1.jsonl", 5L,
         AuditStats.FileStats(2,
-          Map("id" -> (5000L, 5004L), "v" -> (9L, 9L)), Map.empty))))
+          Map("id" -> (5000L, 5004L), "v" -> (9L, 9L)), Map.empty))))))
     val (_, baseRows, through) = AuditMaintenance.optimize(
       spark, path, schema, 2, None, Nil, Some(snap))
     // the base folded exactly the pinned snapshot; late commits stay live
@@ -476,7 +476,7 @@ class AuditMaintenanceSpec extends SparkSpec {
     java.nio.file.Files.write(stage.resolve("stage-redo.jsonl"),
       "{\"id\":77,\"flag\":9}\n".getBytes("UTF-8"))
     psw
-      .commit(0L, Array(AuditPartCommitMessage(
+      .commit(0L, Array(AuditCommitMessage(
         Seq(("flag=9", "stage-redo.jsonl", 1L,
           AuditStats.FileStats(2, Map("id" -> (77L, 77L), "flag" -> (9L, 9L)),
             Map.empty))))))

@@ -19,8 +19,19 @@ class AuditOccSpec extends AnyFunSuite {
   private lazy val spark: SparkSession = SparkSpec.session
   private val schema = StructType(Seq(StructField("id", LongType)))
 
-  private def tempDir() =
-    java.nio.file.Files.createTempDirectory("graft_occ_")
+  // every directory a test makes is deleted when that test ends
+  private val made =
+    scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+
+  private def tempDir(prefix: String = "graft_occ_") = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    made.synchronized(made += d)
+    d
+  }
+
+  override def withFixture(test: NoArgTest) =
+    try super.withFixture(test)
+    finally made.synchronized { made.foreach(deleteTree); made.clear() }
 
   private def append(dir: java.nio.file.Path, from: Long, until: Long): Unit =
     spark.range(from, until).toDF("id").repartition(2)
@@ -120,7 +131,7 @@ class AuditOccSpec extends AnyFunSuite {
     // through _TXN — the logical table is the union, and neither
     // commit path read-modify-writes the other's metadata
     val dir = tempDir()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_occ_ckpt")
+    val ckpt = tempDir("graft_occ_ckpt")
     val stream = spark.readStream.format(classOf[PagedSource].getName)
       .option("pages", "2").option("pageSize", "50")
       .option("pagesPerTrigger", "1")

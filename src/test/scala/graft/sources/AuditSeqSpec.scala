@@ -115,4 +115,20 @@ class AuditSeqSpec extends AnyFunSuite {
         s"boundary ${s + 1} lost or replayed events")
     }
   }
+
+  test("a claim consumes the first pointer only after INIT exists, so a " +
+    "late birth claim cannot hand it out again") {
+    // the state a birth claimant leaves between its two creates: the
+    // first pointer, no INIT
+    val root = java.nio.file.Files.createTempDirectory("graft_seq_init_")
+    try {
+      val d = root.resolve("_SEQ")
+      java.nio.file.Files.createDirectories(d)
+      java.nio.file.Files.createFile(d.resolve("100"))
+      assert(AuditSeq.next(root.toString, 0L) === 101L)
+      // a claimant whose listing predated the pointer re-creates `100`;
+      // its birth claim needs INIT, which the consuming claim made
+      assert(java.nio.file.Files.exists(d.resolve("INIT")))
+    } finally deleteTree(root)
+  }
 }

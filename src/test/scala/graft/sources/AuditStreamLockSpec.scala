@@ -23,7 +23,7 @@ class AuditStreamLockSpec extends AnyFunSuite {
     val sub = dir.resolve("_staging").resolve(w.stageSub)
     java.nio.file.Files.createDirectories(sub)
     java.nio.file.Files.write(sub.resolve(name), "{\"x\":1}\n".getBytes("UTF-8"))
-    AuditCommitMessage(name, 1L)
+    AuditCommitMessage(Seq(("", name, 1L, AuditStats.FileStats.empty)))
   }
 
   test("a second live streaming query is rejected loudly") {
@@ -76,13 +76,13 @@ class AuditStreamLockSpec extends AnyFunSuite {
     java.nio.file.Files.createDirectories(subA)
     java.nio.file.Files.write(subA.resolve("stage-1.jsonl"),
       "{\"x\":1,\"p\":0}\n".getBytes("UTF-8"))
-    a.commit(0L, Array(AuditPartCommitMessage(
+    a.commit(0L, Array(AuditCommitMessage(
       Seq(("p=0", "stage-1.jsonl", 1L, AuditStats.FileStats.empty)))))
     val b = new AuditPartitionedStreamingWrite(
       dir.toString, pschema, Seq(AuditPartition.Level("p", LongType, None)),
       Some("query-B"))
     val ex = intercept[IllegalStateException](
-      b.commit(0L, Array(AuditPartCommitMessage(Seq.empty))))
+      b.commit(0L, Array(AuditCommitMessage(Seq.empty))))
     assert(ex.getMessage.contains("query-A"), ex.getMessage)
   }
 }

@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -401,5 +403,74 @@ class AuditTravelMixedSpec extends AnyFunSuite {
     val removed = (0L until 80L).filter(_ % 10 == 4)
       .map(i => ("delete", i, i % 3, i))
     assert(changes(path, partitioned = false) === (before ++ removed).sorted)
+  }
+
+  /** INSERT, INSERT OVERWRITE, INSERT into a fresh table of either layout;
+    * returns (table, warehouse, an instant between the overwrite and the
+    * last insert). */
+  private def overwriteScript(tag: String, partitioned: Boolean)
+      : (String, java.nio.file.Path, Long) = {
+    val (cat, wh) = freshCat(tag)
+    val t = s"$cat.db.t"
+    spark.sql(s"CREATE TABLE $t (id BIGINT, flag BIGINT, v BIGINT) " +
+      "USING audit" + (if (partitioned) " PARTITIONED BY (flag)" else ""))
+    spark.sql(s"INSERT INTO $t SELECT id, id % 3, id FROM range(30)")
+    spark.sql(s"INSERT OVERWRITE $t SELECT id + 100, id % 3, id FROM range(20)")
+    Thread.sleep(5)
+    val tMid = System.currentTimeMillis()
+    Thread.sleep(5)
+    spark.sql(s"INSERT INTO $t SELECT id + 500, id % 3, id FROM range(10)")
+    (t, wh, tMid)
+  }
+
+  test("INSERT, INSERT OVERWRITE, INSERT give the same rows, count and " +
+    "travel on both layouts") {
+    def run(tag: String, partitioned: Boolean) = {
+      val (t, wh, tMid) = overwriteScript(tag, partitioned)
+      try (rows(s"SELECT id, flag, v FROM $t"),
+        spark.sql(s"SELECT count(*) FROM $t").head.getLong(0),
+        rows(s"SELECT id, flag, v FROM $t TIMESTAMP AS OF " +
+          s"timestamp_millis($tMid)"))
+      finally deleteTree(wh)
+    }
+    val (flatNow, flatCount, flatMid) = run("ow0", partitioned = false)
+    val (partNow, partCount, partMid) = run("ow1", partitioned = true)
+    val overwritten = (0L until 20L).map(i => (i + 100, i % 3, i))
+    assert(flatMid === overwritten)
+    assert(flatNow === (overwritten ++
+      (0L until 10L).map(i => (i + 500, i % 3, i))).sorted)
+    assert(flatCount === 30L)
+    assert(partNow === flatNow)
+    assert(partCount === flatCount)
+    assert(partMid === flatMid)
+  }
+
+  test("a 2-row append over 8 write tasks publishes 2 data files on both " +
+    "layouts") {
+    import org.apache.spark.sql.functions.col
+    def dataFiles(path: String): Long = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
+      try walk.iterator().asScala.count { p =>
+        p.getFileName.toString.endsWith(".jsonl") &&
+          !p.toString.contains("/_")
+      }.toLong
+      finally walk.close()
+    }
+    def run(tag: String, partitioned: Boolean) = {
+      val (t, wh, _) = overwriteScript(tag, partitioned)
+      val path = wh.resolve("db/t").toString
+      try {
+        val before = dataFiles(path)
+        val two = spark.range(2).selectExpr("id + 900 AS id",
+          "id % 3 AS flag", "id AS v").repartition(8, col("id"))
+        // the two rows reach two of the eight tasks; six tasks see none
+        assert(two.rdd.mapPartitions(it => Iterator(it.nonEmpty)).collect()
+          .count(identity) === 2)
+        two.writeTo(t).append()
+        dataFiles(path) - before
+      } finally deleteTree(wh)
+    }
+    assert(run("files0", partitioned = false) === 2L)
+    assert(run("files1", partitioned = true) === 2L)
   }
 }

@@ -74,8 +74,10 @@ class JsonAuditSinkSpec extends SparkSpec {
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("event_type", StringType)))
     assert(spark.read.schema(schema).json(s"$dir/*.jsonl").count() === 10L)
-    val head = java.nio.file.Files.readAllLines(dir.resolve("_MANIFEST")).get(0)
-    assert(head === """{"files":1,"rows":10}""", head)
+    // the overwrite empties `_MANIFEST` and publishes as a `_TXN` append:
+    // the logical manifest holds exactly the one new file and its rows
+    val live = AuditBase.readManifest(dir.toString).filterNot(_.folded)
+    assert((live.size, live.map(_.rows).sum) === ((1, 10L)), live)
   }
 
   test("streaming write commits one atomic epoch per micro-batch (full custom loop)") {
@@ -139,7 +141,8 @@ class JsonAuditSinkSpec extends SparkSpec {
     def stageFile(name: String, rows: Int): AuditCommitMessage = {
       val body = (0 until rows).map(i => s"""{"x":$i}""" + "\n").mkString
       java.nio.file.Files.write(stage.resolve(name), body.getBytes("UTF-8"))
-      AuditCommitMessage(name, rows.toLong)
+      AuditCommitMessage(
+        Seq(("", name, rows.toLong, AuditStats.FileStats.empty)))
     }
     // attempt 1 of epoch 5: three task files
     w.commit(5L, Array(stageFile("stage-00000-1.jsonl", 2),
@@ -172,7 +175,8 @@ class JsonAuditSinkSpec extends SparkSpec {
     val stage = dir.resolve("_staging").resolve(w.stageSub)
     java.nio.file.Files.createDirectories(stage)
     java.nio.file.Files.write(stage.resolve("stage-00000-7.jsonl"), "x".getBytes)
-    w.abort(3L, Array(AuditCommitMessage("stage-00000-7.jsonl", 1L)))
+    w.abort(3L, Array(AuditCommitMessage(
+      Seq(("", "stage-00000-7.jsonl", 1L, AuditStats.FileStats.empty)))))
     val left = {
       val l = java.nio.file.Files.list(stage)
       try l.count() finally l.close()

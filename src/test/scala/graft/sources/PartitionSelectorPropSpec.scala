@@ -143,8 +143,15 @@ class PartitionSelectorPropSpec extends AnyFunSuite {
 
   private def runCase(levels: Seq[Level], tuples: Seq[Seq[Any]],
       preds: Seq[AuditMaintenance.PartPred], caseId: Int): Unit = {
-    val root = java.nio.file.Files
-      .createTempDirectory(s"graft_selprop_$caseId").toString
+    val rootDir = java.nio.file.Files
+      .createTempDirectory(s"graft_selprop_$caseId")
+    try runCaseIn(rootDir.toString, levels, tuples, preds, caseId)
+    finally deleteTree(rootDir)
+  }
+
+  private def runCaseIn(root: String, levels: Seq[Level],
+      tuples: Seq[Seq[Any]], preds: Seq[AuditMaintenance.PartPred],
+      caseId: Int): Unit = {
     val relOf: Seq[Any] => String = t =>
       levels.zip(t).map { case (l, v) =>
         s"${l.col}=${AuditPartition.encode(v)}" }.mkString("/")
