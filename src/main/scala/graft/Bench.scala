@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -15,11 +16,11 @@ object Bench {
     // warm up session + codegen + file-index paths once so the first timed
     // query doesn't absorb JVM/session initialization
     try spark.read.parquet(s"$sfDir/region.parquet").count()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     def loadavg: String =
       try java.nio.file.Files.readString(
         java.nio.file.Paths.get("/proc/loadavg")).trim
-      catch { case _: Throwable => "unavailable" }
+      catch { case NonFatal(_) => "unavailable" }
     // SELF-CALIBRATION: fixed in-memory workloads (identical bytes every
     // round) timed on the same JVM/VM as the queries. Cross-round
     // comparisons normalize by the calib ratio first: two judges burned
@@ -94,7 +95,7 @@ object Bench {
       // and undercount the operator's real cost
       val ok =
         try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
-        catch { case _: Throwable => false }
+        catch { case NonFatal(_) => false }
       (name, (System.nanoTime() - t0) / 1e9, ok)
     }
     // two full passes, min per query: single-run numbers on a shared VM
@@ -144,7 +145,7 @@ object Bench {
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("BENCH_full_last.json"),
         s"""{"bench":$line,"loadavg":"$loadavg","nQueries":${results.size}}""" + "\n")
-    } catch { case _: Throwable => () } // never fail the bench over the artifact
+    } catch { case NonFatal(_) => () } // never fail the bench over the artifact
     // CROSS-ROUND NORMALIZATION (round-18 verdict #8, rebuilt round 20):
     // the ±10% VM noise band cost two judges adjudication time — emit the
     // comparison mechanically instead of hand-computing it in ROUND_NOTES.
@@ -282,11 +283,11 @@ object Bench {
             s""""added":$added,"removed":$removed}""" + "\n")
         }
       }
-    } catch { case _: Throwable => () } // advisory artifact only
+    } catch { case NonFatal(_) => () } // advisory artifact only
     // the scan-calibration parquet is per-run scratch — delete it or
     // repeated bench loops accumulate ~100 MB per run in the temp fs
     try graft.sources.deleteTree(java.nio.file.Path.of(calibDir))
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     spark.stop()
   }
 }

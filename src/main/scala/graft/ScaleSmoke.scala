@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** sf1 scale smoke: measure how the heavy-tail queries actually scale.
   *
@@ -140,7 +141,7 @@ object ScaleSmoke {
         val t0 = System.nanoTime()
         val ok =
           try { qs(name)(spark, dir).queryExecution.toRdd.count(); true }
-          catch { case e: Throwable =>
+          catch { case NonFatal(e) =>
             System.err.println(s"[scale] $name @ $dir failed: ${e.getMessage}")
             false
           }
@@ -158,7 +159,7 @@ object ScaleSmoke {
     val load =
       try java.nio.file.Files.readString(
         java.nio.file.Paths.get("/proc/loadavg")).trim
-      catch { case _: Throwable => "unavailable" }
+      catch { case NonFatal(_) => "unavailable" }
     println(s"""{"metric":"scale_smoke","queries":${results.size},""" +
       s""""failed":${results.count(!_._5)},"loadavg":"$load"}""")
   }
@@ -213,7 +214,7 @@ object ScaleSmoke {
     val load =
       try java.nio.file.Files.readString(
         java.nio.file.Paths.get("/proc/loadavg")).trim
-      catch { case _: Throwable => "unavailable" }
+      catch { case NonFatal(_) => "unavailable" }
     println(f"""{"metric":"partial_maint_smoke","full_s":${times(0)}%.2f,""" +
       f""""sel8_s":${times(1)}%.2f,"sel1_s":${times(2)}%.2f,""" +
       f""""sel8_ratio":${times(1) / times(0)}%.3f,""" +
@@ -277,7 +278,7 @@ object ScaleSmoke {
     val load =
       try java.nio.file.Files.readString(
         java.nio.file.Paths.get("/proc/loadavg")).trim
-      catch { case _: Throwable => "unavailable" }
+      catch { case NonFatal(_) => "unavailable" }
     println(f"""{"metric":"maintenance_apply_smoke","dirs":$dirs,""" +
       f""""heal_s":$tApply%.2f,"noop_s":$tAgain%.2f,"loadavg":"$load"}""")
   }
@@ -413,7 +414,7 @@ object ScaleSmoke {
     val load =
       try java.nio.file.Files.readString(
         java.nio.file.Paths.get("/proc/loadavg")).trim
-      catch { case _: Throwable => "unavailable" }
+      catch { case NonFatal(_) => "unavailable" }
     println(s"""{"metric":"audit_scale_smoke","paths":${results.size},""" +
       s""""loadavg":"$load"}""")
   }

@@ -367,10 +367,11 @@ object LakeOps {
     * single row is read; at 100 TB that is the difference between reading
     * the lake and reading 3 days. The dt column is derived ONCE at write
     * time; the oracle re-derives it from raw ts — the hash match proves the
-    * layout round trip loses nothing. */
+    * layout round trip loses nothing. The returned scan reads the lake
+    * directory, so it is a fixed path that the next run overwrites. */
   def partitionPrune(spark: SparkSession, d: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_part_prune")
-    val out = root.resolve("events_by_day").toString
+    val out = new java.io.File(
+      System.getProperty("java.io.tmpdir"), "graft_events_by_day").getAbsolutePath
     events(spark, d).withColumn("dt", to_date(col("ts")))
       .write.mode("overwrite").partitionBy("dt").parquet(out)
     spark.read.parquet(out)
@@ -730,9 +731,12 @@ object LakeOps {
     * (integer-valued doubles — exact in any association order); min/max
     * are order-free; count is long. Registration is scoped to this
     * query: the memoized optimizedPlan keeps the rewrite after
-    * unregister, and no other query in the run can match. */
+    * unregister, and no other query in the run can match. The returned
+    * frame reads the MV, so it lives at a fixed path that the next run
+    * overwrites. */
   def mvRewrite(spark: SparkSession, d: String): DataFrame = {
-    val mvDir = java.nio.file.Files.createTempDirectory("graft_mv_").toString
+    val mvDir = new java.io.File(
+      System.getProperty("java.io.tmpdir"), "graft_lineitem_mv").getAbsolutePath
     val mv = graft.plans.MvRewriteRule.MvDef(
       basePath = s"$d/lineitem.parquet",
       groupCols = Seq("l_returnflag", "l_linestatus"),

@@ -2,6 +2,7 @@ package graft.probes
 
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Round-21 measurement tool (guide §1/§7.2): dump `.explain("formatted")`
   * for every declared query (or the SPARK_GRAFT_ONLY subset) to a
@@ -46,7 +47,7 @@ object PlanDump {
         summary.append(
           f"$name%-28s exch=$exchanges%2d smj=$smj bhj=$bhj shj=$shj " +
             f"bnl=$bnl cart=$cart scans=$scans emptyPush=$emptyPush%n")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         summary.append(s"$name PLAN_FAILED: ${e.getMessage}\n")
       }
     }

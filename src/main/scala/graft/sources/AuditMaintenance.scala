@@ -1349,24 +1349,24 @@ private[sources] object AuditMaintenance {
         }
     }
     if (raced.isEmpty) return 0L
-    val tmp = java.nio.file.Files.createTempDirectory("graft_raced_")
-    val entries = raced.zipWithIndex.map { case ((rel, f, rows), i) =>
-      val src = (if (rel.isEmpty) displaced else displaced.resolve(rel))
-        .resolve(f)
-      val name = f"raced-$i%05d.jsonl"
-      java.nio.file.Files.copy(src, tmp.resolve(name))
-      AuditBase.ManifestEntry(name, rows, folded = false)
+    withScratch("graft_raced_") { tmp =>
+      val entries = raced.zipWithIndex.map { case ((rel, f, rows), i) =>
+        val src = (if (rel.isEmpty) displaced else displaced.resolve(rel))
+          .resolve(f)
+        val name = f"raced-$i%05d.jsonl"
+        java.nio.file.Files.copy(src, tmp.resolve(name))
+        AuditBase.ManifestEntry(name, rows, folded = false)
+      }
+      AuditBase.writeManifest(tmp.toString, entries)
+      val df = spark.read.schema(storageSchema)
+        .format(classOf[JsonAuditSink].getName)
+        .option("path", tmp.toString).option("rawcolumns", "true")
+        .load()
+      val w = df.write.format(classOf[JsonAuditSink].getName)
+        .option("path", newRoot).option("rawcolumns", "true")
+      (if (newSpecSerialized.nonEmpty) w.option("partitionby", newSpecSerialized)
+      else w).mode("append").save()
     }
-    AuditBase.writeManifest(tmp.toString, entries)
-    val df = spark.read.schema(storageSchema)
-      .format(classOf[JsonAuditSink].getName)
-      .option("path", tmp.toString).option("rawcolumns", "true")
-      .load()
-    val w = df.write.format(classOf[JsonAuditSink].getName)
-      .option("path", newRoot).option("rawcolumns", "true")
-    (if (newSpecSerialized.nonEmpty) w.option("partitionby", newSpecSerialized)
-    else w).mode("append").save()
-    deleteTree(tmp)
     raced.map(_._3).sum
   }
 

@@ -1165,22 +1165,36 @@ object GraftCatalog {
   }
 }
 
-/** Oracle-checked query driving the catalog's FULL SQL DDL/DML surface in
-  * one pass: CREATE TABLE → INSERT INTO (aggregate of lineitem) → UPDATE
-  * (row-level rewrite) → DELETE (metadata path) → SELECT back. The DuckDB
-  * oracle restates the same pipeline as pure SELECT algebra over lineitem,
-  * so the hash gate proves the DDL/DML round trip preserves exact values —
-  * the catalog is correctness-gated, not just spec-smoked. The warehouse
-  * is a fixed per-JVM temp path with DROP-and-recreate at query start, so
-  * repeated runs (bench min-of-2) stay deterministic. */
+/** Oracle-checked queries over the catalog and the audit table format.
+  *
+  * Scratch rules: every fixture [[register]]s its own catalog `graft_X`,
+  * whose warehouse is the fixed path `<java.io.tmpdir>/graft_catalog_X_wh`,
+  * and drops and recreates its tables at query start, so repeated runs
+  * (bench min-of-2) stay deterministic. Streaming checkpoints and other
+  * build-time scratch go through [[graft.sources.withScratch]]; scratch a
+  * returned frame still reads lives under the fixture's warehouse. */
 object CatalogApi {
   import org.apache.spark.sql.{DataFrame, SparkSession}
 
-  def catalogDml(spark: SparkSession, d: String): DataFrame = {
+  /** Register catalog `name` (`graft_X`) over its warehouse
+    * `<java.io.tmpdir>/graft_catalog_X_wh` and return that path. Spark
+    * caches a catalog plugin by name, so each fixture keeps its own. */
+  def register(spark: SparkSession, name: String): java.nio.file.Path = {
     val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_q_wh")
-    spark.conf.set("spark.sql.catalog.graft_q", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_q.warehouse", wh.toString)
+      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
+      s"graft_catalog_${name.stripPrefix("graft_")}_wh")
+    spark.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$name.warehouse", wh.toString)
+    wh
+  }
+
+  /** The catalog's full SQL DDL/DML surface in one pass: CREATE TABLE →
+    * INSERT INTO (aggregate of lineitem) → UPDATE (row-level rewrite) →
+    * DELETE (metadata path) → SELECT back. The DuckDB oracle restates the
+    * same pipeline as pure SELECT algebra over lineitem, so the hash gate
+    * proves the DDL/DML round trip preserves exact values. */
+  def catalogDml(spark: SparkSession, d: String): DataFrame = {
+    register(spark, "graft_q")
     graft.Tables.lineitem(spark, d).createOrReplaceTempView("graft_cat_li")
     spark.sql("DROP TABLE IF EXISTS graft_q.db.flags")
     spark.sql(
@@ -1219,10 +1233,7 @@ object CatalogApi {
     * asserts the pruning; this query hash-checks the values) and rolls up.
     * The DuckDB oracle restates the same pipeline as pure SELECT algebra. */
   def auditPartition(spark: SparkSession, d: String): DataFrame = {
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qp_wh")
-    spark.conf.set("spark.sql.catalog.graft_qp", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qp.warehouse", wh.toString)
+    register(spark, "graft_qp")
     graft.Tables.lineitem(spark, d).createOrReplaceTempView("graft_cat_li2")
     spark.sql("DROP TABLE IF EXISTS graft_qp.db.psales")
     spark.sql(
@@ -1259,10 +1270,7 @@ object CatalogApi {
     * values). This is the DSv2 analogue of a co-located bucketed join —
     * at 100 TB it removes BOTH shuffles from the fact-to-fact join. */
   def auditSpj(spark: SparkSession, d: String): DataFrame = {
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qs_wh")
-    spark.conf.set("spark.sql.catalog.graft_qs", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qs.warehouse", wh.toString)
+    register(spark, "graft_qs")
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     graft.Tables.lineitem(spark, d).createOrReplaceTempView("graft_cat_li3")
     spark.sql("DROP TABLE IF EXISTS graft_qs.db.spj_l")
@@ -1307,10 +1315,7 @@ object CatalogApi {
     * rows are written (the spec proves the mechanics; this hash-checks
     * the values), then a modulo DELETE routes through delta too. */
   def catalogMergeDelta(spark: SparkSession, d: String): DataFrame = {
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qm_wh")
-    spark.conf.set("spark.sql.catalog.graft_qm", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qm.warehouse", wh.toString)
+    register(spark, "graft_qm")
     graft.Tables.lineitem(spark, d).createOrReplaceTempView("graft_cat_li4")
     spark.sql("DROP TABLE IF EXISTS graft_qm.db.mflags")
     spark.sql(
@@ -1371,10 +1376,7 @@ object CatalogApi {
     * strict metadata converter) removes rows via vectors. The final
     * SELECT must read identically through the vectors. */
   def catalogMergePart(spark: SparkSession, d: String): DataFrame = {
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qmp_wh")
-    spark.conf.set("spark.sql.catalog.graft_qmp", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qmp.warehouse", wh.toString)
+    register(spark, "graft_qmp")
     graft.Tables.lineitem(spark, d).createOrReplaceTempView("graft_cat_li5")
     spark.sql("DROP TABLE IF EXISTS graft_qmp.db.pflags")
     spark.sql(
@@ -1421,22 +1423,18 @@ object CatalogApi {
     * event semantics (not just its counts) are hash-checked. */
   def auditCdf(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qc_wh")
-    spark.conf.set("spark.sql.catalog.graft_qc", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qc.warehouse", wh.toString)
+    val wh = register(spark, "graft_qc")
     spark.sql("DROP TABLE IF EXISTS graft_qc.db.cdf")
     spark.sql("CREATE TABLE graft_qc.db.cdf (id BIGINT, v BIGINT) USING audit")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_qc_ckpt")
-    val q = spark.readStream.format(classOf[PagedSource].getName)
-      .option("pages", "4").option("pageSize", "100")
-      .option("pagesPerTrigger", "1")
-      .load().select(col("id"), col("duration_ms").as("v"))
-      .writeStream.format(classOf[JsonAuditSink].getName)
-      .option("path", wh.resolve("db").resolve("cdf").toString)
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
+    withScratch("graft_qc_ckpt") { ckpt =>
+      val q = PagedSource.stream(spark, 4, 100, 1)
+        .select(col("id"), col("duration_ms").as("v"))
+        .writeStream.format(classOf[JsonAuditSink].getName)
+        .option("path", wh.resolve("db").resolve("cdf").toString)
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+    }
     spark.sql(
       """MERGE INTO graft_qc.db.cdf t
         |USING (SELECT * FROM VALUES (5L, 111L), (17L, 111L), (1000L, 222L)
@@ -1471,22 +1469,18 @@ object CatalogApi {
     * by the oracle; the source formula is [[PagedSource]]'s). */
   def cdfIncremental(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qci_wh")
-    spark.conf.set("spark.sql.catalog.graft_qci", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qci.warehouse", wh.toString)
+    val wh = register(spark, "graft_qci")
     spark.sql("DROP TABLE IF EXISTS graft_qci.db.inc")
     spark.sql("CREATE TABLE graft_qci.db.inc (id BIGINT, v BIGINT) USING audit")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_qci_ckpt")
-    val q = spark.readStream.format(classOf[PagedSource].getName)
-      .option("pages", "4").option("pageSize", "100")
-      .option("pagesPerTrigger", "1")
-      .load().select(col("id"), col("duration_ms").as("v"))
-      .writeStream.format(classOf[JsonAuditSink].getName)
-      .option("path", wh.resolve("db").resolve("inc").toString)
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
+    withScratch("graft_qci_ckpt") { ckpt =>
+      val q = PagedSource.stream(spark, 4, 100, 1)
+        .select(col("id"), col("duration_ms").as("v"))
+        .writeStream.format(classOf[JsonAuditSink].getName)
+        .option("path", wh.resolve("db").resolve("inc").toString)
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+    }
     val cdfSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id",
         org.apache.spark.sql.types.LongType),
@@ -1539,10 +1533,7 @@ object CatalogApi {
     * (cur) the plain read must agree with (now). */
   def auditTravelCompacted(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qtc_wh")
-    spark.conf.set("spark.sql.catalog.graft_qtc", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qtc.warehouse", wh.toString)
+    val wh = register(spark, "graft_qtc")
     spark.sql("DROP TABLE IF EXISTS graft_qtc.db.tc")
     spark.sql("CREATE TABLE graft_qtc.db.tc (id BIGINT, v BIGINT) " +
       "USING audit")
@@ -1603,10 +1594,7 @@ object CatalogApi {
     * instants refuse loudly (AuditTravelFoldedSpec). */
   def auditTravelFolded(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qtf_wh")
-    spark.conf.set("spark.sql.catalog.graft_qtf", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qtf.warehouse", wh.toString)
+    val wh = register(spark, "graft_qtf")
     spark.sql("DROP TABLE IF EXISTS graft_qtf.db.tf")
     spark.sql("CREATE TABLE graft_qtf.db.tf (id BIGINT, v BIGINT) USING audit")
     spark.sql("INSERT INTO graft_qtf.db.tf SELECT id, id FROM range(100)")
@@ -1659,10 +1647,7 @@ object CatalogApi {
     * crash-recovery intents). */
   def auditTravelRetained(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qtr_wh")
-    spark.conf.set("spark.sql.catalog.graft_qtr", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qtr.warehouse", wh.toString)
+    val wh = register(spark, "graft_qtr")
     spark.sql("DROP TABLE IF EXISTS graft_qtr.db.tr")
     spark.sql("CREATE TABLE graft_qtr.db.tr (id BIGINT, v BIGINT) USING audit")
     spark.sql("INSERT INTO graft_qtr.db.tr SELECT id, id FROM range(100)")
@@ -1700,10 +1685,7 @@ object CatalogApi {
     * RESTORE halves. */
   def auditPartOptimizeWhere(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qpow_wh")
-    spark.conf.set("spark.sql.catalog.graft_qpow", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qpow.warehouse", wh.toString)
+    val wh = register(spark, "graft_qpow")
     spark.sql("DROP TABLE IF EXISTS graft_qpow.db.tw")
     spark.sql(
       """CREATE TABLE graft_qpow.db.tw (id BIGINT, flag BIGINT)
@@ -1766,10 +1748,7 @@ object CatalogApi {
     * instant, and under a pruned range read. */
   def auditPartOptimizeRange(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qpor_wh")
-    spark.conf.set("spark.sql.catalog.graft_qpor", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qpor.warehouse", wh.toString)
+    val wh = register(spark, "graft_qpor")
     spark.sql("DROP TABLE IF EXISTS graft_qpor.db.tr")
     spark.sql(
       """CREATE TABLE graft_qpor.db.tr (id BIGINT, day BIGINT)
@@ -1837,10 +1816,7 @@ object CatalogApi {
     * target, or emitted a different recommendation hash-fails. */
   def maintenanceApplyQ(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qma_wh")
-    spark.conf.set("spark.sql.catalog.graft_qma", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qma.warehouse", wh.toString)
+    val wh = register(spark, "graft_qma")
     spark.sql("DROP TABLE IF EXISTS graft_qma.db.t")
     spark.sql(
       """CREATE TABLE graft_qma.db.t (id BIGINT, flag BIGINT)
@@ -1918,10 +1894,7 @@ object CatalogApi {
     * from the generation arithmetic. */
   def maintenancePlanBytesQ(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qmb_wh")
-    spark.conf.set("spark.sql.catalog.graft_qmb", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qmb.warehouse", wh.toString)
+    register(spark, "graft_qmb")
     spark.sql("DROP TABLE IF EXISTS graft_qmb.db.b")
     spark.sql("CREATE TABLE graft_qmb.db.b (id BIGINT, v BIGINT) USING audit")
     spark.sql("INSERT INTO graft_qmb.db.b " +
@@ -2009,10 +1982,7 @@ object CatalogApi {
     * swap that lost or duplicated a single row hash-fails. */
   def catalogRepartition(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qrp_wh")
-    spark.conf.set("spark.sql.catalog.graft_qrp", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qrp.warehouse", wh.toString)
+    register(spark, "graft_qrp")
     spark.sql("DROP TABLE IF EXISTS graft_qrp.db.r")
     spark.sql("CREATE TABLE graft_qrp.db.r (id BIGINT, day BIGINT, " +
       "region BIGINT, v BIGINT) USING audit PARTITIONED BY (day)")
@@ -2070,29 +2040,25 @@ object CatalogApi {
     * mixed table refused incremental pulls outright. */
   def cdfIncrementalMixed(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qcim_wh")
-    spark.conf.set("spark.sql.catalog.graft_qcim", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qcim.warehouse", wh.toString)
+    val wh = register(spark, "graft_qcim")
     spark.sql("DROP TABLE IF EXISTS graft_qcim.db.inc")
     spark.sql("CREATE TABLE graft_qcim.db.inc (id BIGINT, v BIGINT) " +
       "USING audit")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_qcim_ckpt")
-    def wave(pages: Int): Unit = {
-      val w = spark.readStream.format(classOf[PagedSource].getName)
-        .option("pages", pages.toString).option("pageSize", "100")
-        .option("pagesPerTrigger", "1")
-        .load().selectExpr("id", "id AS v")
-        .writeStream.option("checkpointLocation", ckpt.toString)
-        .outputMode("append").toTable("graft_qcim.db.inc")
-      try w.processAllAvailable() finally w.stop()
+    withScratch("graft_qcim_ckpt") { ckpt =>
+      def wave(pages: Int): Unit = {
+        val w = PagedSource.stream(spark, pages, 100, 1)
+          .selectExpr("id", "id AS v")
+          .writeStream.option("checkpointLocation", ckpt.toString)
+          .outputMode("append").toTable("graft_qcim.db.inc")
+        try w.processAllAvailable() finally w.stop()
+      }
+      wave(2) // epochs 0-1: ids 0..199
+      Thread.sleep(8)
+      spark.sql("INSERT INTO graft_qcim.db.inc " +
+        "SELECT id + 1000, id + 1000 FROM range(50)")
+      Thread.sleep(8)
+      wave(4) // epochs 2-3: ids 200..399
     }
-    wave(2) // epochs 0-1: ids 0..199
-    Thread.sleep(8)
-    spark.sql("INSERT INTO graft_qcim.db.inc " +
-      "SELECT id + 1000, id + 1000 FROM range(50)")
-    Thread.sleep(8)
-    wave(4) // epochs 2-3: ids 200..399
     Thread.sleep(8)
     // vectors + replacement rows, ONE commit ts for the statement
     spark.sql("UPDATE graft_qcim.db.inc SET v = 999 " +
@@ -2192,23 +2158,19 @@ object CatalogApi {
     * maintenance changed the LAYOUT and nothing else. (The spec covers the
     * expiry error, file counts, and sort order.) */
   def auditOptimize(spark: SparkSession, d: String): DataFrame = {
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qv_wh")
-    spark.conf.set("spark.sql.catalog.graft_qv", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qv.warehouse", wh.toString)
+    val wh = register(spark, "graft_qv")
     spark.sql("DROP TABLE IF EXISTS graft_qv.db.optt")
     spark.sql("CREATE TABLE graft_qv.db.optt (id BIGINT, v BIGINT) USING audit")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_qv_ckpt")
-    val q = spark.readStream.format(classOf[PagedSource].getName)
-      .option("pages", "4").option("pageSize", "100")
-      .option("pagesPerTrigger", "1")
-      .load().select(org.apache.spark.sql.functions.col("id"),
-        org.apache.spark.sql.functions.col("duration_ms").as("v"))
-      .writeStream.format(classOf[JsonAuditSink].getName)
-      .option("path", wh.resolve("db").resolve("optt").toString)
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
+    withScratch("graft_qv_ckpt") { ckpt =>
+      val q = PagedSource.stream(spark, 4, 100, 1)
+        .select(org.apache.spark.sql.functions.col("id"),
+          org.apache.spark.sql.functions.col("duration_ms").as("v"))
+        .writeStream.format(classOf[JsonAuditSink].getName)
+        .option("path", wh.resolve("db").resolve("optt").toString)
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+    }
     spark.sql(
       """MERGE INTO graft_qv.db.optt t
         |USING (SELECT * FROM VALUES (5L, 111L), (17L, 111L), (1000L, 222L)
@@ -2239,10 +2201,7 @@ object CatalogApi {
     * 100 TB this is the "row counts per partition" dashboard query as a
     * pure metadata lookup. */
   def auditGroupCount(spark: SparkSession, d: String): DataFrame = {
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qg_wh")
-    spark.conf.set("spark.sql.catalog.graft_qg", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qg.warehouse", wh.toString)
+    register(spark, "graft_qg")
     graft.Tables.lineitem(spark, d).createOrReplaceTempView("graft_cat_li6")
     spark.sql("DROP TABLE IF EXISTS graft_qg.db.gsales")
     spark.sql(
@@ -2271,10 +2230,7 @@ object CatalogApi {
     * is the difference between "predicates on the second column scan the
     * whole table" (lexicographic sort) and "any clustered column prunes". */
   def auditZorder(spark: SparkSession, d: String): DataFrame = {
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qz_wh")
-    spark.conf.set("spark.sql.catalog.graft_qz", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qz.warehouse", wh.toString)
+    register(spark, "graft_qz")
     graft.Tables.lineitem(spark, d).createOrReplaceTempView("graft_cat_li4")
     spark.sql("DROP TABLE IF EXISTS graft_qz.db.zsales")
     spark.sql(
@@ -2315,10 +2271,7 @@ object CatalogApi {
     * combines partition pruning with zone-map file skipping inside the
     * surviving directories. */
   def auditPartZorder(spark: SparkSession, d: String): DataFrame = {
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qpz_wh")
-    spark.conf.set("spark.sql.catalog.graft_qpz", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qpz.warehouse", wh.toString)
+    register(spark, "graft_qpz")
     graft.Tables.lineitem(spark, d).createOrReplaceTempView("graft_cat_li6")
     spark.sql("DROP TABLE IF EXISTS graft_qpz.db.pzsales")
     spark.sql(
@@ -2364,10 +2317,7 @@ object CatalogApi {
     * constraint the existing rows violate fails, after a cleanup DELETE
     * it sticks. */
   def catalogCheck(spark: SparkSession, d: String): DataFrame = {
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qchk_wh")
-    spark.conf.set("spark.sql.catalog.graft_qchk", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qchk.warehouse", wh.toString)
+    register(spark, "graft_qchk")
     graft.Tables.lineitem(spark, d).createOrReplaceTempView("graft_cat_li8")
     spark.sql("DROP TABLE IF EXISTS graft_qchk.db.ck")
     spark.sql(
@@ -2386,6 +2336,7 @@ object CatalogApi {
       val wasRejected =
         try { body; false }
         catch {
+          // Throwable, not NonFatal: every non-constraint failure is rethrown
           case t: Throwable =>
             def chain(x: Throwable): Seq[Throwable] =
               if (x == null) Seq.empty else x +: chain(x.getCause)
@@ -2436,10 +2387,7 @@ object CatalogApi {
     * and composes with views-over-views. The oracle restates the final
     * aggregate from the base data. */
   def catalogView(spark: SparkSession, d: String): DataFrame = {
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qvw_wh")
-    spark.conf.set("spark.sql.catalog.graft_qvw", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qvw.warehouse", wh.toString)
+    register(spark, "graft_qvw")
     graft.Tables.lineitem(spark, d).createOrReplaceTempView("graft_cat_li10")
     spark.sql("DROP VIEW IF EXISTS graft_qvw.db.flagged")
     spark.sql("DROP VIEW IF EXISTS graft_qvw.db.base")
@@ -2485,10 +2433,7 @@ object CatalogApi {
     * changes future INSERTs only, and predicates/DML evaluate against
     * the backfilled values. The oracle restates the vintage walk. */
   def catalogDefault(spark: SparkSession, d: String): DataFrame = {
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qdf_wh")
-    spark.conf.set("spark.sql.catalog.graft_qdf", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qdf.warehouse", wh.toString)
+    register(spark, "graft_qdf")
     graft.Tables.lineitem(spark, d).createOrReplaceTempView("graft_cat_li9")
     spark.sql("DROP TABLE IF EXISTS graft_qdf.db.df")
     spark.sql(
@@ -2543,10 +2488,7 @@ object CatalogApi {
     * drop before any file opens. The hash gate proves pruning never
     * changes the join's answer. */
   def auditDpp(spark: SparkSession, d: String): DataFrame = {
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qdpp_wh")
-    spark.conf.set("spark.sql.catalog.graft_qdpp", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qdpp.warehouse", wh.toString)
+    register(spark, "graft_qdpp")
     graft.Tables.lineitem(spark, d).createOrReplaceTempView("graft_cat_li7")
     graft.Tables.nation(spark, d).createOrReplaceTempView("graft_cat_nat7")
     spark.sql("DROP TABLE IF EXISTS graft_qdpp.db.fact")
@@ -2585,10 +2527,7 @@ object CatalogApi {
     * `m` values never open. The hash gate proves routing, per-leaf
     * delete vectors, and per-level pruning all compose. */
   def auditMultiPart(spark: SparkSession, d: String): DataFrame = {
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qmp_wh")
-    spark.conf.set("spark.sql.catalog.graft_qmp", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qmp.warehouse", wh.toString)
+    register(spark, "graft_qmp")
     graft.Tables.lineitem(spark, d).createOrReplaceTempView("graft_cat_li8")
     graft.Tables.nation(spark, d).createOrReplaceTempView("graft_cat_nat8")
     spark.sql("DROP TABLE IF EXISTS graft_qmp.db.fact")
@@ -2645,26 +2584,21 @@ object CatalogApi {
     * hash gate proves the streamed content is exactly-once and
     * partition-complete). */
   def auditStreamPart(spark: SparkSession, d: String): DataFrame = {
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qsp_wh")
-    spark.conf.set("spark.sql.catalog.graft_qsp", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qsp.warehouse", wh.toString)
+    register(spark, "graft_qsp")
     spark.sql("DROP TABLE IF EXISTS graft_qsp.db.pstream")
     spark.sql(
       """CREATE TABLE graft_qsp.db.pstream (id BIGINT, flag BIGINT, dur BIGINT)
         |USING audit PARTITIONED BY (flag)""".stripMargin)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_qsp_ckpt")
-    val q = spark.readStream.format(classOf[PagedSource].getName)
-      .option("pages", "4").option("pageSize", "100")
-      .option("pagesPerTrigger", "1")
-      .load()
-      .select(org.apache.spark.sql.functions.col("id"),
-        (org.apache.spark.sql.functions.col("id") % 3).as("flag"),
-        org.apache.spark.sql.functions.col("duration_ms").as("dur"))
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode("append").toTable("graft_qsp.db.pstream")
-    try q.processAllAvailable() finally q.stop()
+    withScratch("graft_qsp_ckpt") { ckpt =>
+      val q = PagedSource.stream(spark, 4, 100, 1)
+        .select(org.apache.spark.sql.functions.col("id"),
+          (org.apache.spark.sql.functions.col("id") % 3).as("flag"),
+          org.apache.spark.sql.functions.col("duration_ms").as("dur"))
+        .writeStream
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode("append").toTable("graft_qsp.db.pstream")
+      try q.processAllAvailable() finally q.stop()
+    }
     spark.sql(
       """SELECT flag, count(*) AS n_rows, sum(dur) AS sum_dur,
         |       min(id) AS lo_id, max(id) AS hi_id
@@ -2702,39 +2636,34 @@ object CatalogApi {
     * streaming bus, same as the unpartitioned form. */
   def auditPartTail(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qpt_wh")
-    spark.conf.set("spark.sql.catalog.graft_qpt", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qpt.warehouse", wh.toString)
+    register(spark, "graft_qpt")
     spark.sql("DROP TABLE IF EXISTS graft_qpt.db.ptail")
     spark.sql(
       """CREATE TABLE graft_qpt.db.ptail (id BIGINT, flag BIGINT, dur BIGINT)
         |USING audit PARTITIONED BY (flag)""".stripMargin)
-    val wckpt = java.nio.file.Files.createTempDirectory("graft_qpt_wckpt")
-    spark.catalog.dropTempView("graft_qpt_mem")
-    // SUBSCRIBE FIRST, then write: the two streaming lifecycles overlap
-    // instead of running back to back (this query's cost is fixed
-    // choreography, not data volume — see BENCH notes), and the tail
-    // proving multi-epoch resolution needs only two writer epochs
-    val tail = spark.readStream.table("graft_qpt.db.ptail")
-      .groupBy(col("flag"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("dur")).as("sum_dur"),
-        min(col("id")).as("lo_id"), max(col("id")).as("hi_id"))
-    val q = tail.writeStream.outputMode("complete")
-      .format("memory").queryName("graft_qpt_mem").start()
-    val w = spark.readStream.format(classOf[PagedSource].getName)
-      .option("pages", "4").option("pageSize", "100")
-      .option("pagesPerTrigger", "2")
-      .load()
-      .select(col("id"), (col("id") % 3).as("flag"),
-        col("duration_ms").as("dur"))
-      .writeStream
-      .option("checkpointLocation", wckpt.toString)
-      .outputMode("append").toTable("graft_qpt.db.ptail")
-    try {
-      try w.processAllAvailable() finally w.stop()
-      q.processAllAvailable()
-    } finally q.stop()
+    withScratch("graft_qpt_wckpt") { wckpt =>
+      spark.catalog.dropTempView("graft_qpt_mem")
+      // SUBSCRIBE FIRST, then write: the two streaming lifecycles overlap
+      // instead of running back to back (this query's cost is fixed
+      // choreography, not data volume — see BENCH notes), and the tail
+      // proving multi-epoch resolution needs only two writer epochs
+      val tail = spark.readStream.table("graft_qpt.db.ptail")
+        .groupBy(col("flag"))
+        .agg(count(lit(1)).as("n_rows"), sum(col("dur")).as("sum_dur"),
+          min(col("id")).as("lo_id"), max(col("id")).as("hi_id"))
+      val q = tail.writeStream.outputMode("complete")
+        .format("memory").queryName("graft_qpt_mem").start()
+      val w = PagedSource.stream(spark, 4, 100, 2)
+        .select(col("id"), (col("id") % 3).as("flag"),
+          col("duration_ms").as("dur"))
+        .writeStream
+        .option("checkpointLocation", wckpt.toString)
+        .outputMode("append").toTable("graft_qpt.db.ptail")
+      try {
+        try w.processAllAvailable() finally w.stop()
+        q.processAllAvailable()
+      } finally q.stop()
+    }
     spark.table("graft_qpt_mem").orderBy("flag")
   }
 
@@ -2767,23 +2696,19 @@ object CatalogApi {
     * the un-pinned read still sees the post-pin batch INSERT. */
   def auditPartTravel(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qptt_wh")
-    spark.conf.set("spark.sql.catalog.graft_qptt", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qptt.warehouse", wh.toString)
+    register(spark, "graft_qptt")
     spark.sql("DROP TABLE IF EXISTS graft_qptt.db.pt")
     spark.sql(
       """CREATE TABLE graft_qptt.db.pt (id BIGINT, flag BIGINT)
         |USING audit PARTITIONED BY (flag)""".stripMargin)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_qptt_ckpt")
-    val w = spark.readStream.format(classOf[PagedSource].getName)
-      .option("pages", "4").option("pageSize", "100")
-      .option("pagesPerTrigger", "1")
-      .load().select(col("id"), (col("id") % 3).as("flag"))
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode("append").toTable("graft_qptt.db.pt")
-    try w.processAllAvailable() finally w.stop()
+    withScratch("graft_qptt_ckpt") { ckpt =>
+      val w = PagedSource.stream(spark, 4, 100, 1)
+        .select(col("id"), (col("id") % 3).as("flag"))
+        .writeStream
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode("append").toTable("graft_qptt.db.pt")
+      try w.processAllAvailable() finally w.stop()
+    }
     // a batch (txn) append AFTER the epochs: visible current, never pinned
     spark.sql("INSERT INTO graft_qptt.db.pt VALUES (9000, 1), (9001, 2)")
     spark.sql(
@@ -2821,10 +2746,7 @@ object CatalogApi {
     * AuditTravelFoldedSpec). */
   def auditPartTravelFolded(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qptf_wh")
-    spark.conf.set("spark.sql.catalog.graft_qptf", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qptf.warehouse", wh.toString)
+    val wh = register(spark, "graft_qptf")
     spark.sql("DROP TABLE IF EXISTS graft_qptf.db.tf")
     spark.sql(
       """CREATE TABLE graft_qptf.db.tf (id BIGINT, flag BIGINT)
@@ -2882,23 +2804,19 @@ object CatalogApi {
     * AuditPartBaseSpec). */
   def auditPartTravelCompacted(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qptc_wh")
-    spark.conf.set("spark.sql.catalog.graft_qptc", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qptc.warehouse", wh.toString)
+    val wh = register(spark, "graft_qptc")
     spark.sql("DROP TABLE IF EXISTS graft_qptc.db.pc")
     spark.sql(
       """CREATE TABLE graft_qptc.db.pc (id BIGINT, flag BIGINT)
         |USING audit PARTITIONED BY (flag)""".stripMargin)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_qptc_ckpt")
-    val w = spark.readStream.format(classOf[PagedSource].getName)
-      .option("pages", "3").option("pageSize", "100")
-      .option("pagesPerTrigger", "1")
-      .load().select(col("id"), (col("id") % 3).as("flag"))
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode("append").toTable("graft_qptc.db.pc")
-    try w.processAllAvailable() finally w.stop()
+    withScratch("graft_qptc_ckpt") { ckpt =>
+      val w = PagedSource.stream(spark, 3, 100, 1)
+        .select(col("id"), (col("id") % 3).as("flag"))
+        .writeStream
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode("append").toTable("graft_qptc.db.pc")
+      try w.processAllAvailable() finally w.stop()
+    }
     val path = wh.resolve("db").resolve("pc").toString
     val tPre = AuditScan.epochTimestamps(path).values.max
     Thread.sleep(8)
@@ -2962,23 +2880,19 @@ object CatalogApi {
     * generation arithmetic, so one lost or duplicated event hash-fails. */
   def cdfPartCompacted(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qpcc_wh")
-    spark.conf.set("spark.sql.catalog.graft_qpcc", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qpcc.warehouse", wh.toString)
+    val wh = register(spark, "graft_qpcc")
     spark.sql("DROP TABLE IF EXISTS graft_qpcc.db.pc")
     spark.sql(
       """CREATE TABLE graft_qpcc.db.pc (id BIGINT, flag BIGINT)
         |USING audit PARTITIONED BY (flag)""".stripMargin)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_qpcc_ckpt")
-    val w = spark.readStream.format(classOf[PagedSource].getName)
-      .option("pages", "2").option("pageSize", "100")
-      .option("pagesPerTrigger", "1")
-      .load().select(col("id"), (col("id") % 3).as("flag"))
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode("append").toTable("graft_qpcc.db.pc")
-    try w.processAllAvailable() finally w.stop()
+    withScratch("graft_qpcc_ckpt") { ckpt =>
+      val w = PagedSource.stream(spark, 2, 100, 1)
+        .select(col("id"), (col("id") % 3).as("flag"))
+        .writeStream
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode("append").toTable("graft_qpcc.db.pc")
+      try w.processAllAvailable() finally w.stop()
+    }
     spark.sql("INSERT INTO graft_qpcc.db.pc VALUES (9000, 1), (9001, 2)")
     spark.sql("DELETE FROM graft_qpcc.db.pc WHERE id % 100 = 3")
     spark.sql("CALL graft_qpcc.system.optimize(table => 'db.pc', " +
@@ -3021,10 +2935,7 @@ object CatalogApi {
     * (value-identical hashing for int/long). The oracle restates both
     * waves in BIGINT from lineitem. */
   def catalogWiden(spark: SparkSession, d: String): DataFrame = {
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qwd_wh")
-    spark.conf.set("spark.sql.catalog.graft_qwd", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qwd.warehouse", wh.toString)
+    register(spark, "graft_qwd")
     graft.Tables.lineitem(spark, d).createOrReplaceTempView("graft_cat_li11")
     spark.sql("DROP TABLE IF EXISTS graft_qwd.db.w")
     spark.sql(
@@ -3076,22 +2987,18 @@ object CatalogApi {
     * GraftCatalogSpec over a handcrafted epoch log. */
   def auditTravelTs(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qts_wh")
-    spark.conf.set("spark.sql.catalog.graft_qts", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qts.warehouse", wh.toString)
+    val wh = register(spark, "graft_qts")
     spark.sql("DROP TABLE IF EXISTS graft_qts.db.tt")
     spark.sql("CREATE TABLE graft_qts.db.tt (id BIGINT, flag BIGINT) " +
       "USING audit")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_qts_ckpt")
-    val w = spark.readStream.format(classOf[PagedSource].getName)
-      .option("pages", "3").option("pageSize", "100")
-      .option("pagesPerTrigger", "1")
-      .load().select(col("id"), (col("id") % 3).as("flag"))
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode("append").toTable("graft_qts.db.tt")
-    try w.processAllAvailable() finally w.stop()
+    withScratch("graft_qts_ckpt") { ckpt =>
+      val w = PagedSource.stream(spark, 3, 100, 1)
+        .select(col("id"), (col("id") % 3).as("flag"))
+        .writeStream
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode("append").toTable("graft_qts.db.tt")
+      try w.processAllAvailable() finally w.stop()
+    }
     val path = wh.resolve("db").resolve("tt").toString
     val tsByEpoch = AuditScan.epochTimestamps(path)
     val ordered = tsByEpoch.toSeq.sortBy(_._1).map(_._2)
@@ -3134,31 +3041,27 @@ object CatalogApi {
     * clock-resolution tie fails loudly instead of flaking. */
   def auditTravelMixed(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qtm_wh")
-    spark.conf.set("spark.sql.catalog.graft_qtm", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qtm.warehouse", wh.toString)
+    val wh = register(spark, "graft_qtm")
     spark.sql("DROP TABLE IF EXISTS graft_qtm.db.tt")
     spark.sql("CREATE TABLE graft_qtm.db.tt (id BIGINT, flag BIGINT) " +
       "USING audit")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_qtm_ckpt")
-    def wave(pages: Int): Unit = {
-      val w = spark.readStream.format(classOf[PagedSource].getName)
-        .option("pages", pages.toString).option("pageSize", "100")
-        .option("pagesPerTrigger", "1")
-        .load().select(col("id"), (col("id") % 3).as("flag"))
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append").toTable("graft_qtm.db.tt")
-      try w.processAllAvailable() finally w.stop()
+    withScratch("graft_qtm_ckpt") { ckpt =>
+      def wave(pages: Int): Unit = {
+        val w = PagedSource.stream(spark, pages, 100, 1)
+          .select(col("id"), (col("id") % 3).as("flag"))
+          .writeStream
+          .option("checkpointLocation", ckpt.toString)
+          .outputMode("append").toTable("graft_qtm.db.tt")
+        try w.processAllAvailable() finally w.stop()
+      }
+      wave(2) // epochs 0-1: ids 0..199
+      Thread.sleep(8)
+      // batch txn append between the waves: ids 1000..1099
+      spark.sql("INSERT INTO graft_qtm.db.tt " +
+        "SELECT id + 1000, (id + 1000) % 3 FROM range(100)")
+      Thread.sleep(8)
+      wave(4) // epochs 2-3 (checkpointed resume): ids 200..399
     }
-    wave(2) // epochs 0-1: ids 0..199
-    Thread.sleep(8)
-    // batch txn append between the waves: ids 1000..1099
-    spark.sql("INSERT INTO graft_qtm.db.tt " +
-      "SELECT id + 1000, (id + 1000) % 3 FROM range(100)")
-    Thread.sleep(8)
-    wave(4) // epochs 2-3 (checkpointed resume): ids 200..399
     Thread.sleep(8)
     // row-level DML: vectors on epoch files + replacement txn append...
     spark.sql("UPDATE graft_qtm.db.tt SET flag = 9 " +
@@ -3249,10 +3152,7 @@ object CatalogApi {
     * source's final state. */
   def cdfReplicaPart(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qrpp_wh")
-    spark.conf.set("spark.sql.catalog.graft_qrpp", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qrpp.warehouse", wh.toString)
+    val wh = register(spark, "graft_qrpp")
     spark.sql("DROP TABLE IF EXISTS graft_qrpp.db.src")
     spark.sql("DROP TABLE IF EXISTS graft_qrpp.db.rep")
     spark.sql(
@@ -3272,76 +3172,76 @@ object CatalogApi {
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("_pos",
         org.apache.spark.sql.types.LongType)))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_qrpp_ckpt")
-    def startTail() = spark.readStream.schema(cdfSchema)
-      .format(classOf[JsonAuditSink].getName)
-      .option("path", wh.resolve("db").resolve("src").toString)
-      .option("partitionby", "flag")
-      .option("changeFeed", "true").load()
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // survivor fold keyed on the dir-qualified (_file, _pos) row id:
-        // an insert tombstoned later in the same batch is dead; a key's
-        // net effect is its surviving insert or a delete of the key
-        val ins = batch.filter(col("_change_type") === "insert")
-          .select(col("id"), col("flag"), col("_file"), col("_pos"))
-        val del = batch.filter(col("_change_type") === "delete")
-          .select(col("id"), col("_file"), col("_pos"))
-        val surv = ins.join(del, Seq("_file", "_pos"), "left_anti")
-          .groupBy(col("id"))
-          .agg(max(col("flag")).as("flag"), lit(true).as("up"))
-        batch.select(col("id")).distinct()
-          .join(surv, Seq("id"), "left_outer")
-          .createOrReplaceTempView("cdf_part_batch")
-        batch.sparkSession.sql(
-          """MERGE INTO graft_qrpp.db.rep t
-            |USING (SELECT id, flag, coalesce(up, false) AS up
-            |       FROM cdf_part_batch) s
-            |ON t.id = s.id
-            |WHEN MATCHED AND NOT s.up THEN DELETE
-            |WHEN MATCHED AND s.up THEN UPDATE SET t.flag = s.flag
-            |WHEN NOT MATCHED AND s.up THEN INSERT (id, flag)
-            |  VALUES (s.id, s.flag)
-            |""".stripMargin)
-        ()
+    withScratch("graft_qrpp_ckpt") { ckpt =>
+      def startTail() = spark.readStream.schema(cdfSchema)
+        .format(classOf[JsonAuditSink].getName)
+        .option("path", wh.resolve("db").resolve("src").toString)
+        .option("partitionby", "flag")
+        .option("changeFeed", "true").load()
+        .writeStream
+        .option("checkpointLocation", ckpt.toString)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          // survivor fold keyed on the dir-qualified (_file, _pos) row id:
+          // an insert tombstoned later in the same batch is dead; a key's
+          // net effect is its surviving insert or a delete of the key
+          val ins = batch.filter(col("_change_type") === "insert")
+            .select(col("id"), col("flag"), col("_file"), col("_pos"))
+          val del = batch.filter(col("_change_type") === "delete")
+            .select(col("id"), col("_file"), col("_pos"))
+          val surv = ins.join(del, Seq("_file", "_pos"), "left_anti")
+            .groupBy(col("id"))
+            .agg(max(col("flag")).as("flag"), lit(true).as("up"))
+          batch.select(col("id")).distinct()
+            .join(surv, Seq("id"), "left_outer")
+            .createOrReplaceTempView("cdf_part_batch")
+          batch.sparkSession.sql(
+            """MERGE INTO graft_qrpp.db.rep t
+              |USING (SELECT id, flag, coalesce(up, false) AS up
+              |       FROM cdf_part_batch) s
+              |ON t.id = s.id
+              |WHEN MATCHED AND NOT s.up THEN DELETE
+              |WHEN MATCHED AND s.up THEN UPDATE SET t.flag = s.flag
+              |WHEN NOT MATCHED AND s.up THEN INSERT (id, flag)
+              |  VALUES (s.id, s.flag)
+              |""".stripMargin)
+          ()
+        }
+        .start()
+      // wave 1: streaming epochs land while the tail is LIVE
+      withScratch("graft_qrpp_wckpt") { wckpt =>
+        val w = PagedSource.stream(spark, 2, 100, 1)
+          .select(col("id"), (col("id") % 3).as("flag"))
+          .writeStream
+          .option("checkpointLocation", wckpt.toString)
+          .outputMode("append").toTable("graft_qrpp.db.src")
+        val tail = startTail()
+        try {
+          try w.processAllAvailable() finally w.stop()
+          tail.processAllAvailable()
+        } finally tail.stop()
       }
-      .start()
-    // wave 1: streaming epochs land while the tail is LIVE
-    val wckpt = java.nio.file.Files.createTempDirectory("graft_qrpp_wckpt")
-    val w = spark.readStream.format(classOf[PagedSource].getName)
-      .option("pages", "2").option("pageSize", "100")
-      .option("pagesPerTrigger", "1")
-      .load().select(col("id"), (col("id") % 3).as("flag"))
-      .writeStream
-      .option("checkpointLocation", wckpt.toString)
-      .outputMode("append").toTable("graft_qrpp.db.src")
-    val tail = startTail()
-    try {
-      try w.processAllAvailable() finally w.stop()
-      tail.processAllAvailable()
-    } finally tail.stop()
-    // wave 2: two OCC batch appends commit while the tail is DOWN; the
-    // restarted tail's first batch spans BOTH commits
-    spark.sql("INSERT INTO graft_qrpp.db.src VALUES (9000, 0), (9001, 1)")
-    spark.sql("INSERT INTO graft_qrpp.db.src VALUES (9002, 2), (9003, 0)")
-    val tail2 = startTail()
-    try tail2.processAllAvailable() finally tail2.stop()
-    // wave 3, tail DOWN again: partitioned delta DML — the MERGE moves
-    // id=5 to a NEW partition (flag 111) and id=9000 to flag 7, inserts
-    // id=10000; the DELETE then kills id=5 (whose fresh insert must lose
-    // to the later tombstone) and id=7 (the modulo keeps the predicate
-    // off the metadata path, so it lands as delete-vector events)
-    spark.sql(
-      """MERGE INTO graft_qrpp.db.src t
-        |USING (SELECT * FROM VALUES (5L, 111L), (9000L, 7L), (10000L, 1L)
-        |       AS s(id, flag)) s
-        |ON t.id = s.id
-        |WHEN MATCHED THEN UPDATE SET t.flag = s.flag
-        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    spark.sql("DELETE FROM graft_qrpp.db.src WHERE id % 1000 IN (5, 7)")
-    val tail3 = startTail()
-    try tail3.processAllAvailable() finally tail3.stop()
+      // wave 2: two OCC batch appends commit while the tail is DOWN; the
+      // restarted tail's first batch spans BOTH commits
+      spark.sql("INSERT INTO graft_qrpp.db.src VALUES (9000, 0), (9001, 1)")
+      spark.sql("INSERT INTO graft_qrpp.db.src VALUES (9002, 2), (9003, 0)")
+      val tail2 = startTail()
+      try tail2.processAllAvailable() finally tail2.stop()
+      // wave 3, tail DOWN again: partitioned delta DML — the MERGE moves
+      // id=5 to a NEW partition (flag 111) and id=9000 to flag 7, inserts
+      // id=10000; the DELETE then kills id=5 (whose fresh insert must lose
+      // to the later tombstone) and id=7 (the modulo keeps the predicate
+      // off the metadata path, so it lands as delete-vector events)
+      spark.sql(
+        """MERGE INTO graft_qrpp.db.src t
+          |USING (SELECT * FROM VALUES (5L, 111L), (9000L, 7L), (10000L, 1L)
+          |       AS s(id, flag)) s
+          |ON t.id = s.id
+          |WHEN MATCHED THEN UPDATE SET t.flag = s.flag
+          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      spark.sql("DELETE FROM graft_qrpp.db.src WHERE id % 1000 IN (5, 7)")
+      val tail3 = startTail()
+      try tail3.processAllAvailable() finally tail3.stop()
+    }
     spark.sql("SELECT id, flag FROM graft_qrpp.db.rep ORDER BY id")
   }
 
@@ -3368,10 +3268,7 @@ object CatalogApi {
     * vintages. The oracle restates the final state from first
     * principles. */
   def catalogRename(spark: SparkSession, d: String): DataFrame = {
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qren_wh")
-    spark.conf.set("spark.sql.catalog.graft_qren", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qren.warehouse", wh.toString)
+    register(spark, "graft_qren")
     spark.sql("DROP TABLE IF EXISTS graft_qren.db.t")
     spark.sql(
       "CREATE TABLE graft_qren.db.t (id BIGINT, v BIGINT, junk BIGINT) USING audit")
@@ -3421,10 +3318,7 @@ object CatalogApi {
     * SELECT reads one coherent column across every vintage and every
     * partition directory. */
   def catalogRenamePart(spark: SparkSession, d: String): DataFrame = {
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qrnp_wh")
-    spark.conf.set("spark.sql.catalog.graft_qrnp", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qrnp.warehouse", wh.toString)
+    register(spark, "graft_qrnp")
     spark.sql("DROP TABLE IF EXISTS graft_qrnp.db.t")
     spark.sql(
       """CREATE TABLE graft_qrnp.db.t (id BIGINT, v BIGINT, junk BIGINT,
@@ -3507,22 +3401,18 @@ object CatalogApi {
     * for a snapshot re-scan. */
   def cdfIncrementalMv(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qmv_wh")
-    spark.conf.set("spark.sql.catalog.graft_qmv", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qmv.warehouse", wh.toString)
+    val wh = register(spark, "graft_qmv")
     spark.sql("DROP TABLE IF EXISTS graft_qmv.db.mv")
     spark.sql("CREATE TABLE graft_qmv.db.mv (id BIGINT, v BIGINT) USING audit")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_qmv_ckpt")
-    val q = spark.readStream.format(classOf[PagedSource].getName)
-      .option("pages", "4").option("pageSize", "100")
-      .option("pagesPerTrigger", "1")
-      .load().select(col("id"), col("duration_ms").as("v"))
-      .writeStream.format(classOf[JsonAuditSink].getName)
-      .option("path", wh.resolve("db").resolve("mv").toString)
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
+    withScratch("graft_qmv_ckpt") { ckpt =>
+      val q = PagedSource.stream(spark, 4, 100, 1)
+        .select(col("id"), col("duration_ms").as("v"))
+        .writeStream.format(classOf[JsonAuditSink].getName)
+        .option("path", wh.resolve("db").resolve("mv").toString)
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+    }
     spark.sql(
       """MERGE INTO graft_qmv.db.mv t
         |USING (SELECT * FROM VALUES (8L, 400L), (212L, 400L), (2000L, 500L)
@@ -3579,7 +3469,7 @@ object CatalogApi {
     * .hexHashSql]]), so the FunctionCatalog binding, null handling, and
     * value semantics are all hash-gated. */
   def catalogFunc(spark: SparkSession, d: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft_qf", classOf[GraftCatalog].getName)
+    register(spark, "graft_qf")
     graft.Tables.lineitem(spark, d).createOrReplaceTempView("graft_cat_li5")
     spark.sql(
       """SELECT graft_qf.system.hex_bucket(k, 8) AS bucket,
@@ -3615,10 +3505,7 @@ object CatalogApi {
     * keys where identity dirs would explode: at 100 TB this is the
     * co-located fact-to-fact join with a bounded directory count. */
   def auditBucket(spark: SparkSession, d: String): DataFrame = {
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qbk_wh")
-    spark.conf.set("spark.sql.catalog.graft_qbk", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qbk.warehouse", wh.toString)
+    register(spark, "graft_qbk")
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     graft.Tables.lineitem(spark, d).createOrReplaceTempView("graft_cat_li6")
     graft.Tables.orders(spark, d).createOrReplaceTempView("graft_cat_ord6")
@@ -3674,10 +3561,7 @@ object CatalogApi {
     * may write a table" and "any number of jobs may append": the
     * contended window is one createLink syscall, not the whole commit. */
   def auditOcc(spark: SparkSession, d: String): DataFrame = {
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qocc_wh")
-    spark.conf.set("spark.sql.catalog.graft_qocc", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qocc.warehouse", wh.toString)
+    val wh = register(spark, "graft_qocc")
     spark.sql("DROP TABLE IF EXISTS graft_qocc.db.occt")
     spark.sql(
       "CREATE TABLE graft_qocc.db.occt (id BIGINT, g BIGINT, v BIGINT) USING audit")
@@ -3688,6 +3572,7 @@ object CatalogApi {
           s"""INSERT INTO graft_qocc.db.occt
             |SELECT id, id % 7 AS g, id * 3 AS v
             |FROM range(${i * 500L}, ${(i + 1) * 500L})""".stripMargin)
+        // Throwable: a worker's fatal error must reach the main thread's require
         catch { case t: Throwable => failures.add(t) })
     }
     threads.foreach(_.start())
@@ -3740,10 +3625,7 @@ object CatalogApi {
     * events arrive as new offsets on the already-running tail. */
   def cdfReplica(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qrep_wh")
-    spark.conf.set("spark.sql.catalog.graft_qrep", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qrep.warehouse", wh.toString)
+    val wh = register(spark, "graft_qrep")
     spark.sql("DROP TABLE IF EXISTS graft_qrep.db.src")
     spark.sql("DROP TABLE IF EXISTS graft_qrep.db.rep")
     spark.sql("CREATE TABLE graft_qrep.db.src (id BIGINT, v BIGINT) USING audit")
@@ -3759,70 +3641,71 @@ object CatalogApi {
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("_pos",
         org.apache.spark.sql.types.LongType)))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_qrep_ckpt")
-    def startTail() = spark.readStream.schema(cdfSchema)
-      .format(classOf[JsonAuditSink].getName)
-      .option("path", wh.resolve("db").resolve("src").toString)
-      .option("changeFeed", "true").load()
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // SURVIVOR fold — exact even when one micro-batch spans MULTIPLE
-        // source commits (checkpoint recovery, slow trigger): events are
-        // keyed by the (_file, _pos) row id the feed carries, and row ids
-        // are never reused, so the fold is order-free. An insert whose
-        // row id is tombstoned later in the same batch is dead; a key's
-        // net effect is its surviving insert (upsert — at most one, the
-        // source is key-unique) or, with none, a delete of the key.
-        val ins = batch.filter(col("_change_type") === "insert")
-          .select(col("id"), col("v"), col("_file"), col("_pos"))
-        val del = batch.filter(col("_change_type") === "delete")
-          .select(col("id"), col("_file"), col("_pos"))
-        val surv = ins.join(del, Seq("_file", "_pos"), "left_anti")
-          .groupBy(col("id"))
-          .agg(max(col("v")).as("v"), lit(true).as("up"))
-        batch.select(col("id")).distinct()
-          .join(surv, Seq("id"), "left_outer")
-          .createOrReplaceTempView("cdf_batch")
-        batch.sparkSession.sql(
-          """MERGE INTO graft_qrep.db.rep t
-            |USING (SELECT id, v, coalesce(up, false) AS up FROM cdf_batch) s
-            |ON t.id = s.id
-            |WHEN MATCHED AND NOT s.up THEN DELETE
-            |WHEN MATCHED AND s.up THEN UPDATE SET t.v = s.v
-            |WHEN NOT MATCHED AND s.up THEN INSERT (id, v) VALUES (s.id, s.v)
-            |""".stripMargin)
-        ()
-      }
-      .start()
-    val tail = startTail()
-    try {
-      // wave 1: initial load (batch INSERT → insert events)
+    withScratch("graft_qrep_ckpt") { ckpt =>
+      def startTail() = spark.readStream.schema(cdfSchema)
+        .format(classOf[JsonAuditSink].getName)
+        .option("path", wh.resolve("db").resolve("src").toString)
+        .option("changeFeed", "true").load()
+        .writeStream
+        .option("checkpointLocation", ckpt.toString)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          // SURVIVOR fold — exact even when one micro-batch spans MULTIPLE
+          // source commits (checkpoint recovery, slow trigger): events are
+          // keyed by the (_file, _pos) row id the feed carries, and row ids
+          // are never reused, so the fold is order-free. An insert whose
+          // row id is tombstoned later in the same batch is dead; a key's
+          // net effect is its surviving insert (upsert — at most one, the
+          // source is key-unique) or, with none, a delete of the key.
+          val ins = batch.filter(col("_change_type") === "insert")
+            .select(col("id"), col("v"), col("_file"), col("_pos"))
+          val del = batch.filter(col("_change_type") === "delete")
+            .select(col("id"), col("_file"), col("_pos"))
+          val surv = ins.join(del, Seq("_file", "_pos"), "left_anti")
+            .groupBy(col("id"))
+            .agg(max(col("v")).as("v"), lit(true).as("up"))
+          batch.select(col("id")).distinct()
+            .join(surv, Seq("id"), "left_outer")
+            .createOrReplaceTempView("cdf_batch")
+          batch.sparkSession.sql(
+            """MERGE INTO graft_qrep.db.rep t
+              |USING (SELECT id, v, coalesce(up, false) AS up FROM cdf_batch) s
+              |ON t.id = s.id
+              |WHEN MATCHED AND NOT s.up THEN DELETE
+              |WHEN MATCHED AND s.up THEN UPDATE SET t.v = s.v
+              |WHEN NOT MATCHED AND s.up THEN INSERT (id, v) VALUES (s.id, s.v)
+              |""".stripMargin)
+          ()
+        }
+        .start()
+      val tail = startTail()
+      try {
+        // wave 1: initial load (batch INSERT → insert events)
+        spark.sql(
+          s"""INSERT INTO graft_qrep.db.src
+            |SELECT id,
+            |       ${PagedSource.DurBase}L +
+            |         pmod(${sparkHexHashSql("concat('dur:', CAST(id AS STRING))")},
+            |              ${PagedSource.DurSpan}L) AS v
+            |FROM range(0, 400)""".stripMargin)
+        tail.processAllAvailable()
+      } finally tail.stop()
+      // waves 2 and 3 commit while the tail is DOWN, so the restarted
+      // stream's first micro-batch SPANS both commits — the case the
+      // survivor fold exists for. id=5 is updated by the MERGE and then
+      // deleted in the same batch: its fresh insert must lose to the later
+      // tombstone, which a naive "any insert wins" fold gets wrong.
       spark.sql(
-        s"""INSERT INTO graft_qrep.db.src
-          |SELECT id,
-          |       ${PagedSource.DurBase}L +
-          |         pmod(${sparkHexHashSql("concat('dur:', CAST(id AS STRING))")},
-          |              ${PagedSource.DurSpan}L) AS v
-          |FROM range(0, 400)""".stripMargin)
-      tail.processAllAvailable()
-    } finally tail.stop()
-    // waves 2 and 3 commit while the tail is DOWN, so the restarted
-    // stream's first micro-batch SPANS both commits — the case the
-    // survivor fold exists for. id=5 is updated by the MERGE and then
-    // deleted in the same batch: its fresh insert must lose to the later
-    // tombstone, which a naive "any insert wins" fold gets wrong.
-    spark.sql(
-      """MERGE INTO graft_qrep.db.src t
-        |USING (SELECT * FROM VALUES (5L, 111L), (17L, 111L), (1000L, 222L)
-        |       AS s(id, v)) s
-        |ON t.id = s.id
-        |WHEN MATCHED THEN UPDATE SET t.v = s.v
-        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    spark.sql(
-      "DELETE FROM graft_qrep.db.src WHERE (id % 100 = 3 AND id < 400) OR id = 5")
-    val tail2 = startTail()
-    try tail2.processAllAvailable() finally tail2.stop()
+        """MERGE INTO graft_qrep.db.src t
+          |USING (SELECT * FROM VALUES (5L, 111L), (17L, 111L), (1000L, 222L)
+          |       AS s(id, v)) s
+          |ON t.id = s.id
+          |WHEN MATCHED THEN UPDATE SET t.v = s.v
+          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      spark.sql(
+        "DELETE FROM graft_qrep.db.src WHERE (id % 100 = 3 AND id < 400) OR id = 5")
+      val tail2 = startTail()
+      try tail2.processAllAvailable() finally tail2.stop()
+    }
     // the replica must BE the source's final state — hash the whole thing
     spark.sql(
       """SELECT id, v FROM graft_qrep.db.rep ORDER BY id""")
@@ -3863,10 +3746,7 @@ object CatalogApi {
     * registration only claims what the maintenance can keep exact. */
   def mvE2e(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qe2e_wh")
-    spark.conf.set("spark.sql.catalog.graft_qe2e", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qe2e.warehouse", wh.toString)
+    val wh = register(spark, "graft_qe2e")
     spark.sql("DROP TABLE IF EXISTS graft_qe2e.db.base")
     spark.sql(
       "CREATE TABLE graft_qe2e.db.base (id BIGINT, g BIGINT, v BIGINT) USING audit")
@@ -3904,7 +3784,8 @@ object CatalogApi {
       org.apache.spark.sql.types.StructField("_change_type",
         org.apache.spark.sql.types.StringType)))
     val sign = when(col("_change_type") === "insert", lit(1L)).otherwise(lit(-1L))
-    val mvDir = java.nio.file.Files.createTempDirectory("graft_mv_e2e_").toString
+    // the returned frame reads the summary: a fixed path the next run overwrites
+    val mvDir = wh.resolve("mv").toString
     spark.read.schema(cdfSchema).format(classOf[JsonAuditSink].getName)
       .option("path", wh.resolve("db").resolve("base").toString)
       .option("changeFeed", "true").load()
@@ -3975,10 +3856,7 @@ object CatalogApi {
     * generated column's VALUES flow through the whole DML sequence and
     * are hash-checked exactly via `sum_qty2`. */
   def catalogIdentity(spark: SparkSession, d: String): DataFrame = {
-    val wh = java.nio.file.Paths.get(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_catalog_qid_wh")
-    spark.conf.set("spark.sql.catalog.graft_qid", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_qid.warehouse", wh.toString)
+    register(spark, "graft_qid")
     graft.Tables.lineitem(spark, d).createOrReplaceTempView("graft_cat_li5")
     spark.sql("DROP TABLE IF EXISTS graft_qid.db.ident")
     spark.sql(

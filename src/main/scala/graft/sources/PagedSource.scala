@@ -55,6 +55,14 @@ object PagedSource {
     graft.functions.Hashing.hexHashLocal(s"pg:$idx") % TrackMod
   def durationMs(idx: Long): Long =
     DurBase + graft.functions.Hashing.hexHashLocal(s"dur:$idx") % DurSpan
+
+  /** Streaming read of `pages` pages of `pageSize` rows, `perTrigger`
+    * pages per micro-batch. */
+  def stream(spark: org.apache.spark.sql.SparkSession, pages: Int,
+      pageSize: Int, perTrigger: Int): org.apache.spark.sql.DataFrame =
+    spark.readStream.format(classOf[PagedSource].getName)
+      .option("pages", pages.toString).option("pageSize", pageSize.toString)
+      .option("pagesPerTrigger", perTrigger.toString).load()
 }
 
 class PagedSource extends TableProvider {
@@ -620,10 +628,7 @@ object PagedApi {
     * the same DuckDB rebuild (no id slice here: offsets, not filters,
     * bound each batch's pages). */
   def sourceV2Stream(spark: SparkSession, d: String): DataFrame = {
-    val stream = spark.readStream.format(classOf[PagedSource].getName)
-      .option("pages", Pages.toString).option("pageSize", PageSize.toString)
-      .option("pagesPerTrigger", "7")
-      .load()
+    val stream = PagedSource.stream(spark, Pages, PageSize, 7)
       .groupBy(col("track_id"))
       .agg(count(lit(1)).as("n_plays"), sum(col("duration_ms")).as("total_ms"))
     graft.streaming.EventStream.runToMemory(stream, "graft_source_v2_stream",
@@ -749,34 +754,30 @@ object PagedApi {
     * each epoch, so the oracle rebuilds the same prefix from range().
     * Covers source offsets → sink epochs → versioned read in ONE query. */
   def sourceV2TimeTravel(spark: SparkSession, d: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_audit_travel")
-    val out = root.resolve("tbl").toString
-    val ckpt = root.resolve("ckpt").toString
-    val q = spark.readStream.format(classOf[PagedSource].getName)
-      .option("pages", Pages.toString).option("pageSize", PageSize.toString)
-      .option("pagesPerTrigger", "7")
-      .load()
-      .select(col("id"), col("track_id"), col("duration_ms"))
-      .writeStream.format(classOf[JsonAuditSink].getName)
-      .option("path", out).option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("track_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("duration_ms",
-        org.apache.spark.sql.types.LongType)))
-    val pinned = spark.read.schema(schema)
-      .format(classOf[JsonAuditSink].getName)
-      .option("path", out).option("versionAsOf", "2").load()
-      .groupBy(col("track_id"))
-      .agg(count(lit(1)).as("n_plays"), sum(col("duration_ms")).as("total_ms"))
-      .orderBy(col("track_id"))
-      .localCheckpoint() // pin: the temp table dir is deleted below
-    deleteTree(root)
-    pinned
+    withScratch("graft_audit_travel") { root =>
+      val out = root.resolve("tbl").toString
+      val ckpt = root.resolve("ckpt").toString
+      val q = PagedSource.stream(spark, Pages, PageSize, 7)
+        .select(col("id"), col("track_id"), col("duration_ms"))
+        .writeStream.format(classOf[JsonAuditSink].getName)
+        .option("path", out).option("checkpointLocation", ckpt)
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("track_id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("duration_ms",
+          org.apache.spark.sql.types.LongType)))
+      spark.read.schema(schema)
+        .format(classOf[JsonAuditSink].getName)
+        .option("path", out).option("versionAsOf", "2").load()
+        .groupBy(col("track_id"))
+        .agg(count(lit(1)).as("n_plays"), sum(col("duration_ms")).as("total_ms"))
+        .orderBy(col("track_id"))
+        .localCheckpoint() // pin: withScratch deletes the table dir
+    }
   }
 
   val sourceV2TimeTravelSql: String = {
@@ -804,34 +805,30 @@ object PagedApi {
     * ranges from range() — proving both the commit structure and the
     * metadata-column plumbing value-exact. */
   def epochRollup(spark: SparkSession, d: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_epoch_rollup")
-    val out = root.resolve("tbl").toString
-    val ckpt = root.resolve("ckpt").toString
-    val q = spark.readStream.format(classOf[PagedSource].getName)
-      .option("pages", Pages.toString).option("pageSize", PageSize.toString)
-      .option("pagesPerTrigger", "7")
-      .load()
-      .select(col("id"), col("duration_ms"))
-      .writeStream.format(classOf[JsonAuditSink].getName)
-      .option("path", out).option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("duration_ms",
-        org.apache.spark.sql.types.LongType)))
-    val pinned = spark.read.schema(schema)
-      .format(classOf[JsonAuditSink].getName)
-      .option("path", out).load()
-      .select(col("_epoch"), col("id"), col("duration_ms"))
-      .groupBy(col("_epoch"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("duration_ms")).as("total_ms"),
-        min(col("id")).as("lo_id"), max(col("id")).as("hi_id"))
-      .orderBy(col("_epoch"))
-      .localCheckpoint() // pin: the temp table dir is deleted below
-    deleteTree(root)
-    pinned
+    withScratch("graft_epoch_rollup") { root =>
+      val out = root.resolve("tbl").toString
+      val ckpt = root.resolve("ckpt").toString
+      val q = PagedSource.stream(spark, Pages, PageSize, 7)
+        .select(col("id"), col("duration_ms"))
+        .writeStream.format(classOf[JsonAuditSink].getName)
+        .option("path", out).option("checkpointLocation", ckpt)
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("duration_ms",
+          org.apache.spark.sql.types.LongType)))
+      spark.read.schema(schema)
+        .format(classOf[JsonAuditSink].getName)
+        .option("path", out).load()
+        .select(col("_epoch"), col("id"), col("duration_ms"))
+        .groupBy(col("_epoch"))
+        .agg(count(lit(1)).as("n_rows"), sum(col("duration_ms")).as("total_ms"),
+          min(col("id")).as("lo_id"), max(col("id")).as("hi_id"))
+        .orderBy(col("_epoch"))
+        .localCheckpoint() // pin: withScratch deletes the table dir
+    }
   }
 
   val epochRollupSql: String = {
@@ -862,33 +859,32 @@ object PagedApi {
     * the difference between a metadata lookup and a full-table read for
     * every range-predicated query. */
   def auditSkip(spark: SparkSession, d: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_audit_skip")
-    val out = root.resolve("tbl").toString
-    spark.read.format(classOf[PagedSource].getName)
-      .option("pages", Pages.toString).option("pageSize", PageSize.toString)
-      .load()
-      .select(col("id"), col("track_id"), col("duration_ms"))
-      .repartitionByRange(8, col("id"))
-      .write.format(classOf[JsonAuditSink].getName)
-      .option("path", out).mode("append").save()
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("track_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("duration_ms",
-        org.apache.spark.sql.types.LongType)))
-    val pinned = spark.read.schema(schema)
-      .format(classOf[JsonAuditSink].getName)
-      .option("path", out).load()
-      .where(col("id") >= 9000L && col("id") < 19500L)
-      .groupBy(pmod(col("id"), lit(7L)).as("bucket"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("duration_ms")).as("total_ms"),
-        min(col("track_id")).as("lo_track"))
-      .orderBy(col("bucket"))
-      .localCheckpoint() // pin: the temp table dir is deleted below
-    deleteTree(root)
-    pinned
+    withScratch("graft_audit_skip") { root =>
+      val out = root.resolve("tbl").toString
+      spark.read.format(classOf[PagedSource].getName)
+        .option("pages", Pages.toString).option("pageSize", PageSize.toString)
+        .load()
+        .select(col("id"), col("track_id"), col("duration_ms"))
+        .repartitionByRange(8, col("id"))
+        .write.format(classOf[JsonAuditSink].getName)
+        .option("path", out).mode("append").save()
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("track_id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("duration_ms",
+          org.apache.spark.sql.types.LongType)))
+      spark.read.schema(schema)
+        .format(classOf[JsonAuditSink].getName)
+        .option("path", out).load()
+        .where(col("id") >= 9000L && col("id") < 19500L)
+        .groupBy(pmod(col("id"), lit(7L)).as("bucket"))
+        .agg(count(lit(1)).as("n_rows"), sum(col("duration_ms")).as("total_ms"),
+          min(col("track_id")).as("lo_track"))
+        .orderBy(col("bucket"))
+        .localCheckpoint() // pin: withScratch deletes the table dir
+    }
   }
 
   val auditSkipSql: String = {
@@ -917,35 +913,34 @@ object PagedApi {
     * answer-exact). The high-cardinality composed key also exercises the
     * 16-code-point truncation path on every bound. */
   def auditSkipStr(spark: SparkSession, d: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_audit_skipstr")
-    val out = root.resolve("tbl").toString
-    graft.Tables.lineitem(spark, d)
-      .select(
-        concat(col("l_returnflag"), lit("-"), col("l_linestatus"), lit("-key-"),
-          lpad(col("l_orderkey").cast("string"), 10, "0")).as("k"),
-        col("l_orderkey").as("okey"),
-        col("l_quantity").cast("long").as("qty"))
-      .repartitionByRange(8, col("k"))
-      .write.format(classOf[JsonAuditSink].getName)
-      .option("path", out).mode("append").save()
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("k",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("okey",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("qty",
-        org.apache.spark.sql.types.LongType)))
-    val pinned = spark.read.schema(schema)
-      .format(classOf[JsonAuditSink].getName)
-      .option("path", out).load()
-      .where(col("k").startsWith("R-F") || col("k") >= "N-O-key-0000005000")
-      .groupBy(substring(col("k"), 1, 3).as("grp"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("qty")).as("sum_qty"),
-        min(col("okey")).as("lo_okey"), max(col("k")).as("hi_k"))
-      .orderBy(col("grp"))
-      .localCheckpoint() // pin: the temp table dir is deleted below
-    deleteTree(root)
-    pinned
+    withScratch("graft_audit_skipstr") { root =>
+      val out = root.resolve("tbl").toString
+      graft.Tables.lineitem(spark, d)
+        .select(
+          concat(col("l_returnflag"), lit("-"), col("l_linestatus"), lit("-key-"),
+            lpad(col("l_orderkey").cast("string"), 10, "0")).as("k"),
+          col("l_orderkey").as("okey"),
+          col("l_quantity").cast("long").as("qty"))
+        .repartitionByRange(8, col("k"))
+        .write.format(classOf[JsonAuditSink].getName)
+        .option("path", out).mode("append").save()
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("k",
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("okey",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("qty",
+          org.apache.spark.sql.types.LongType)))
+      spark.read.schema(schema)
+        .format(classOf[JsonAuditSink].getName)
+        .option("path", out).load()
+        .where(col("k").startsWith("R-F") || col("k") >= "N-O-key-0000005000")
+        .groupBy(substring(col("k"), 1, 3).as("grp"))
+        .agg(count(lit(1)).as("n_rows"), sum(col("qty")).as("sum_qty"),
+          min(col("okey")).as("lo_okey"), max(col("k")).as("hi_k"))
+        .orderBy(col("grp"))
+        .localCheckpoint() // pin: withScratch deletes the table dir
+    }
   }
 
   val auditSkipStrSql: String =
@@ -971,35 +966,34 @@ object PagedApi {
     * metadata-only point-lookup path for tables not clustered on the
     * probed column. */
   def auditBloom(spark: SparkSession, d: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_audit_bloom")
-    val out = root.resolve("tbl").toString
-    graft.Tables.lineitem(spark, d)
-      .select(col("l_orderkey").as("okey"),
-        col("l_partkey").as("pkey"),
-        col("l_quantity").cast("long").as("qty"))
-      .repartition(8, col("l_linenumber")) // scatter: no okey clustering
-      .write.format(classOf[JsonAuditSink].getName)
-      .option("path", out)
-      .option("bloomcols", "okey")
-      .mode("append").save()
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("okey",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("pkey",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("qty",
-        org.apache.spark.sql.types.LongType)))
-    val pinned = spark.read.schema(schema)
-      .format(classOf[JsonAuditSink].getName)
-      .option("path", out).load()
-      .where(col("okey").isin(1L, 7L, 32L, 35876L, 999999999L))
-      .groupBy(col("okey"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("qty")).as("sum_qty"),
-        min(col("pkey")).as("lo_pkey"))
-      .orderBy(col("okey"))
-      .localCheckpoint() // pin: the temp table dir is deleted below
-    deleteTree(root)
-    pinned
+    withScratch("graft_audit_bloom") { root =>
+      val out = root.resolve("tbl").toString
+      graft.Tables.lineitem(spark, d)
+        .select(col("l_orderkey").as("okey"),
+          col("l_partkey").as("pkey"),
+          col("l_quantity").cast("long").as("qty"))
+        .repartition(8, col("l_linenumber")) // scatter: no okey clustering
+        .write.format(classOf[JsonAuditSink].getName)
+        .option("path", out)
+        .option("bloomcols", "okey")
+        .mode("append").save()
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("okey",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("pkey",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("qty",
+          org.apache.spark.sql.types.LongType)))
+      spark.read.schema(schema)
+        .format(classOf[JsonAuditSink].getName)
+        .option("path", out).load()
+        .where(col("okey").isin(1L, 7L, 32L, 35876L, 999999999L))
+        .groupBy(col("okey"))
+        .agg(count(lit(1)).as("n_rows"), sum(col("qty")).as("sum_qty"),
+          min(col("pkey")).as("lo_pkey"))
+        .orderBy(col("okey"))
+        .localCheckpoint() // pin: withScratch deletes the table dir
+    }
   }
 
   val auditBloomSql: String =
@@ -1018,33 +1012,32 @@ object PagedApi {
     * column refuse the pushdown). The hash gate proves the
     * metadata-answered extremes equal the row-level recomputation. */
   def auditMinMax(spark: SparkSession, d: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_audit_minmax")
-    val out = root.resolve("tbl").toString
-    spark.read.format(classOf[PagedSource].getName)
-      .option("pages", Pages.toString).option("pageSize", PageSize.toString)
-      .load()
-      .where(col("id") >= 1200L && col("id") < 48600L)
-      .select(col("id"), col("track_id"), col("duration_ms"))
-      .repartition(4)
-      .write.format(classOf[JsonAuditSink].getName)
-      .option("path", out).mode("append").save()
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("track_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("duration_ms",
-        org.apache.spark.sql.types.LongType)))
-    val pinned = spark.read.schema(schema)
-      .format(classOf[JsonAuditSink].getName)
-      .option("path", out).load()
-      .agg(count(lit(1)).as("n_rows"),
-        min(col("id")).as("min_id"), max(col("id")).as("max_id"),
-        min(col("duration_ms")).as("min_dur"),
-        max(col("duration_ms")).as("max_dur"))
-      .localCheckpoint() // pin: the temp table dir is deleted below
-    deleteTree(root)
-    pinned
+    withScratch("graft_audit_minmax") { root =>
+      val out = root.resolve("tbl").toString
+      spark.read.format(classOf[PagedSource].getName)
+        .option("pages", Pages.toString).option("pageSize", PageSize.toString)
+        .load()
+        .where(col("id") >= 1200L && col("id") < 48600L)
+        .select(col("id"), col("track_id"), col("duration_ms"))
+        .repartition(4)
+        .write.format(classOf[JsonAuditSink].getName)
+        .option("path", out).mode("append").save()
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("track_id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("duration_ms",
+          org.apache.spark.sql.types.LongType)))
+      spark.read.schema(schema)
+        .format(classOf[JsonAuditSink].getName)
+        .option("path", out).load()
+        .agg(count(lit(1)).as("n_rows"),
+          min(col("id")).as("min_id"), max(col("id")).as("max_id"),
+          min(col("duration_ms")).as("min_dur"),
+          max(col("duration_ms")).as("max_dur"))
+        .localCheckpoint() // pin: withScratch deletes the table dir
+    }
   }
 
   val auditMinMaxSql: String = {

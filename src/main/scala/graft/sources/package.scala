@@ -16,4 +16,12 @@ package object sources {
     finally walk.close()
     files
   }
+
+  /** Run `body` over a fresh temp directory named `prefix…` and delete
+    * the directory when it returns or throws. For build-time scratch only:
+    * a frame returned by `body` must not read from the directory. */
+  def withScratch[A](prefix: String)(body: java.nio.file.Path => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir) finally deleteTree(dir)
+  }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
-import graft.sources.deleteTree
+import graft.sources.withScratch
 
 /** Structured Streaming over the events table shape.
   *
@@ -245,34 +245,34 @@ object EventStream {
   def streamingTws(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val raw = rawEvents(spark, sfDir)
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_tws")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
-    val now = System.currentTimeMillis()
-    // both parity batches staged in one pass (landBatches, round 21)
-    landBatches(raw.withColumn("__batch", (col("event_id") % 2).cast("int")),
-      root, inDir, Seq("batch0.parquet", "batch1.parquet"),
-      Seq(now - 30000L, now))
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir.toString)
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .as[Event]
-    val out = stream.groupByKey(_.user_id)
-      .transformWithState(new RunningRollupProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-    try runToMemory(out.toDF(), "graft_stream_tws", OutputMode.Update)
-    finally {
-      prevProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
+    withScratch("graft_stream_tws") { root =>
+      val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
+      val now = System.currentTimeMillis()
+      // both parity batches staged in one pass (landBatches, round 21)
+      landBatches(raw.withColumn("__batch", (col("event_id") % 2).cast("int")),
+        root, inDir, Seq("batch0.parquet", "batch1.parquet"),
+        Seq(now - 30000L, now))
+      val providerKey = "spark.sql.streaming.stateStore.providerClass"
+      val prevProvider = spark.conf.getOption(providerKey)
+      spark.conf.set(providerKey,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      val stream = spark.readStream.schema(rawSchema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(inDir.toString)
+        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
+          col("value"))
+        .as[Event]
+      val out = stream.groupByKey(_.user_id)
+        .transformWithState(new RunningRollupProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
+      try runToMemory(out.toDF(), "graft_stream_tws", OutputMode.Update)
+      finally {
+        prevProvider match {
+          case Some(v) => spark.conf.set(providerKey, v)
+          case None    => spark.conf.unset(providerKey)
+        }
       }
-      deleteTree(root)
     }
     spark.table("graft_stream_tws")
       .groupBy(col("user_id"))
@@ -342,34 +342,34 @@ object EventStream {
         (u, SessionState(n, c))
       }.localCheckpoint()
     val initialState = seedDs.groupByKey(_._1).mapValues(_._2)
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_tws_init")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
-    val stage = root.resolve("stage")
-    raw.where(col("event_id") % 2 === 1)
-      .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-    val listing = java.nio.file.Files.list(stage)
-    val part =
-      try listing.filter(p => p.getFileName.toString.startsWith("part-"))
-        .findFirst().get()
-      finally listing.close()
-    java.nio.file.Files.move(part, inDir.resolve("batch0.parquet"))
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = toEvent(spark.readStream.schema(rawSchema)
-      .parquet(inDir.toString)).as[Event]
-    val out = stream.groupByKey(_.user_id)
-      .transformWithState(new SeededRollupProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update(),
-        initialState)
-    try runToMemory(out.toDF(), "graft_stream_tws_init", OutputMode.Update)
-    finally {
-      prevProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
+    withScratch("graft_stream_tws_init") { root =>
+      val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
+      val stage = root.resolve("stage")
+      raw.where(col("event_id") % 2 === 1)
+        .coalesce(1).write.mode("overwrite").parquet(stage.toString)
+      val listing = java.nio.file.Files.list(stage)
+      val part =
+        try listing.filter(p => p.getFileName.toString.startsWith("part-"))
+          .findFirst().get()
+        finally listing.close()
+      java.nio.file.Files.move(part, inDir.resolve("batch0.parquet"))
+      val providerKey = "spark.sql.streaming.stateStore.providerClass"
+      val prevProvider = spark.conf.getOption(providerKey)
+      spark.conf.set(providerKey,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      val stream = toEvent(spark.readStream.schema(rawSchema)
+        .parquet(inDir.toString)).as[Event]
+      val out = stream.groupByKey(_.user_id)
+        .transformWithState(new SeededRollupProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update(),
+          initialState)
+      try runToMemory(out.toDF(), "graft_stream_tws_init", OutputMode.Update)
+      finally {
+        prevProvider match {
+          case Some(v) => spark.conf.set(providerKey, v)
+          case None    => spark.conf.unset(providerKey)
+        }
       }
-      deleteTree(root)
     }
     // silent seed-only users re-enter from the seed itself; streamed users'
     // last Update row (per-user max: counts strictly increase) wins the union
@@ -470,38 +470,38 @@ object EventStream {
       java.util.Collections.singletonList(org.apache.spark.sql.Row(
         -1L, maxNs + 30L * dayNs, -1L, "__flush__", 0.0, "{}")),
       rawSchema)
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_tws_timer")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
-    val now = System.currentTimeMillis()
-    // parity batches + flush sentinel staged in one pass (landBatches, r21)
-    landBatches(
-      raw.withColumn("__batch", (col("event_id") % 2).cast("int"))
-        .unionByName(sentinel.withColumn("__batch", lit(2))),
-      root, inDir, Seq("b0.parquet", "b1.parquet", "b2.parquet"),
-      Seq(now - 60000L, now - 30000L, now))
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stream = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir.toString)
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      .withWatermark("ts", "1 minute")
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        col("value"))
-      .as[Event]
-    val out = stream.groupByKey(_.user_id)
-      .transformWithState(new TimerFlushProcessor,
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append())
-    try runToMemory(out.toDF(), "graft_stream_tws_timer", OutputMode.Append)
-    finally {
-      prevProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
+    withScratch("graft_stream_tws_timer") { root =>
+      val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
+      val now = System.currentTimeMillis()
+      // parity batches + flush sentinel staged in one pass (landBatches, r21)
+      landBatches(
+        raw.withColumn("__batch", (col("event_id") % 2).cast("int"))
+          .unionByName(sentinel.withColumn("__batch", lit(2))),
+        root, inDir, Seq("b0.parquet", "b1.parquet", "b2.parquet"),
+        Seq(now - 60000L, now - 30000L, now))
+      val providerKey = "spark.sql.streaming.stateStore.providerClass"
+      val prevProvider = spark.conf.getOption(providerKey)
+      spark.conf.set(providerKey,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      val stream = spark.readStream.schema(rawSchema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(inDir.toString)
+        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+        .withWatermark("ts", "1 minute")
+        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
+          col("value"))
+        .as[Event]
+      val out = stream.groupByKey(_.user_id)
+        .transformWithState(new TimerFlushProcessor,
+          org.apache.spark.sql.streaming.TimeMode.EventTime(),
+          OutputMode.Append())
+      try runToMemory(out.toDF(), "graft_stream_tws_timer", OutputMode.Append)
+      finally {
+        prevProvider match {
+          case Some(v) => spark.conf.set(providerKey, v)
+          case None    => spark.conf.unset(providerKey)
+        }
       }
-      deleteTree(root)
     }
     spark.table("graft_stream_tws_timer")
       .where(col("user_id") =!= -1L)
@@ -628,23 +628,23 @@ object EventStream {
     * drive exercises pure Update semantics. */
   def streamingUpdateAgg(spark: SparkSession, sfDir: String): DataFrame = {
     val raw = rawEvents(spark, sfDir)
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_upd")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
-    val now = System.currentTimeMillis()
-    // both parity batches staged in one pass (landBatches, round 21)
-    landBatches(raw.withColumn("__batch", (col("event_id") % 2).cast("int")),
-      root, inDir, Seq("batch0.parquet", "batch1.parquet"),
-      Seq(now - 30000L, now))
-    val stream = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir.toString)
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    val agg = stream
-      .groupBy(window(col("ts"), "1 day"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        graft.functions.Money.moneySum(col("value")).as("sum_value"))
-    try runToMemory(agg, "graft_stream_update", OutputMode.Update, NarrowParts)
-    finally deleteTree(root)
+    withScratch("graft_stream_upd") { root =>
+      val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
+      val now = System.currentTimeMillis()
+      // both parity batches staged in one pass (landBatches, round 21)
+      landBatches(raw.withColumn("__batch", (col("event_id") % 2).cast("int")),
+        root, inDir, Seq("batch0.parquet", "batch1.parquet"),
+        Seq(now - 30000L, now))
+      val stream = spark.readStream.schema(rawSchema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(inDir.toString)
+        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+      val agg = stream
+        .groupBy(window(col("ts"), "1 day"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          graft.functions.Money.moneySum(col("value")).as("sum_value"))
+      runToMemory(agg, "graft_stream_update", OutputMode.Update, NarrowParts)
+    }
     spark.table("graft_stream_update")
       .groupBy(col("window.start").cast("timestamp_ntz").as("day"),
         col("event_type"))
@@ -716,33 +716,33 @@ object EventStream {
     // an empty stratum (e.g. a fixture spanning <7 days has no old-odd
     // rows) just means fewer arrival batches — the oracle's relational
     // restatement agrees
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_late")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
-    val now = System.currentTimeMillis()
-    landBatches(
-      raw.withColumn("__batch",
-          when(col("event_id") % 2 === 0, 0)
-            .when(col("ts") >= cutoffNs, 1).otherwise(2))
-        .unionByName(sentinel.withColumn("__batch", lit(3))),
-      root, inDir, (0 to 3).map(b => s"batch$b.parquet"),
-      (0 to 3).map(b => now - (3 - b) * 30000L),
-      // only the DATA strata may legitimately be empty (a fixture spanning
-      // <7 days has no old-odd rows); batch 3 is the watermark SENTINEL —
-      // listing it would silently defeat the missing-sentinel guard
-      // landBatches exists for (round-21 advice)
-      allowEmpty = Set(0, 1, 2))
+    withScratch("graft_stream_late") { root =>
+      val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
+      val now = System.currentTimeMillis()
+      landBatches(
+        raw.withColumn("__batch",
+            when(col("event_id") % 2 === 0, 0)
+              .when(col("ts") >= cutoffNs, 1).otherwise(2))
+          .unionByName(sentinel.withColumn("__batch", lit(3))),
+        root, inDir, (0 to 3).map(b => s"batch$b.parquet"),
+        (0 to 3).map(b => now - (3 - b) * 30000L),
+        // only the DATA strata may legitimately be empty (a fixture spanning
+        // <7 days has no old-odd rows); batch 3 is the watermark SENTINEL —
+        // listing it would silently defeat the missing-sentinel guard
+        // landBatches exists for (round-21 advice)
+        allowEmpty = Set(0, 1, 2))
 
-    val stream = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir.toString)
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      .withWatermark("ts", "3 days")
-    val agg = stream
-      .groupBy(window(col("ts"), "1 day"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        graft.functions.Money.moneySum(col("value")).as("sum_value"))
-    try runToMemory(agg, "graft_stream_late", OutputMode.Append, NarrowParts)
-    finally deleteTree(root) // the sink table holds the result; staging is disposable
+      val stream = spark.readStream.schema(rawSchema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(inDir.toString)
+        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+        .withWatermark("ts", "3 days")
+      val agg = stream
+        .groupBy(window(col("ts"), "1 day"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          graft.functions.Money.moneySum(col("value")).as("sum_value"))
+      runToMemory(agg, "graft_stream_late", OutputMode.Append, NarrowParts)
+    }
     spark.table("graft_stream_late")
       .where(col("event_type") =!= "__flush__")
       .select(col("window.start").cast("timestamp_ntz").as("day"),
@@ -794,27 +794,27 @@ object EventStream {
         -1L, maxNs + 30L * dayNs, -1L, "__flush__", 0.0, "{}")),
       rawSchema)
 
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_sw")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
-    val now = System.currentTimeMillis()
-    // data batch + flush sentinel staged in one pass (landBatches, r21)
-    landBatches(
-      raw.withColumn("__batch", lit(0))
-        .unionByName(sentinel.withColumn("__batch", lit(1))),
-      root, inDir, Seq("batch0.parquet", "batch1.parquet"),
-      Seq(now - 30000L, now))
+    withScratch("graft_stream_sw") { root =>
+      val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
+      val now = System.currentTimeMillis()
+      // data batch + flush sentinel staged in one pass (landBatches, r21)
+      landBatches(
+        raw.withColumn("__batch", lit(0))
+          .unionByName(sentinel.withColumn("__batch", lit(1))),
+        root, inDir, Seq("batch0.parquet", "batch1.parquet"),
+        Seq(now - 30000L, now))
 
-    val stream = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir.toString)
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      .withWatermark("ts", "1 hour")
-    val agg = stream
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
-      .agg(count(lit(1)).as("n_events"),
-        graft.functions.Money.moneySum(col("value")).as("sum_value"))
-    try runToMemory(agg, "graft_stream_session_window", OutputMode.Append)
-    finally deleteTree(root)
+      val stream = spark.readStream.schema(rawSchema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(inDir.toString)
+        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+        .withWatermark("ts", "1 hour")
+      val agg = stream
+        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
+        .agg(count(lit(1)).as("n_events"),
+          graft.functions.Money.moneySum(col("value")).as("sum_value"))
+      runToMemory(agg, "graft_stream_session_window", OutputMode.Append)
+    }
     spark.table("graft_stream_session_window")
       .where(col("user_id") >= 0)
       .select(col("user_id"),
@@ -857,32 +857,32 @@ object EventStream {
         -1L, maxNs + 30L * dayNs, -1L, "__flush__", 0.0, "{}")),
       rawSchema)
 
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_rw")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
-    val now = System.currentTimeMillis()
-    // data batch + flush sentinel staged in one pass (landBatches, r21)
-    landBatches(
-      raw.withColumn("__batch", lit(0))
-        .unionByName(sentinel.withColumn("__batch", lit(1))),
-      root, inDir, Seq("batch0.parquet", "batch1.parquet"),
-      Seq(now - 30000L, now))
+    withScratch("graft_stream_rw") { root =>
+      val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
+      val now = System.currentTimeMillis()
+      // data batch + flush sentinel staged in one pass (landBatches, r21)
+      landBatches(
+        raw.withColumn("__batch", lit(0))
+          .unionByName(sentinel.withColumn("__batch", lit(1))),
+        root, inDir, Seq("batch0.parquet", "batch1.parquet"),
+        Seq(now - 30000L, now))
 
-    val stream = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir.toString)
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      .withWatermark("ts", "1 hour")
-    val hourly = stream
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(graft.functions.Money.cents(col("value"))).as("cents"))
-    val daily = hourly
-      .groupBy(window(window_time(col("window")), "1 day").as("day_w"),
-        col("event_type"))
-      .agg(sum(col("n_events")).as("n_events"),
-        graft.functions.Money.centsToDollars(sum(col("cents"))).as("sum_value"))
-    try runToMemory(daily, "graft_stream_rewindow", OutputMode.Append, NarrowParts)
-    finally deleteTree(root)
+      val stream = spark.readStream.schema(rawSchema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(inDir.toString)
+        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+        .withWatermark("ts", "1 hour")
+      val hourly = stream
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          sum(graft.functions.Money.cents(col("value"))).as("cents"))
+      val daily = hourly
+        .groupBy(window(window_time(col("window")), "1 day").as("day_w"),
+          col("event_type"))
+        .agg(sum(col("n_events")).as("n_events"),
+          graft.functions.Money.centsToDollars(sum(col("cents"))).as("sum_value"))
+      runToMemory(daily, "graft_stream_rewindow", OutputMode.Append, NarrowParts)
+    }
     spark.table("graft_stream_rewindow")
       .where(col("event_type") =!= "__flush__")
       .select(col("day_w.start").cast("timestamp_ntz").as("day"),
@@ -1003,51 +1003,51 @@ object EventStream {
     val recentNs = d0Ns - 1L * dayNs
     val oldNs = d0Ns - 7L * dayNs
 
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_join_late")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
-    val stage = root.resolve("stage")
-    raw.withColumn("__batch",
-        when(col("event_type") === "view" || col("event_id") % 2 === 0, 0)
-          .when(col("ts") >= recentNs, 1)
-          .when(col("ts") < oldNs, 2)
-          .otherwise(-1)) // between-cutoff odds: excluded (see scaladoc)
-      .where(col("__batch") >= 0)
-      .coalesce(1)
-      .write.partitionBy("__batch").mode("overwrite").parquet(stage.toString)
-    val now = System.currentTimeMillis()
-    (0 to 2).foreach { b =>
-      val dir = stage.resolve(s"__batch=$b")
-      if (java.nio.file.Files.isDirectory(dir)) {
-        val listing = java.nio.file.Files.list(dir)
-        val part =
-          try listing.filter(p => p.getFileName.toString.startsWith("part-"))
-            .findFirst()
-          finally listing.close()
-        part.ifPresent { p =>
-          val dst = inDir.resolve(s"batch$b.parquet")
-          java.nio.file.Files.move(p, dst)
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(now - (2 - b) * 30000L))
+    withScratch("graft_stream_join_late") { root =>
+      val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
+      val stage = root.resolve("stage")
+      raw.withColumn("__batch",
+          when(col("event_type") === "view" || col("event_id") % 2 === 0, 0)
+            .when(col("ts") >= recentNs, 1)
+            .when(col("ts") < oldNs, 2)
+            .otherwise(-1)) // between-cutoff odds: excluded (see scaladoc)
+        .where(col("__batch") >= 0)
+        .coalesce(1)
+        .write.partitionBy("__batch").mode("overwrite").parquet(stage.toString)
+      val now = System.currentTimeMillis()
+      (0 to 2).foreach { b =>
+        val dir = stage.resolve(s"__batch=$b")
+        if (java.nio.file.Files.isDirectory(dir)) {
+          val listing = java.nio.file.Files.list(dir)
+          val part =
+            try listing.filter(p => p.getFileName.toString.startsWith("part-"))
+              .findFirst()
+            finally listing.close()
+          part.ifPresent { p =>
+            val dst = inDir.resolve(s"batch$b.parquet")
+            java.nio.file.Files.move(p, dst)
+            java.nio.file.Files.setLastModifiedTime(dst,
+              java.nio.file.attribute.FileTime.fromMillis(now - (2 - b) * 30000L))
+          }
         }
       }
-    }
 
-    def src() = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir.toString)
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    val views = src().where(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("ts").as("view_ts"))
-      .withWatermark("view_ts", "3 days")
-    val purchases = src().where(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"), col("value"))
-      .withWatermark("p_ts", "3 days")
-    val joined = views.join(purchases,
-      col("v_user") === col("p_user") &&
-        col("p_ts") > col("view_ts") &&
-        col("p_ts") <= col("view_ts") + expr("interval 1 hour"))
-    try runToMemory(joined, "graft_stream_join_late", OutputMode.Append, NarrowParts)
-    finally deleteTree(root)
+      def src() = spark.readStream.schema(rawSchema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(inDir.toString)
+        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+      val views = src().where(col("event_type") === "view")
+        .select(col("user_id").as("v_user"), col("ts").as("view_ts"))
+        .withWatermark("view_ts", "3 days")
+      val purchases = src().where(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user"), col("ts").as("p_ts"), col("value"))
+        .withWatermark("p_ts", "3 days")
+      val joined = views.join(purchases,
+        col("v_user") === col("p_user") &&
+          col("p_ts") > col("view_ts") &&
+          col("p_ts") <= col("view_ts") + expr("interval 1 hour"))
+      runToMemory(joined, "graft_stream_join_late", OutputMode.Append, NarrowParts)
+    }
     spark.table("graft_stream_join_late")
       .groupBy(to_date(col("p_ts")).as("day"))
       .agg(count(lit(1)).as("n_attributed"),
@@ -1164,45 +1164,45 @@ object EventStream {
     val dayNs = 86400L * 1000000000L
     val d0Ns = (maxNs / dayNs) * dayNs
 
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_join_agg")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
-    val now = System.currentTimeMillis()
-    val sentinel = spark.createDataFrame(
-      java.util.Arrays.asList(
-        org.apache.spark.sql.Row(
-          9000001L, d0Ns + 40L * dayNs, -1L, "view", 0.0,
-          null.asInstanceOf[String]),
-        org.apache.spark.sql.Row(
-          9100001L, d0Ns + 40L * dayNs + 7200L * 1000000000L, -1L,
-          "purchase", 0.0, null.asInstanceOf[String])),
-      rawSchema)
-    // data batch + watermark sentinel staged in one pass (landBatches, r21)
-    landBatches(
-      raw.withColumn("__batch", lit(0))
-        .unionByName(sentinel.withColumn("__batch", lit(1))),
-      root, inDir, Seq("batch0.parquet", "batch1.parquet"),
-      Seq(now - 30000L, now))
+    withScratch("graft_stream_join_agg") { root =>
+      val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
+      val now = System.currentTimeMillis()
+      val sentinel = spark.createDataFrame(
+        java.util.Arrays.asList(
+          org.apache.spark.sql.Row(
+            9000001L, d0Ns + 40L * dayNs, -1L, "view", 0.0,
+            null.asInstanceOf[String]),
+          org.apache.spark.sql.Row(
+            9100001L, d0Ns + 40L * dayNs + 7200L * 1000000000L, -1L,
+            "purchase", 0.0, null.asInstanceOf[String])),
+        rawSchema)
+      // data batch + watermark sentinel staged in one pass (landBatches, r21)
+      landBatches(
+        raw.withColumn("__batch", lit(0))
+          .unionByName(sentinel.withColumn("__batch", lit(1))),
+        root, inDir, Seq("batch0.parquet", "batch1.parquet"),
+        Seq(now - 30000L, now))
 
-    def src() = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir.toString)
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    val views = src().where(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("ts").as("view_ts"))
-      .withWatermark("view_ts", "1 day")
-    val purchases = src().where(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"), col("value"))
-      .withWatermark("p_ts", "1 day")
-    val joined = views.join(purchases,
-      col("v_user") === col("p_user") &&
-        col("p_ts") > col("view_ts") &&
-        col("p_ts") <= col("view_ts") + expr("interval 1 hour"))
-    val agg = joined
-      .groupBy(window(col("p_ts"), "1 day"))
-      .agg(count(lit(1)).as("n_attributed"),
-        graft.functions.Money.moneySum(col("value")).as("sum_value"))
-    try runToMemory(agg, "graft_stream_join_agg", OutputMode.Append, NarrowParts)
-    finally deleteTree(root)
+      def src() = spark.readStream.schema(rawSchema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(inDir.toString)
+        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+      val views = src().where(col("event_type") === "view")
+        .select(col("user_id").as("v_user"), col("ts").as("view_ts"))
+        .withWatermark("view_ts", "1 day")
+      val purchases = src().where(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user"), col("ts").as("p_ts"), col("value"))
+        .withWatermark("p_ts", "1 day")
+      val joined = views.join(purchases,
+        col("v_user") === col("p_user") &&
+          col("p_ts") > col("view_ts") &&
+          col("p_ts") <= col("view_ts") + expr("interval 1 hour"))
+      val agg = joined
+        .groupBy(window(col("p_ts"), "1 day"))
+        .agg(count(lit(1)).as("n_attributed"),
+          graft.functions.Money.moneySum(col("value")).as("sum_value"))
+      runToMemory(agg, "graft_stream_join_agg", OutputMode.Append, NarrowParts)
+    }
     spark.table("graft_stream_join_agg")
       .select(col("window.start").cast("timestamp_ntz").as("day"),
         col("n_attributed"), col("sum_value"))
@@ -1229,29 +1229,29 @@ object EventStream {
     * table, both read in one micro-batch, and the stream must collapse
     * them. The rolled-up output equals the batch distinct — the oracle. */
   def streamingDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_dedup")
-    // two identical copies → every event_id arrives exactly twice; stage
-    // the normalized layout once, clone the staged file for the second copy
-    stageOne(rawEvents(spark, sfDir), root.resolve("stage0"),
-      root.resolve("copy0.parquet"))
-    java.nio.file.Files.copy(root.resolve("copy0.parquet"),
-      root.resolve("copy1.parquet"))
-    // dedup is the ONLY stateful operator in the stream (Append emits each
-    // key on first sight); the rollup runs batch-side from the sink table —
-    // chaining a second stateful agg would need the multi-operator
-    // watermark rules for no benefit here. The event-time column is PART OF
-    // the dedup key: Spark only evicts dedup state for keys that embed the
-    // watermark column (StreamingDeduplicateExec keys its eviction
-    // predicate on the dedup key expressions), so dropDuplicates on
-    // event_id alone would grow state forever on an unbounded stream.
-    // Duplicate copies share identical ts, so the output is unchanged.
-    val stream = spark.readStream.schema(rawSchema)
-      .parquet(root.toString)
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      .withWatermark("ts", "1 day")
-      .dropDuplicates("event_id", "ts")
-    try runToMemory(stream, "graft_stream_dedup", OutputMode.Append)
-    finally deleteTree(root)
+    withScratch("graft_stream_dedup") { root =>
+      // two identical copies → every event_id arrives exactly twice; stage
+      // the normalized layout once, clone the staged file for the second copy
+      stageOne(rawEvents(spark, sfDir), root.resolve("stage0"),
+        root.resolve("copy0.parquet"))
+      java.nio.file.Files.copy(root.resolve("copy0.parquet"),
+        root.resolve("copy1.parquet"))
+      // dedup is the ONLY stateful operator in the stream (Append emits each
+      // key on first sight); the rollup runs batch-side from the sink table —
+      // chaining a second stateful agg would need the multi-operator
+      // watermark rules for no benefit here. The event-time column is PART OF
+      // the dedup key: Spark only evicts dedup state for keys that embed the
+      // watermark column (StreamingDeduplicateExec keys its eviction
+      // predicate on the dedup key expressions), so dropDuplicates on
+      // event_id alone would grow state forever on an unbounded stream.
+      // Duplicate copies share identical ts, so the output is unchanged.
+      val stream = spark.readStream.schema(rawSchema)
+        .parquet(root.toString)
+        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+        .withWatermark("ts", "1 day")
+        .dropDuplicates("event_id", "ts")
+      runToMemory(stream, "graft_stream_dedup", OutputMode.Append)
+    }
     spark.table("graft_stream_dedup")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
@@ -1279,31 +1279,30 @@ object EventStream {
   def streamingRestart(spark: SparkSession, sfDir: String): DataFrame = {
     val raw = rawEvents(spark, sfDir)
       .localCheckpoint()
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_restart")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
-    val outDir = root.resolve("out").toString
-    val ckpt = root.resolve("ckpt").toString
+    withScratch("graft_stream_restart") { root =>
+      val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
+      val outDir = root.resolve("out").toString
+      val ckpt = root.resolve("ckpt").toString
 
-    def land(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = root.resolve(s"stage_$name")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val listing = java.nio.file.Files.list(stage)
-      val part =
-        try listing.filter(p => p.getFileName.toString.startsWith("part-"))
-          .findFirst().get()
-        finally listing.close()
-      java.nio.file.Files.move(part, inDir.resolve(s"$name.parquet"))
-    }
-    def runOnce(): Unit = {
-      val q = spark.readStream.schema(rawSchema).parquet(inDir.toString)
-        .select(col("event_id"), col("event_type"), col("value"))
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    try {
+      def land(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
+        val stage = root.resolve(s"stage_$name")
+        df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+        val listing = java.nio.file.Files.list(stage)
+        val part =
+          try listing.filter(p => p.getFileName.toString.startsWith("part-"))
+            .findFirst().get()
+          finally listing.close()
+        java.nio.file.Files.move(part, inDir.resolve(s"$name.parquet"))
+      }
+      def runOnce(): Unit = {
+        val q = spark.readStream.schema(rawSchema).parquet(inDir.toString)
+          .select(col("event_id"), col("event_type"), col("value"))
+          .writeStream.format("parquet")
+          .option("path", outDir).option("checkpointLocation", ckpt)
+          .outputMode(OutputMode.Append).start()
+        q.processAllAvailable()
+        q.stop()
+      }
       land(raw.where(col("event_id") % 2 === 0), "half0")
       runOnce()                                      // consumes half0 only
       land(raw.where(col("event_id") % 2 === 1), "half1")
@@ -1313,8 +1312,8 @@ object EventStream {
         .agg(count(lit(1)).as("n_events"),
           graft.functions.Money.moneySum(col("value")).as("sum_value"))
         .orderBy("event_type")
-        .localCheckpoint() // pin: the temp output dir is deleted below
-    } finally deleteTree(root)
+        .localCheckpoint() // pin: withScratch deletes the scratch dir
+    }
   }
 
   val streamingRestartSql: String =
@@ -1358,45 +1357,45 @@ object EventStream {
         -1L, maxNs + 30L * dayNs, -1L, "__flush__", 0.0, "{}")),
       rawSchema)
 
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_timeout")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
-    val now = System.currentTimeMillis()
-    // data batch + flush sentinel staged in one pass (landBatches, r21)
-    landBatches(
-      raw.withColumn("__batch", lit(0))
-        .unionByName(sentinel.withColumn("__batch", lit(1))),
-      root, inDir, Seq("b0.parquet", "b1.parquet"),
-      Seq(now - 30000L, now))
+    withScratch("graft_stream_timeout") { root =>
+      val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
+      val now = System.currentTimeMillis()
+      // data batch + flush sentinel staged in one pass (landBatches, r21)
+      landBatches(
+        raw.withColumn("__batch", lit(0))
+          .unionByName(sentinel.withColumn("__batch", lit(1))),
+        root, inDir, Seq("b0.parquet", "b1.parquet"),
+        Seq(now - 30000L, now))
 
-    val GapMs = 30L * 60L * 1000L
-    val stream = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir.toString)
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      .withWatermark("ts", "1 minute")
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Event]
-    val out = stream.groupByKey(_.user_id)
-      .flatMapGroupsWithState[TimeoutState, TimeoutSummary](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId, batch, state: GroupState[TimeoutState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(TimeoutSummary(userId, s.n_events, s.total_cents / 100.0))
-          } else {
-            val prev = state.getOption.getOrElse(TimeoutState(0L, 0L, 0L))
-            val next = batch.foldLeft(prev) { (acc, e) =>
-              TimeoutState(acc.n_events + 1, acc.total_cents + toCents(e.value),
-                math.max(acc.last_ms, e.ts.getTime))
+      val GapMs = 30L * 60L * 1000L
+      val stream = spark.readStream.schema(rawSchema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(inDir.toString)
+        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+        .withWatermark("ts", "1 minute")
+        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+        .as[Event]
+      val out = stream.groupByKey(_.user_id)
+        .flatMapGroupsWithState[TimeoutState, TimeoutSummary](
+          OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+          (userId, batch, state: GroupState[TimeoutState]) =>
+            if (state.hasTimedOut) {
+              val s = state.get
+              state.remove()
+              Iterator.single(TimeoutSummary(userId, s.n_events, s.total_cents / 100.0))
+            } else {
+              val prev = state.getOption.getOrElse(TimeoutState(0L, 0L, 0L))
+              val next = batch.foldLeft(prev) { (acc, e) =>
+                TimeoutState(acc.n_events + 1, acc.total_cents + toCents(e.value),
+                  math.max(acc.last_ms, e.ts.getTime))
+              }
+              state.update(next)
+              state.setTimeoutTimestamp(next.last_ms + GapMs)
+              Iterator.empty
             }
-            state.update(next)
-            state.setTimeoutTimestamp(next.last_ms + GapMs)
-            Iterator.empty
-          }
-      }
-    try runToMemory(out.toDF(), "graft_stream_timeout", OutputMode.Append)
-    finally deleteTree(root)
+        }
+      runToMemory(out.toDF(), "graft_stream_timeout", OutputMode.Append)
+    }
     spark.table("graft_stream_timeout")
       .where(col("user_id") =!= -1L)
       .select(col("user_id"), col("n_events"), col("total_value"))
@@ -1425,50 +1424,50 @@ object EventStream {
   def streamingForeachMerge(spark: SparkSession, sfDir: String): DataFrame = {
     val raw = rawEvents(spark, sfDir)
       .localCheckpoint()
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_merge")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
+    withScratch("graft_stream_merge") { root =>
+      val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
 
-    val now = System.currentTimeMillis()
-    // both arrival batches staged in one job (landBatches, round 21); the
-    // strata OVERLAP (low even ids are re-delivered in b1 — the update
-    // path), so they union with literal batch ids rather than routing on
-    // a partition expression
-    landBatches(
-      raw.where(col("event_id") % 2 === 0).withColumn("__batch", lit(0))
-        .unionByName(
-          raw.where(col("event_id") % 2 === 1 || col("event_id") < 1000)
-            .withColumn("__batch", lit(1))),
-      root, inDir, Seq("b0.parquet", "b1.parquet"),
-      Seq(now - 30000L, now))
+      val now = System.currentTimeMillis()
+      // both arrival batches staged in one job (landBatches, round 21); the
+      // strata OVERLAP (low even ids are re-delivered in b1 — the update
+      // path), so they union with literal batch ids rather than routing on
+      // a partition expression
+      landBatches(
+        raw.where(col("event_id") % 2 === 0).withColumn("__batch", lit(0))
+          .unionByName(
+            raw.where(col("event_id") % 2 === 1 || col("event_id") < 1000)
+              .withColumn("__batch", lit(1))),
+        root, inDir, Seq("b0.parquet", "b1.parquet"),
+        Seq(now - 30000L, now))
 
-    var version = -1
-    def warehouseDir(v: Int) = root.resolve(s"wh_v$v").toString
-    val q = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir.toString)
-      .select(col("event_id"), col("event_type"), col("value"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val incoming = batch.dropDuplicates("event_id")
-        val merged =
-          if (version < 0) incoming
-          else spark.read.parquet(warehouseDir(version))
-            .join(incoming, Seq("event_id"), "left_anti")
-            .unionByName(incoming)
-        merged.write.mode("overwrite").parquet(warehouseDir(version + 1))
-        version += 1
-      }
-      .outputMode(OutputMode.Update)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    try spark.read.parquet(warehouseDir(version))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        graft.functions.Money.moneySum(col("value")).as("sum_value"))
-      .orderBy("event_type")
-      .localCheckpoint() // pin: the temp warehouse dirs are deleted below
-    finally deleteTree(root)
+      var version = -1
+      def warehouseDir(v: Int) = root.resolve(s"wh_v$v").toString
+      val q = spark.readStream.schema(rawSchema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(inDir.toString)
+        .select(col("event_id"), col("event_type"), col("value"))
+        .writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val incoming = batch.dropDuplicates("event_id")
+          val merged =
+            if (version < 0) incoming
+            else spark.read.parquet(warehouseDir(version))
+              .join(incoming, Seq("event_id"), "left_anti")
+              .unionByName(incoming)
+          merged.write.mode("overwrite").parquet(warehouseDir(version + 1))
+          version += 1
+        }
+        .outputMode(OutputMode.Update)
+        .start()
+      q.processAllAvailable()
+      q.stop()
+      spark.read.parquet(warehouseDir(version))
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          graft.functions.Money.moneySum(col("value")).as("sum_value"))
+        .orderBy("event_type")
+        .localCheckpoint() // pin: withScratch deletes the scratch dir
+    }
   }
 
   /** STREAMING AS-OF ENRICHMENT: incoming events enriched per micro-batch
@@ -1484,53 +1483,53 @@ object EventStream {
     * batch writes its own files — no MERGE discipline needed for
     * insert-only enrichment). */
   def streamingAsOfEnrich(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_asof")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
-    val outDir = root.resolve("out").toString
-    // stage the raw file twice, split by event_id parity → 2 micro-batches
-    val raw = rawEvents(spark, sfDir)
-      .localCheckpoint()
-    val now = System.currentTimeMillis()
-    // both parity batches staged in one pass (landBatches, round 21)
-    landBatches(raw.withColumn("__batch", (col("event_id") % 2).cast("int")),
-      root, inDir, Seq("b0.parquet", "b1.parquet"),
-      Seq(now - 30000L, now))
+    withScratch("graft_stream_asof") { root =>
+      val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
+      val outDir = root.resolve("out").toString
+      // stage the raw file twice, split by event_id parity → 2 micro-batches
+      val raw = rawEvents(spark, sfDir)
+        .localCheckpoint()
+      val now = System.currentTimeMillis()
+      // both parity batches staged in one pass (landBatches, round 21)
+      landBatches(raw.withColumn("__batch", (col("event_id") % 2).cast("int")),
+        root, inDir, Seq("b0.parquet", "b1.parquet"),
+        Seq(now - 30000L, now))
 
-    // static feature history: one signup row per (user, ts), pinned once
-    val withTs = raw.select(col("event_id"), col("user_id"),
-      expr("timestamp_micros(ts div 1000)").as("ts"), col("event_type"))
-    val signups = withTs.where(col("event_type") === "signup")
-      .groupBy(col("user_id"), col("ts").as("signup_ts_k"))
-      .agg(max(col("event_id")).as("signup_id"))
-      .select(col("user_id"), col("signup_ts_k").as("ts"), col("signup_id"))
-      .localCheckpoint()
+      // static feature history: one signup row per (user, ts), pinned once
+      val withTs = raw.select(col("event_id"), col("user_id"),
+        expr("timestamp_micros(ts div 1000)").as("ts"), col("event_type"))
+      val signups = withTs.where(col("event_type") === "signup")
+        .groupBy(col("user_id"), col("ts").as("signup_ts_k"))
+        .agg(max(col("event_id")).as("signup_id"))
+        .select(col("user_id"), col("signup_ts_k").as("ts"), col("signup_id"))
+        .localCheckpoint()
 
-    val q = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir.toString)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val ev = batch.select(col("event_id"), col("user_id"),
-            expr("timestamp_micros(ts div 1000)").as("ts"), col("event_type"))
-          .where(col("event_type") =!= "signup")
-        graft.ops.NativeAsOf.asOfNative(ev, signups, "user_id", "ts", leftOuter = false)
-          .select(col("event_id"), col("user_id"), col("ts"), col("event_type"),
-            col("asof_signup_id").as("signup_id"),
-            (unix_micros(col("ts")) - unix_micros(col("asof_ts")))
-              .as("micros_since_signup"))
-          .write.mode("append").parquet(outDir)
-      }
-      .outputMode(OutputMode.Append)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    try spark.read.parquet(outDir)
-      .select(col("event_id"), col("user_id"),
-        col("ts").cast("timestamp_ntz").as("ts"), col("event_type"),
-        col("signup_id"), col("micros_since_signup"))
-      .orderBy("event_id")
-      .localCheckpoint() // pin: the temp dirs are deleted below
-    finally deleteTree(root)
+      val q = spark.readStream.schema(rawSchema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(inDir.toString)
+        .writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val ev = batch.select(col("event_id"), col("user_id"),
+              expr("timestamp_micros(ts div 1000)").as("ts"), col("event_type"))
+            .where(col("event_type") =!= "signup")
+          graft.ops.NativeAsOf.asOfNative(ev, signups, "user_id", "ts", leftOuter = false)
+            .select(col("event_id"), col("user_id"), col("ts"), col("event_type"),
+              col("asof_signup_id").as("signup_id"),
+              (unix_micros(col("ts")) - unix_micros(col("asof_ts")))
+                .as("micros_since_signup"))
+            .write.mode("append").parquet(outDir)
+        }
+        .outputMode(OutputMode.Append)
+        .start()
+      q.processAllAvailable()
+      q.stop()
+      spark.read.parquet(outDir)
+        .select(col("event_id"), col("user_id"),
+          col("ts").cast("timestamp_ntz").as("ts"), col("event_type"),
+          col("signup_id"), col("micros_since_signup"))
+        .orderBy("event_id")
+        .localCheckpoint() // pin: withScratch deletes the scratch dir
+    }
   }
 
   /** Oracle: every event exactly once — the merge collapsed the overlap. */
@@ -1580,53 +1579,53 @@ object EventStream {
     val dayNs = 86400L * 1000000000L
     val d0Ns = (maxNs / dayNs) * dayNs
 
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_outer")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
-    val now = System.currentTimeMillis()
-    // batch0 = the whole normalized events table in one staged file (the
-    // type filter runs stream-side)
-    // one view AND one purchase per sentinel batch: the global watermark is
-    // the MIN over both sides' trackers, so advancing only the view side
-    // would pin the join's eviction line at the purchases' batch0 max
-    // (measured: the last 3 days' unmatched views never flushed). Distinct
-    // negative users + 10-day spacing keep sentinels from matching anything.
-    def sentinel(b: Int): DataFrame =
-      spark.createDataFrame(
-        java.util.Arrays.asList(
-          org.apache.spark.sql.Row(
-            9000000L + b, d0Ns + b.toLong * 10L * dayNs, -1L, "view", 0.0,
-            null.asInstanceOf[String]),
-          org.apache.spark.sql.Row(
-            9100000L + b, d0Ns + b.toLong * 10L * dayNs, -2L, "purchase", 0.0,
-            null.asInstanceOf[String])),
-        rawSchema)
-    // ONE sentinel suffices — see streamingFullOuterJoin's round-16 note
-    // (watermark from batch1 applies at the next batch; the no-data
-    // micro-batch flushes batch0's unmatched state). Both batches staged
-    // in one pass (landBatches, round 21).
-    landBatches(
-      raw.withColumn("__batch", lit(0))
-        .unionByName(sentinel(1).withColumn("__batch", lit(1))),
-      root, inDir, Seq("batch0.parquet", "batch1.parquet"),
-      Seq(now - 3 * 30000L, now - 2 * 30000L))
+    withScratch("graft_stream_outer") { root =>
+      val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
+      val now = System.currentTimeMillis()
+      // batch0 = the whole normalized events table in one staged file (the
+      // type filter runs stream-side)
+      // one view AND one purchase per sentinel batch: the global watermark is
+      // the MIN over both sides' trackers, so advancing only the view side
+      // would pin the join's eviction line at the purchases' batch0 max
+      // (measured: the last 3 days' unmatched views never flushed). Distinct
+      // negative users + 10-day spacing keep sentinels from matching anything.
+      def sentinel(b: Int): DataFrame =
+        spark.createDataFrame(
+          java.util.Arrays.asList(
+            org.apache.spark.sql.Row(
+              9000000L + b, d0Ns + b.toLong * 10L * dayNs, -1L, "view", 0.0,
+              null.asInstanceOf[String]),
+            org.apache.spark.sql.Row(
+              9100000L + b, d0Ns + b.toLong * 10L * dayNs, -2L, "purchase", 0.0,
+              null.asInstanceOf[String])),
+          rawSchema)
+      // ONE sentinel suffices — see streamingFullOuterJoin's round-16 note
+      // (watermark from batch1 applies at the next batch; the no-data
+      // micro-batch flushes batch0's unmatched state). Both batches staged
+      // in one pass (landBatches, round 21).
+      landBatches(
+        raw.withColumn("__batch", lit(0))
+          .unionByName(sentinel(1).withColumn("__batch", lit(1))),
+        root, inDir, Seq("batch0.parquet", "batch1.parquet"),
+        Seq(now - 3 * 30000L, now - 2 * 30000L))
 
-    def src() = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir.toString)
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    val views = src().where(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("ts").as("view_ts"))
-      .withWatermark("view_ts", "3 days")
-    val purchases = src().where(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"), col("value"))
-      .withWatermark("p_ts", "3 days")
-    val joined = views.join(purchases,
-      col("v_user") === col("p_user") &&
-        col("p_ts") > col("view_ts") &&
-        col("p_ts") <= col("view_ts") + expr("interval 1 hour"),
-      "left_outer")
-    try runToMemory(joined, "graft_stream_outer", OutputMode.Append, NarrowParts)
-    finally deleteTree(root)
+      def src() = spark.readStream.schema(rawSchema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(inDir.toString)
+        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+      val views = src().where(col("event_type") === "view")
+        .select(col("user_id").as("v_user"), col("ts").as("view_ts"))
+        .withWatermark("view_ts", "3 days")
+      val purchases = src().where(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user"), col("ts").as("p_ts"), col("value"))
+        .withWatermark("p_ts", "3 days")
+      val joined = views.join(purchases,
+        col("v_user") === col("p_user") &&
+          col("p_ts") > col("view_ts") &&
+          col("p_ts") <= col("view_ts") + expr("interval 1 hour"),
+        "left_outer")
+      runToMemory(joined, "graft_stream_outer", OutputMode.Append, NarrowParts)
+    }
     spark.table("graft_stream_outer")
       .where(col("v_user") >= 0)
       .groupBy(to_date(col("view_ts")).as("day"))
@@ -1669,51 +1668,51 @@ object EventStream {
     val dayNs = 86400L * 1000000000L
     val d0Ns = (maxNs / dayNs) * dayNs
 
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_fouter")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
-    val now = System.currentTimeMillis()
-    def sentinel(b: Int): DataFrame =
-      spark.createDataFrame(
-        java.util.Arrays.asList(
-          org.apache.spark.sql.Row(
-            9000000L + b, d0Ns + b.toLong * 10L * dayNs, -1L, "view", 0.0,
-            null.asInstanceOf[String]),
-          org.apache.spark.sql.Row(
-            9100000L + b, d0Ns + b.toLong * 10L * dayNs, -2L, "purchase", 0.0,
-            null.asInstanceOf[String])),
-        rawSchema)
-    // ONE sentinel suffices (round-16 probe): the watermark computed from
-    // batch1 (+10d − 3d delay = +7d > every data ts) applies at the NEXT
-    // batch, and processAllAvailable runs a NO-DATA micro-batch whenever
-    // the watermark advanced (spark.sql.streaming.noDataMicroBatches,
-    // default on) — that final empty batch flushes batch0's unmatched
-    // state on both sides. The previous three-sentinel walk re-ran the
-    // stateful join choreography twice more for rows the rollup filters
-    // out anyway (oracle hash-green at both verify scales). Both batches
-    // staged in one pass (landBatches, round 21).
-    landBatches(
-      raw.withColumn("__batch", lit(0))
-        .unionByName(sentinel(1).withColumn("__batch", lit(1))),
-      root, inDir, Seq("batch0.parquet", "batch1.parquet"),
-      Seq(now - 3 * 30000L, now - 2 * 30000L))
+    withScratch("graft_stream_fouter") { root =>
+      val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
+      val now = System.currentTimeMillis()
+      def sentinel(b: Int): DataFrame =
+        spark.createDataFrame(
+          java.util.Arrays.asList(
+            org.apache.spark.sql.Row(
+              9000000L + b, d0Ns + b.toLong * 10L * dayNs, -1L, "view", 0.0,
+              null.asInstanceOf[String]),
+            org.apache.spark.sql.Row(
+              9100000L + b, d0Ns + b.toLong * 10L * dayNs, -2L, "purchase", 0.0,
+              null.asInstanceOf[String])),
+          rawSchema)
+      // ONE sentinel suffices (round-16 probe): the watermark computed from
+      // batch1 (+10d − 3d delay = +7d > every data ts) applies at the NEXT
+      // batch, and processAllAvailable runs a NO-DATA micro-batch whenever
+      // the watermark advanced (spark.sql.streaming.noDataMicroBatches,
+      // default on) — that final empty batch flushes batch0's unmatched
+      // state on both sides. The previous three-sentinel walk re-ran the
+      // stateful join choreography twice more for rows the rollup filters
+      // out anyway (oracle hash-green at both verify scales). Both batches
+      // staged in one pass (landBatches, round 21).
+      landBatches(
+        raw.withColumn("__batch", lit(0))
+          .unionByName(sentinel(1).withColumn("__batch", lit(1))),
+        root, inDir, Seq("batch0.parquet", "batch1.parquet"),
+        Seq(now - 3 * 30000L, now - 2 * 30000L))
 
-    def src() = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir.toString)
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    val views = src().where(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("ts").as("view_ts"))
-      .withWatermark("view_ts", "3 days")
-    val purchases = src().where(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"), col("value"))
-      .withWatermark("p_ts", "3 days")
-    val joined = views.join(purchases,
-      col("v_user") === col("p_user") &&
-        col("p_ts") > col("view_ts") &&
-        col("p_ts") <= col("view_ts") + expr("interval 1 hour"),
-      "full_outer")
-    try runToMemory(joined, "graft_stream_fouter", OutputMode.Append, NarrowParts)
-    finally deleteTree(root)
+      def src() = spark.readStream.schema(rawSchema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(inDir.toString)
+        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+      val views = src().where(col("event_type") === "view")
+        .select(col("user_id").as("v_user"), col("ts").as("view_ts"))
+        .withWatermark("view_ts", "3 days")
+      val purchases = src().where(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user"), col("ts").as("p_ts"), col("value"))
+        .withWatermark("p_ts", "3 days")
+      val joined = views.join(purchases,
+        col("v_user") === col("p_user") &&
+          col("p_ts") > col("view_ts") &&
+          col("p_ts") <= col("view_ts") + expr("interval 1 hour"),
+        "full_outer")
+      runToMemory(joined, "graft_stream_fouter", OutputMode.Append, NarrowParts)
+    }
     spark.table("graft_stream_fouter")
       .where(coalesce(col("v_user"), lit(0L)) >= 0 &&
         coalesce(col("p_user"), lit(0L)) >= 0)
@@ -1784,34 +1783,34 @@ object EventStream {
     val d0Ns = (maxNs / dayNs) * dayNs
     val recentNs = d0Ns - 2L * dayNs
 
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_dedup_wm")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
-    val now = System.currentTimeMillis()
-    val sentinel = spark.createDataFrame(
-      java.util.Arrays.asList(org.apache.spark.sql.Row(
-        9000001L, d0Ns + 10L * dayNs, -1L, "view", 0.0,
-        null.asInstanceOf[String])),
-      rawSchema)
-    // batch0 = the whole events table, batch1 = watermark sentinel,
-    // batch2 = the recent slice RE-DELIVERED (overlaps batch0, so the
-    // strata union with literal ids) — all staged in one pass
-    // (landBatches, round 21)
-    landBatches(
-      raw.withColumn("__batch", lit(0))
-        .unionByName(sentinel.withColumn("__batch", lit(1)))
-        .unionByName(raw.where(col("ts") >= recentNs)
-          .withColumn("__batch", lit(2))),
-      root, inDir, (0 to 2).map(b => s"batch$b.parquet"),
-      (0 to 2).map(b => now - (2 - b) * 30000L))
+    withScratch("graft_stream_dedup_wm") { root =>
+      val inDir = root.resolve("in"); java.nio.file.Files.createDirectory(inDir)
+      val now = System.currentTimeMillis()
+      val sentinel = spark.createDataFrame(
+        java.util.Arrays.asList(org.apache.spark.sql.Row(
+          9000001L, d0Ns + 10L * dayNs, -1L, "view", 0.0,
+          null.asInstanceOf[String])),
+        rawSchema)
+      // batch0 = the whole events table, batch1 = watermark sentinel,
+      // batch2 = the recent slice RE-DELIVERED (overlaps batch0, so the
+      // strata union with literal ids) — all staged in one pass
+      // (landBatches, round 21)
+      landBatches(
+        raw.withColumn("__batch", lit(0))
+          .unionByName(sentinel.withColumn("__batch", lit(1)))
+          .unionByName(raw.where(col("ts") >= recentNs)
+            .withColumn("__batch", lit(2))),
+        root, inDir, (0 to 2).map(b => s"batch$b.parquet"),
+        (0 to 2).map(b => now - (2 - b) * 30000L))
 
-    val deduped = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir.toString)
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      .withWatermark("ts", "3 days")
-      .dropDuplicatesWithinWatermark("event_id")
-    try runToMemory(deduped, "graft_stream_dedup_wm", OutputMode.Append)
-    finally deleteTree(root)
+      val deduped = spark.readStream.schema(rawSchema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(inDir.toString)
+        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+        .withWatermark("ts", "3 days")
+        .dropDuplicatesWithinWatermark("event_id")
+      runToMemory(deduped, "graft_stream_dedup_wm", OutputMode.Append)
+    }
     spark.table("graft_stream_dedup_wm")
       .where(col("user_id") >= 0)
       .groupBy(to_date(col("ts")).as("day"))

@@ -14,8 +14,18 @@ class JsonAuditSinkSpec extends SparkSpec {
 
   private val d = "/root/testdata/sf0.001"
 
-  private def tempDir(): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft_audit_sink")
+  private val made =
+    scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+
+  private def tempDir(prefix: String = "graft_audit_sink"): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    made.synchronized(made += d)
+    d
+  }
+
+  override def withFixture(test: NoArgTest) =
+    try super.withFixture(test)
+    finally made.synchronized { made.foreach(deleteTree); made.clear() }
 
   test("append publishes committed part files plus a manifest that adds up") {
     val dir = tempDir()
@@ -198,7 +208,7 @@ class JsonAuditSinkSpec extends SparkSpec {
   test("versionAsOf reconstructs each epoch prefix byte-exact") {
     import org.apache.spark.sql.functions._
     val out = tempDir()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_travel_ckpt")
+    val ckpt = tempDir("graft_travel_ckpt")
     // 4 epochs of 100 ids each: page counter = offset = version log
     val q = spark.readStream.format(classOf[PagedSource].getName)
       .option("pages", "4").option("pageSize", "100")
@@ -235,7 +245,7 @@ class JsonAuditSinkSpec extends SparkSpec {
   test("streaming tail: the epoch log replays as micro-batches with totals intact") {
     import org.apache.spark.sql.functions._
     val out = tempDir()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_tail_ckpt")
+    val ckpt = tempDir("graft_tail_ckpt")
     val w = spark.readStream.format(classOf[PagedSource].getName)
       .option("pages", "4").option("pageSize", "100")
       .option("pagesPerTrigger", "1")
@@ -265,7 +275,7 @@ class JsonAuditSinkSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val out = tempDir()
     // writer run 1: epochs 0-1 (pages 0-1 of 4)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_tail2_wckpt")
+    val ckpt = tempDir("graft_tail2_wckpt")
     def writeRun(pages: Int): Unit = {
       val w = spark.readStream.format(classOf[PagedSource].getName)
         .option("pages", pages.toString).option("pageSize", "100")
@@ -331,7 +341,7 @@ class JsonAuditSinkSpec extends SparkSpec {
     spark.range(0, 7).toDF("id").write.format(classOf[JsonAuditSink].getName)
       .option("path", out.toString).mode("append").save()
     // ...then two streamed epochs on top
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_mix_ckpt")
+    val ckpt = tempDir("graft_mix_ckpt")
     val q = spark.readStream.format(classOf[PagedSource].getName)
       .option("pages", "2").option("pageSize", "100")
       .option("pagesPerTrigger", "1")
