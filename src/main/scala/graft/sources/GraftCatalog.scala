@@ -2628,7 +2628,7 @@ object CatalogApi {
     * then a second streaming query SUBSCRIBES to the table — the
     * table-level `_EPOCHS` log is the offset axis and each epoch's files
     * are resolved manifest-driven across the partition directories
-    * ([[AuditPartitionedMicroBatchStream]]). The hash gate proves the
+    * ([[AuditMicroBatchStream]]). The hash gate proves the
     * tailed content is exactly-once and partition-complete: grouped
     * totals from the SUBSCRIBER equal DuckDB's restatement of the source
     * formulas. This closes the loop the partitioned streaming write

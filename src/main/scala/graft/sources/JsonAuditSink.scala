@@ -335,20 +335,11 @@ final class AuditTable(path: String, writeSchema: StructType,
     if (!java.nio.file.Files.isDirectory(d))
       throw new org.apache.spark.sql.catalyst.analysis
         .NoSuchPartitionException(name(), ident, partitionSchema())
-    val entries = AuditPartition.manifestEntries(d)
-    // live rows: base checkpoint rows (post-OPTIMIZE dirs hold their
-    // rows there; vector-deleted rows are in the base by construction)
-    // + live manifest total (epochs above the base's through only —
-    // mirrors the count pushdown) − outstanding delete vectors
-    val baseThrough = AuditBase.read(d.toString)
-      .map(_.throughEpoch).getOrElse(Long.MinValue)
-    val rows = AuditBase.read(d.toString)
-      .map(_.files.map(_._2).sum).getOrElse(0L) +
-      entries.collect {
-        case (f, r) if AuditScan.epochOf(f).forall(_ > baseThrough) => r
-      }.sum - AuditDeletes.count(d.toString)
-    java.util.Map.of("files", entries.size.toString,
-      "rows", rows.toString)
+    // live rows: the same metadata count the COUNT(*) pushdown answers
+    val rows = AuditScan.dirFiles(identRelDir(ident), d, None)
+      .rows(current = true)
+    java.util.Map.of("files",
+      AuditPartition.manifestEntries(d).size.toString, "rows", rows.toString)
   }
   override def listPartitionIdentifiers(names: Array[String],
       ident: InternalRow): Array[InternalRow] = {
@@ -803,30 +794,27 @@ final class AuditScanBuilder(path: String, writeSchema: StructType,
     *
     * Ungrouped MIN/MAX over integral columns additionally answer from
     * the `_STATS` zone maps (Iceberg-style metadata min/max) — but ONLY
-    * when the bounds are provably EXACT: current read, unpartitioned, no
-    * delete vectors outstanding (a vector could hide the extreme row; the
-    * metadata DELETE recomputes bounds during its rewrite, so those stay
-    * exact), and every planned file carries a stats line for every asked
-    * column. Anything else — grouping, other aggregates, count over a
-    * column (null semantics need the data) — is refused, row-level. */
+    * when the bounds are provably EXACT: current read, no delete vectors
+    * outstanding in a surviving directory (a vector could hide the
+    * extreme row; the metadata DELETE recomputes bounds during its
+    * rewrite, so those stay exact), and every planned file carries a
+    * stats line for every asked column. Anything else — grouping other
+    * than a grouped count, other aggregates, count over a column (null
+    * semantics need the data) — is refused, row-level. */
   override def supportCompletePushDown(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
     metadataAggs(aggregation).isDefined ||
       groupedCountLevels(aggregation).isDefined
 
-  /** Parse + validate the aggregation into metadata-answerable specs. */
-  /** GROUPED metadata count: `GROUP BY <identity partition col>` with
-    * only COUNT(*) aggregates answers one row per surviving partition
-    * directory straight from its manifest — the partitioned analogue of
-    * the ungrouped metadata count. Refused for bucket partitioning (the
-    * bucket token does not determine the column VALUE) and for any other
-    * aggregate or grouping shape. Empty directories emit no row, matching
-    * SQL group semantics. */
-  /** The identity-level indices a grouped count groups by, when pushable:
-    * every grouping expression is a distinct IDENTITY partition level
-    * (bucket tokens do not determine the column value, so bucket levels
-    * refuse). A subset of the levels is fine — counts aggregate across
-    * the unmentioned levels' directories. */
+  /** GROUPED metadata count: `GROUP BY <identity partition cols>` with
+    * only COUNT(*) aggregates answers one row per surviving group of
+    * partition directories straight from their metadata — the
+    * partitioned analogue of the ungrouped metadata count. Returns the
+    * identity-level indices grouped by, when pushable: every grouping
+    * expression is a distinct IDENTITY partition level (bucket tokens do
+    * not determine the column value, so bucket levels refuse). A subset
+    * of the levels is fine — counts aggregate across the unmentioned
+    * levels' directories. */
   private def groupedCountLevels(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
       : Option[Seq[Int]] = {
@@ -847,6 +835,7 @@ final class AuditScanBuilder(path: String, writeSchema: StructType,
     else None
   }
 
+  /** Parse + validate the aggregation into metadata-answerable specs. */
   private def metadataAggs(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
       : Option[Seq[AuditMetaAgg]] = {
@@ -887,55 +876,32 @@ final class AuditScanBuilder(path: String, writeSchema: StructType,
     if (wantsMinMax) {
       // exactness gate for the stats-answered aggregates
       if (versionAsOf.isDefined) return None
-      if (partLevels.nonEmpty) {
-          // partitioned: per-DIRECTORY stats must cover every file of
-          // every surviving partition, and the directory must carry NO
-          // outstanding delete vectors (partitioned delta DML — a vector
-          // could hide the extreme row; the metadata DELETE folds vectors
-          // and recomputes per-dir bounds during its rewrite)
-          val covered = AuditPartition.listDirs(path, partLevels).forall {
-            case (relDir, dir) =>
-              !AuditPartition.survives(relDir, allowedTokens, excludeNull) || {
-                  val st = AuditStats.read(dir.toString)
-                  // POSITIONAL vectors refuse (one could hide the extreme
-                  // row); FOLDED summaries do not — the fold physically
-                  // blanked the rows AND recomputed the touched files'
-                  // stats (the VACUUM invariant since round 16). That
-                  // invariant only holds for STAMPED folds: a watermark-
-                  // less summary is a pre-upgrade fold that blanked rows
-                  // WITHOUT recomputing stats — its superset bounds can
-                  // claim a physically deleted row's value, so it refuses
-                  // here exactly as it refuses time travel.
-                  AuditDeletes.entries(dir.toString).isEmpty &&
-                    AuditDeletes.foldWatermark(dir.toString).isDefined &&
-                    AuditPartition.manifestEntries(dir).forall(e => st.contains(e._1)) &&
-                    // per-dir base files (partitioned OPTIMIZE) need
-                    // stats lines too — they hold the compacted rows
-                    AuditBase.read(dir.toString).forall(
-                      _.files.forall(f => st.contains(f._1)))
-                }
+      // every surviving directory must carry NO outstanding delete
+      // vectors and a stats line for every file a current read opens
+      val exact = AuditPartition.listDirs(path, partLevels).forall {
+        case (relDir, dir) =>
+          !AuditPartition.survives(relDir, allowedTokens, excludeNull) || {
+            // POSITIONAL vectors refuse (one could hide the extreme row);
+            // FOLDED summaries do not — the fold physically blanked the
+            // rows AND recomputed the touched files' stats (the VACUUM
+            // invariant since round 16). That invariant only holds for
+            // STAMPED folds: a watermark-less summary is a pre-upgrade
+            // fold that blanked rows WITHOUT recomputing stats — its
+            // superset bounds can claim a physically deleted row's value,
+            // so it refuses here exactly as it refuses time travel.
+            AuditDeletes.entries(dir.toString).isEmpty &&
+              AuditDeletes.foldWatermark(dir.toString).isDefined && {
+                val d = AuditScan.dirFiles(relDir, dir, None)
+                val st = AuditStats.read(dir.toString)
+                // a stats LINE with a column absent means no non-null
+                // values — it contributes no bound, which is exactly SQL
+                // min/max null semantics; a file with NO line is unknown
+                // and refuses the claim
+                (d.baseFiles.map(_._1) ++ d.dataFiles).forall(st.contains)
+              }
           }
-          if (!covered) return None
-      } else {
-          // positional vectors refuse; folded summaries' rows are blanked
-          // with stats recomputed (see the partitioned twin above) —
-          // but only STAMPED folds carry that invariant: a watermark-
-          // less (pre-upgrade) fold blanked without recomputing stats
-          if (AuditDeletes.entries(path).nonEmpty ||
-              AuditDeletes.foldWatermark(path).isEmpty) return None
-          val stats = AuditStats.read(path)
-          val files = AuditBase.read(path).toSeq.flatMap(_.files.map(_._1)) ++
-            AuditBase.readManifest(path).collect { case e if !e.folded => e.file } ++
-            AuditScan.epochFiles(path,
-              AuditScan.committedEpochs(path)
-                .filter(_ > AuditBase.read(path).map(_.throughEpoch)
-                  .getOrElse(Long.MinValue)).toSet).map(_._1)
-          // every planned file must carry a stats LINE (a line with a column
-          // absent means no non-null values — it contributes no bound, which
-          // is exactly SQL min/max null semantics; a file with NO line is
-          // unknown and refuses the claim)
-          if (!files.forall(stats.contains)) return None
       }
+      if (!exact) return None
     }
     Some(specs.flatten)
   }
@@ -980,11 +946,8 @@ final class AuditScanBuilder(path: String, writeSchema: StructType,
   * over a statable column (zone maps). */
 final case class AuditMetaAgg(op: String, field: Option[StructField])
 
-/** The manifest-count scan: one partition, one row, zero data files read.
-  * On partitioned tables the count sums only the SURVIVING partition
-  * directories' manifests — a partition-sliced COUNT(*) stays metadata-only. */
 /** One row per surviving GROUP of partition directories: (grouped level
-  * values, COUNT(*)) read from the per-partition manifests — zero data
+  * values, COUNT(*)) read from the per-partition metadata — zero data
   * files opened. The COMPLETE-pushdown grouped count for identity
   * partition levels; grouping by a SUBSET of the levels sums across the
   * unmentioned levels' directories. */
@@ -1017,23 +980,8 @@ final class AuditGroupCountScan(path: String,
     AuditPartition.listDirs(path, partLevels).collect {
       case (relDir, dir)
         if AuditPartition.survives(relDir, allowedTokens, excludeNull) =>
-        // live rows = base rows (per-dir checkpoint, vector-deleted rows
-        // included by construction) + live manifest total − the dir's
-        // delete-vector entries (each vector targets an origin id that
-        // exists exactly once across base + live files)
-        (groupLevels.map(AuditPartition.componentToken(relDir, _)), {
-          // live epoch entries <= the dir's base throughEpoch are
-          // base-held (epoch replay racing a partitioned OPTIMIZE) —
-          // counting them on top of the base rows double-counts
-          val baseThrough = AuditBase.read(dir.toString)
-            .map(_.throughEpoch).getOrElse(Long.MinValue)
-          AuditBase.read(dir.toString)
-            .map(_.files.map(_._2).sum).getOrElse(0L) +
-            AuditPartition.manifestEntries(dir).collect {
-              case (f, r) if AuditScan.epochOf(f).forall(_ > baseThrough) => r
-            }.sum -
-            AuditDeletes.count(dir.toString)
-        })
+        (groupLevels.map(AuditPartition.componentToken(relDir, _)),
+          AuditScan.dirFiles(relDir, dir, None).rows(current = true))
     }.groupBy(_._1).toSeq.sortBy(_._1.mkString("/"))
       .map { case (toks, dirs) => (toks, dirs.map(_._2).sum) }
       .collect { // an empty group is no group at all in SQL semantics
@@ -1046,23 +994,12 @@ final class AuditGroupCountScan(path: String,
       }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(partition: InputPartition)
-          : PartitionReader[InternalRow] = {
-        val vals = partition.asInstanceOf[AuditCountPartition].vals
-        new PartitionReader[InternalRow] {
-          private var emitted = false
-          override def next(): Boolean =
-            if (emitted) false else { emitted = true; true }
-          override def get(): InternalRow =
-            new org.apache.spark.sql.catalyst.expressions
-              .GenericInternalRow(vals.toArray)
-          override def close(): Unit = ()
-        }
-      }
-    }
+    AuditCountPartition.ReaderFactory
 }
 
+/** The manifest-count scan: one partition, one row, zero data files read.
+  * The count sums only the SURVIVING directories' metadata — a
+  * partition-sliced COUNT(*) stays metadata-only. */
 final class AuditCountScan(path: String, versionAsOf: Option[Long],
     partLevels: Seq[AuditPartition.Level] = Nil,
     allowedTokens: Map[Int, Set[String]] = Map.empty,
@@ -1095,28 +1032,13 @@ final class AuditCountScan(path: String, versionAsOf: Option[Long],
 
   /** Zone-map MIN/MAX across the current-read file set (the pushdown
     * gate already proved every one of these files has exact bounds). */
-  private def statValue(op: String, f: StructField): Any = {
-    val bounds: Seq[(Long, Long)] =
-      if (partLevels.nonEmpty)
-        survivingDirs.flatMap { case (_, dir) =>
-            val st = AuditStats.read(dir.toString)
-            (AuditPartition.manifestEntries(dir).map(_._1) ++
-              AuditBase.read(dir.toString).toSeq.flatMap(_.files.map(_._1)))
-              .flatMap(file => st.get(file).flatMap(_.ints.get(f.name)))
-        }
-      else {
-        val stats = AuditStats.read(path)
-        val baseThrough = AuditBase.read(path).map(_.throughEpoch)
-          .getOrElse(Long.MinValue)
-        val files = AuditBase.read(path).toSeq.flatMap(_.files.map(_._1)) ++
-          AuditBase.readManifest(path).collect {
-            case e if !e.folded => e.file
-          } ++
-          AuditScan.epochFiles(path,
-            AuditScan.committedEpochs(path)
-              .filter(_ > baseThrough).toSet).map(_._1)
-        files.flatMap(stats.get(_).flatMap(_.ints.get(f.name)))
-      }
+  private def statValue(dirs: Seq[AuditScan.DirFiles], op: String,
+      f: StructField): Any = {
+    val bounds: Seq[(Long, Long)] = dirs.flatMap { d =>
+      val st = AuditStats.read(d.dir.toString)
+      (d.baseFiles.map(_._1) ++ d.dataFiles)
+        .flatMap(file => st.get(file).flatMap(_.ints.get(f.name)))
+    }
     if (bounds.isEmpty) null
     else {
       val v = if (op == "min") bounds.map(_._1).min else bounds.map(_._2).max
@@ -1127,101 +1049,53 @@ final class AuditCountScan(path: String, versionAsOf: Option[Long],
     }
   }
 
-  private def manifestCount(): Long =
-    if (partLevels.nonEmpty)
-      survivingDirs.map { case (_, dir) =>
-          // current-state: per-dir base rows (vector-deleted rows are in
-          // the base by construction) + live manifest − vector entries.
-          // Pinned reads on a compacted dir never reach here — the
-          // pushdown gate refuses (base rows need an origin scan).
-          {
-          // live epoch entries <= the dir's base throughEpoch are
-          // base-held (a replayed epoch racing a partitioned OPTIMIZE)
-          // — counting them on top of the base rows double-counts
-          val baseThrough = AuditBase.read(dir.toString)
-            .map(_.throughEpoch).getOrElse(Long.MinValue)
-          (if (versionAsOf.isEmpty)
-            AuditBase.read(dir.toString)
-              .map(_.files.map(_._2).sum).getOrElse(0L)
-          else 0L) +
-          AuditPartition.manifestEntries(dir).collect {
-            case (f, r) if AuditScan.epochVisible(f, versionAsOf) &&
-              AuditScan.epochOf(f).forall(_ > baseThrough) => r
-          }.sum
-          } -
-            // current-state counts subtract the directory's delete
-            // vectors (partitioned delta DML); pinned reads ignore them
-            (if (versionAsOf.isEmpty) AuditDeletes.count(dir.toString) else 0L)
-      }.sum
-    else
-      // current-state counts subtract the delete vectors (kept exact by
-      // append's dedup); pinned reads ignore vectors, so no adjustment
-      unpartitionedCount() -
-        (if (versionAsOf.isEmpty) AuditDeletes.count(path) else 0L)
-
-  private def unpartitionedCount(): Long = {
-    val dir = java.nio.file.Paths.get(path)
-    val epochRe =
-      """\{"epoch":(-?\d+),"files":\d+,"rows":(\d+)(?:,"ts":\d+)?\}""".r
-    // base checkpoint: current-state counts swap the superseded epochs'
-    // _EPOCHS rows for the base manifest total (which includes the
-    // still-subtracted vector-deleted rows); pinned counts keep reading
-    // _EPOCHS, which OPTIMIZE never rewrites
-    val base = if (versionAsOf.isEmpty) AuditBase.read(path) else None
-    val baseThrough = base.map(_.throughEpoch).getOrElse(Long.MinValue)
-    val baseRows = base.map(_.files.map(_._2).sum).getOrElse(0L)
-    val epochRows: Long = baseRows + {
-      val f = dir.resolve("_EPOCHS")
-      if (java.nio.file.Files.exists(f))
-        java.nio.file.Files.readAllLines(f).asScala.collect {
-          case epochRe(e, r) if versionAsOf.forall(e.toLong <= _) &&
-            e.toLong > baseThrough => r.toLong
-        }.sum
-      else 0L
-    }
-    val batchRows: Long =
-      if (versionAsOf.isEmpty)
-        // logical manifest (incl. OCC txn commits); live entries only
-        AuditBase.readManifest(path)
-          .collect { case e if !e.folded => e.rows }.sum
-      else 0L
-    epochRows + batchRows
-  }
-
   override def planInputPartitions(): Array[InputPartition] = {
     AuditBase.checkNotExpired(path, versionAsOf) // VACUUM's retention bound
+    val dirs = survivingDirs.map { case (relDir, dir) =>
+      AuditScan.dirFiles(relDir, dir, versionAsOf) }
     Array(AuditCountPartition(aggs.map {
-      case AuditMetaAgg("count", _)   => manifestCount()
-      case AuditMetaAgg(op, Some(f))  => statValue(op, f)
+      case AuditMetaAgg("count", _)   =>
+        dirs.map(_.rows(current = versionAsOf.isEmpty)).sum
+      case AuditMetaAgg(op, Some(f))  => statValue(dirs, op, f)
       case other => throw new IllegalStateException(s"meta agg $other")
     }))
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(partition: InputPartition)
-          : PartitionReader[InternalRow] = {
-        val vals = partition.asInstanceOf[AuditCountPartition].vals
-        new PartitionReader[InternalRow] {
-          private var emitted = false
-          override def next(): Boolean =
-            if (emitted) false else { emitted = true; true }
-          override def get(): InternalRow =
-            new org.apache.spark.sql.catalyst.expressions
-              .GenericInternalRow(vals.toArray)
-          override def close(): Unit = ()
-        }
-      }
-    }
+    AuditCountPartition.ReaderFactory
 }
 
 final case class AuditCountPartition(vals: Seq[Any])
     extends org.apache.spark.sql.connector.read.InputPartition
 
-/** Manifest-driven scan: one InputPartition per committed file. Also the
-  * STREAMING-TAIL source ([[AuditMicroBatchStream]]): the `_EPOCHS` commit
-  * log doubles as an offset log, so a downstream job can subscribe to the
-  * table and receive each committed epoch as a micro-batch — the
-  * write-side two-phase commit becomes an end-to-end exactly-once bus. */
+private[sources] object AuditCountPartition {
+  import org.apache.spark.sql.connector.read._
+
+  /** Emits each partition's precomputed values as its one row. */
+  object ReaderFactory extends PartitionReaderFactory {
+    override def createReader(partition: InputPartition)
+        : PartitionReader[InternalRow] = {
+      val vals = partition.asInstanceOf[AuditCountPartition].vals
+      new PartitionReader[InternalRow] {
+        private var emitted = false
+        override def next(): Boolean =
+          if (emitted) false else { emitted = true; true }
+        override def get(): InternalRow =
+          new org.apache.spark.sql.catalyst.expressions
+            .GenericInternalRow(vals.toArray)
+        override def close(): Unit = ()
+      }
+    }
+  }
+}
+
+/** Metadata-driven scan over both layouts: each surviving directory's
+  * files come from [[AuditScan.dirFiles]], planned as one InputPartition
+  * per file on a zero-level table and one per directory on a partitioned
+  * one. Also the STREAMING-TAIL source ([[AuditMicroBatchStream]], both
+  * layouts): the `_EPOCHS` commit log doubles as an offset log, so a
+  * downstream job can subscribe to the table and receive each committed
+  * epoch as a micro-batch — the write-side two-phase commit becomes an
+  * end-to-end exactly-once bus. */
 final class AuditScan(path: String, writeSchema: StructType,
     required: StructType, versionAsOf: Option[Long],
     partLevels: Seq[AuditPartition.Level] = Nil,
@@ -1346,60 +1220,29 @@ final class AuditScan(path: String, writeSchema: StructType,
     * itself for broadcast while the unfiltered read stays shuffle-sided
     * (the same CBO contract the paged source reports; at scale this is
     * what turns "filtered fact ⋈ fact" into a broadcast join instead of
-    * two full shuffles). `numRows` is reported only when every surviving
+    * two full shuffles). `numRows` is reported only when every planned
     * file's count is metadata-known (base/manifest entries); epoch files
-    * track rows per EPOCH, not per file, so a scan containing them
-    * reports size only rather than guessing. */
+    * at a zero-level root track rows per EPOCH, not per file, and pinned
+    * reads filter base rows by origin, so such a scan reports size only
+    * rather than guessing. */
   override def estimateStatistics(): Statistics = {
-    val dir = java.nio.file.Paths.get(path)
     def sizeOf(p: java.nio.file.Path): Long =
       try java.nio.file.Files.size(p) catch { case _: Exception => 0L }
+    val current = versionAsOf.isEmpty
+    val plans = dirPlans()
     // (file path, rows when metadata-known)
-    val files: Seq[(java.nio.file.Path, Option[Long])] =
-      if (partLevels.nonEmpty) survivingDirs.flatMap { case (_, d) =>
-        AuditPartition.manifestEntries(d).collect {
-          case (f, r) if AuditScan.epochVisible(f, versionAsOf) =>
-            (d.resolve(f), Some(r))
-        }
-      }
-      else {
-        val base = AuditBase.read(path)
-        val baseThrough = base.map(_.throughEpoch).getOrElse(Long.MinValue)
-        val wanted = versionAsOf match {
-          case Some(v) => committedEpochsMemo.filter(e => e <= v && e > baseThrough)
-          case None    => committedEpochsMemo.filter(_ > baseThrough)
-        }
-        val baseFiles = base.toSeq.flatMap(_.files).collect {
-          // pinned reads filter base rows to epoch origins <= v: the file
-          // row count is an upper bound, not the answer — size only
-          case (f, r) if !skippable(f) =>
-            (dir.resolve(f), if (versionAsOf.isEmpty) Some(r) else None)
-        }
-        val batchFiles =
-          if (versionAsOf.isEmpty)
-            AuditBase.readManifest(path).collect {
-              case e if !e.folded && !skippable(e.file) =>
-                (dir.resolve(e.file), Some(e.rows))
-            }
-          else Seq.empty
-        val epochFiles = AuditScan.epochFiles(path, wanted.toSet).collect {
-          case (f, _) if !skippable(f) => (dir.resolve(f), None)
-        }
-        baseFiles ++ batchFiles ++ epochFiles
-      }
+    val files: Seq[(java.nio.file.Path, Option[Long])] = plans.flatMap { p =>
+      p.base.map { case (f, r) => (p.dir.resolve(f), Option.when(current)(r)) } ++
+        p.data.map { case (f, r) => (p.dir.resolve(f), r) }
+    }
     val bytes = files.map(f => sizeOf(f._1)).sum
     val rows: Option[Long] =
       if (files.forall(_._2.isDefined)) {
-        val raw = files.flatMap(_._2).sum
         val deleted =
-          if (versionAsOf.isEmpty && !includeDeleted) {
-            if (partLevels.nonEmpty)
-              survivingDirs.map { case (_, d) =>
-                AuditDeletes.count(d.toString) }.sum
-            else AuditDeletes.count(path)
-          }
+          if (current && !includeDeleted)
+            plans.map(p => AuditDeletes.count(p.dir.toString)).sum
           else 0L
-        Some(math.max(0L, raw - deleted))
+        Some(math.max(0L, files.flatMap(_._2).sum - deleted))
       } else None
     new Statistics {
       override def sizeInBytes: java.util.OptionalLong =
@@ -1408,9 +1251,6 @@ final class AuditScan(path: String, writeSchema: StructType,
         rows.fold(java.util.OptionalLong.empty())(java.util.OptionalLong.of)
     }
   }
-
-  private lazy val committedEpochsMemo: Seq[Long] =
-    AuditScan.committedEpochs(path)
 
   /** Sorted-scan reporting: after `OPTIMIZE ... sort_by => c` every base
     * file is internally sorted on c, and each file is one input
@@ -1495,8 +1335,17 @@ final class AuditScan(path: String, writeSchema: StructType,
 
   /** ZONE-MAP skip: a file whose `_STATS` bounds prove every row fails
     * the pushed conjuncts is dropped from planning without being opened
-    * (the conjuncts stay residual, so a skip can never change answers). */
-  private lazy val fileStats = AuditStats.read(path)
+    * (the conjuncts stay residual, so a skip can never change answers).
+    * Each directory carries its own `_STATS`. */
+  private def skipperOf(dir: java.nio.file.Path): String => Boolean =
+    if (skipFilters.isEmpty) _ => false
+    else {
+      val st = AuditStats.read(dir.toString)
+      f => st.get(f).exists(
+        AuditStats.canSkip(_, skipFilters, statableCols, strCols))
+    }
+  private lazy val skippable: String => Boolean =
+    skipperOf(java.nio.file.Paths.get(path))
   // columns with an EXISTENCE DEFAULT are excluded: for them, "no stats
   // line entry" means "rows predate the column and hold the default",
   // NOT "all null" — the all-null refutation would wrongly skip files
@@ -1511,20 +1360,7 @@ final class AuditScan(path: String, writeSchema: StructType,
     writeSchema.fields.collect {
       case f if AuditStats.strStatable(f.dataType) && noExistsDefault(f) => f.name
     }.toSet
-  private def skippable(f: String): Boolean =
-    skipFilters.nonEmpty &&
-      fileStats.get(f).exists(
-        AuditStats.canSkip(_, skipFilters, statableCols, strCols))
 
-  /** Mixed-table TIMESTAMP AS OF plan: the state at wall-clock `t` is
-    * (streaming epochs committed at/before t) + (txn batch appends
-    * committed at/before t) with EXACTLY the delete vectors committed
-    * at/before t applied — an UPDATE's delete and its replacement row
-    * share one commit ts, so a travel instant sees the whole statement
-    * or none of it. Refuses loudly whenever part of the history cannot
-    * be placed on the commit-time axis (pre-commit-time vintages,
-    * VACUUM-folded vectors, a base checkpoint): silently excluding a
-    * vintage would misanswer the audit question the feature exists for. */
   /** Shared time-pin refusal: history that cannot be placed on the
     * commit-time axis fails loudly rather than silently excluding. */
   private def timePinRefuse(what: String): Nothing =
@@ -1558,9 +1394,7 @@ final class AuditScan(path: String, writeSchema: StructType,
         s"audit TIMESTAMP AS OF: no commit at or before $t ms at $path" +
           minTs.fold("")(m => s" (earliest timestamped commit: $m)"))
     survivingDirs.map { case (relDir, dir) =>
-      val dirStats =
-        if (skipFilters.nonEmpty) AuditStats.read(dir.toString)
-        else Map.empty[String, AuditStats.FileStats]
+      val skip = skipperOf(dir)
       val base = AuditBase.read(dir.toString)
       val baseThrough = base.map(_.throughEpoch).getOrElse(Long.MinValue)
       val allEntries = AuditBase.readManifest(dir.toString)
@@ -1610,16 +1444,12 @@ final class AuditScan(path: String, writeSchema: StructType,
           case None     => e.ts.exists(_ <= t)
         }
       val files = entries.filter(visibleAt).map(_.file)
-        .filterNot(f => dirStats.get(f).exists(
-          AuditStats.canSkip(_, skipFilters, statableCols, strCols)))
-        .map(f => dir.resolve(f).toString)
+        .filterNot(skip).map(f => dir.resolve(f).toString)
       val dirVectors = vecs
         .collect { case (f, pp, Some(ts)) if ts <= t => (f, pp) }
         .groupBy(_._1).map { case (f, ps) => (f, ps.map(_._2).toSet) }
       val baseFiles = base.toSeq.flatMap(_.files.collect {
-        case (f, _) if !dirStats.get(f).exists(
-          AuditStats.canSkip(_, skipFilters, statableCols, strCols)) =>
-          dir.resolve(f).toString
+        case (f, _) if !skip(f) => dir.resolve(f).toString
       })
       AuditDirPartition(files, relDir, partLevels,
         vectors = dirVectors,
@@ -1630,6 +1460,16 @@ final class AuditScan(path: String, writeSchema: StructType,
     }.toArray
   }
 
+  /** Mixed-table TIMESTAMP AS OF plan: the state at wall-clock `t` is
+    * (streaming epochs committed at/before t) + (txn batch appends
+    * committed at/before t) with EXACTLY the delete vectors committed
+    * at/before t applied — an UPDATE's delete and its replacement row
+    * share one commit ts, so a travel instant sees the whole statement
+    * or none of it. Refuses loudly whenever part of the history cannot
+    * be placed on the commit-time axis (pre-commit-time vintages,
+    * unstamped VACUUM folds, instants before a fold watermark or the
+    * retention bound): silently excluding a vintage would misanswer the
+    * audit question the feature exists for. */
   private def planTimePinned(t: Long): Array[InputPartition] = {
     val dir = java.nio.file.Paths.get(path)
     def refuse(what: String): Nothing = timePinRefuse(what)
@@ -1719,110 +1559,67 @@ final class AuditScan(path: String, writeSchema: StructType,
     }).toArray
   }
 
+  /** Each surviving directory's share of a current or `VERSION AS OF`
+    * read, after zone-map skipping: the plan opens exactly these files
+    * and the statistics total exactly these files. */
+  private def dirPlans(): Seq[AuditScan.DirPlan] =
+    survivingDirs.map { case (relDir, dir) =>
+      val d = AuditScan.dirFiles(relDir, dir, versionAsOf)
+      val skip = skipperOf(dir)
+      // root epoch files track rows per EPOCH, not per file: rows unknown.
+      // The compaction snapshot pins epochs <= snapMaxEpoch and the batch
+      // files named in snapFiles (OPTIMIZE's own rewrite scan).
+      val data = d.live.map { case (f, r) => (f, Some(r): Option[Long]) } ++
+        d.epochFiles.map { case (f, _) => (f, None) }
+      AuditScan.DirPlan(relDir, dir, d.baseFiles.filterNot(b => skip(b._1)),
+        data.filter { case (f, _) =>
+          !skip(f) && (AuditScan.epochOf(f) match {
+            case Some(e) => snapMaxEpoch.forall(e <= _)
+            case None    => snapFiles.forall(_.contains(f))
+          })
+        })
+    }
+
   override def planInputPartitions(): Array[InputPartition] = {
     asOfMillis match {
       case Some(t) if partLevels.isEmpty  => return planTimePinned(t)
       case Some(t) => return planTimePinnedPartitioned(t)
       case None    => ()
     }
-    if (partLevels.nonEmpty) {
-        // per-DIRECTORY zone maps: inside each surviving partition the
-        // same bounds/bloom refutation drops files; the partition itself
-        // stays (possibly empty) so KeyGroupedPartitioning is unaffected.
-        // A pinned (VERSION AS OF) read keeps only streaming-epoch files
-        // with epoch <= v — batch txn appends carry no epoch, the same
-        // exclusion the unpartitioned pinned read applies. A directory
-        // with a BASE checkpoint (partitioned OPTIMIZE) serves its
-        // pre-compaction rows from origin-tagged base files read INSIDE
-        // the same InputPartition: current reads drop origin-vector-
-        // deleted base rows, pinned reads keep epoch origins <= v.
-        return survivingDirs.map { case (relDir, dir) =>
-          val dirStats =
-            if (skipFilters.nonEmpty) AuditStats.read(dir.toString)
-            else Map.empty[String, AuditStats.FileStats]
-          val dirBase = AuditBase.read(dir.toString)
-          // epochs at/under the dir's base throughEpoch are served from
-          // the base by ORIGIN — a LIVE epoch entry <= through (a
-          // streaming-writer epoch replay racing a partitioned OPTIMIZE)
-          // must not ALSO scan, or its rows double-count (mirrors
-          // visibleAt's `ep > baseThrough` in the time-pinned plan)
-          val baseThrough =
-            dirBase.map(_.throughEpoch).getOrElse(Long.MinValue)
-          val files = AuditPartition.manifestEntries(dir).collect {
-            case (f, _) if AuditScan.epochVisible(f, versionAsOf) &&
-              AuditScan.epochOf(f).forall(_ > baseThrough) &&
-              !dirStats.get(f).exists(
-                AuditStats.canSkip(_, skipFilters, statableCols, strCols)) =>
-              dir.resolve(f).toString
-          }
-          // per-directory delete vectors (partitioned delta DML) apply to
-          // CURRENT reads only — pinned reads reconstruct pure epoch
-          // history, the same contract as the unpartitioned path
-          val dirVectors =
-            if (versionAsOf.isEmpty && !includeDeleted)
-              AuditDeletes.read(dir.toString)
-            else Map.empty[String, Set[Long]]
-          val baseFiles = dirBase.toSeq
-            .flatMap(_.files.collect {
-              case (f, _) if !dirStats.get(f).exists(
-                AuditStats.canSkip(_, skipFilters, statableCols, strCols)) =>
-                dir.resolve(f).toString
-            })
-          AuditDirPartition(files, relDir, partLevels,
-            vectors = dirVectors,
-            baseFiles = baseFiles,
-            baseMaxEpoch = versionAsOf,
-            baseEpochOriginOnly = versionAsOf.isDefined): InputPartition
-        }.toArray
-    }
-    val dir = java.nio.file.Paths.get(path)
     AuditBase.checkNotExpired(path, versionAsOf) // VACUUM's retention bound
-    // with a base checkpoint, epochs <= throughEpoch (and the folded batch
-    // files) are served from the origin-tagged base rows instead of their
-    // original files — see AuditBase
-    val base = AuditBase.read(path)
-    val baseThrough = base.map(_.throughEpoch).getOrElse(Long.MinValue)
-    val wanted = versionAsOf match {
-      case Some(v) => AuditScan.committedEpochs(path)
-        .filter(e => e <= v && e > baseThrough).toSet
-      case None => AuditScan.committedEpochs(path)
-        .filter(e => e > baseThrough && snapMaxEpoch.forall(e <= _)).toSet
-    }
-    val epochFiles: Seq[(String, Option[Long])] =
-      AuditScan.epochFiles(path, wanted).map { case (f, e) => (f, Some(e)) }
-    // batch-committed files come from the logical manifest — _MANIFEST
-    // plus unconsolidated OCC txn commits — never a directory glob; they
-    // carry no epoch, so they only appear in the un-pinned read. Folded
-    // entries (rows now in the base) are skipped.
-    val batchFiles: Seq[(String, Option[Long])] =
-      if (versionAsOf.isEmpty)
-        AuditBase.readManifest(path).collect {
-          case e if !e.folded && snapFiles.forall(_.contains(e.file)) =>
-            (e.file, None)
-        }
-      else Seq.empty
-    // delete vectors apply to CURRENT-state reads only: pinned reads
-    // reconstruct pure epoch history (delta DML never retro-edits it)
-    val vectors: Map[String, Set[Long]] =
-      if (versionAsOf.isEmpty && !includeDeleted) AuditDeletes.read(path)
+    // base files serve the epochs <= throughEpoch and the folded batch
+    // files by ORIGIN (see AuditBase): current reads drop origin-vector-
+    // deleted rows, pinned reads keep epoch origins <= v. Delete vectors
+    // apply to CURRENT reads only — pinned reads reconstruct pure epoch
+    // history (delta DML never retro-edits it).
+    val pinned = versionAsOf.isDefined
+    def vectorsOf(p: AuditScan.DirPlan): Map[String, Set[Long]] =
+      if (!pinned && !includeDeleted) AuditDeletes.read(p.dir.toString)
       else Map.empty
-    val baseParts: Seq[InputPartition] = base.toSeq.flatMap { b =>
-      b.files.collect { case (f, _) if !skippable(f) =>
-        versionAsOf match {
-          // pinned: pure epoch history — epoch-origin rows <= v, no vectors
-          case Some(v) => AuditBasePartition(dir.resolve(f).toString,
-            maxEpoch = Some(v), epochOriginOnly = true)
-          // current: every base row whose ORIGIN id is not vector-deleted
-          case None => AuditBasePartition(dir.resolve(f).toString,
-            vectors = vectors)
-        }
-      }
-    }
-    (baseParts ++ (batchFiles ++ epochFiles).collect {
-      case (f, e) if !skippable(f) =>
-        AuditFilePartition(dir.resolve(f).toString, e,
+    val plans = dirPlans()
+    // packaging only differs per layout: a partitioned read keeps one
+    // partition per surviving directory (possibly empty, base files read
+    // inside it) so KeyGroupedPartitioning holds; a zero-level read
+    // plans one partition per file
+    if (partLevels.nonEmpty)
+      plans.map { p =>
+        AuditDirPartition(p.data.map(f => p.dir.resolve(f._1).toString),
+          p.relDir, partLevels,
+          vectors = vectorsOf(p),
+          baseFiles = p.base.map(b => p.dir.resolve(b._1).toString),
+          baseMaxEpoch = versionAsOf,
+          baseEpochOriginOnly = pinned): InputPartition
+      }.toArray
+    else plans.flatMap { p =>
+      val vectors = vectorsOf(p)
+      p.base.map { case (f, _) =>
+        AuditBasePartition(p.dir.resolve(f).toString, maxEpoch = versionAsOf,
+          epochOriginOnly = pinned, vectors = vectors): InputPartition
+      } ++ p.data.map { case (f, _) =>
+        AuditFilePartition(p.dir.resolve(f).toString, AuditScan.epochOf(f),
           vectors.getOrElse(f, Set.empty).toSeq.sorted): InputPartition
-    }).toArray
+      }
+    }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -1830,10 +1627,7 @@ final class AuditScan(path: String, writeSchema: StructType,
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    if (partLevels.nonEmpty)
-      new AuditPartitionedMicroBatchStream(path, writeSchema, required,
-        partLevels)
-    else new AuditMicroBatchStream(path, writeSchema, required)
+    new AuditMicroBatchStream(path, writeSchema, required, partLevels)
 }
 
 /** DELETE VECTORS: `_DELETES` holds one json line per delta-deleted row —
@@ -2318,6 +2112,83 @@ private[sources] object AuditScan {
     }.toSeq.sortBy(_._1)
     finally listing.close()
   }
+
+  /** The files one directory of an audit table holds for a read pinned at
+    * `pin` (None = current state). `base` is the directory's `_BASE`
+    * checkpoint; `live` its live manifest entries (file, rows) visible at
+    * the pin, epoch entries only above the base's throughEpoch (epochs at
+    * or under it are served from the base by origin). Only the ROOT of a
+    * zero-level table (relDir `""`) records streamed epochs outside its
+    * manifest, in the `_EPOCHS` log: `epochFiles` are the listed files
+    * (file, epoch) of its committed epochs visible at the pin and above
+    * the base, `epochRows` every visible epoch's rows from its `_EPOCHS`
+    * line, base-held epochs included. */
+  final case class DirFiles(dir: java.nio.file.Path,
+      base: Option[AuditBase.Info], live: Seq[(String, Long)],
+      epochFiles: Seq[(String, Long)], epochRows: Map[Long, Long]) {
+    def baseThrough: Long = base.fold(Long.MinValue)(_.throughEpoch)
+    def baseFiles: Seq[(String, Long)] = base.toSeq.flatMap(_.files)
+    /** Every non-base file a read of the directory opens. */
+    def dataFiles: Seq[String] = live.map(_._1) ++ epochFiles.map(_._1)
+
+    /** Metadata-only row count. Current: base rows (vector-deleted rows
+      * are in the base by construction) + live rows + the rows of epochs
+      * above the base − the directory's delete vectors. Pinned: live rows
+      * + every visible epoch's `_EPOCHS` rows, vectors ignored (pinned
+      * reads reconstruct pure epoch history); a pinned count over a
+      * partition directory's base needs an origin scan and is refused by
+      * the pushdown gate before it gets here. */
+    def rows(current: Boolean): Long =
+      if (current)
+        baseFiles.map(_._2).sum + live.map(_._2).sum +
+          epochRows.collect { case (e, r) if e > baseThrough => r }.sum -
+          AuditDeletes.count(dir.toString)
+      else live.map(_._2).sum + epochRows.values.sum
+  }
+
+  def dirFiles(relDir: String, dir: java.nio.file.Path,
+      pin: Option[Long]): DirFiles = {
+    val base = AuditBase.read(dir.toString)
+    val through = base.fold(Long.MinValue)(_.throughEpoch)
+    val live = AuditBase.readManifest(dir.toString).collect {
+      case e if !e.folded && epochVisible(e.file, pin) &&
+        epochOf(e.file).forall(_ > through) => (e.file, e.rows)
+    }
+    val epochRows =
+      if (relDir.nonEmpty) Map.empty[Long, Long]
+      else epochRowsByEpoch(dir.toString).filter { case (e, _) =>
+        pin.forall(e <= _) }
+    DirFiles(dir, base, live,
+      if (epochRows.isEmpty) Seq.empty
+      else epochFiles(dir.toString, epochRows.keySet.filter(_ > through)),
+      epochRows)
+  }
+
+  /** One directory's planned read: its base files (file, rows) and data
+    * files (file, rows where the metadata knows them). */
+  final case class DirPlan(relDir: String, dir: java.nio.file.Path,
+      base: Seq[(String, Long)], data: Seq[(String, Option[Long])])
+
+  /** One directory's share of a streaming-tail slice of epochs: the slice
+    * files still on disk (file, epoch), and the slice epochs recorded here
+    * whose files are gone (reclaimed by OPTIMIZE + VACUUM) — those replay
+    * from the directory's base by origin. A partition directory records
+    * its epochs as manifest entries, folded tombstones included (OPTIMIZE
+    * leaves the files on disk until VACUUM); the root of a zero-level
+    * table records every committed epoch in `_EPOCHS`, so a slice epoch
+    * with no listed file is gone there (or had no rows). */
+  def epochSlice(relDir: String, dir: java.nio.file.Path, slice: Set[Long])
+      : (Seq[(String, Long)], Set[Long]) =
+    if (relDir.isEmpty) {
+      val onDisk = epochFiles(dir.toString, slice)
+      (onDisk, slice -- onDisk.map(_._2))
+    } else {
+      val recorded = AuditBase.readManifest(dir.toString).flatMap(e =>
+        epochOf(e.file).filter(slice.contains).map((e.file, _)))
+      val (onDisk, gone) = recorded.partition { case (f, _) =>
+        java.nio.file.Files.exists(dir.resolve(f)) }
+      (onDisk, gone.map(_._2).toSet)
+    }
 }
 
 final case class AuditFilePartition(file: String, epoch: Option[Long],
@@ -2386,13 +2257,24 @@ final case class AuditDirPartition(files: Seq[String], relDir: String,
       }.toArray[Any])
 }
 
-/** Tail the `_EPOCHS` commit log as a micro-batch stream: offset = number
-  * of committed epochs consumed. Epochs are immutable once committed (the
-  * writer's replay discipline rewrites, never reorders), so the offset →
-  * file mapping is stable across restarts — the standard replayable-source
-  * contract, derived entirely from the sink's own metadata. */
+/** Tail the `_EPOCHS` commit log as a micro-batch stream, on both
+  * layouts: offset = number of committed epochs consumed. The table-level
+  * log is the one offset axis (every streaming commit writes exactly one
+  * line per epoch); each slice resolves per directory through
+  * [[AuditScan.epochSlice]] — an epoch's part files sit in the root of a
+  * zero-level table, or in the partition directories its rows routed to.
+  * Epoch files carry their epoch in the name (`part-e<epoch>-NNNNN.jsonl`,
+  * disjoint from the batch writer's `part-x<gen>-NNNNN.jsonl` namespace),
+  * and replay retraction rewrites an epoch's full file set before its
+  * `_EPOCHS` line lands, so the offset → file mapping is stable across
+  * restarts — the standard replayable-source contract, derived entirely
+  * from the sink's own metadata. OPTIMIZE preserves the epoch log: a
+  * running tail resumes across a compaction, reading epoch files while
+  * they are on disk and replaying epochs whose files VACUUM reclaimed from
+  * the directory's base by origin (epochFilter) — the same exactly-once
+  * accounting either way. */
 final class AuditMicroBatchStream(path: String, writeSchema: StructType,
-    required: StructType)
+    required: StructType, partLevels: Seq[AuditPartition.Level] = Nil)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
   import org.apache.spark.sql.connector.read._
@@ -2404,7 +2286,6 @@ final class AuditMicroBatchStream(path: String, writeSchema: StructType,
   override def deserializeOffset(json: String): Offset =
     PagedOffset(json.trim.toInt)
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val dir = java.nio.file.Paths.get(path)
     val eps = epochs
     val from = start.asInstanceOf[PagedOffset].page
     // Offsets index the sorted epoch log. TRUNCATE and the row-level
@@ -2414,98 +2295,19 @@ final class AuditMicroBatchStream(path: String, writeSchema: StructType,
     // replayable-source contract, so fail loudly instead.
     require(from <= eps.size,
       s"audit stream: restored offset $from exceeds the epoch log length " +
-        s"${eps.size} at $path — the table's epochs were truncated or " +
-        "rewritten since the checkpoint; restart from a fresh checkpoint")
-    val slice = eps.slice(from, end.asInstanceOf[PagedOffset].page).toSet
-    val onDisk = AuditScan.epochFiles(path, slice)
-    // epochs whose original files were reclaimed (OPTIMIZE + VACUUM)
-    // replay from the origin-tagged base instead — the offset axis is the
-    // _EPOCHS log, which maintenance never rewrites, so a tail spanning a
-    // compaction keeps its exactly-once accounting
-    val gone = slice -- onDisk.map(_._2).toSet
-    val baseParts: Seq[InputPartition] =
-      if (gone.isEmpty) Seq.empty
-      else AuditBase.read(path) match {
-        case Some(b) => b.files.map { case (f, _) =>
-          AuditBasePartition(dir.resolve(f).toString,
-            epochFilter = Some(gone)): InputPartition
-        }
-        case None => Seq.empty // zero-file epochs: nothing to read
-      }
-    (onDisk.map { case (f, e) =>
-      AuditFilePartition(dir.resolve(f).toString, Some(e)): InputPartition
-    } ++ baseParts).toArray
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new AuditReaderFactory(writeSchema, required)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-/** Streaming TAIL of a PARTITIONED audit table. The offset axis is the
-  * same table-level `_EPOCHS` log the unpartitioned tail uses (the
-  * partitioned streaming commit writes exactly one line per epoch); what
-  * differs is file RESOLUTION: an epoch's part files live inside the
-  * partition directories its rows routed to, so each micro-batch slice is
-  * resolved MANIFEST-DRIVEN across every partition — epoch files carry
-  * their epoch in the name (`part-e<epoch>-NNNNN.jsonl`, disjoint from
-  * the batch writer's `part-x<gen>-NNNNN.jsonl` namespace), and replay
-  * retraction rewrites an epoch's full file set before its `_EPOCHS` line
-  * lands, keeping the name→epoch mapping stable. A subscriber therefore
-  * receives each committed epoch exactly once regardless of how its rows
-  * spread across partitions. Partitioned OPTIMIZE (per-dir base
-  * checkpoints) PRESERVES the epoch log: a running tail resumes across
-  * the compaction, reading tombstoned epoch files from disk until
-  * VACUUM reclaims them and replaying reclaimed epochs from the dir's
-  * base by origin (epochFilter) — same exactly-once accounting either
-  * way. */
-final class AuditPartitionedMicroBatchStream(path: String,
-    writeSchema: StructType, required: StructType,
-    partLevels: Seq[AuditPartition.Level])
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
-  import org.apache.spark.sql.connector.read._
-
-  private def epochs: Seq[Long] = AuditScan.committedEpochs(path)
-
-  override def initialOffset(): Offset = PagedOffset(0)
-  override def latestOffset(): Offset = PagedOffset(epochs.size)
-  override def deserializeOffset(json: String): Offset =
-    PagedOffset(json.trim.toInt)
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val eps = epochs
-    val from = start.asInstanceOf[PagedOffset].page
-    require(from <= eps.size,
-      s"audit stream: restored offset $from exceeds the epoch log length " +
         s"${eps.size} at $path — the table's epochs were truncated, " +
         "rewritten, or folded by OPTIMIZE since the checkpoint; restart " +
         "from a fresh checkpoint")
     val slice = eps.slice(from, end.asInstanceOf[PagedOffset].page).toSet
-    val epochRe = """part-e(-?\d+)-\d+\.jsonl""".r
-    // resolution reads the manifests INCLUDING folded tombstones: a
-    // per-dir base checkpoint (partitioned OPTIMIZE) tombstones compacted
-    // epoch entries but leaves their files on disk until VACUUM reclaims
-    // them — a reclaimed epoch replays from the dir's BASE by origin
-    // (epochFilter), so a running tail keeps exactly-once accounting
-    // across maintenance (the offset axis — the root `_EPOCHS` log — is
-    // never rewritten). Same replay design as the unpartitioned tail.
-    AuditPartition.listDirs(path, partLevels).flatMap { case (_, pdir) =>
-      val entries = AuditBase.readManifest(pdir.toString).filter(e =>
-        epochRe.pattern.matcher(e.file).matches() &&
-          slice.contains(AuditScan.epochOf(e.file).get))
-      val (onDisk, gone) = entries.partition(e =>
-        java.nio.file.Files.exists(pdir.resolve(e.file)))
-      val goneEpochs = gone.flatMap(e => AuditScan.epochOf(e.file)).toSet
-      val baseParts: Seq[InputPartition] =
-        if (goneEpochs.isEmpty) Seq.empty
-        else AuditBase.read(pdir.toString).toSeq.flatMap(_.files.map {
-          case (bf, _) => AuditBasePartition(pdir.resolve(bf).toString,
-            epochFilter = Some(goneEpochs)): InputPartition
-        })
-      onDisk.map { e =>
-        AuditFilePartition(pdir.resolve(e.file).toString,
-          AuditScan.epochOf(e.file)): InputPartition
-      } ++ baseParts
+    AuditPartition.listDirs(path, partLevels).flatMap { case (relDir, dir) =>
+      val (onDisk, gone) = AuditScan.epochSlice(relDir, dir, slice)
+      onDisk.map { case (f, e) =>
+        AuditFilePartition(dir.resolve(f).toString, Some(e)): InputPartition
+      } ++ (if (gone.isEmpty) Seq.empty
+        else AuditBase.read(dir.toString).toSeq.flatMap(_.files.map {
+          case (bf, _) => AuditBasePartition(dir.resolve(bf).toString,
+            epochFilter = Some(gone)): InputPartition
+        }))
     }.toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
@@ -4897,8 +4699,8 @@ private[sources] object AuditStreamingWrite {
   * keeping exactly-once semantics per epoch. Partitioned BATCH reads stay
   * manifest-driven per directory (pruning, SPJ, and metadata counts all
   * keep working on a streamed table), and the table-level `_EPOCHS` log
-  * doubles as the offset axis of the partitioned streaming TAIL
-  * ([[AuditPartitionedMicroBatchStream]]). */
+  * doubles as the offset axis of the streaming TAIL
+  * ([[AuditMicroBatchStream]]). */
 final class AuditPartitionedStreamingWrite(path: String, schema: StructType,
     partLevels: Seq[AuditPartition.Level],
     queryId: Option[String] = None,

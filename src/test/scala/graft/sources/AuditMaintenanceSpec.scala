@@ -11,8 +11,26 @@ import graft.SparkSpec
   * retention-bounded time-travel expiry — with every read contract
   * (current, pinned, metadata count, change feed, epoch tail, delta DML)
   * asserted identical across maintenance. */
-class AuditMaintenanceSpec extends SparkSpec {
+class AuditMaintenanceSpec extends SparkSpec
+    with org.scalatest.BeforeAndAfterAll {
+  // the shared warehouse is deleted when the suite ends; every other
+  // directory a test makes is deleted when that test ends
   private lazy val wh = java.nio.file.Files.createTempDirectory("graft_maint_wh")
+  private val made =
+    scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+
+  private def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    made.synchronized(made += d)
+    d
+  }
+
+  override def withFixture(test: NoArgTest) =
+    try super.withFixture(test)
+    finally made.synchronized { made.foreach(deleteTree); made.clear() }
+
+  override def afterAll(): Unit =
+    try deleteTree(wh) finally super.afterAll()
 
   private def init(): Unit = {
     spark.conf.set("spark.sql.catalog.graft_m", classOf[GraftCatalog].getName)
@@ -37,7 +55,7 @@ class AuditMaintenanceSpec extends SparkSpec {
     init()
     spark.sql(s"DROP TABLE IF EXISTS graft_m.db.$t")
     spark.sql(s"CREATE TABLE graft_m.db.$t (id BIGINT, v BIGINT) USING audit")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_maint_ckpt")
+    val ckpt = tempDir("graft_maint_ckpt")
     val q = spark.readStream.format(classOf[PagedSource].getName)
       .option("pages", "4").option("pageSize", "100")
       .option("pagesPerTrigger", "1")
@@ -179,8 +197,8 @@ class AuditMaintenanceSpec extends SparkSpec {
     assert(cdfEvents("vac1") === cdf)
 
     // the epoch TAIL replays every epoch from the base (same offset axis)
-    val tailCkpt = java.nio.file.Files.createTempDirectory("graft_maint_tail")
-    val outDir = java.nio.file.Files.createTempDirectory("graft_maint_out")
+    val tailCkpt = tempDir("graft_maint_tail")
+    val outDir = tempDir("graft_maint_out")
     val q = spark.readStream
       .schema(org.apache.spark.sql.types.StructType(cdfSchema.take(2)))
       .format(classOf[JsonAuditSink].getName)
@@ -430,7 +448,7 @@ class AuditMaintenanceSpec extends SparkSpec {
     spark.sql(
       """CREATE TABLE graft_m.db.ps1 (id BIGINT, flag BIGINT)
         |USING audit PARTITIONED BY (flag)""".stripMargin)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_pstream_ckpt")
+    val ckpt = tempDir("graft_pstream_ckpt")
     val q = spark.readStream.format(classOf[PagedSource].getName)
       .option("pages", "4").option("pageSize", "100")
       .option("pagesPerTrigger", "1")
@@ -496,7 +514,7 @@ class AuditMaintenanceSpec extends SparkSpec {
     spark.sql(
       """CREATE TABLE graft_m.db.ps2 (id BIGINT, flag BIGINT)
         |USING audit PARTITIONED BY (flag)""".stripMargin)
-    val wckpt = java.nio.file.Files.createTempDirectory("graft_ptail_wckpt")
+    val wckpt = tempDir("graft_ptail_wckpt")
     def writeRun(pages: Int): Unit = {
       val w = spark.readStream.format(classOf[PagedSource].getName)
         .option("pages", pages.toString).option("pageSize", "100")
@@ -531,7 +549,7 @@ class AuditMaintenanceSpec extends SparkSpec {
     } finally q.stop()
     // the shrunken-log guard: a checkpoint past the current epoch log
     // (OPTIMIZE folds _EPOCHS) must fail loudly, not plan empty slices
-    val stream = new AuditPartitionedMicroBatchStream(
+    val stream = new AuditMicroBatchStream(
       dataDir("ps2").toString,
       spark.table("graft_m.db.ps2").schema,
       spark.table("graft_m.db.ps2").schema,
@@ -690,7 +708,7 @@ class AuditMaintenanceSpec extends SparkSpec {
     spark.sql(
       """CREATE TABLE graft_m.db.po1 (id BIGINT, flag BIGINT)
         |USING audit PARTITIONED BY (flag)""".stripMargin)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_po_ckpt")
+    val ckpt = tempDir("graft_po_ckpt")
     val q = spark.readStream.format(classOf[PagedSource].getName)
       .option("pages", "4").option("pageSize", "100")
       .option("pagesPerTrigger", "1")
@@ -1069,7 +1087,7 @@ class AuditMaintenanceSpec extends SparkSpec {
     init()
     spark.sql("DROP TABLE IF EXISTS graft_m.db.rst")
     spark.sql("CREATE TABLE graft_m.db.rst (id BIGINT, v BIGINT) USING audit")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_rst_ckpt")
+    val ckpt = tempDir("graft_rst_ckpt")
     val q = spark.readStream.format(classOf[PagedSource].getName)
       .option("pages", "4").option("pageSize", "100")
       .option("pagesPerTrigger", "1")
@@ -1124,7 +1142,7 @@ class AuditMaintenanceSpec extends SparkSpec {
     init()
     spark.sql("DROP TABLE IF EXISTS graft_m.db.rstc")
     spark.sql("CREATE TABLE graft_m.db.rstc (id BIGINT, v BIGINT) USING audit")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_rstc_ckpt")
+    val ckpt = tempDir("graft_rstc_ckpt")
     val q = spark.readStream.format(classOf[PagedSource].getName)
       .option("pages", "3").option("pageSize", "100")
       .option("pagesPerTrigger", "1")
@@ -1153,7 +1171,7 @@ class AuditMaintenanceSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS graft_m.db.rstp")
     spark.sql("CREATE TABLE graft_m.db.rstp (id BIGINT, flag BIGINT) " +
       "USING audit PARTITIONED BY (flag)")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_rstp_ckpt")
+    val ckpt = tempDir("graft_rstp_ckpt")
     val q = spark.readStream.format(classOf[PagedSource].getName)
       .option("pages", "3").option("pageSize", "90")
       .option("pagesPerTrigger", "1")

@@ -19,8 +19,22 @@ class AuditPartBaseSpec extends AnyFunSuite {
 
   private lazy val spark: SparkSession = SparkSpec.session
 
+  // every directory a test makes is deleted when that test ends
+  private val made =
+    scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+
+  private def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    made.synchronized(made += d)
+    d
+  }
+
+  override def withFixture(test: NoArgTest) =
+    try super.withFixture(test)
+    finally made.synchronized { made.foreach(deleteTree); made.clear() }
+
   private def freshCat(tag: String): (String, java.nio.file.Path) = {
-    val wh = java.nio.file.Files.createTempDirectory(s"graft_pb_${tag}_")
+    val wh = tempDir(s"graft_pb_${tag}_")
     val cat = s"graft_pb_$tag"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
@@ -28,7 +42,7 @@ class AuditPartBaseSpec extends AnyFunSuite {
   }
 
   private def streamEpochs(cat: String, pages: Int): Unit = {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_pb_ckpt")
+    val ckpt = tempDir("graft_pb_ckpt")
     val q = spark.readStream.format(classOf[PagedSource].getName)
       .option("pages", pages.toString).option("pageSize", "100")
       .option("pagesPerTrigger", "1")
@@ -120,7 +134,7 @@ class AuditPartBaseSpec extends AnyFunSuite {
     val path = wh.resolve("db").resolve("t").toString
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("flag", LongType)))
-    val tail = new AuditPartitionedMicroBatchStream(path, schema, schema,
+    val tail = new AuditMicroBatchStream(path, schema, schema,
       Seq(AuditPartition.Level("flag", LongType, None)))
     // consume epoch 0, checkpoint, then compact
     val off1 = PagedOffset(1)
@@ -169,7 +183,7 @@ class AuditPartBaseSpec extends AnyFunSuite {
     // the base by origin, exactly
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("flag", LongType)))
-    val tail = new AuditPartitionedMicroBatchStream(path, schema, schema,
+    val tail = new AuditMicroBatchStream(path, schema, schema,
       Seq(AuditPartition.Level("flag", LongType, None)))
     val fac = tail.createReaderFactory()
     val rows = tail.planInputPartitions(PagedOffset(0), tail.latestOffset())
@@ -184,7 +198,7 @@ class AuditPartBaseSpec extends AnyFunSuite {
     val (cat2, wh2) = freshCat("vac2")
     spark.sql(s"CREATE TABLE $cat2.db.t (id BIGINT, flag BIGINT) " +
       "USING audit PARTITIONED BY (flag)")
-    val ck2 = java.nio.file.Files.createTempDirectory("graft_pb_ck2")
+    val ck2 = tempDir("graft_pb_ck2")
     val q2 = spark.readStream.format(classOf[PagedSource].getName)
       .option("pages", "3").option("pageSize", "100")
       .option("pagesPerTrigger", "1")

@@ -17,8 +17,22 @@ class AuditPartitionedCdfSpec extends AnyFunSuite {
 
   private lazy val spark: SparkSession = SparkSpec.session
 
+  // every directory a test makes is deleted when that test ends
+  private val made =
+    scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+
+  private def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    made.synchronized(made += d)
+    d
+  }
+
+  override def withFixture(test: NoArgTest) =
+    try super.withFixture(test)
+    finally made.synchronized { made.foreach(deleteTree); made.clear() }
+
   private def freshTable(tag: String): (String, java.nio.file.Path) = {
-    val wh = java.nio.file.Files.createTempDirectory(s"graft_pcdf_${tag}_")
+    val wh = tempDir(s"graft_pcdf_${tag}_")
     val cat = s"graft_pcdf_$tag"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
@@ -29,7 +43,7 @@ class AuditPartitionedCdfSpec extends AnyFunSuite {
   }
 
   private def streamEpochs(cat: String, pages: Int): Unit = {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_pcdf_ckpt")
+    val ckpt = tempDir("graft_pcdf_ckpt")
     val w = spark.readStream.format(classOf[PagedSource].getName)
       .option("pages", pages.toString).option("pageSize", "100")
       .option("pagesPerTrigger", "1")
@@ -112,11 +126,11 @@ class AuditPartitionedCdfSpec extends AnyFunSuite {
     // UNPARTITIONED twin, and the pull survives OPTIMIZE: folded epochs
     // resolve from the base checkpoint by ORIGIN, same replay keys
     val cat2 = s"graft_pcdf_inc_u"
-    val wh2 = java.nio.file.Files.createTempDirectory("graft_pcdf_incu_")
+    val wh2 = tempDir("graft_pcdf_incu_")
     spark.conf.set(s"spark.sql.catalog.$cat2", classOf[GraftCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat2.warehouse", wh2.toString)
     spark.sql(s"CREATE TABLE $cat2.db.u (id BIGINT, flag BIGINT) USING audit")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_pcdf_incu_ck")
+    val ckpt = tempDir("graft_pcdf_incu_ck")
     val q = spark.readStream.format(classOf[PagedSource].getName)
       .option("pages", "3").option("pageSize", "100")
       .option("pagesPerTrigger", "1")
@@ -190,7 +204,7 @@ class AuditPartitionedCdfSpec extends AnyFunSuite {
     val cdfSchema = StructType(Seq(
       StructField("id", LongType), StructField("flag", LongType),
       StructField("_change_type", StringType)))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_pcdf_dropck")
+    val ckpt = tempDir("graft_pcdf_dropck")
     val seen = new java.util.concurrent.atomic.AtomicLong(0L)
     def startTail() = spark.readStream.schema(cdfSchema)
       .format(classOf[JsonAuditSink].getName)
@@ -256,7 +270,7 @@ class AuditPartitionedCdfSpec extends AnyFunSuite {
   }
 
   test("bucket-partitioned delta DML: vectors, cross-bucket moves, history") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_pcdf_bkt_")
+    val wh = tempDir("graft_pcdf_bkt_")
     val cat = "graft_pcdf_bkt"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)

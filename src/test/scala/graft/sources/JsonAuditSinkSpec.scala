@@ -498,39 +498,85 @@ class JsonAuditSinkSpec extends SparkSpec {
   }
 
   test("estimateStatistics follows zone-map pruning and flips the join strategy") {
-    val dir = tempDir()
-    val schema = StructType(Seq(
-      StructField("id", LongType), StructField("pad", StringType)))
-    // ~8 MB over 16 range-partitioned files, disjoint id ranges
-    spark.range(0, 40000).toDF("id")
-      .select(col("id"), concat(lit("x" * 180), col("id").cast("string")).as("pad"))
-      .repartitionByRange(16, col("id"))
-      .write.format(classOf[JsonAuditSink].getName)
-      .option("path", dir.toString).mode("append").save()
-    def scan(filters: Seq[org.apache.spark.sql.sources.Filter]) = {
-      val b = new AuditScanBuilder(dir.toString, schema, None)
-      b.pushFilters(filters.toArray)
-      b.build().asInstanceOf[AuditScan]
+    // the same contract on both layouts: a zero-level table, and one
+    // partitioned by `flag` whose per-directory zone maps prune alike
+    for (levels <- Seq(Nil, Seq(AuditPartition.Level("flag", LongType, None)))) {
+      val dir = tempDir()
+      val schema = StructType(Seq(
+        StructField("id", LongType), StructField("pad", StringType)) ++
+        levels.map(l => StructField(l.col, l.dt)))
+      val layout = levels.map(l => ("partitionby", l.col)).toMap
+      // ~8 MB over 16 range-partitioned files, disjoint id ranges
+      spark.range(0, 40000).toDF("id")
+        .select(col("id"), concat(lit("x" * 180), col("id").cast("string")).as("pad"),
+          (col("id") % 2).as("flag"))
+        .select(schema.fieldNames.toSeq.map(col): _*)
+        .repartitionByRange(16, col("id"))
+        .write.format(classOf[JsonAuditSink].getName).options(layout)
+        .option("path", dir.toString).mode("append").save()
+      def scan(filters: Seq[org.apache.spark.sql.sources.Filter]) = {
+        val b = new AuditScanBuilder(dir.toString, schema, None, levels)
+        b.pushFilters(filters.toArray)
+        b.build().asInstanceOf[AuditScan]
+      }
+      val full = scan(Nil).estimateStatistics()
+      val sliced = scan(Seq(org.apache.spark.sql.sources.LessThan("id", 2000L)))
+        .estimateStatistics()
+      assert(full.numRows.getAsLong === 40000L)
+      // the slice survives ~1 of 16 files: both metrics shrink with it
+      assert(sliced.numRows.getAsLong <= 40000L / 8)
+      assert(sliced.sizeInBytes.getAsLong <= full.sizeInBytes.getAsLong / 8)
+      // CBO flip: a narrow slice of a big audit table broadcasts; the
+      // unfiltered read of the same table stays shuffle-sided
+      def read() = spark.read.schema(schema)
+        .format(classOf[JsonAuditSink].getName).options(layout)
+        .option("path", dir.toString).load()
+      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (1024 * 1024).toString)
+      try {
+        val bc = read().join(read().where(col("id") < 2000L), "id")
+          .queryExecution.executedPlan.toString
+        assert(bc.contains("BroadcastHashJoin"), bc.take(500))
+        val sm = read().join(read(), "id").queryExecution.executedPlan.toString
+        assert(!sm.contains("BroadcastHashJoin"), sm.take(500))
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     }
-    val full = scan(Nil).estimateStatistics()
-    val sliced = scan(Seq(org.apache.spark.sql.sources.LessThan("id", 2000L)))
-      .estimateStatistics()
-    assert(full.numRows.getAsLong === 40000L)
-    // the slice survives ~1 of 16 files: both metrics shrink with it
-    assert(sliced.numRows.getAsLong <= 40000L / 8)
-    assert(sliced.sizeInBytes.getAsLong <= full.sizeInBytes.getAsLong / 8)
-    // CBO flip: a narrow slice of a big audit table broadcasts; the
-    // unfiltered read of the same table stays shuffle-sided
-    def read() = spark.read.schema(schema)
-      .format(classOf[JsonAuditSink].getName).option("path", dir.toString).load()
+  }
+
+  test("estimateStatistics totals the base files OPTIMIZE leaves, on both layouts") {
+    val wh = tempDir("graft_audit_stats_wh")
+    val cat = SparkSpec.uniqueCat("graft_stats")
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("pad", StringType), StructField("flag", LongType)))
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (1024 * 1024).toString)
-    try {
-      val bc = read().join(read().where(col("id") < 2000L), "id")
-        .queryExecution.executedPlan.toString
-      assert(bc.contains("BroadcastHashJoin"), bc.take(500))
-      val sm = read().join(read(), "id").queryExecution.executedPlan.toString
-      assert(!sm.contains("BroadcastHashJoin"), sm.take(500))
+    try for ((t, layout, levels) <- Seq(
+        ("u", "", Nil),
+        ("p", "PARTITIONED BY (flag)",
+          Seq(AuditPartition.Level("flag", LongType, None))))) {
+      spark.sql(s"CREATE TABLE $cat.db.$t (id BIGINT, pad STRING, flag BIGINT) " +
+        s"USING audit $layout")
+      // ~3 MB: above the 1 MB broadcast threshold
+      spark.sql(s"INSERT INTO $cat.db.$t SELECT id, " +
+        s"concat('${"x" * 60}', CAST(id AS STRING)), id % 2 FROM range(0, 20000)")
+      spark.sql(s"CALL $cat.system.optimize(table => 'db.$t')")
+      val path = wh.resolve("db").resolve(t)
+      val baseBytes = AuditPartition.listDirs(path.toString, levels)
+        .flatMap { case (_, d) =>
+          AuditBase.read(d.toString).toSeq.flatMap(_.files)
+            .map(f => java.nio.file.Files.size(d.resolve(f._1)))
+        }.sum
+      assert(baseBytes > 1024L * 1024L, s"$t: $baseBytes base bytes")
+      val stats = new AuditScanBuilder(path.toString, schema, None, levels)
+        .build().asInstanceOf[AuditScan].estimateStatistics()
+      assert(stats.sizeInBytes.getAsLong === baseBytes, s"$t: sizeInBytes")
+      assert(stats.numRows.getAsLong === 20000L, s"$t: numRows")
+      // the self-join of the whole table stays shuffle-sided
+      val sm = spark.sql(s"SELECT a.id FROM $cat.db.$t a JOIN $cat.db.$t b " +
+        "ON a.id = b.id").queryExecution.executedPlan.toString
+      assert(!sm.contains("BroadcastHashJoin"), s"$t: ${sm.take(500)}")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
