@@ -1,6 +1,9 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.UUID
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Curated-zone job: CSV → Parquet conversion with an audit timestamp,
@@ -66,38 +69,43 @@ object CuratedZone {
 
   /** Publish one curated table to the warehouse: parquet scan → to_date →
     * dedup → delta anti-join vs the warehouse → append iff non-empty
-    * (reference: …curated.py:181-215). Returns the delta row count appended.
+    * (reference: …curated.py:181-215), in one execution of the delta plan.
+    * The delta is written to a `_staging-<uuid>` directory under the
+    * warehouse, counted by an [[Observation]] on that same write, and its
+    * part files are moved into the warehouse only if it holds rows.
+    * Returns the delta row count appended.
     */
   def publishTable(spark: SparkSession, curatedPath: String,
       warehousePath: String): Long = {
     val df = normalizeReleaseDate(Zones.readParquet(spark, curatedPath))
       .dropDuplicates()
-    val existing = existingWarehouse(spark, warehousePath, df)
+    val warehouse = new Path(warehousePath)
+    val fs = warehouse.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def partFiles(dir: Path): Seq[Path] =
+      Option(fs.globStatus(new Path(dir, "part-*"))).toSeq.flatten.map(_.getPath)
     // The anti-join keys on played_at only, so the curated upload_timestamp
     // rides along into the warehouse exactly as in the reference. Tables
     // WITHOUT played_at (albums, artists) pass through and re-append every
     // run — a reference quirk preserved deliberately (…curated.py:95,122-123:
-    // only playback gets delta protection).
-    val delta = deltaLoad(df, existing)
-    // K5 row-count write guard (…curated.py:207-208). It costs a second
-    // anti-join, but counting through an Observation on the append cannot
-    // replace it: Spark 4.1 appends a schema-only part file for an empty
-    // frame, which is what the guard keeps out of the warehouse. Persisting
-    // the delta costs more on daily-sized deltas: a cached plan keeps its
-    // shuffle width, so the append writes a file per partition unless it
-    // rebalances, and reading the cached blocks back reads more bytes than
-    // re-running the anti-join over the parquet files.
-    val n = delta.count()
-    if (n > 0) delta.write.mode("append").parquet(warehousePath)
-    n
-  }
-
-  private def existingWarehouse(spark: SparkSession, path: String,
-      like: DataFrame): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-      Zones.readParquet(spark, path)
-    else like.limit(0)
+    // only playback gets delta protection) — and never read the warehouse.
+    val delta =
+      if (!df.columns.contains("played_at") || partFiles(warehouse).isEmpty) df
+      else deltaLoad(df, Zones.readParquet(spark, warehousePath))
+    // K5 row-count write guard (…curated.py:207-208), read from the write
+    // itself. Spark writes a schema-only part file for an empty frame, so
+    // the write goes to a directory that Spark's file listing skips (its
+    // name starts with `_`), and an empty delta's file is deleted with it.
+    val staging = new Path(warehouse, s"_staging-${UUID.randomUUID()}")
+    try {
+      val rows = Observation()
+      delta.observe(rows, count(lit(1)).as("n"))
+        .write.mode("overwrite").parquet(staging.toString)
+      val n = rows.get("n").asInstanceOf[Long]
+      if (n > 0) partFiles(staging).foreach { f =>
+        if (!fs.rename(f, new Path(warehouse, f.getName)))
+          throw new java.io.IOException(s"publish: could not move $f into $warehouse")
+      }
+      n
+    } finally fs.delete(staging, true)
   }
 }

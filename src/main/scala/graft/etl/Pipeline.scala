@@ -40,6 +40,13 @@ object Pipeline {
       """artist_spotify_url STRING, artist_href STRING, artist_id STRING,
         |artist_name STRING, artist_uri STRING""".stripMargin)
 
+  /** Each curated table's Parquet schema (DDL), keyed by table name: the
+    * `upload_timestamp` that [[CuratedZone.addUploadTimestamp]] puts first,
+    * then the table's clean columns. The warehouse holds the same columns.
+    * [[Zones.readParquet]] reads with it, so no read runs a footer job. */
+  val curatedSchemas: Map[String, String] =
+    cleanSchemas.map { case (t, ddl) => t -> s"upload_timestamp TIMESTAMP, $ddl" }
+
   /** Process the day landed at `{landing(y, m, d)}/playback_hist.json`. */
   def run(spark: SparkSession, zones: Zones, y: Int, m: Int, d: Int): Map[String, Long] = {
     val landed = s"${zones.landing(y, m, d)}/playback_hist.json"
@@ -81,12 +88,15 @@ object Pipeline {
     }
   }
 
-  /** Demo main: land the fixture, run the full pipeline twice into a temp
-    * root and print the delta counts — the second run must append zero
-    * rows (idempotence via the anti-join delta load). */
-  def main(args: Array[String]): Unit = {
-    val root = if (args.nonEmpty) args(0)
-      else java.nio.file.Files.createTempDirectory("graft_zones").toString
+  /** Demo main: land the fixture, run the full pipeline twice into the
+    * zone root `args(0)`, or into a scratch root deleted on exit, and print
+    * the delta counts — the second run must append zero playback rows
+    * (idempotence via the anti-join delta load). */
+  def main(args: Array[String]): Unit =
+    if (args.nonEmpty) demo(args(0))
+    else graft.sources.withScratch("graft_zones")(root => demo(root.toString))
+
+  private def demo(root: String): Unit = {
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")

@@ -38,22 +38,26 @@ object Zones {
     * the declared [[Pipeline.cleanSchemas]] entry of the table that
     * [[Zones.clean]] puts last in the path instead of by an inference scan.
     * A path naming no known table fails loudly. */
-  def readCsv(spark: SparkSession, path: String): DataFrame = {
-    val table = path.stripSuffix("/").split('/').last
-    val schema = Pipeline.cleanSchemas.getOrElse(table,
-      throw new IllegalArgumentException(s"clean zone: no declared schema " +
-        s"for table '$table' (from $path); known tables: " +
-        Pipeline.tables.mkString(", ")))
-    spark.read.schema(schema).option("header", "true").csv(path)
-  }
+  def readCsv(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(declared(Pipeline.cleanSchemas, path))
+      .option("header", "true").csv(path)
 
   /** K2 — curated-zone Parquet sink, idempotent overwrite
     * (reference: spark_jobs/playback_pipeline_curated.py:64-86). */
   def writeParquet(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").parquet(path)
 
-  /** S3 — curated Parquet scan
-    * (reference: spark_jobs/playback_pipeline_curated.py:190). */
+  /** S3 — curated or warehouse Parquet scan
+    * (reference: spark_jobs/playback_pipeline_curated.py:190), typed by the
+    * declared [[Pipeline.curatedSchemas]] entry of the table last in the
+    * path, so the read runs no footer-inference job. */
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(declared(Pipeline.curatedSchemas, path)).parquet(path)
+
+  private def declared(schemas: Map[String, String], path: String): String = {
+    val table = path.stripSuffix("/").split('/').last
+    schemas.getOrElse(table, throw new IllegalArgumentException(
+      s"no declared schema for table '$table' (from $path); known tables: " +
+        Pipeline.tables.mkString(", ")))
+  }
 }

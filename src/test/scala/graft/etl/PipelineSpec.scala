@@ -1,19 +1,35 @@
 package graft.etl
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.collection.mutable.ListBuffer
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{DateType, TimestampType}
+import org.scalatest.BeforeAndAfterAll
 
 import graft.SparkSpec
 import graft.ingest.Fixture
+import graft.sources.deleteTree
 
 /** Golden-fixture pipeline tests (SURVEY §5#4): landing JSON → clean →
   * curated → warehouse, asserting the reference's output contracts and the
   * idempotence of the delta load.
   */
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
 
-  private lazy val zones = Zones(Files.createTempDirectory("graft_spec_zones").toString)
+  private val tempDirs = ListBuffer.empty[Path]
+  private def tempDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs += dir
+    dir.toString
+  }
+  override def afterAll(): Unit =
+    try tempDirs.foreach(deleteTree) finally super.afterAll()
+
+  private lazy val zones = Zones(tempDir("graft_spec_zones"))
   private lazy val deltas = {
     Fixture.land(zones.landing(2024, 1, 5))
     Pipeline.run(spark, zones, 2024, 1, 5)
@@ -23,6 +39,12 @@ class PipelineSpec extends SparkSpec {
   private def landDoc(dir: String, json: String): String = {
     Files.createDirectories(Paths.get(dir))
     Files.writeString(Paths.get(dir, "playback_hist.json"), json).toString
+  }
+
+  /** `_staging*` entries left in any of `z`'s warehouse directories. */
+  private def stagingLeft(z: Zones): Seq[String] = Pipeline.tables.flatMap { t =>
+    Option(new java.io.File(z.warehouse(t)).listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.startsWith("_staging")).map(n => s"$t/$n")
   }
 
   private def oddItem(playedAt: String, artists: Seq[(String, String)]): String = {
@@ -51,7 +73,7 @@ class PipelineSpec extends SparkSpec {
     |${oddItem("2024-01-06T09:00:00.000Z", Seq(slash, quoted))}]}""".stripMargin
 
   test("clean zone: playback_hist honors the 15-column contract, in order") {
-    val landed = Fixture.land(Files.createTempDirectory("graft_landing").toString)
+    val landed = Fixture.land(tempDir("graft_landing"))
     val (playback, albums, artists) = CleanZone.run(spark, landed)
     assert(playback.columns.toSeq === CleanZone.outputCols)
     assert(albums.columns.toSeq === Seq("album_type", "album_href", "album_id",
@@ -92,7 +114,7 @@ class PipelineSpec extends SparkSpec {
     // names holding an escaped quote or backslash come through whole, and
     // names and ids keep each play's array order
     val odd = CleanZone.run(spark,
-      landDoc(Files.createTempDirectory("graft_landing").toString, oddDoc))._1
+      landDoc(tempDir("graft_landing"), oddDoc))._1
       .collect().map(r => r.getAs[String]("played_at") ->
         (r.getAs[String]("artist_names"), r.getAs[String]("artist_ids"))).toMap
     assert(odd === Map(
@@ -102,20 +124,26 @@ class PipelineSpec extends SparkSpec {
 
   test("curated zone: upload_timestamp leads, played_at inferred as timestamp, release date is DateType") {
     deltas // force the pipeline run
-    val curated = Zones.readParquet(spark, zones.curated(2024, 1, 5, "playback_hist"))
+    // read the files' own schemas (footer inference), not the declared
+    // curated schema that Zones.readParquet imposes, so this checks what
+    // curateTable and publishTable wrote
+    val curated = spark.read.parquet(zones.curated(2024, 1, 5, "playback_hist"))
     assert(curated.columns.head === "upload_timestamp")
     assert(curated.schema("upload_timestamp").dataType === TimestampType)
-    // CSV inferSchema promoted the ISO string to a timestamp (S2 semantics)
+    // the clean CSV's declared schema reads the ISO string as a timestamp,
+    // and the curated file keeps that type
     assert(curated.schema("played_at").dataType === TimestampType)
 
-    val wh = Zones.readParquet(spark, zones.warehouse("playback_hist"))
+    val wh = spark.read.parquet(zones.warehouse("playback_hist"))
     assert(wh.schema("album_release_date").dataType === DateType)
   }
 
   test("warehouse delta load: second run appends zero playback rows (keyed), " +
       "but albums/artists re-append (reference quirk preserved)") {
     assert(deltas === Map("playback_hist" -> 3L, "albums" -> 2L, "artists" -> 3L))
+    assert(stagingLeft(zones).isEmpty)
     val second = Pipeline.run(spark, zones, 2024, 1, 5)
+    assert(stagingLeft(zones).isEmpty)
     // played_at-keyed table is delta-protected; key-less tables are not
     // (reference: delta_load_tracks only guards frames with played_at,
     // spark_jobs/playback_pipeline_curated.py:95,122-123)
@@ -159,7 +187,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("a quiet day's empty landing document publishes nothing") {
-    val quiet = Zones(Files.createTempDirectory("graft_spec_quiet").toString)
+    val quiet = Zones(tempDir("graft_spec_quiet"))
     Fixture.land(quiet.landing(2024, 1, 5))
     Pipeline.run(spark, quiet, 2024, 1, 5)
     def parquetFiles(t: String): Int =
@@ -174,5 +202,58 @@ class PipelineSpec extends SparkSpec {
       assert(Zones.readCsv(spark, quiet.clean(2024, 1, 6, t)).count() === 0, t)
     }
     assert(Pipeline.tables.map(t => t -> parquetFiles(t)).toMap === before)
+    assert(stagingLeft(quiet).isEmpty)
+  }
+
+  test("publish: one execution per table and no schema-inference job") {
+    val z = Zones(tempDir("graft_spec_publish"))
+    Fixture.land(z.landing(2024, 1, 5))
+    Pipeline.run(spark, z, 2024, 1, 5)
+    val sc = spark.sparkContext
+    val group = "pipeline-spec-publish"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+    }
+    /** Each table's (published rows, jobs) when published into `warehouse(t)`. */
+    def publish(warehouse: String => String): Map[String, (Long, Int)] =
+      Pipeline.tables.map { t =>
+        val before = jobs.get
+        val n = CuratedZone.publishTable(spark, z.curated(2024, 1, 5, t), warehouse(t))
+        ListenerBusDrain(sc)
+        t -> (n, jobs.get - before)
+      }.toMap
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "PipelineSpec publish job count")
+    val (fresh, rerun) =
+      try (publish(t => s"${z.root}/fresh_warehouse/$t"), publish(z.warehouse))
+      finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    assert(fresh.map { case (t, (n, _)) => t -> n } ===
+      Map("playback_hist" -> 3L, "albums" -> 2L, "artists" -> 3L))
+    assert(rerun.map { case (t, (n, _)) => t -> n } ===
+      Map("playback_hist" -> 0L, "albums" -> 2L, "artists" -> 3L))
+    // the delta's dedup shuffle, the warehouse side, the write; a keyless
+    // table reads no warehouse
+    val budget = Map("playback_hist" -> 3, "albums" -> 2, "artists" -> 2)
+    val counts = for ((run, res) <- Seq("fresh" -> fresh, "rerun" -> rerun);
+        (t, (_, j)) <- res) yield (s"$run $t", j, budget(t))
+    assert(counts.forall { case (_, j, max) => j <= max },
+      counts.map { case (call, j, max) => s"$call: $j jobs (max $max)" }.mkString(", "))
+  }
+
+  test("warehouse reads skip a leftover staging directory") {
+    deltas
+    val wh = zones.warehouse("playback_hist")
+    val before = Zones.readParquet(spark, wh).count()
+    val planted = s"$wh/_staging-x"
+    Zones.readParquet(spark, zones.curated(2024, 1, 5, "playback_hist"))
+      .write.parquet(planted)
+    try {
+      assert(new java.io.File(planted).listFiles()
+        .exists(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")))
+      assert(spark.read.parquet(planted).count() === 3)
+      assert(Zones.readParquet(spark, wh).count() === before)
+    } finally deleteTree(Paths.get(planted))
   }
 }
