@@ -12,6 +12,15 @@ import org.apache.spark.sql.functions._
   * show()/count() actions re-running the lineage, and each output is
   * computed once — one projection pass over one typed landing scan.
   *
+  * Each day's document is one multiline JSON file, which Spark cannot
+  * split, so its scan is already a single partition; [[run]] declares it
+  * with `coalesce(1)`. The planner then knows the input is
+  * `SinglePartition`, which satisfies both the dedups' clustered and the
+  * `played_at` sort's ordered distribution: each output is written in one
+  * job with no exchange, no sort-sampling job and one part file. A day is
+  * bounded by the API's 50-play cap; the cross-day backfill is where
+  * partitioned shuffles belong.
+  *
   * Two outputs differ from the reference's regex-over-JSON artist bag
   * (playback_pipeline.py:161-193), and both are fixes: `artist_names` and
   * `artist_ids` are projected from each play's own artist array, so a play
@@ -128,7 +137,8 @@ object CleanZone {
     * output tables (playback_hist, albums, artists). */
   def run(spark: SparkSession, landingJsonPath: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val df = readLanding(spark, landingJsonPath)
+    // a multiline JSON document cannot be split, so its scan is one partition
+    val df = readLanding(spark, landingJsonPath).coalesce(1)
     (playbackHistory(parseTracks(df)), parseAlbums(df), parseArtists(df))
   }
 }

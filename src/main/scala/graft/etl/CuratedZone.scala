@@ -60,16 +60,21 @@ object CuratedZone {
 
   /** Curate one clean-zone table: CSV scan (header, declared schema) →
     * upload_timestamp first → dedup → parquet overwrite
-    * (reference: …curated.py:168-179). */
-  def curateTable(spark: SparkSession, cleanPath: String, curatedPath: String): DataFrame = {
-    val df = addUploadTimestamp(Zones.readCsv(spark, cleanPath)).dropDuplicates()
-    Zones.writeParquet(df, curatedPath)
-    df
+    * (reference: …curated.py:168-179), in one job with no exchange. */
+  def curateTable(spark: SparkSession, cleanPath: String, curatedPath: String): Unit = {
+    // the clean zone writes each table as one CSV part file: one partition
+    val clean = Zones.readCsv(spark, cleanPath).coalesce(1)
+    Zones.writeParquet(addUploadTimestamp(clean).dropDuplicates(), curatedPath)
   }
 
   /** Publish one curated table to the warehouse: parquet scan → to_date →
-    * dedup → delta anti-join vs the warehouse → append iff non-empty
+    * delta anti-join vs the warehouse → append iff non-empty
     * (reference: …curated.py:181-215), in one execution of the delta plan.
+    * The reference deduplicates the frame again after `to_date`
+    * (…curated.py:198); here that dedup could merge no row, so it is not
+    * run: [[curateTable]] wrote the file already deduplicated over all
+    * columns, parquet reads back the same values, and `to_date` on a DATE
+    * column is the identity.
     * The delta is written to a `_staging-<uuid>` directory under the
     * warehouse, counted by an [[Observation]] on that same write, and its
     * part files are moved into the warehouse only if it holds rows.
@@ -78,7 +83,6 @@ object CuratedZone {
   def publishTable(spark: SparkSession, curatedPath: String,
       warehousePath: String): Long = {
     val df = normalizeReleaseDate(Zones.readParquet(spark, curatedPath))
-      .dropDuplicates()
     val warehouse = new Path(warehousePath)
     val fs = warehouse.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def partFiles(dir: Path): Seq[Path] =

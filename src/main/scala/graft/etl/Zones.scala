@@ -13,7 +13,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Scale note: directory date-partitioning keeps per-day jobs reading only
   * their own prefix; at cluster scale the same layout becomes Hive-style
   * partition pruning by swapping the path scheme for `date=` partitions —
-  * the write API below is already partition-agnostic.
+  * the write API below is already partition-agnostic. Per-day steps plan
+  * on one partition: a day is at most 50 plays, its landing document is
+  * one unsplittable JSON file, and each clean CSV and curated Parquet
+  * table is the one part file that single partition writes, so the steps
+  * that read them declare it with `coalesce(1)` and run without a shuffle.
+  * A cross-day plan is where partitioned shuffles belong.
   */
 final case class Zones(root: String) {
   def landing(y: Int, m: Int, d: Int): String =

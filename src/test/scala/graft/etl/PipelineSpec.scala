@@ -1,16 +1,17 @@
 package graft.etl
 
-import java.nio.file.{Files, Path, Paths}
+import java.io.File
+import java.nio.file.{Files, Paths}
+import java.time.Instant
 import java.util.concurrent.atomic.AtomicInteger
 
-import scala.collection.mutable.ListBuffer
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{DateType, TimestampType}
-import org.scalatest.BeforeAndAfterAll
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.ingest.Fixture
 import graft.sources.deleteTree
 
@@ -18,18 +19,10 @@ import graft.sources.deleteTree
   * curated → warehouse, asserting the reference's output contracts and the
   * idempotence of the delta load.
   */
-class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
+class PipelineSpec extends SparkSpec with TempDirs {
 
-  private val tempDirs = ListBuffer.empty[Path]
-  private def tempDir(prefix: String): String = {
-    val dir = Files.createTempDirectory(prefix)
-    tempDirs += dir
-    dir.toString
-  }
-  override def afterAll(): Unit =
-    try tempDirs.foreach(deleteTree) finally super.afterAll()
-
-  private lazy val zones = Zones(tempDir("graft_spec_zones"))
+  // made outside any test, so the shared zones live until the suite ends
+  private val zones = Zones(tempDir("graft_spec_zones").toString)
   private lazy val deltas = {
     Fixture.land(zones.landing(2024, 1, 5))
     Pipeline.run(spark, zones, 2024, 1, 5)
@@ -46,6 +39,33 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
     Option(new java.io.File(z.warehouse(t)).listFiles()).toSeq.flatten
       .map(_.getName).filter(_.startsWith("_staging")).map(n => s"$t/$n")
   }
+
+  /** `dir`'s `part-*` files. */
+  private def partFiles(dir: String): Seq[File] =
+    Option(new File(dir).listFiles()).toSeq.flatten.filter(_.getName.startsWith("part-"))
+
+  /** `f`'s result and the number of Spark jobs it started. */
+  private def withJobs[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = "pipeline-spec-jobs"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "PipelineSpec job count")
+    try {
+      val r = f
+      ListenerBusDrain(sc)
+      (r, jobs.get)
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
+
+  /** Asserts each (call, jobs, max) holds jobs <= max, listing them all. */
+  private def assertBudget(counts: Seq[(String, Int, Int)]): Unit =
+    assert(counts.forall { case (_, j, max) => j <= max },
+      counts.map { case (call, j, max) => s"$call: $j jobs (max $max)" }.mkString(", "))
 
   private def oddItem(playedAt: String, artists: Seq[(String, String)]): String = {
     val as = artists.map { case (id, name) =>
@@ -73,7 +93,7 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
     |${oddItem("2024-01-06T09:00:00.000Z", Seq(slash, quoted))}]}""".stripMargin
 
   test("clean zone: playback_hist honors the 15-column contract, in order") {
-    val landed = Fixture.land(tempDir("graft_landing"))
+    val landed = Fixture.land(tempDir("graft_landing").toString)
     val (playback, albums, artists) = CleanZone.run(spark, landed)
     assert(playback.columns.toSeq === CleanZone.outputCols)
     assert(albums.columns.toSeq === Seq("album_type", "album_href", "album_id",
@@ -114,7 +134,7 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
     // names holding an escaped quote or backslash come through whole, and
     // names and ids keep each play's array order
     val odd = CleanZone.run(spark,
-      landDoc(tempDir("graft_landing"), oddDoc))._1
+      landDoc(tempDir("graft_landing").toString, oddDoc))._1
       .collect().map(r => r.getAs[String]("played_at") ->
         (r.getAs[String]("artist_names"), r.getAs[String]("artist_ids"))).toMap
     assert(odd === Map(
@@ -187,7 +207,7 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("a quiet day's empty landing document publishes nothing") {
-    val quiet = Zones(tempDir("graft_spec_quiet"))
+    val quiet = Zones(tempDir("graft_spec_quiet").toString)
     Fixture.land(quiet.landing(2024, 1, 5))
     Pipeline.run(spark, quiet, 2024, 1, 5)
     def parquetFiles(t: String): Int =
@@ -206,40 +226,66 @@ class PipelineSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("publish: one execution per table and no schema-inference job") {
-    val z = Zones(tempDir("graft_spec_publish"))
+    val z = Zones(tempDir("graft_spec_publish").toString)
     Fixture.land(z.landing(2024, 1, 5))
     Pipeline.run(spark, z, 2024, 1, 5)
-    val sc = spark.sparkContext
-    val group = "pipeline-spec-publish"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
-    }
     /** Each table's (published rows, jobs) when published into `warehouse(t)`. */
     def publish(warehouse: String => String): Map[String, (Long, Int)] =
       Pipeline.tables.map { t =>
-        val before = jobs.get
-        val n = CuratedZone.publishTable(spark, z.curated(2024, 1, 5, t), warehouse(t))
-        ListenerBusDrain(sc)
-        t -> (n, jobs.get - before)
+        t -> withJobs(CuratedZone.publishTable(spark, z.curated(2024, 1, 5, t), warehouse(t)))
       }.toMap
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "PipelineSpec publish job count")
-    val (fresh, rerun) =
-      try (publish(t => s"${z.root}/fresh_warehouse/$t"), publish(z.warehouse))
-      finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    val fresh = publish(t => s"${z.root}/fresh_warehouse/$t")
+    val rerun = publish(z.warehouse)
     assert(fresh.map { case (t, (n, _)) => t -> n } ===
       Map("playback_hist" -> 3L, "albums" -> 2L, "artists" -> 3L))
     assert(rerun.map { case (t, (n, _)) => t -> n } ===
       Map("playback_hist" -> 0L, "albums" -> 2L, "artists" -> 3L))
-    // the delta's dedup shuffle, the warehouse side, the write; a keyless
-    // table reads no warehouse
-    val budget = Map("playback_hist" -> 3, "albums" -> 2, "artists" -> 2)
-    val counts = for ((run, res) <- Seq("fresh" -> fresh, "rerun" -> rerun);
-        (t, (_, j)) <- res) yield (s"$run $t", j, budget(t))
-    assert(counts.forall { case (_, j, max) => j <= max },
-      counts.map { case (call, j, max) => s"$call: $j jobs (max $max)" }.mkString(", "))
+    // the warehouse side's broadcast and the write; a keyless table reads
+    // no warehouse
+    val budget = Map("playback_hist" -> 2, "albums" -> 1, "artists" -> 1)
+    assertBudget(for ((run, res) <- Seq("fresh" -> fresh, "rerun" -> rerun);
+        (t, (_, j)) <- res) yield (s"$run $t", j, budget(t)))
+  }
+
+  test("day: each clean write and each curation runs one job") {
+    val z = Zones(tempDir("graft_spec_day").toString)
+    val (playback, albums, artists) =
+      CleanZone.run(spark, Fixture.land(z.landing(2024, 1, 5)))
+    val writes = Pipeline.tables.zip(Seq(playback, albums, artists)).map { case (t, df) =>
+      (s"Zones.writeCsv $t", withJobs(Zones.writeCsv(df, z.clean(2024, 1, 5, t)))._2, 1)
+    }
+    val curations = Pipeline.tables.map { t =>
+      (s"CuratedZone.curateTable $t", withJobs(CuratedZone.curateTable(spark,
+        z.clean(2024, 1, 5, t), z.curated(2024, 1, 5, t)))._2, 1)
+    }
+    assertBudget(writes ++ curations)
+  }
+
+  test("day: one part file per clean and curated table, playback in played_at " +
+      "order, and one warehouse file per non-empty publish") {
+    val z = Zones(tempDir("graft_spec_files").toString)
+    Fixture.land(z.landing(2024, 1, 5))
+    // a day whose document lists its plays newest first, as the API does
+    landDoc(z.landing(2024, 1, 6), s"""{"items": [
+      |${oddItem("2024-01-06T09:00:00.000Z", Seq(slash, quoted))},
+      |${oddItem("2024-01-06T08:30:00.000Z", Seq(quoted))},
+      |${oddItem("2024-01-06T08:00:00.000Z", Seq(quoted, slash))}]}""".stripMargin)
+    // the rerun of the first day publishes no playback rows
+    for ((y, m, d) <- Seq((2024, 1, 5), (2024, 1, 6), (2024, 1, 5))) {
+      val before = Pipeline.tables.map(t => t -> partFiles(z.warehouse(t)).size).toMap
+      val res = Pipeline.run(spark, z, y, m, d)
+      Pipeline.tables.foreach { t =>
+        assert(partFiles(z.clean(y, m, d, t)).size === 1, s"$d clean $t")
+        assert(partFiles(z.curated(y, m, d, t)).size === 1, s"$d curated $t")
+        assert(partFiles(z.warehouse(t)).size - before(t) === (if (res(t) > 0) 1 else 0),
+          s"$d warehouse $t (published ${res(t)})")
+      }
+      val csv = partFiles(z.clean(y, m, d, "playback_hist")).head.toPath
+      val playedAt = Files.readAllLines(csv).asScala.toSeq.drop(1)
+        .map(l => Instant.parse(l.takeWhile(_ != ',')))
+      assert(playedAt.size === 3, s"$d")
+      assert(playedAt === playedAt.sorted, s"$d")
+    }
   }
 
   test("warehouse reads skip a leftover staging directory") {

@@ -4,33 +4,16 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** OPTIMIZE / VACUUM over the audit table format: compaction into an
   * origin-tagged base checkpoint, superseded-epoch reclamation, and the
   * retention-bounded time-travel expiry — with every read contract
   * (current, pinned, metadata count, change feed, epoch tail, delta DML)
   * asserted identical across maintenance. */
-class AuditMaintenanceSpec extends SparkSpec
-    with org.scalatest.BeforeAndAfterAll {
-  // the shared warehouse is deleted when the suite ends; every other
-  // directory a test makes is deleted when that test ends
-  private lazy val wh = java.nio.file.Files.createTempDirectory("graft_maint_wh")
-  private val made =
-    scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-
-  private def tempDir(prefix: String): java.nio.file.Path = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    made.synchronized(made += d)
-    d
-  }
-
-  override def withFixture(test: NoArgTest) =
-    try super.withFixture(test)
-    finally made.synchronized { made.foreach(deleteTree); made.clear() }
-
-  override def afterAll(): Unit =
-    try deleteTree(wh) finally super.afterAll()
+class AuditMaintenanceSpec extends SparkSpec with TempDirs {
+  // made outside any test, so the shared warehouse lives until the suite ends
+  private val wh = tempDir("graft_maint_wh")
 
   private def init(): Unit = {
     spark.conf.set("spark.sql.catalog.graft_m", classOf[GraftCatalog].getName)

@@ -7,31 +7,19 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** Optimistic concurrency for audit batch appends: commits publish as
   * immutable `_TXN/<v>.json` files via put-if-absent, so concurrent
   * appenders can NEVER lose each other's rows (the old read-modify-write
   * manifest would drop one side). Readers fold `_MANIFEST` + live txns;
   * maintenance consolidates with a stable CDF axis. */
-class AuditOccSpec extends AnyFunSuite {
+class AuditOccSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSpec.session
   private val schema = StructType(Seq(StructField("id", LongType)))
 
-  // every directory a test makes is deleted when that test ends
-  private val made =
-    scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-
-  private def tempDir(prefix: String = "graft_occ_") = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    made.synchronized(made += d)
-    d
-  }
-
-  override def withFixture(test: NoArgTest) =
-    try super.withFixture(test)
-    finally made.synchronized { made.foreach(deleteTree); made.clear() }
+  private def tempDir(): java.nio.file.Path = tempDir("graft_occ_")
 
   private def append(dir: java.nio.file.Path, from: Long, until: Long): Unit =
     spark.range(from, until).toDF("id").repartition(2)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** PER-DIRECTORY BASE CHECKPOINTS (partitioned OPTIMIZE): unlike the
   * retired stage-and-swap design, compaction preserves every history
@@ -15,23 +15,9 @@ import graft.SparkSpec
   * tail SURVIVE it (only pre-fold-axis checkpoints restart loudly).
   * Travel composes with static partition pruning (the pruned plan opens
   * only the surviving directory's partition). */
-class AuditPartBaseSpec extends AnyFunSuite {
+class AuditPartBaseSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSpec.session
-
-  // every directory a test makes is deleted when that test ends
-  private val made =
-    scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-
-  private def tempDir(prefix: String): java.nio.file.Path = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    made.synchronized(made += d)
-    d
-  }
-
-  override def withFixture(test: NoArgTest) =
-    try super.withFixture(test)
-    finally made.synchronized { made.foreach(deleteTree); made.clear() }
 
   private def freshCat(tag: String): (String, java.nio.file.Path) = {
     val wh = tempDir(s"graft_pb_${tag}_")

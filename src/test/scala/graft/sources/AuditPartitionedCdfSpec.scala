@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** Time travel and the change feed on PARTITIONED audit tables: pinned
   * reads keep only epoch files <= v in every partition directory (batch
@@ -13,23 +13,9 @@ import graft.SparkSpec
   * the partitioned feed — whose offset is the per-directory manifest
   * length — resumes exactly and fails loudly when history is rewritten
   * under it. */
-class AuditPartitionedCdfSpec extends AnyFunSuite {
+class AuditPartitionedCdfSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSpec.session
-
-  // every directory a test makes is deleted when that test ends
-  private val made =
-    scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-
-  private def tempDir(prefix: String): java.nio.file.Path = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    made.synchronized(made += d)
-    d
-  }
-
-  override def withFixture(test: NoArgTest) =
-    try super.withFixture(test)
-    finally made.synchronized { made.foreach(deleteTree); made.clear() }
 
   private def freshTable(tag: String): (String, java.nio.file.Path) = {
     val wh = tempDir(s"graft_pcdf_${tag}_")

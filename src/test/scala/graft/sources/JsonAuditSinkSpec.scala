@@ -5,27 +5,16 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** JsonAuditSink (DSv2 write path): staged-file two-phase commit must
   * publish exactly the written rows with a truthful manifest, overwrite
   * must truncate prior files, and aborted attempts must leave no trace. */
-class JsonAuditSinkSpec extends SparkSpec {
+class JsonAuditSinkSpec extends SparkSpec with TempDirs {
 
   private val d = "/root/testdata/sf0.001"
 
-  private val made =
-    scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-
-  private def tempDir(prefix: String = "graft_audit_sink"): java.nio.file.Path = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    made.synchronized(made += d)
-    d
-  }
-
-  override def withFixture(test: NoArgTest) =
-    try super.withFixture(test)
-    finally made.synchronized { made.foreach(deleteTree); made.clear() }
+  private def tempDir(): java.nio.file.Path = tempDir("graft_audit_sink")
 
   test("append publishes committed part files plus a manifest that adds up") {
     val dir = tempDir()
