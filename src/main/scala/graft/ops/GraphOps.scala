@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.annotation.tailrec
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables._
@@ -49,12 +51,7 @@ object GraphOps {
     // pinned scan + union + broadcast join — cheaper than materializing
     // edges⋈deg once. deg is pinned too: it feeds the edge build AND the
     // initial ranks (exchange reuse does not fire across fan-out branches)
-    val pairs = orders(spark, d).select(col("o_orderkey"), col("o_custkey"))
-      .join(lineitem(spark, d).select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
-      .distinct()
-      .localCheckpoint()
+    val pairs = tradePairs(spark, d).localCheckpoint()
     val edges = pairs.select(col("c").as("src"), col("s").as("dst"))
       .unionByName(pairs.select(col("s").as("src"), col("c").as("dst")))
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
@@ -74,6 +71,34 @@ object GraphOps {
     }
     fin.select(col("node"), (col("node") % 2).as("is_supplier"), col("rank"))
       .orderBy("node")
+  }
+
+  /** The distinct customer↔supplier trade pairs, in one id space:
+    * custkey → 2k, suppkey → 2k+1. */
+  private def tradePairs(spark: SparkSession, d: String): DataFrame =
+    orders(spark, d).select(col("o_orderkey"), col("o_custkey"))
+      .join(lineitem(spark, d).select(col("l_orderkey"), col("l_suppkey")),
+        col("o_orderkey") === col("l_orderkey"))
+      .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
+      .distinct()
+
+  /** Both directions of the trade graph, `extend`ed, pinned in ONE job
+    * whose [[Observation]] also yields the source node min(src) — the
+    * oracles' `min(src) FROM edges`, so both engines start from the same
+    * node. Returns the pinned edges and that source. The pairs are not
+    * pinned apart: the union's two branches read one reused exchange. */
+  private[graft] def tradeEdges(spark: SparkSession, d: String,
+      extend: DataFrame => DataFrame = identity): (DataFrame, Long) = {
+    val pairs = tradePairs(spark, d)
+    val source = Observation()
+    val edges = extend(pairs.select(col("c").as("src"), col("s").as("dst"))
+        .unionByName(pairs.select(col("s").as("src"), col("c").as("dst"))))
+      .observe(source, min(col("src")).as("s0"))
+      .localCheckpoint()
+    source.get("s0") match {
+      case s0: Long => (edges, s0)
+      case _ => throw new IllegalStateException(s"the trade graph at $d has no edges")
+    }
   }
 
   val pageRankSql: String = {
@@ -151,7 +176,8 @@ object GraphOps {
     */
   val TriK = 8
 
-  def triangles(spark: SparkSession, d: String): DataFrame = {
+  /** The mutual-top-[[TriK]] supplier edges (u, v), both directions. */
+  private[graft] def mutualTopK(spark: SparkSession, d: String): DataFrame = {
     val wdf = suppPairWeights(spark, d)
     val dir = wdf.select(col("s1").as("a"), col("s2").as("b"), col("w"))
       .unionByName(wdf.select(col("s2").as("a"), col("s1").as("b"), col("w")))
@@ -159,11 +185,13 @@ object GraphOps {
       .partitionBy("a").orderBy(col("w").desc, col("b").asc)
     val kept = dir.withColumn("rn", row_number().over(byNode))
       .where(col("rn") <= TriK).select(col("a"), col("b"))
-    val e = kept.as("x").join(kept.as("y"),
+    kept.as("x").join(kept.as("y"),
         col("x.a") === col("y.b") && col("x.b") === col("y.a"))
-      .where(col("x.a") < col("x.b"))
       .select(col("x.a").as("u"), col("x.b").as("v"))
-      .localCheckpoint()
+  }
+
+  def triangles(spark: SparkSession, d: String): DataFrame = {
+    val e = mutualTopK(spark, d).where(col("u") < col("v")).localCheckpoint()
     val tri = e.as("e1").join(e.as("e2"), col("e1.v") === col("e2.u"))
       .select(col("e1.u").as("x"), col("e1.v").as("y"), col("e2.v").as("z"))
       .join(e.as("e3"), col("x") === col("e3.u") && col("z") === col("e3.v"))
@@ -251,12 +279,21 @@ object GraphOps {
     * core structure is actually informative — and the same sparsification
     * that keeps this scale-safe on a 100 TB corpus.
     *
-    * Loop shape: the base edge list pins once (localCheckpoint); each
-    * superstep is one hash agg (degrees) + two semi-joins re-deriving the
-    * induced edges FROM THE PINNED BASE (the survivor vertex set is the
-    * narrowest frame — node-sized — so it is what gets checkpointed per
-    * iteration, round-4 lesson 2). Survivor sets shrink monotonically, so
-    * the count-equality convergence test is a true set-fixpoint test.
+    * Loop shape: the base edge list pins once (localCheckpoint). Each
+    * peel ([[kcorePeel]]) pins the current edges' degree frame — node-sized,
+    * the narrowest frame of the superstep — in ONE eager job, and an
+    * [[Observation]] on that job counts its nodes and its survivors
+    * (deg >= k). The next edges are the survivors' induced edges,
+    * re-derived from the pinned base by two semi-joins ([[kcoreStep]])
+    * that share one broadcast of the survivors, hinted when the observed
+    * survivor count fits the broadcast threshold. A peel thus runs three
+    * jobs: the broadcast, the degree shuffle and the pin.
+    * Equal counts mean no vertex would be peeled: the edge set is already
+    * the core (it is symmetric, so every endpoint has a degree row), the
+    * loop stops without a confirming peel, and the output is that pinned
+    * degree frame, with no second aggregation. After [[KCoreGuard]] peels
+    * without a fixpoint the loop stops and reports the degrees of the
+    * edges it reached.
     *
     * Oracle: peeling is IDEMPOTENT past the fixpoint, so the DuckDB twin
     * unrolls [[KCorePeels]] peels as a CTE chain — extra peels are no-ops,
@@ -265,49 +302,66 @@ object GraphOps {
     */
   val KCoreK = 4
   val KCorePeels = 6
+  /** Peels after which [[kcore]] stops without a fixpoint. */
+  val KCoreGuard = 50
 
   def kcore(spark: SparkSession, d: String): DataFrame = {
-    val wdf = suppPairWeights(spark, d)
-    val dir = wdf.select(col("s1").as("a"), col("s2").as("b"), col("w"))
-      .unionByName(wdf.select(col("s2").as("a"), col("s1").as("b"), col("w")))
-    val byNode = org.apache.spark.sql.expressions.Window
-      .partitionBy("a").orderBy(col("w").desc, col("b").asc)
-    val kept = dir.withColumn("rn", row_number().over(byNode))
-      .where(col("rn") <= TriK).select(col("a"), col("b"))
-    val base = kept.as("x").join(kept.as("y"),
-        col("x.a") === col("y.b") && col("x.b") === col("y.a"))
-      .select(col("x.a").as("u"), col("x.b").as("v"))
-      .localCheckpoint()
-
-    var edges = base
-    var nVerts = -1L
-    var done = false
-    var guard = 0
-    while (!done && guard < 50) {
-      guard += 1
-      // LAZY pin + count: the count() job materializes the checkpoint in
-      // the same pass (eager pin + count was two jobs per peel; round 21,
-      // guide §1.2 — same lineage cut, half the superstep actions)
-      val survivors = edges.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-        .where(col("deg") >= KCoreK).select(col("u").as("node"))
-        .localCheckpoint(eager = false)
-      val n = survivors.count()
-      if (n == nVerts) done = true
-      else { nVerts = n; edges = kcoreStep(base, survivors) }
-    }
-    edges.groupBy(col("u").as("node")).agg(count(lit(1)).as("core_degree"))
+    val base = mutualTopK(spark, d).localCheckpoint()
+    @tailrec def peel(edges: DataFrame, peels: Int): DataFrame =
+      if (peels == KCoreGuard) edges.groupBy(col("u")).agg(count(lit(1)).as("deg"))
+      else kcorePeel(base, edges) match {
+        case Left(core) => core
+        case Right(next) => peel(next, peels + 1)
+      }
+    peel(base, 0).select(col("u").as("node"), col("deg").as("core_degree"))
       .orderBy("node")
   }
+
+  /** One peel of `edges` (see [[kcore]]): pins its degree frame (u, deg) in
+    * one job, whose [[Observation]] counts the nodes and those with
+    * deg >= [[KCoreK]]. Returns `Left(degrees)` when every node survives —
+    * `edges` is the core — and otherwise `Right` of the survivors' induced
+    * edges. Package-visible so a spec can hold each peel to a job budget. */
+  private[graft] def kcorePeel(base: DataFrame, edges: DataFrame)
+      : Either[DataFrame, DataFrame] = {
+    val counts = Observation()
+    val degs = edges.groupBy(col("u")).agg(count(lit(1)).as("deg"))
+      .observe(counts, count(lit(1)).as("nodes"),
+        count_if(col("deg") >= KCoreK).as("survivors"))
+      .localCheckpoint()
+    val c = counts.get
+    val survivors = c("survivors").asInstanceOf[Long]
+    if (c("nodes") == survivors) Left(degs)
+    else Right(kcoreStep(base, broadcastIfSmall(
+      degs.where(col("deg") >= KCoreK).select(col("u").as("node")), survivors)))
+  }
+
+  /** `nodes` (one long column) with a broadcast hint when its observed
+    * `rows` fit the session's broadcast threshold, as AQE would judge the
+    * same rows after a shuffle. Spark's own estimate for a frame pinned
+    * below a join is the product of the join's input sizes, far above the
+    * truth, so unhinted the planner shuffles both sides first. Above the
+    * threshold no hint is set and the join shuffles. */
+  private def broadcastIfSmall(nodes: DataFrame, rows: Long): DataFrame =
+    if (rows * LongRowBytes <= nodes.sparkSession.sessionState.conf.autoBroadcastJoinThreshold)
+      broadcast(nodes)
+    else nodes
+
+  /** An UnsafeRow of one long column: its null bitset word and the value. */
+  private val LongRowBytes = 16L
 
   /** One peel superstep: induced edges of the survivor set, re-derived from
     * the pinned base via two semi-joins. Package-visible so the plan audit
     * can inspect the superstep's join strategy directly (the loop's plans
     * are gone by the time [[kcore]] returns). Survivors are node-sized by
-    * construction — AQE broadcasts them at runtime; no forced hint, so a
-    * billion-node graph degrades to a shuffle semi-join instead of OOM. */
+    * construction. [[kcorePeel]] hints their broadcast when their observed
+    * count fits the threshold, and otherwise AQE decides, so a
+    * billion-node graph degrades to a shuffle semi-join instead of OOM.
+    * Both semi-joins read the same survivors frame, so one broadcast
+    * serves both (exchange reuse). */
   private[graft] def kcoreStep(base: DataFrame, survivors: DataFrame): DataFrame =
-    base.join(survivors.select(col("node").as("u")), Seq("u"), "left_semi")
-      .join(survivors.select(col("node").as("v")), Seq("v"), "left_semi")
+    base.join(survivors, col("u") === survivors("node"), "left_semi")
+      .join(survivors, col("v") === survivors("node"), "left_semi")
 
   val kcoreSql: String = {
     // MATERIALIZED is load-bearing: DuckDB inlines plain CTEs, and each
@@ -344,49 +398,54 @@ object GraphOps {
 
   /** Minimum-hop levels from a fixed source over the customer↔supplier
     * bipartite trade graph (same node numbering as [[pageRank]]): the
-    * frontier-expansion BFS — per superstep ONE edges⋈frontier hash join,
-    * one distinct, one anti-join against the visited set. The
-    * visited-prune makes each level's join input the DELTA frontier, so
-    * total work is O(edges · diameter) — the semi-naive evaluation the
-    * oracle's recursive UNION performs, expressed relationally. Source =
-    * the minimum node id (2·min custkey-with-orders), computed as a
-    * one-scalar aggregate so both engines pick it identically.
+    * frontier-expansion BFS. Level l ([[bfsLevel]]) is ONE pinned
+    * `(visited ∪ edges ⋈ frontier).groupBy(node).min(level)`, where the
+    * frontier is `visited.where(level = l-1)` — exactly the nodes the
+    * previous level reached first, since min keeps a node's first level.
+    * So each level's join input is the DELTA frontier and total work is
+    * O(edges · diameter) — the semi-naive evaluation the oracle's
+    * recursive UNION performs, expressed relationally. Source = the
+    * minimum node id (2·min custkey-with-orders), observed on the edges'
+    * pin job ([[tradeEdges]]) so both engines pick it identically.
     *
-    * Scale: edges pin once (partitioned by src); frontier/visited are
-    * node-sized and localCheckpoint-pinned per level (exchange reuse does
-    * not fire across the union/anti-join fan-out). Unreached nodes are
-    * absent — at 4 hops on this near-bipartite-complete graph that's
-    * nothing, but the shape stays correct on any sparse graph.
+    * Scale: edges pin once; visited is node-sized and pinned once per
+    * level, by the level's one eager checkpoint, whose [[Observation]]
+    * counts the next frontier. The frontier is broadcast when that count
+    * fits the broadcast threshold, so a level runs three jobs (the
+    * broadcast, the min shuffle and the pin); above it the join shuffles
+    * on src. Unreached nodes are absent — at 4 hops on this
+    * near-bipartite-complete graph that's nothing, but the shape stays
+    * correct on any sparse graph.
     */
   val BfsMaxHops = 4
 
   def bfs(spark: SparkSession, d: String): DataFrame = {
-    val pairs = orders(spark, d).select(col("o_orderkey"), col("o_custkey"))
-      .join(lineitem(spark, d).select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
-      .distinct()
+    val (edges, s0) = tradeEdges(spark, d)
+    val source = spark.range(1).select(lit(s0).as("node"), lit(0L).as("level"))
+    (1 to BfsMaxHops).foldLeft((source, 1L)) { case ((visited, frontier), l) =>
+      bfsLevel(edges, visited, frontier, l)
+    }._1.orderBy("node")
+  }
+
+  /** BFS level `l` (see [[bfs]]): `visited` (node, level) with the nodes
+    * first reached at `l` added, pinned in one job. `frontierRows` counts
+    * visited's level-(l-1) nodes, the frontier; the count of the nodes
+    * reached at `l`, the next level's frontier, is observed on the pin's
+    * job and returned with it. Package-visible so a spec can hold each
+    * level to a job budget. */
+  private[graft] def bfsLevel(edges: DataFrame, visited: DataFrame, frontierRows: Long,
+      l: Int): (DataFrame, Long) = {
+    val frontier = visited.where(col("level") === l - 1).select(col("node").as("src"))
+    val reached = edges.join(broadcastIfSmall(frontier, frontierRows), Seq("src"))
+      .select(col("dst").as("node"), lit(l.toLong).as("level"))
+    val next = Observation()
+    val out = visited.unionByName(reached).groupBy(col("node"))
+      // a group is never empty, so min is never null; the coalesce keeps
+      // level a non-nullable column, as the source row's literal made it
+      .agg(coalesce(min(col("level")), lit(l.toLong)).as("level"))
+      .observe(next, count_if(col("level") === l).as("reached"))
       .localCheckpoint()
-    val edges = pairs.select(col("c").as("src"), col("s").as("dst"))
-      .unionByName(pairs.select(col("s").as("src"), col("c").as("dst")))
-      .localCheckpoint()
-    val s0 = edges.agg(min(col("src"))).head.getLong(0)
-    var visited = edges.sparkSession.range(1)
-      .select(lit(s0).as("node"), lit(0L).as("level")).localCheckpoint()
-    var frontier = visited.select(col("node").as("src"))
-    for (l <- 1 to BfsMaxHops) {
-      // LAZY pin on the level delta: the visited-union pin's job computes
-      // AND checkpoints it in one pass (two jobs per level before — round
-      // 21, guide §1.2); the frontier then reads the materialized blocks
-      val next = edges.join(frontier, Seq("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(visited.select("node"), Seq("node"), "left_anti")
-        .select(col("node"), lit(l.toLong).as("level"))
-        .localCheckpoint(eager = false)
-      visited = visited.unionByName(next).localCheckpoint()
-      frontier = next.select(col("node").as("src"))
-    }
-    visited.orderBy("node")
+    (out, next.get("reached").asInstanceOf[Long])
   }
 
   val bfsSql: String =
@@ -442,19 +501,7 @@ object GraphOps {
     * so round i+1 extends it.
     */
   def sssp(spark: SparkSession, d: String): DataFrame = {
-    val pairs = orders(spark, d).select(col("o_orderkey"), col("o_custkey"))
-      .join(lineitem(spark, d).select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
-      .distinct()
-      .localCheckpoint()
-    val edges = pairs.select(col("c").as("src"), col("s").as("dst"))
-      .unionByName(pairs.select(col("s").as("src"), col("c").as("dst")))
-      .withColumn("w", lit(SsspWBase) +
-        graft.functions.Hashing.hexHash(
-          concat_ws(":", col("src"), col("dst"))) % SsspWSpan)
-      .localCheckpoint()
-    val s0 = edges.agg(min(col("src"))).head.getLong(0)
+    val (edges, s0) = tradeEdges(spark, d, ssspWeights)
     var dist = spark.range(1)
       .select(lit(s0).as("node"), lit(0L).as("dist")).localCheckpoint()
     var frontier = dist // round-0 delta: just the source
@@ -465,6 +512,11 @@ object GraphOps {
     }
     dist.orderBy("node")
   }
+
+  /** Adds each directed edge's weight w = 1000 + hexHash("src:dst") % 250. */
+  private[graft] def ssspWeights(edges: DataFrame): DataFrame =
+    edges.withColumn("w", lit(SsspWBase) +
+      graft.functions.Hashing.hexHash(concat_ws(":", col("src"), col("dst"))) % SsspWSpan)
 
   /** One delta-frontier superstep: returns (new accumulated dist, the
     * improved-node delta that seeds the next round's frontier). Broadcast

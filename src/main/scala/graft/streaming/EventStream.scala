@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.Tables
 import graft.sources.withScratch
 
 /** Structured Streaming over the events table shape.
@@ -47,10 +48,11 @@ object EventStream {
   /** The on-disk type of `sfDir/events.parquet`'s ts column: LongType for
     * the legacy TIMESTAMP(NANOS) flavor (surfaced as a raw long under the
     * nanosAsLong conf), TimestampType / TimestampNTZType for the standard
-    * micros flavors. One footer read, no data scan. */
+    * micros flavors. Read from [[graft.Tables]]' schema memo, so only the
+    * first call per file and conf runs the footer-inference job. */
   private def sourceTsType(spark: SparkSession, sfDir: String): DataType = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$sfDir/events.parquet").schema("ts").dataType
+    Tables.table(spark, sfDir, "events").schema("ts").dataType
   }
 
   /** Batch read of `sfDir/events.parquet` normalized to [[rawSchema]]
@@ -60,7 +62,7 @@ object EventStream {
     * TimestampType first; the session TZ is UTC, so the cast is exact. */
   def rawEvents(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/events.parquet")
+    val df = Tables.table(spark, sfDir, "events")
     if (df.schema("ts").dataType == LongType) df
     else df.withColumn("ts",
         expr("unix_micros(cast(ts as timestamp)) * 1000L"))
@@ -904,7 +906,7 @@ object EventStream {
     */
   def streamingEnrich(spark: SparkSession, sfDir: String): DataFrame = {
     val stream = srcEvents(spark, sfDir)
-    val dim = spark.read.parquet(s"$sfDir/customer.parquet")
+    val dim = Tables.customer(spark, sfDir)
       .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
     val enriched = stream.join(broadcast(dim), Seq("user_id"))
       .groupBy(col("c_mktsegment"))

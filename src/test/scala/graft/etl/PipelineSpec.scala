@@ -3,15 +3,12 @@ package graft.etl
 import java.io.File
 import java.nio.file.{Files, Paths}
 import java.time.Instant
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{DateType, TimestampType}
 
-import graft.{SparkSpec, TempDirs}
+import graft.{JobCounts, SparkSpec, TempDirs}
 import graft.ingest.Fixture
 import graft.sources.deleteTree
 
@@ -19,7 +16,7 @@ import graft.sources.deleteTree
   * curated → warehouse, asserting the reference's output contracts and the
   * idempotence of the delta load.
   */
-class PipelineSpec extends SparkSpec with TempDirs {
+class PipelineSpec extends SparkSpec with TempDirs with JobCounts {
 
   // made outside any test, so the shared zones live until the suite ends
   private val zones = Zones(tempDir("graft_spec_zones").toString)
@@ -43,29 +40,6 @@ class PipelineSpec extends SparkSpec with TempDirs {
   /** `dir`'s `part-*` files. */
   private def partFiles(dir: String): Seq[File] =
     Option(new File(dir).listFiles()).toSeq.flatten.filter(_.getName.startsWith("part-"))
-
-  /** `f`'s result and the number of Spark jobs it started. */
-  private def withJobs[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = "pipeline-spec-jobs"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "PipelineSpec job count")
-    try {
-      val r = f
-      ListenerBusDrain(sc)
-      (r, jobs.get)
-    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
-  }
-
-  /** Asserts each (call, jobs, max) holds jobs <= max, listing them all. */
-  private def assertBudget(counts: Seq[(String, Int, Int)]): Unit =
-    assert(counts.forall { case (_, j, max) => j <= max },
-      counts.map { case (call, j, max) => s"$call: $j jobs (max $max)" }.mkString(", "))
 
   private def oddItem(playedAt: String, artists: Seq[(String, String)]): String = {
     val as = artists.map { case (id, name) =>

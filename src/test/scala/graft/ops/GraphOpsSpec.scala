@@ -1,9 +1,12 @@
 package graft.ops
 
-import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import graft.{JobCounts, SparkSpec}
 
 /** Semantic invariants for the iterative graph analytics at sf0.001. */
-class GraphOpsSpec extends SparkSpec {
+class GraphOpsSpec extends SparkSpec with JobCounts {
 
   private val d = "/root/testdata/sf0.001"
 
@@ -182,5 +185,72 @@ class GraphOpsSpec extends SparkSpec {
     assert(imp === (0L until 5L).map(s => (s + 100L) -> (s * 10L + 5L)).toMap)
     val nd = newDist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(nd(102L) === 25L && nd(99L) === 990L)
+  }
+
+  /** `df`'s rows as sorted strings, for order-free equality. */
+  private def rowSet(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  test("each kcore peel pins its degree frame within a 3-job budget, and the " +
+      "loop stops at the fixpoint with the core's degrees") {
+    val base = GraphOps.mutualTopK(spark, d).localCheckpoint()
+    val budgets = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Int)]
+    @scala.annotation.tailrec
+    def peel(edges: DataFrame): DataFrame = {
+      val (step, jobs) = withJobs(GraphOps.kcorePeel(base, edges))
+      budgets += ((s"peel ${budgets.size + 1}", jobs, 3))
+      step match {
+        case Left(core) => core
+        case Right(next) => peel(next)
+      }
+    }
+    val core = peel(base)
+    assertBudget(budgets.toSeq)
+    assert(core.where(s"deg < ${GraphOps.KCoreK}").isEmpty)
+    assert(budgets.size <= GraphOps.KCorePeels)
+    val out = GraphOps.kcore(spark, d)
+    assert(rowSet(core) === rowSet(out))
+    assert(out.schema === StructType(Seq(StructField("node", LongType),
+      StructField("core_degree", LongType, nullable = false))))
+  }
+
+  test("each bfs level runs at most 3 jobs, and the loop's levels are bfs's") {
+    import org.apache.spark.sql.functions.lit
+    val (edges, s0) = GraphOps.tradeEdges(spark, d)
+    var visited = spark.range(1).select(lit(s0).as("node"), lit(0L).as("level"))
+    var frontier = 1L
+    val budgets = (1 to GraphOps.BfsMaxHops).map { l =>
+      val ((next, reached), jobs) = withJobs(GraphOps.bfsLevel(edges, visited, frontier, l))
+      assert(reached === next.where(s"level = $l").count(), s"level $l")
+      visited = next
+      frontier = reached
+      (s"level $l", jobs, 3)
+    }
+    assertBudget(budgets)
+    val out = GraphOps.bfs(spark, d)
+    assert(rowSet(visited) === rowSet(out))
+    assert(out.schema === StructType(Seq(StructField("node", LongType),
+      StructField("level", LongType, nullable = false))))
+  }
+
+  test("with broadcasts off, the kcore and bfs loops return the same rows") {
+    val (kcore, bfs) = (rowSet(GraphOps.kcore(spark, d)), rowSet(GraphOps.bfs(spark, d)))
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "-1")
+      assert(rowSet(GraphOps.kcore(spark, d)) === kcore)
+      assert(rowSet(GraphOps.bfs(spark, d)) === bfs)
+    } finally spark.conf.set(key, before)
+  }
+
+  test("sssp's setup pins the weighted edges and observes the source in one " +
+      "execution") {
+    val ((edges, s0), jobs) = withJobs(GraphOps.tradeEdges(spark, d, GraphOps.ssspWeights))
+    assertBudget(Seq(("tradeEdges with weights", jobs, 3)))
+    import org.apache.spark.sql.functions.min
+    assert(s0 === edges.agg(min("src")).head.getLong(0))
+    assert(edges.columns.toSeq === Seq("src", "dst", "w"))
+    assert(GraphOps.sssp(spark, d).schema === StructType(Seq(
+      StructField("node", LongType), StructField("dist", LongType))))
   }
 }

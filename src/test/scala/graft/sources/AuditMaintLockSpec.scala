@@ -6,19 +6,19 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** `_MAINT_LOCK`: the single-maintenance-writer rule is ENFORCED, not
   * just documented — a second concurrent OPTIMIZE/VACUUM/DML is rejected
   * loudly, a finished operation releases promptly, an expired lease is
   * stealable, and the steal is compare-and-swap (the loser of a steal
   * race throws before touching metadata). */
-class AuditMaintLockSpec extends AnyFunSuite {
+class AuditMaintLockSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSpec.session
 
   private def freshTable(tag: String): (String, String) = {
-    val wh = java.nio.file.Files.createTempDirectory(s"graft_mlock_${tag}_")
+    val wh = tempDir(s"graft_mlock_${tag}_")
     val cat = graft.SparkSpec.uniqueCat(s"graft_mlock_$tag")
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
@@ -62,8 +62,7 @@ class AuditMaintLockSpec extends AnyFunSuite {
   }
 
   test("a DEAD holder's expired lease is stealable; release ignores it") {
-    val path = java.nio.file.Files.createTempDirectory("graft_mlock_exp_")
-      .toString
+    val path = tempDir("graft_mlock_exp_").toString
     val stale = AuditMaintLock.acquire(path, "optimize")
     // a LIVE holder never expires (heartbeat); simulate the crash first
     AuditMaintLock.simulateCrash(path, stale)
@@ -86,8 +85,7 @@ class AuditMaintLockSpec extends AnyFunSuite {
   }
 
   test("heartbeat: an operation outliving the TTL keeps its lease") {
-    val path = java.nio.file.Files.createTempDirectory("graft_mlock_hb_")
-      .toString
+    val path = tempDir("graft_mlock_hb_").toString
     sys.props("graft.audit.maintLeaseMs") = "120"
     try {
       val held = AuditMaintLock.acquire(path, "optimize")
@@ -107,8 +105,7 @@ class AuditMaintLockSpec extends AnyFunSuite {
   }
 
   test("lease loss mid-operation is detected before publish, loudly") {
-    val path = java.nio.file.Files.createTempDirectory("graft_mlock_loss_")
-      .toString
+    val path = tempDir("graft_mlock_loss_").toString
     sys.props("graft.audit.maintLeaseMs") = "80"
     try {
       val frozen = AuditMaintLock.acquire(path, "optimize")
@@ -131,8 +128,7 @@ class AuditMaintLockSpec extends AnyFunSuite {
     // the TOCTOU: claimant B reads an EXPIRED lock, then claimant A
     // retires it and claims; B's retirement must detect the fresh
     // content and restore A's claim instead of replacing it
-    val path = java.nio.file.Files.createTempDirectory("graft_mlock_cas2_")
-      .toString
+    val path = tempDir("graft_mlock_cas2_").toString
     val lock = java.nio.file.Paths.get(path).resolve("_MAINT_LOCK")
     sys.props("graft.audit.maintLeaseMs") = "60000"
     try {
@@ -161,8 +157,7 @@ class AuditMaintLockSpec extends AnyFunSuite {
     // The sidecar renewal never touches the claim file: across many
     // heartbeat periods the lock stays continuously present and every
     // concurrent acquire refuses.
-    val path = java.nio.file.Files.createTempDirectory("graft_mlock_hb2_")
-      .toString
+    val path = tempDir("graft_mlock_hb2_").toString
     // lease 300 ms / heartbeat every 100 ms: the 60 ms lease this test
     // originally used left only 40 ms of renewal slack — INSIDE the
     // normal GC-pause/scheduler-starvation band of a busy test JVM, so
@@ -197,8 +192,7 @@ class AuditMaintLockSpec extends AnyFunSuite {
   }
 
   test("acquire is compare-and-swap: the on-disk claim is the returned op") {
-    val path = java.nio.file.Files.createTempDirectory("graft_mlock_cas_")
-      .toString
+    val path = tempDir("graft_mlock_cas_").toString
     val id = AuditMaintLock.acquire(path, "optimize")
     val lock = java.nio.file.Paths.get(path).resolve("_MAINT_LOCK")
     val content = new String(java.nio.file.Files.readAllBytes(lock), "UTF-8")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** MULTI-LEVEL partitioning (`PARTITIONED BY (y, m, d)`) — the
   * reference's own `{year}/{month}/{day}` zone layout
@@ -13,12 +13,12 @@ import graft.SparkSpec
   * `y=…/m=…/d=…` directories, per-LEAF manifests, per-level static and
   * runtime (DPP) pruning, partitioned delta DML, OPTIMIZE and the
   * change feed over the nested tree. */
-class AuditMultiPartSpec extends AnyFunSuite {
+class AuditMultiPartSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSpec.session
 
   private def freshCat(tag: String): (String, java.nio.file.Path) = {
-    val wh = java.nio.file.Files.createTempDirectory(s"graft_mp_${tag}_")
+    val wh = tempDir(s"graft_mp_${tag}_")
     val cat = s"graft_mp_$tag"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)

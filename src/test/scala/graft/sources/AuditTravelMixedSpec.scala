@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** Mixed-table TIMESTAMP AS OF: commit-time travel across streaming
   * epochs, OCC batch `_TXN` appends and delta-DML delete vectors — and
@@ -14,12 +14,12 @@ import graft.SparkSpec
   * the audit question the feature exists for). The happy-path content
   * reconstruction is oracle-checked end to end by q_audit_travel_mixed;
   * this spec drives the boundary and refusal semantics. */
-class AuditTravelMixedSpec extends AnyFunSuite {
+class AuditTravelMixedSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSpec.session
 
   private def freshCat(tag: String): (String, java.nio.file.Path) = {
-    val wh = java.nio.file.Files.createTempDirectory(s"graft_tmix_${tag}_")
+    val wh = tempDir(s"graft_tmix_${tag}_")
     val cat = s"graft_tmix_$tag"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
@@ -215,7 +215,7 @@ class AuditTravelMixedSpec extends AnyFunSuite {
     "axis: changes at/after the epoch's commit instant, exactly once") {
     val (cat, wh) = freshCat("epochmix")
     spark.sql(s"CREATE TABLE $cat.db.t (id BIGINT, v BIGINT) USING audit")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_tm_emck")
+    val ckpt = tempDir("graft_tm_emck")
     val q = spark.readStream.format(classOf[PagedSource].getName)
       .option("pages", "2").option("pageSize", "100")
       .option("pagesPerTrigger", "1")
@@ -300,7 +300,7 @@ class AuditTravelMixedSpec extends AnyFunSuite {
     // vectors stay out — the commit-time axis is the mixed spelling
     val (cat, wh) = freshCat("vsn")
     spark.sql(s"CREATE TABLE $cat.db.t (id BIGINT, v BIGINT) USING audit")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_tmix_vsn_ckpt")
+    val ckpt = tempDir("graft_tmix_vsn_ckpt")
     val w = spark.readStream.format(classOf[PagedSource].getName)
       .option("pages", "2").option("pageSize", "50")
       .option("pagesPerTrigger", "1")
@@ -321,7 +321,7 @@ class AuditTravelMixedSpec extends AnyFunSuite {
     val (cat, wh) = freshCat(tag)
     spark.sql(s"CREATE TABLE $cat.db.t (id BIGINT, flag BIGINT, v BIGINT) " +
       "USING audit" + (if (partitioned) " PARTITIONED BY (flag)" else ""))
-    val ckpt = java.nio.file.Files.createTempDirectory(s"graft_tmix_${tag}_ckpt")
+    val ckpt = tempDir(s"graft_tmix_${tag}_ckpt")
     val w = spark.readStream.format(classOf[PagedSource].getName)
       .option("pages", pages.toString).option("pageSize", "40")
       .option("pagesPerTrigger", "1")

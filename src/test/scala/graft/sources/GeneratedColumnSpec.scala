@@ -3,18 +3,18 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** GENERATED / IDENTITY columns, materialized engine-side: Spark 4.1
   * parses + validates the DDL (capability-gated) and the audit write
   * path computes the values — bound catalyst expressions per row for
   * generated columns, per-commit block reservation for identity. */
-class GeneratedColumnSpec extends AnyFunSuite {
+class GeneratedColumnSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSpec.session
 
   private def freshCat(tag: String): (String, java.nio.file.Path) = {
-    val wh = java.nio.file.Files.createTempDirectory(s"graft_gen_${tag}_")
+    val wh = tempDir(s"graft_gen_${tag}_")
     val cat = s"graft_gen_$tag"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
@@ -350,7 +350,7 @@ class GeneratedColumnSpec extends AnyFunSuite {
     assert(spark.table(s"$cat.db.lit").columns.contains("renamed_ok"))
     // streaming writes COMPUTE generated columns (deterministic per row,
     // so epoch replays stay idempotent) — supply NULL, read back computed
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_gen_ckpt")
+    val ckpt = tempDir("graft_gen_ckpt")
     val q = spark.readStream.format(classOf[PagedSource].getName)
       .option("pages", "1").option("pageSize", "10").load()
       .select(org.apache.spark.sql.functions.col("id").as("c"),
@@ -367,7 +367,7 @@ class GeneratedColumnSpec extends AnyFunSuite {
       s"""CREATE TABLE $cat.db.i (c BIGINT,
          |  id BIGINT GENERATED ALWAYS AS IDENTITY (START WITH 7
          |    INCREMENT BY 3)) USING audit""".stripMargin)
-    val ckpt2 = java.nio.file.Files.createTempDirectory("graft_gen_ckpt2")
+    val ckpt2 = tempDir("graft_gen_ckpt2")
     val q2 = spark.readStream.format(classOf[PagedSource].getName)
       .option("pages", "3").option("pageSize", "50")
       .option("pagesPerTrigger", "1").load()

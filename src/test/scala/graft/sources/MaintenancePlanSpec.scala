@@ -3,19 +3,19 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** `system.maintenance_plan` — the metadata-only maintenance recommender
   * (round 18): at 100 TB nobody eyeballs 10k partition directories, so
   * the engine inspects its own metadata and names the action AND the
   * exact `partition_filter` selector to run, batching flagged dirs into
   * one IN-list call. */
-class MaintenancePlanSpec extends AnyFunSuite {
+class MaintenancePlanSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSpec.session
 
   private def freshCat(tag: String): (String, java.nio.file.Path) = {
-    val wh = java.nio.file.Files.createTempDirectory(s"graft_mp_${tag}_")
+    val wh = tempDir(s"graft_mp_${tag}_")
     val cat = s"graft_mp_$tag"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh.toString)
